@@ -582,7 +582,8 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # relation at ITS call site for exactly this reason). Without
         # it the triangles consumer replayed the bucket-join pair
         # build per reference: 54 scans / 110 exchanges in the
-        # initial plan (plans/r15/q_graph_triangles_before.txt);
+        # initial plan at commit 10bd700 (`python tools/explain_dump.py
+        # <out_dir> before q_graph_triangles`);
         # ReuseExchange recovered only part (14 shuffles + 10
         # broadcasts still executed, PLANS.md row). Edge volume is
         # O(buckets × cap²) by the _TRI_CAP guard — bounded, and the

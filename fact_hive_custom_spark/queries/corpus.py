@@ -1605,7 +1605,8 @@ def _pq_parts(
     # T+1 = 3 derivations, materializing lost (5.3 vs 3.7 s); but the
     # composite serving paths now derive q up to ~34 times per plan
     # (q_llm_ann_tuned's before-plan: 34 parquet scans, 32 broadcast
-    # builds — plans/r15/q_llm_ann_tuned_before.txt), so ONE eager
+    # builds at commit 10bd700 — `python tools/explain_dump.py
+    # <out_dir> before q_llm_ann_tuned`), so ONE eager
     # materialization wins across the family: every consumer reads
     # the 65-int rows, and the A/B at sf0.1 preferred localCheckpoint
     # over persist() (ann_tuned ~6 vs ~7 s) because truncating the

@@ -6,7 +6,9 @@ same code scales: AQE on (runtime re-plan, skew-join splitting,
 partition coalescing), shuffle partitions sized to cores locally (on a
 cluster this is overridden to ~2-3× total cores), Arrow enabled for the
 few Pandas-UDF operators, UTC session timezone so timestamp semantics
-are engine-independent.
+are engine-independent. Python workers fork from the stock
+`pyspark.daemon`, and building a session changes no process
+environment.
 """
 
 from __future__ import annotations
@@ -18,36 +20,20 @@ from pyspark.sql import SparkSession
 
 def get_session(
     app_name: str = "fact_hive_custom_spark",
-    cpus: int | None = None,
-    hive: bool = False,
-    quiet: bool | None = None,
+    quiet: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    `cpus` defaults to $SPARK_GRAFT_CPUS or all local cores. All
-    settings are stock Spark; none are required for correctness, only
-    for performance posture (SURVEY.md §4).
+    Runs on local[$SPARK_GRAFT_CPUS] (all local cores when unset) with
+    driver memory $SPARK_DRIVER_MEMORY (48g when unset). All settings
+    are stock Spark; none are required for correctness, only for
+    performance posture (SURVEY.md §4).
 
-    `hive=True` enables Hive metastore support (the modern
-    HiveContext): `saveAsTable` persists table metadata across sessions
-    (embedded Derby locally; thrift metastore URI in production). Must
-    be chosen by the FIRST session in the JVM — getOrCreate reuses the
-    existing session otherwise.
+    `quiet=True` lowers the WindowExec and CacheManager loggers to
+    ERROR; the bench and tooling entry points pass it.
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    # The pre-importing worker daemon (pydaemon.py) is resolved by a
-    # fresh `python -m` process the JVM launches — it needs this
-    # package's parent on PYTHONPATH (the driver's sys.path is not
-    # inherited). Must be set before the FIRST JVM launch in the
-    # process; idempotent afterwards.
-    _pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _pp = os.environ.get("PYTHONPATH", "")
-    if _pkg_parent not in _pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _pkg_parent + (os.pathsep + _pp if _pp else "")
-        )
-    builder = (
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # AQE: runtime partition coalescing, skew-join handling, join demotion.
@@ -60,40 +46,24 @@ def get_session(
         # (vs default 10k) cut per-batch overhead ~25% at a few MB/batch.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # Workers fork from this daemon: pandas/pyarrow/numpy imported
-        # once pre-fork instead of ~1 s per worker per respawn (the JVM
-        # reaps idle workers after a hardcoded 60 s; r15 priced the
-        # re-spawn at 3–6 s/pass on local[32] — pydaemon.py). Opt-out
-        # env gate for paired A/B measurement.
-        .config(
-            "spark.python.daemon.module",
-            "pyspark.daemon"
-            if os.environ.get("FHC_DAEMON_PRELOAD", "1") == "0"
-            else "fact_hive_custom_spark.pydaemon",
-        )
         # Deterministic timestamp semantics vs external oracles.
         .config("spark.sql.session.timeZone", "UTC")
         # Local mode: driver JVM is the only process; give it headroom.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
     )
-    if hive:
-        builder = builder.enableHiveSupport()
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Log hygiene — OPT-IN (quiet=True, or SPARK_GRAFT_QUIET_LOGS=1),
-    # set only by the bench/tooling entry points: several registered
-    # queries END in a deliberate global-window / single-partition
-    # step (final ranking over a few hundred pre-aggregated rows —
-    # SCALING.md §global-windows), and WindowExec warns on every one,
-    # flooding bench output with hundreds of identical lines. The
-    # plan pins in tests/test_plans.py assert the windowed inputs ARE
-    # tiny. Default sessions keep the warning: a genuinely unsafe
-    # large-input global window added later should warn loudly
-    # everywhere except the noise-sensitive bench runs.
-    if quiet is None:
-        quiet = os.environ.get("SPARK_GRAFT_QUIET_LOGS", "0") == "1"
+    # Log hygiene — opt-in: several registered queries END in a
+    # deliberate global-window / single-partition step (final ranking
+    # over a few hundred pre-aggregated rows — SCALING.md
+    # §global-windows), and WindowExec warns on every one, flooding
+    # bench output with hundreds of identical lines. The plan pins in
+    # tests/test_plans.py assert the windowed inputs ARE tiny. Default
+    # sessions keep the warning: a genuinely unsafe large-input global
+    # window added later should warn loudly everywhere except the
+    # noise-sensitive bench runs.
     if not quiet:
         return spark
     try:

@@ -77,9 +77,10 @@ def fan_out(df: DataFrame) -> DataFrame:
     cluster. The round-robin (no key) avoids the hash-partition
     collision skew of a synthetic key and stays deterministic under
     retries via Spark's sort-before-repartition default.
+
+    Always on: the r16 paired A/B against the identity decided it
+    (q_stat_permutation_test 2.0× at 32 cores, 2.4× at 8 cores).
     """
-    if os.environ.get("FHC_AB_VARIANT") == "no_fanout":  # paired-A/B gate
-        return df
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= n:

@@ -1,23 +1,93 @@
 """The evidence tooling must not rot: every artifact generator under
 tools/ stays compilable, and the bench HEADLINE set stays a subset of
 the registry (a renamed/removed query would otherwise only fail at
-driver bench time, outside CI)."""
+bench time, outside CI). The engine's settable surface stays
+pinned: the env vars the package reads, and a session that leaves the
+process environment as it found it."""
 
 from __future__ import annotations
 
+import os
 import pathlib
 import py_compile
+import re
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
-TOOLS = sorted(
-    (pathlib.Path(__file__).resolve().parents[1] / "tools").glob("*.py")
-)
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+TOOLS = sorted((ROOT / "tools").glob("*.py"))
+
+# Every env var the engine package reads. A new one (an A/B gate, a
+# tuning switch) must be added here on purpose, or removed once decided.
+ENV_KNOBS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_DRIVER_MEMORY",
+    "FHC_RELIABLE_CHECKPOINT",
+    "FHC_CHECKPOINT_DIR",
+}
 
 
 @pytest.mark.parametrize("path", TOOLS, ids=lambda p: p.name)
 def test_tool_compiles(path):
     py_compile.compile(str(path), doraise=True)
+
+
+ENV_READ = re.compile(
+    r'os\.(?:environ\.get|getenv)\(\s*"(\w+)"|os\.environ\[\s*"(\w+)"\]'
+)
+
+
+def test_env_knob_inventory():
+    found: dict[str, list[str]] = {}
+    for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py")):
+        text, rel = path.read_text(), str(path.relative_to(ROOT))
+        reads = ENV_READ.findall(text)
+        for get, item in reads:
+            found.setdefault(get or item, []).append(rel)
+        # any os.environ / os.getenv use the pattern cannot name
+        if len(re.findall(r"\bos\.(?:environ|getenv)\b", text)) != len(reads):
+            found.setdefault("<unparsed env use>", []).append(rel)
+    assert set(found) == ENV_KNOBS, found
+
+
+def test_session_leaves_environ_unchanged(tmp_path):
+    """A fresh process builds the session and forces a Python worker
+    (pandas_udf) from the stock daemon; os.environ must not change."""
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {str(ROOT)!r})
+        before = dict(os.environ)
+        import pandas as pd
+        from pyspark.sql.functions import pandas_udf
+        from fact_hive_custom_spark.session import get_session
+
+        spark = get_session("env-leak")
+
+        @pandas_udf("long")
+        def plus_one(s: pd.Series) -> pd.Series:
+            return s + 1
+
+        got = sorted(r[0] for r in spark.range(4).select(plus_one("id")).collect())
+        assert got == [1, 2, 3, 4], got
+        # stock SparkContext init publishes these two for its socket helpers
+        stock = {{"SPARK_AUTH_SOCKET_TIMEOUT", "SPARK_BUFFER_SIZE"}}
+        diff = {{k: (before.get(k), os.environ.get(k))
+                for k in (before.keys() | os.environ.keys()) - stock
+                if before.get(k) != os.environ.get(k)}}
+        assert not diff, diff
+        spark.stop()
+        """
+    )
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
 
 
 def test_bench_headline_is_registered():

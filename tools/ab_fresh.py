@@ -1,19 +1,24 @@
 #!/usr/bin/env python
-"""Paired A/B harness replicating the driver's bench condition for ONE
-query: fresh JVM (this process), the same q_agg_flagship warmup
-bench.py runs, then N timed passes via the noop sink; prints one JSON
-line with the per-pass times and the median.
+"""Time queries the way bench.py does: fresh JVM (this process),
+the same untimed q_agg_flagship warm-up bench.py runs, then
+N timed passes of each named query via the noop sink; prints one JSON
+line per query with the per-pass times and the median.
 
 Usage:
-    python tools/ab_fresh.py <query> [n_passes]
+    python tools/ab_fresh.py [--passes N] <query> [query ...]
 
-Variant selection happens INSIDE the operator code via the
-FHC_AB_VARIANT env var (temporary gates added while an A/B is live,
-removed once the decision is made). Invoke alternately, e.g.:
+$SPARK_GRAFT_SF_DIR picks the fixture dir (default: bench.py's sf0.1),
+so the same command serves a heavy-row sweep:
+
+    SPARK_GRAFT_SF_DIR=.scale/sf10 python tools/ab_fresh.py --passes 2 \\
+        q_llm_ann_tuned q_llm_cosine_dedup
+
+To A/B a change, check out the two versions as separate worktrees and
+alternate runs from each, e.g.:
 
     for i in 1 2 3 4; do
-      FHC_AB_VARIANT=old python tools/ab_fresh.py q_llm_jaccard_dedup
-      FHC_AB_VARIANT=new python tools/ab_fresh.py q_llm_jaccard_dedup
+      (cd ../old && python tools/ab_fresh.py q_llm_jaccard_dedup)
+      (cd ../new && python tools/ab_fresh.py q_llm_jaccard_dedup)
     done
 
 Alternation inside the SAME quiet window is the point — host drift is
@@ -22,6 +27,7 @@ Alternation inside the SAME quiet window is the point — host drift is
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -31,8 +37,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    name = sys.argv[1]
-    n_passes = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--passes", type=int, default=3)
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from fact_hive_custom_spark.queries import QUERIES
@@ -47,18 +55,19 @@ def main() -> int:
 
     run("q_agg_flagship")  # JVM/codegen warmup, untimed (bench.py parity)
 
-    times = [run(name) for _ in range(n_passes)]
-    print(
-        json.dumps(
-            {
-                "query": name,
-                "variant": os.environ.get("FHC_AB_VARIANT", ""),
-                "passes": times,
-                "median": sorted(times)[len(times) // 2],
-            }
-        ),
-        flush=True,
-    )
+    for name in args.queries:
+        times = [run(name) for _ in range(args.passes)]
+        print(
+            json.dumps(
+                {
+                    "query": name,
+                    "sf_dir": sf_dir,
+                    "passes": times,
+                    "median": sorted(times)[len(times) // 2],
+                }
+            ),
+            flush=True,
+        )
     return 0
 
 
