@@ -13,10 +13,11 @@ edge set converges to stars (node → component-min) in O(log n) rounds
 
 Driver-side iteration is inherent to the algorithm (every published
 MapReduce/Spark CC does it); each round's edge set is
-`localCheckpoint`-ed so the lineage stays O(1) instead of growing a
-plan per round. Only the (u, v) long pairs ever shuffle — never
-document payloads. On a real cluster swap `localCheckpoint` for a
-reliable `checkpoint` dir to survive executor loss on long chains.
+materialized (`materialize()`) so the lineage stays O(1) instead of
+growing a plan per round. Only the (u, v) long pairs ever shuffle —
+never document payloads. On a real cluster set `spark.checkpoint.dir`
+so the rounds checkpoint reliably and survive executor loss on long
+chains.
 """
 
 from __future__ import annotations

@@ -352,27 +352,15 @@ def _pivot_blocks(
     cos_to_pivot = _dot(F.col("vec"), F.col("pivot_vec")) / (
         F.col("nrm") * F.col("pivot_nrm")
     )
-    assigned = (
-        u.crossJoin(F.broadcast(pivots))
-        .withColumn(
-            "pcos",
-            F.least(F.greatest(cos_to_pivot, F.lit(-1.0)), F.lit(1.0)),
-        )
-        .groupBy("vid")
-        .agg(
-            F.min_by(
-                F.col("pivot_id"),
-                F.struct(
-                    (-F.col("pcos")).alias("npc"),
-                    F.col("pivot_id").alias("pid"),
-                ),
-            ).alias("cluster"),
-            F.acos(F.max("pcos")).alias("angle"),
-            F.first("vec").alias("vec"),
-            F.first("nrm").alias("nrm"),
-        )
-        .select("vid", "vec", "nrm", "cluster", "angle")
-    )
+    assigned = _nearest_pivot(
+        u,
+        pivots,
+        "vid",
+        F.least(F.greatest(cos_to_pivot, F.lit(-1.0)), F.lit(1.0)),
+        F.acos(F.max("pcos")).alias("angle"),
+        F.first("vec").alias("vec"),
+        F.first("nrm").alias("nrm"),
+    ).select("vid", "vec", "nrm", "cluster", "angle")
     # Materialize once: `assigned` now holds the crossjoin+aggregate
     # subtree and feeds 5 consumers (radii, both block sides, both
     # rescore sides) — the r15 checkpoint-payback rule's exact shape.
@@ -382,6 +370,31 @@ def _pivot_blocks(
     assigned = materialize(assigned)
     radii = assigned.groupBy("cluster").agg(F.max("angle").alias("radius"))
     return _cluster_pairs(pivots, radii, threshold, assigned)
+
+
+def _nearest_pivot(
+    u: DataFrame, pivots: DataFrame, key: str, pcos: Column, *carry: Column
+) -> DataFrame:
+    """Nearest pivot per `key` by cosine `pcos`: broadcast crossJoin of
+    the pivot set, then a groupBy(key) whose min_by(struct(-pcos, pid))
+    is combined map-side — highest cosine, lowest pivot_id on ties.
+    `carry` are further aggregates over the same groups (they may read
+    the `pcos` column)."""
+    return (
+        u.crossJoin(F.broadcast(pivots))
+        .withColumn("pcos", pcos)
+        .groupBy(key)
+        .agg(
+            F.min_by(
+                F.col("pivot_id"),
+                F.struct(
+                    (-F.col("pcos")).alias("npc"),
+                    F.col("pivot_id").alias("pid"),
+                ),
+            ).alias("cluster"),
+            *carry,
+        )
+    )
 
 
 def _cluster_pairs(pivots, radii, threshold, assigned):
@@ -482,20 +495,12 @@ def ivf_topk(
         rcos = _dot(F.col("corpus_vec"), F.col("pivot_vec")) / (
             F.col("cnrm") * F.col("pivot_nrm")
         )
-        memb = (
-            u.crossJoin(F.broadcast(pivots))
-            .withColumn("pcos", rcos)
-            .groupBy("neighbor_id")
-            .agg(
-                F.min_by(
-                    F.col("pivot_id"),
-                    F.struct(
-                        (-F.col("pcos")).alias("npc"),
-                        F.col("pivot_id").alias("pid"),
-                    ),
-                ).alias("cluster"),
-                F.first("corpus_vec").alias("corpus_vec"),
-            )
+        memb = _nearest_pivot(
+            u,
+            pivots,
+            "neighbor_id",
+            rcos,
+            F.first("corpus_vec").alias("corpus_vec"),
         )
         pivots = (
             memb.select("cluster", F.posexplode("corpus_vec").alias("pos", "x"))
@@ -514,18 +519,13 @@ def ivf_topk(
     pcos_c = _dot(F.col("corpus_vec"), F.col("pivot_vec")) / (
         F.col("cnrm") * F.col("pivot_nrm")
     )
-    assigned = (
-        u.crossJoin(F.broadcast(pivots))
-        .withColumn("pcos", pcos_c)
-        .groupBy("neighbor_id")
-        .agg(
-            F.min_by(
-                F.col("pivot_id"),
-                F.struct((-F.col("pcos")).alias("npc"), F.col("pivot_id").alias("pid")),
-            ).alias("cluster"),
-            F.first("corpus_vec").alias("corpus_vec"),
-            F.first("cnrm").alias("cnrm"),
-        )
+    assigned = _nearest_pivot(
+        u,
+        pivots,
+        "neighbor_id",
+        pcos_c,
+        F.first("corpus_vec").alias("corpus_vec"),
+        F.first("cnrm").alias("cnrm"),
     )
 
     p = probes.select(

@@ -221,6 +221,40 @@ def width_collapse_risks(df: DataFrame) -> list[str]:
     return sorted(set(risks))
 
 
+_CALL_RE = re.compile(r"(\w+)\(|[()]")
+
+
+def nested_hof_count(df: DataFrame) -> int:
+    """Higher-order functions that run inside another HOF's lambda.
+
+    A nested HOF falls out of whole-stage codegen and is evaluated
+    interpreted (about 3× slower measured — the r16 cosine_pairs
+    revert), so the count is part of the plan fingerprint. A HOF is
+    any call with a `lambdafunction(...)` argument; it is nested when
+    it sits inside some lambdafunction. Parsed from the untruncated
+    pre-AQE plan string line by line — one line per operator, so an
+    unbalanced literal can only skew its own line."""
+    plan = df._jdf.queryExecution().executedPlan()
+    text = plan.treeString(True, False, 2**31 - 1, False, False)
+    n = 0
+    for line in text.splitlines():
+        # frames: [name, inside_lambda, counted_as_hof]
+        stack: list[list] = []
+        for m in _CALL_RE.finditer(line):
+            if m.group(0) == ")":
+                if stack:
+                    stack.pop()
+                continue
+            name = m.group(1) or ""
+            parent = stack[-1] if stack else ["", False, True]
+            inside = parent[0] == "lambdafunction" or parent[1]
+            if name == "lambdafunction" and not parent[2]:
+                parent[2] = True
+                n += parent[1]
+            stack.append([name, inside, False])
+    return n
+
+
 def plan_counts(df: DataFrame) -> dict:
     """Scale-relevant shape counts from the (unexecuted, pre-AQE)
     physical plan — the registry-wide drift fingerprint
@@ -240,4 +274,5 @@ def plan_counts(df: DataFrame) -> dict:
         "python": bool(_PYTHON_EXEC_RE.search(plan)),
         "cartesian": "CartesianProduct" in plan
         or "BroadcastNestedLoopJoin" in plan,
+        "nested_hof": nested_hof_count(df),
     }

@@ -1263,7 +1263,7 @@ def q_agg_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # costs one tiny job and stops each replaying the md5 + two-window
     # chain (whose WindowGroupLimit shape stays pinned via the
     # _theta_seg_sketch helper). Isolated warm median 3.31 → 1.84 s
-    # at sf0.1. Cluster note: swap for a reliable checkpoint dir
+    # at sf0.1. Cluster note: set `spark.checkpoint.dir`
     # (operators/graph.py note).
     segs = _theta_segs(spark, sf_dir).transform(materialize)
     seg_sk = _theta_seg_sketch(segs).transform(materialize)

@@ -587,8 +587,8 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ReuseExchange recovered only part (14 shuffles + 10
         # broadcasts still executed, PLANS.md row). Edge volume is
         # O(buckets × cap²) by the _TRI_CAP guard — bounded, and the
-        # relation every consumer needs anyway. Cluster note: swap
-        # for a reliable checkpoint dir (operators/graph.py).
+        # relation every consumer needs anyway. Cluster note: set
+        # `spark.checkpoint.dir` (operators/graph.py).
         .transform(materialize)
     )
 

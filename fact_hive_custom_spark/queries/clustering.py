@@ -21,20 +21,23 @@ IVF/PQ, SemDeDup cluster induction, corpus bucketing).
 
 Scale design (100 TB): per Lloyd round the corpus is scanned ONCE
 (codes-only: vec_id + 64 ints ≈ 0.5 kB/row), assignment is a
-map-side fold over a broadcast K-row centroid array (the semdedup
-argmax pattern — the corpus NEVER shuffles on vec_id), and the
-update shuffle carries only K×D partial (sum, count) pairs per task
-— independent of corpus size. T rounds = T+1 scans, the textbook
-distributed-k-means cost. The quantized relation is cached across
+map-side fold over a broadcast K-row centroid array
+(functions/vectors.py argmin — the corpus NEVER shuffles on vec_id),
+and the update shuffle carries only K×D partial (sum, count) pairs
+per task — independent of corpus size. T rounds = T+1 scans, the
+textbook distributed-k-means cost. The quantized relation is cached across
 rounds (generation cache, released on next build, the
 _BPE_TRAIN_CACHE discipline).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fact_hive_custom_spark.functions.vectors import argmin, centre_array, sqdist
 from fact_hive_custom_spark.materialize import materialize
 
 from fact_hive_custom_spark.queries.registry import register
@@ -54,7 +57,7 @@ _PCA_CACHE: list = []
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, us) — int8-quantized embedding shifted to [0, 254].
 
-    Same global-scale grid as _pq_parts (corpus.py:1399); the +127
+    Same global-scale grid as corpus.py _pq_parts; the +127
     shift makes every component non-negative so the fixed-point mean
     rounding below is floor-division-portable across engines.
     Materialized eagerly (r15): every Lloyd round re-reads it, and
@@ -63,7 +66,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     cold cliff gone, because truncating the lineage removes the
     contract+quantize subtree from every round's plan analysis and
     broadcast builds (same result as the PQ family's q, corpus.py).
-    Blocks free on RDD GC; reliable checkpoint dir on a cluster.
+    Blocks free on RDD GC; set `spark.checkpoint.dir` on a cluster.
     """
     emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
     g = emb.agg(
@@ -83,7 +86,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the fixture corpus is one parquet file → one scan partition;
         # round-robin so the per-row assignment fold parallelizes
-        # (measured lesson from semdedup, llm_ops.py:1104). NOT a hash
+        # (measured lesson from q_llm_semdedup). NOT a hash
         # shuffle on vec_id — the plan pin forbids that.
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -96,57 +99,26 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _centroid_array(cent_long: DataFrame) -> DataFrame:
-    """K×D long-form centroids → ONE row holding the cid-sorted array
-    of (cid, carr) structs, ready to broadcast into the fold."""
-    return (
-        cent_long.groupBy("cid")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("carr")
-        )
-        .agg(
-            F.sort_array(F.collect_list(F.struct("cid", "carr"))).alias("cents")
-        )
+    """K×D long-form centroids → ONE row holding the cid-sorted
+    `cents` array, ready to broadcast into the fold."""
+    carr = cent_long.groupBy("cid").agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("dim", "c"))),
+            lambda s: s["c"],
+        ).alias("carr")
     )
+    return centre_array(carr, "cid", "carr")
 
 
 def _assign(q: DataFrame, cent_arr: DataFrame) -> DataFrame:
     """Map-side argmin assignment: fold the broadcast centroid array
-    per row — exact integer L2² on the scale-64 grid, strict `<` keeps
-    the first (lowest) cid on ties, matching the oracle's
-    ORDER BY dist, cid. The corpus crosses NO exchange here."""
-
-    def _argmin(acc, p):
-        d = F.aggregate(
-            F.zip_with(
-                F.col("us"),
-                p["carr"],
-                lambda u, c: (F.lit(_KM_SCALE) * u - c) * (F.lit(_KM_SCALE) * u - c),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda a, x: a + x,
-        )
-        better = d < acc["best"]
-        return F.struct(
-            F.when(better, d).otherwise(acc["best"]).alias("best"),
-            F.when(better, p["cid"]).otherwise(acc["cid"]).alias("cid"),
-        )
-
+    per row — exact integer L2² on the scale-64 grid, ties to the
+    lowest cid, matching the oracle's ORDER BY dist, cid. The corpus
+    crosses NO exchange here."""
+    dist = partial(sqdist, scale=_KM_SCALE)
     return (
         q.crossJoin(F.broadcast(cent_arr))
-        .withColumn(
-            "acc",
-            F.aggregate(
-                "cents",
-                F.struct(
-                    F.lit(2**62).cast("bigint").alias("best"),
-                    F.lit(None).cast("long").alias("cid"),
-                ),
-                _argmin,
-            ),
-        )
+        .withColumn("acc", argmin("us", "cents", dist))
         .select(
             "vec_id",
             "us",

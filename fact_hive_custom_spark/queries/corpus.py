@@ -26,6 +26,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fact_hive_custom_spark.functions.vectors import argmin, centre_array, sqdist
 from fact_hive_custom_spark.materialize import materialize
 
 from fact_hive_custom_spark.queries.registry import register
@@ -1430,47 +1431,18 @@ def _pq_cte_prefix(
 _PQ_CTE_PREFIX = _pq_cte_prefix()
 
 
-def _pq_centroid_arr(csub: DataFrame) -> DataFrame:
-    """K-per-subspace long-form codebook → M rows of (m, cents) where
-    `cents` is the cid-sorted array of (cid, cv) structs — the
-    broadcastable shape the map-side argmin fold consumes (the
-    clustering.py `_centroid_array` pattern, per subspace)."""
-    return csub.groupBy("m").agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cv"))).alias("cents")
-    )
-
-
-def _pq_argmin(sv_col: str):
-    """Map-side argmin over a broadcast `cents` array: exact integer
-    subspace L2², strict `<` keeps the FIRST (lowest) cid on ties —
-    identical to the oracle's min_by(cid, dist·1e7 + cid) because the
-    array is cid-sorted. Returns struct(best BIGINT, cid BIGINT);
-    `best` is the winning distance (== MIN(dist): the key is
-    dist-major). Replaces the round-≤14 K-way join + (vec_id, m)
-    groupBy, which materialized |corpus|·M·K rows and shuffled the
-    subvectors — this form touches NO exchange (r15, guide §2.4)."""
-
-    def step(acc, p):
-        d = F.aggregate(
-            F.zip_with(
-                F.col(sv_col), p["cv"], lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0).cast("bigint"),
-            lambda a, x: a + x,
-        )
-        better = d < acc["best"]
-        return F.struct(
-            F.when(better, d).otherwise(acc["best"]).alias("best"),
-            F.when(better, p["cid"]).otherwise(acc["cid"]).alias("cid"),
-        )
-
-    return F.aggregate(
-        "cents",
-        F.struct(
-            F.lit(2**62).cast("bigint").alias("best"),
-            F.lit(None).cast("bigint").alias("cid"),
-        ),
-        step,
+def _pq_codes(sub: DataFrame, csub: DataFrame) -> DataFrame:
+    """`sub` plus `acc` = struct(best, cid): each subvector's nearest
+    codebook centroid in its subspace by exact integer L2², ties to
+    the lowest cid — identical to the oracle's
+    min_by(cid, dist·1e7 + cid); `best` is MIN(dist). The M-row
+    codebook array broadcasts and the argmin folds map-side, so no
+    exchange is touched — the round-≤14 K-way join + (vec_id, m)
+    groupBy materialized |corpus|·M·K rows and shuffled the
+    subvectors (r15, guide §2.4)."""
+    cents = centre_array(csub, "cid", "cv", "m")
+    return sub.join(F.broadcast(cents), "m").withColumn(
+        "acc", argmin("sv", "cents", sqdist)
     )
 
 
@@ -1492,13 +1464,11 @@ def _pq_lloyd(sub: DataFrame, csub: DataFrame, rounds: int) -> DataFrame:
     subspace, all subspaces in the same jobs."""
     for _ in range(rounds):
         # Assignment is the map-side broadcast-array argmin fold
-        # (_pq_argmin): no K-way join blowup, no (vec_id, m) shuffle
+        # (_pq_codes): no K-way join blowup, no (vec_id, m) shuffle
         # carrying the subvectors — the round-14 asg exchanged
         # |corpus|·M rows with their 8-int arrays every round (r15).
-        asg = (
-            sub.join(F.broadcast(_pq_centroid_arr(csub)), "m")
-            .withColumn("acc", _pq_argmin("sv"))
-            .select("vec_id", "m", "sv", F.col("acc.cid").alias("code"))
+        asg = _pq_codes(sub, csub).select(
+            "vec_id", "m", "sv", F.col("acc.cid").alias("code")
         )
         csub = (
             asg.select(
@@ -1613,7 +1583,7 @@ def _pq_parts(
     # lineage also removes the repeated gscale/quantize subtree from
     # every downstream plan's analysis and broadcast builds. Blocks
     # free on RDD GC (the _pq_lloyd / label-prop convention); on a
-    # real cluster swap for a reliable checkpoint dir (executor-loss
+    # real cluster set `spark.checkpoint.dir` (executor-loss
     # recovery — operators/graph.py note). The RoundRobin repartition
     # is the semdedup single-file lesson — the map-side argmin fold
     # below must not inherit a one-partition parquet scan — and is
@@ -1653,15 +1623,11 @@ def _pq_parts(
     # rows) versus the round-≤14 |corpus|·M·K-row join + (vec_id, m)
     # min_by shuffle. acc.best IS min(dist) — the fold key is
     # dist-major — so distortion semantics are untouched (r15).
-    best = (
-        sub.join(F.broadcast(_pq_centroid_arr(csub)), "m")
-        .withColumn("acc", _pq_argmin("sv"))
-        .select(
-            "vec_id",
-            "m",
-            F.col("acc.cid").alias("code"),
-            F.col("acc.best").alias("min_dist"),
-        )
+    best = _pq_codes(sub, csub).select(
+        "vec_id",
+        "m",
+        F.col("acc.cid").alias("code"),
+        F.col("acc.best").alias("min_dist"),
     )
     return q, sub, csub, best
 
@@ -1714,15 +1680,8 @@ def pq_adc_topk(
     probes = sub.filter(F.col("vec_id") < n_probes).select(
         F.col("vec_id").alias("probe_id"), "m", F.col("sv").alias("pv")
     )
-    l2 = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-        " 0L, (acc, v) -> acc + v)"
-    )
     dt = probes.join(F.broadcast(csub), "m").select(
-        "probe_id",
-        "m",
-        "cid",
-        F.expr(l2.format(a="pv", b="cv")).alias("pdist"),
+        "probe_id", "m", "cid", sqdist("pv", "cv").alias("pdist")
     )
     if nprobe is None:
         adc_src = best.alias("b")
@@ -1742,18 +1701,9 @@ def pq_adc_topk(
         # "fixed cost" the round-15 baseline addendum priced at
         # +2.6 s sf0.1). Tie order (lowest pid) is preserved by the
         # pid-sorted array + strict `<` (r15).
-        piv_arr = piv.agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("pid").alias("cid"), F.col("pqs").alias("cv")
-                    )
-                )
-            ).alias("cents")
-        )
         assign = (
-            q.crossJoin(F.broadcast(piv_arr))
-            .withColumn("acc", _pq_argmin("qs"))
+            q.crossJoin(F.broadcast(centre_array(piv, "pid", "pqs")))
+            .withColumn("acc", argmin("qs", "cents", sqdist))
             .select("vec_id", F.col("acc.cid").alias("cluster"))
         )
         wc = Window.partitionBy("probe_id").orderBy("cdist", "pid")
@@ -1763,11 +1713,7 @@ def pq_adc_topk(
                 F.col("vec_id").alias("probe_id"), F.col("qs").alias("prqs")
             )
             .crossJoin(F.broadcast(piv))
-            .select(
-                "probe_id",
-                "pid",
-                F.expr(l2.format(a="prqs", b="pqs")).alias("cdist"),
-            )
+            .select("probe_id", "pid", sqdist("prqs", "pqs").alias("cdist"))
             .withColumn("crk", F.row_number().over(wc))
             .filter(F.col("crk") <= nprobe)
             .select("probe_id", F.col("pid").alias("cluster"))
@@ -1811,10 +1757,7 @@ def pq_adc_topk(
             "probe_id",
             "neighbor_id",
             "adc_dist",
-            F.expr(
-                "aggregate(zip_with(pqs, nqs, (a, b) -> (a - b) * (a - b)),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("exact_dist"),
+            sqdist("pqs", "nqs").alias("exact_dist"),
         )
     )
     wr = Window.partitionBy("probe_id").orderBy("exact_dist", "neighbor_id")
@@ -1863,10 +1806,7 @@ def pq_exact_l2_topk(emb: DataFrame, n_probes: int = 10, k: int = 5) -> DataFram
         .select(
             "probe_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.expr(
-                "aggregate(zip_with(pqs, qs, (a, b) -> (a - b) * (a - b)),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("exact_dist"),
+            sqdist("pqs", "qs").alias("exact_dist"),
         )
     )
     wpart = Window.partitionBy("probe_id", "salt").orderBy(

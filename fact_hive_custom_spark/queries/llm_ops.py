@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fact_hive_custom_spark.functions.vectors import argmin, centre_array, dot, norm
 from fact_hive_custom_spark.operators.dedup import jaccard_pairs, minhash_lsh_pairs
 from fact_hive_custom_spark.operators.graph import connected_components
 from fact_hive_custom_spark.operators.similarity import cosine_topk
@@ -1217,6 +1218,15 @@ def q_llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _neg_cos6(e, p):
+    """q_llm_semdedup's assignment distance: −round(cos, 6) to pivot
+    struct `p`, so argmin picks the highest 6-dp cosine and, among
+    equal ones, the lowest pivot id. dot/(‖a‖·‖b‖) over the row's `nrm`
+    and the pivot's precomputed norm is the identical value tree to
+    cosine(), one nested fold instead of three."""
+    return -F.round(dot(e, p["pivot_vec"]) / (F.col("nrm") * p["pivot_nrm"]), 6)
+
+
 @register(
     "q_llm_semdedup",
     oracle=f"""
@@ -1270,10 +1280,10 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the scale path the exact q_llm_cosine_dedup oracles
     cannot be at 100 TB: pairwise work is confined WITHIN clusters —
     cost drops from O(n²) to Σ|cluster|², the clustering reuses the
-    IVF machinery (deterministic pivots, broadcast, argmax
-    assignment — operators/similarity.py), and missing cross-cluster
-    duplicates is the documented, bounded approximation the paper
-    accepts. Both engines compute the IDENTICAL rule (32 lowest-id
+    IVF machinery (deterministic pivots, broadcast, nearest-pivot
+    assignment — functions/vectors.py argmin), and missing
+    cross-cluster duplicates is the documented, bounded approximation
+    the paper accepts. Both engines compute the IDENTICAL rule (32 lowest-id
     pivots — limit(32) below, LIMIT 32 in the oracle — 6-dp rounded
     cosine, pivot-id tiebreak), so the oracle checks it exactly.
 
@@ -1299,12 +1309,10 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hence both norms precompute per row), chosen because the fold's
     left-to-right order is bit-identical to the DuckDB oracle. In
     production the within-cluster scoring hands off to the same
-    pivot-blocked Arrow/BLAS matmul kernel as cosine_pairs
-    (operators/similarity.py:167, measured 653 s → 8 s), whose
+    pivot-blocked Arrow/BLAS matmul kernel as
+    operators/similarity.py cosine_pairs (measured 653 s → 8 s), whose
     reordered summation is numerically equivalent at any real dedup
     threshold but not bit-pinned at the 6-dp rounding edge."""
-    from fact_hive_custom_spark.functions.vectors import dot, norm
-
     # norm once per ROW up front: the assignment fold and the pair
     # join both consume it — nesting norm's fold inside the pivot
     # fold was measured 2.7× slower (nested HOFs evaluate interpreted).
@@ -1331,39 +1339,11 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one row holding the sorted pivot array: broadcast-joined 1×n, no
     # row multiplication, no re-aggregation of the corpus
-    parr = pivots.agg(
-        F.sort_array(
-            F.collect_list(F.struct("pivot_id", "pivot_vec", "pivot_nrm"))
-        ).alias("pivs")
-    )
-
-    def _argmax(acc, p):
-        # dot/(‖a‖·‖b‖) with both norms precomputed — identical value
-        # tree to cosine(), one nested fold instead of three
-        c6 = F.round(
-            dot(F.col("embedding"), p["pivot_vec"]) / (F.col("nrm") * p["pivot_nrm"]),
-            6,
-        )
-        better = c6 > acc["best"]
-        return F.struct(
-            F.when(better, c6).otherwise(acc["best"]).alias("best"),
-            F.when(better, p["pivot_id"]).otherwise(acc["pid"]).alias("pid"),
-        )
-
+    parr = centre_array(pivots, "pivot_id", F.struct("pivot_vec", "pivot_nrm"))
     assigned = (
         emb.crossJoin(F.broadcast(parr))
-        .withColumn(
-            "acc",
-            F.aggregate(
-                "pivs",
-                F.struct(
-                    F.lit(-2.0).alias("best"),
-                    F.lit(None).cast("long").alias("pid"),
-                ),
-                _argmax,
-            ),
-        )
-        .select("vec_id", "embedding", "nrm", F.col("acc.pid").alias("cluster"))
+        .withColumn("acc", argmin("embedding", "cents", _neg_cos6, worst=2.0))
+        .select("vec_id", "embedding", "nrm", F.col("acc.cid").alias("cluster"))
     )
     # Pair-stage parallelism: a plain join on `cluster` has only 32
     # distinct keys, so at most 32 tasks score Σ|cluster|² pairs

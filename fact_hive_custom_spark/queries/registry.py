@@ -33,13 +33,3 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
     return deco
 
-
-def describe() -> str:
-    """Human-readable inventory: one line per registered query
-    (id, oracle-checked or rows-only, first docstring line)."""
-    lines = []
-    for name in sorted(QUERIES):
-        mode = "oracle" if name in ORACLE else "rows-only"
-        doc = (QUERIES[name].__doc__ or "").strip().splitlines()
-        lines.append(f"{name:28s} [{mode:9s}] {doc[0] if doc else ''}")
-    return "\n".join(lines)

@@ -50,6 +50,9 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         # Local mode: driver JVM is the only process; give it headroom.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # Reliable checkpoints (materialize() with spark.checkpoint.dir
+        # set) delete their files when the checkpointed RDD is GC'd.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

@@ -4,9 +4,10 @@ tests/test_plans.py pins ~150 hand-chosen shapes; this suite covers
 the rest mechanically: every registered query's pre-AQE physical plan
 is fingerprinted (exchange / broadcast / python / cartesian counts,
 plans.inspect.plan_counts) and compared against the committed
-PLAN_SNAPSHOT.json. A query whose shuffle count GROWS, or which newly
-acquires a Python-eval node or a cartesian, fails — silent plan
-regressions in never-pinned queries are the class this catches.
+PLAN_SNAPSHOT.json. A query whose shuffle count GROWS, which newly
+acquires a Python-eval node or a cartesian, or whose count of nested
+higher-order functions grows, fails — silent plan regressions in
+never-pinned queries are the class this catches.
 
 Improvements (fewer exchanges, dropped Python) pass but leave the
 snapshot stale — regenerate with `python tools/plan_snapshot.py` so
@@ -115,6 +116,11 @@ def test_plan_shape_has_not_regressed(spark, name):
     )
     assert not (got["cartesian"] and not snap["cartesian"]), (
         f"{name}: plan newly contains a cartesian/nested-loop join"
+    )
+    assert got["nested_hof"] <= snap["nested_hof"], (
+        f"{name}: nested higher-order functions grew {snap['nested_hof']} → "
+        f"{got['nested_hof']} — a HOF inside another HOF's lambda runs "
+        "interpreted, outside whole-stage codegen"
     )
 
 

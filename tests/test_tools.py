@@ -22,12 +22,7 @@ TOOLS = sorted((ROOT / "tools").glob("*.py"))
 
 # Every env var the engine package reads. A new one (an A/B gate, a
 # tuning switch) must be added here on purpose, or removed once decided.
-ENV_KNOBS = {
-    "SPARK_GRAFT_CPUS",
-    "SPARK_DRIVER_MEMORY",
-    "FHC_RELIABLE_CHECKPOINT",
-    "FHC_CHECKPOINT_DIR",
-}
+ENV_KNOBS = {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY"}
 
 
 @pytest.mark.parametrize("path", TOOLS, ids=lambda p: p.name)

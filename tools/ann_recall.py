@@ -193,6 +193,22 @@ def main() -> None:
         ({"pq_m": 16, "pq_k": 64, "train_rounds": 2, "rerank_r": 100,
           "opq": True},
          "OPQ M=16 K=64 T=2 + re-rank R=100"),
+        # --- IVF pruning × trained M=16 codebook × deep re-rank: the
+        # composite grid behind q_llm_ann_tuned's operating point ---
+        ({"pq_m": 16, "pq_k": 64, "train_rounds": 2, "rerank_r": 400},
+         "M=16 K=64 T=2 + re-rank R=400 (exhaustive)"),
+        ({"pq_m": 16, "pq_k": 64, "train_rounds": 2, "rerank_r": 200,
+          "nprobe": 8},
+         "IVF nprobe=8/16 × M=16 K=64 T=2 + R=200"),
+        ({"pq_m": 16, "pq_k": 64, "train_rounds": 2, "rerank_r": 400,
+          "nprobe": 8},
+         "IVF nprobe=8/16 × M=16 K=64 T=2 + R=400"),
+        ({"pq_m": 16, "pq_k": 64, "train_rounds": 2, "rerank_r": 200,
+          "nprobe": 4},
+         "IVF nprobe=4/16 × M=16 K=64 T=2 + R=200"),
+        ({"pq_m": 16, "pq_k": 64, "train_rounds": 2, "rerank_r": 400,
+          "nprobe": 4},
+         "IVF nprobe=4/16 × M=16 K=64 T=2 + R=400"),
     ]:
         t0 = time.perf_counter()
         trn = pairs(pq_adc_topk(emb, n_probes=n_probes, k=k, **kwargs))

@@ -3,11 +3,11 @@
 
 tests/test_plans.py pins ~150 hand-chosen plan shapes; this tool
 fingerprints EVERY registered query's physical plan (exchange /
-broadcast / python-eval / cartesian counts from plans.inspect.
-plan_counts) into PLAN_SNAPSHOT.json, and tests/test_plan_snapshot.py
-fails any query whose shuffle count grows or which newly acquires a
-Python node or cartesian — the queries nobody pinned get a regression
-net too.
+broadcast / python-eval / cartesian / nested-HOF counts from
+plans.inspect.plan_counts) into PLAN_SNAPSHOT.json, and
+tests/test_plan_snapshot.py fails any query whose shuffle or
+nested-HOF count grows or which newly acquires a Python node or
+cartesian — the queries nobody pinned get a regression net too.
 
 Regenerate after any deliberate re-plan:
 
