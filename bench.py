@@ -1,13 +1,19 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline query set at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] and prints two JSON lines: per-pass
+diagnostics (runs, spread, the [build_s, action_s] split, load1), then
+the headline
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ...}
 
 Each query materializes via the noop sink (full execution, no driver
 transfer). One JVM-warmup run of the flagship precedes timing.
 BASELINE.md records the reference numbers for this machine.
+
+`build_query` / `run_query` are the one place a registry query is
+built and timed; the tools (ab_fresh, skew_sweep,
+query_metrics_report, explain_dump) import them.
 """
 
 from __future__ import annotations
@@ -48,7 +54,8 @@ HEADLINE = [
     # and the per-query zero-exchange PROBE — the combined number was
     # build-dominated (2.4 s vs the probe's ~0.8 s), hiding probe
     # regressions, and on a cluster the build amortizes over every
-    # later probe. Pseudo-IDs resolved in run(), not registry entries.
+    # later probe. Pseudo-IDs resolved in build_query(), not registry
+    # entries.
     "q_join_bucketed_build",
     "q_join_bucketed_probe",
     "q_join_bloom",
@@ -154,41 +161,58 @@ HEADLINE = [
 ]
 
 
+# The latest q_join_bucketed layout build per sf_dir: (orders, lineitem)
+# table names, read by the probe row.
+_BUCKET_TABLES: dict[str, tuple[str, str]] = {}
+
+
+def build_query(spark, name: str, sf_dir: str):
+    """The DataFrame for bench row `name` at `sf_dir`.
+
+    `q_join_bucketed_build` writes the two bucketed tables and returns
+    None: the writes are its whole work. `q_join_bucketed_probe` reads
+    the latest build for the same `sf_dir`, building one first if none
+    has run."""
+    from fact_hive_custom_spark.queries import QUERIES
+    from fact_hive_custom_spark.queries.sources_sinks import (
+        bucketed_layout_build,
+        bucketed_probe,
+    )
+
+    if name == "q_join_bucketed_build":
+        _BUCKET_TABLES[sf_dir] = bucketed_layout_build(spark, sf_dir)
+        return None
+    if name == "q_join_bucketed_probe":
+        if sf_dir not in _BUCKET_TABLES:
+            build_query(spark, "q_join_bucketed_build", sf_dir)
+        return bucketed_probe(spark, *_BUCKET_TABLES[sf_dir])
+    return QUERIES[name](spark, sf_dir)
+
+
+def run_query(spark, name: str, sf_dir: str) -> tuple[float, float]:
+    """Run bench row `name` once; returns (build_s, action_s).
+
+    build_s covers `build_query`: analysis plus any eager jobs the
+    query runs while being built. action_s is the noop-sink write
+    (full execution, no driver transfer)."""
+    t0 = time.perf_counter()
+    df = build_query(spark, name, sf_dir)
+    t1 = time.perf_counter()
+    if df is not None:
+        df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    return round(t1 - t0, 3), round(t2 - t1, 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from fact_hive_custom_spark.queries import QUERIES
     from fact_hive_custom_spark.session import get_session
 
     spark = get_session("fact_hive_custom_spark-bench", quiet=True)
 
-    # q_join_bucketed's build/probe split: the build stores its per-run
-    # table names here; the probe (always later in HEADLINE order)
-    # reads the most recent build's tables.
-    bucket_tables: dict[str, tuple[str, str]] = {}
-
-    def run(name: str) -> float:
-        from fact_hive_custom_spark.queries.sources_sinks import (
-            bucketed_layout_build,
-            bucketed_probe,
-        )
-
-        t0 = time.perf_counter()
-        if name == "q_join_bucketed_build":
-            # the two saveAsTable writes ARE the action — nothing to sink
-            bucket_tables["t"] = bucketed_layout_build(spark, sf_dir)
-        elif name == "q_join_bucketed_probe":
-            bucketed_probe(spark, *bucket_tables["t"]).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        else:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        return round(time.perf_counter() - t0, 3)
-
-    run("q_agg_flagship")  # JVM/codegen warmup, untimed
+    run_query(spark, "q_agg_flagship", sf_dir)  # JVM/codegen warmup, untimed
 
     # THREE timed passes per query, reported as median + spread: the
     # first execution pays one-off JIT/codegen-cache costs and the
@@ -197,11 +221,20 @@ def main() -> None:
     # Median of [cold-ish, warm, warm] lands on a warm run but
     # survives one spike; the per-query min/max spread is printed so
     # noise is visible, not inferred. Pass 1 runs every query once
-    # (uniform warmth for passes 2-3).
+    # (uniform warmth for passes 2-3). The 1-minute load average is
+    # sampled before each pass so a slow pass can be told from a busy
+    # host.
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    build_action: dict[str, list[tuple[float, float]]] = {
+        name: [] for name in HEADLINE
+    }
+    load1: list[float] = []
     for _pass in range(3):
+        load1.append(round(os.getloadavg()[0], 2))
         for name in HEADLINE:
-            runs[name].append(run(name))
+            build_s, action_s = run_query(spark, name, sf_dir)
+            build_action[name].append((build_s, action_s))
+            runs[name].append(round(build_s + action_s, 3))
 
     timings = {name: sorted(r)[1] for name, r in runs.items()}  # median of 3
     total = round(sum(timings.values()), 3)
@@ -219,6 +252,8 @@ def main() -> None:
                 },
                 "value_min": round(sum(min(r) for r in runs.values()), 3),
                 "value_max": round(sum(max(r) for r in runs.values()), 3),
+                "build_action": build_action,
+                "load1": load1,
             }
         ),
         flush=True,

@@ -2,7 +2,7 @@
 builders shared by operators and queries. Everything here returns
 expressions (not DataFrames) and stays inside Catalyst/codegen."""
 
-from fact_hive_custom_spark.functions.text import ngram_shingles, token_count, tokens
+from fact_hive_custom_spark.functions.text import tokens
 from fact_hive_custom_spark.functions.vectors import cosine, dot, norm
 
-__all__ = ["tokens", "token_count", "ngram_shingles", "dot", "norm", "cosine"]
+__all__ = ["tokens", "dot", "norm", "cosine"]

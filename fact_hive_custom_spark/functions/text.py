@@ -16,10 +16,6 @@ def tokens(text: Column | str) -> Column:
     return F.split(text, " ")
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
-
-
 def ngram_shingles_of(toks: Column | str, k: int) -> Column:
     """array<string> of distinct k-word shingles from an ALREADY-BOUND
     tokens column (empty below k tokens).
@@ -40,13 +36,3 @@ def ngram_shingles_of(toks: Column | str, k: int) -> Column:
         F.array().cast("array<int>")
     )
     return F.array_distinct(F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " ")))
-
-
-def ngram_shingles(text: Column | str, k: int) -> Column:
-    """array<string> of distinct k-word shingles straight from a text
-    column. EXPRESSION-LEVEL convenience only — inside the shingling
-    lambda the split is re-evaluated per position (see
-    `ngram_shingles_of`); any DataFrame-level caller should project
-    `tokens(text)` to a column first and use `ngram_shingles_of`
-    (as `operators.dedup.shingles` does)."""
-    return ngram_shingles_of(tokens(text), k)

@@ -13,10 +13,10 @@ layer with three entry points, all stock Spark:
    fleet-monitoring surface: on a cluster the records stream to the
    metrics store; here they accumulate on the listener object.
 
-2. `execution_metrics(df)` — active form: execute `df` via the noop
-   sink and return the final (AQE-finalized) plan's per-node
-   SQLMetrics plus a scale-relevant summary (rows scanned, shuffle
-   bytes/rows, spill, peak memory). This is what BENCH-style tooling
+2. `execution_metrics(df)` — active form: execute `df`'s own plan
+   JVM-side (no sink, no driver transfer) and return the final
+   (AQE-finalized) plan's per-node SQLMetrics plus a scale-relevant
+   summary (rows scanned, shuffle bytes/rows, spill, peak memory). This is what BENCH-style tooling
    wants: "did this query shuffle 40 GB or 40 KB" measured, not
    guessed from the plan string.
 

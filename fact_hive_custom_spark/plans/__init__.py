@@ -2,7 +2,6 @@
 
 from fact_hive_custom_spark.plans.inspect import (
     executed_plan,
-    has_broadcast_hash_join,
     has_whole_stage_codegen,
     pushed_filters,
     read_schema,
@@ -13,7 +12,6 @@ __all__ = [
     "executed_plan",
     "pushed_filters",
     "read_schema",
-    "has_broadcast_hash_join",
     "has_whole_stage_codegen",
     "uses_python",
 ]

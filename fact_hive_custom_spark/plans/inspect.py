@@ -40,10 +40,6 @@ def read_schema(df: DataFrame) -> list[str]:
     return cols
 
 
-def has_broadcast_hash_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in executed_plan(df)
-
-
 _PYTHON_EXEC_RE = re.compile(
     # Every Python-evaluation exec node Spark 4 can plan: row-at-a-time
     # (BatchEvalPython), Arrow-batched scalar (ArrowEvalPython), the

@@ -25,9 +25,8 @@ map-side fold over a broadcast K-row centroid array
 (functions/vectors.py argmin — the corpus NEVER shuffles on vec_id),
 and the update shuffle carries only K×D partial (sum, count) pairs
 per task — independent of corpus size. T rounds = T+1 scans, the
-textbook distributed-k-means cost. The quantized relation is cached across
-rounds (generation cache, released on next build, the
-_BPE_TRAIN_CACHE discipline).
+textbook distributed-k-means cost. The quantized relation is built once
+with `materialize()` (an eager checkpoint) and every round reads it.
 """
 
 from __future__ import annotations

@@ -387,7 +387,6 @@ class TestCdcUpsert:
         assert len(rows) == 1 and rows[0].event_type == "hi"
 
 
-@pytest.mark.slow
 class TestCheckpointRestartRecovery:
     """Exactly-once across a PROCESS-level restart: a streaming dedup
     query is stopped cold and a brand-new query object resumes from

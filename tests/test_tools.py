@@ -90,9 +90,9 @@ def test_bench_headline_is_registered():
     from fact_hive_custom_spark.queries import ORACLE, QUERIES
 
     # q_join_bucketed's bench rows time its build and probe halves
-    # separately (round-11); both resolve inside bench.run() to the
-    # registered q_join_bucketed's own helpers, so the registry/oracle
-    # coverage they rely on is q_join_bucketed's.
+    # separately (round-11); both resolve inside bench.build_query() to
+    # the registered q_join_bucketed's own helpers, so the
+    # registry/oracle coverage they rely on is q_join_bucketed's.
     pseudo = {"q_join_bucketed_build", "q_join_bucketed_probe"}
     assert pseudo <= set(HEADLINE)
     assert "q_join_bucketed" in QUERIES and "q_join_bucketed" in ORACLE
@@ -222,3 +222,53 @@ class TestDigestComparator:
             assert not ok, f"digest missed a float shift: {detail}"
         finally:
             del QUERIES[name], ORACLE[name]
+
+
+class TestQueryRunner:
+    """bench.build_query / run_query: the one runner bench.py and the
+    timing tools share. Both bucketed pseudo-rows run, the probe alone
+    builds its own layout, and the (build_s, action_s) split adds up
+    to the wall time around the call."""
+
+    SF = TestDigestComparator.SF
+
+    def test_bucketed_rows_run_in_order_and_alone(self, spark, tmp_path):
+        import shutil
+
+        import bench
+
+        fresh = str(tmp_path / "sf0.001")
+        shutil.copytree(self.SF, fresh)
+        for name, sf_dir in (
+            ("q_join_bucketed_build", self.SF),
+            ("q_join_bucketed_probe", self.SF),
+            ("q_join_bucketed_probe", fresh),  # no build has run here
+        ):
+            build_s, action_s = bench.run_query(spark, name, sf_dir)
+            assert build_s >= 0 and action_s >= 0, (name, sf_dir)
+        assert bench.build_query(spark, "q_join_bucketed_build", self.SF) is None
+
+    def test_probe_frame_matches_registered_query(self, spark):
+        import bench
+        from fact_hive_custom_spark.queries import QUERIES
+        from tests.parity import _pandas_rows, _strict_rows
+
+        def hashed(df):
+            return _strict_rows(df.columns, _pandas_rows(df.toPandas()))
+
+        probe = bench.build_query(spark, "q_join_bucketed_probe", self.SF)
+        whole = QUERIES["q_join_bucketed"](spark, self.SF)
+        assert hashed(probe) == hashed(whole)
+
+    def test_split_sums_to_wall(self, spark):
+        import time
+
+        import bench
+
+        for name in ("q_agg_flagship", "q_join_bucketed_probe"):
+            t0 = time.perf_counter()
+            build_s, action_s = bench.run_query(spark, name, self.SF)
+            wall = time.perf_counter() - t0
+            assert abs(build_s + action_s - wall) < 0.005, (
+                name, build_s, action_s, wall,
+            )

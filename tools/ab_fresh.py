@@ -1,8 +1,16 @@
 #!/usr/bin/env python
 """Time queries the way bench.py does: fresh JVM (this process),
 the same untimed q_agg_flagship warm-up bench.py runs, then
-N timed passes of each named query via the noop sink; prints one JSON
-line per query with the per-pass times and the median.
+N timed passes of each named query through bench.run_query; prints one
+JSON line per query:
+
+    query, sf_dir    the bench row and its fixture dir
+    passes, median   per-pass total seconds and their median
+    build_median     median of the construction part (build_query,
+                     including eager jobs)
+    action_median    median of the final noop-sink action
+
+Any bench.py row works, the q_join_bucketed build/probe split included.
 
 Usage:
     python tools/ab_fresh.py [--passes N] <query> [query ...]
@@ -31,7 +39,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,27 +50,27 @@ def main() -> int:
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from fact_hive_custom_spark.queries import QUERIES
+    from bench import run_query
     from fact_hive_custom_spark.session import get_session
 
     spark = get_session("ab-fresh", quiet=True)
+    run_query(spark, "q_agg_flagship", sf_dir)  # warmup, untimed (bench.py parity)
 
-    def run(q: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[q](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    run("q_agg_flagship")  # JVM/codegen warmup, untimed (bench.py parity)
+    def median(xs: list[float]) -> float:
+        return sorted(xs)[len(xs) // 2]
 
     for name in args.queries:
-        times = [run(name) for _ in range(args.passes)]
+        splits = [run_query(spark, name, sf_dir) for _ in range(args.passes)]
+        times = [round(b + a, 3) for b, a in splits]
         print(
             json.dumps(
                 {
                     "query": name,
                     "sf_dir": sf_dir,
                     "passes": times,
-                    "median": sorted(times)[len(times) // 2],
+                    "median": median(times),
+                    "build_median": median([b for b, _ in splits]),
+                    "action_median": median([a for _, a in splits]),
                 }
             ),
             flush=True,

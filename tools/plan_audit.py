@@ -22,7 +22,6 @@ narrower assertions in tests/test_plans.py.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -31,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
+    from fact_hive_custom_spark.metrics import execution_metrics
     from fact_hive_custom_spark.plans import inspect as plans
     from fact_hive_custom_spark.queries import ORACLE, QUERIES
     from fact_hive_custom_spark.session import get_session
@@ -56,27 +56,18 @@ def main() -> None:
     for name in sorted(QUERIES):
         try:
             df = QUERIES[name](spark, sf_dir)
-            jqe = df._jdf.queryExecution()
-            jqe.executedPlan().execute().count()  # finalize AQE, JVM-side
-            plan = jqe.executedPlan().toString()
+            execution_metrics(df)  # finalize AQE, JVM-side
+            c = plans.plan_counts(df)
+            # adaptive plans print Final + Initial sections; audit the final
+            final = plans.executed_plan(df).split("== Initial Plan ==")[0]
         except Exception as e:  # streaming-only shapes need execution
             skipped.append(f"{name}: {type(e).__name__}")
             continue
-        # adaptive plans print Final + Initial sections; audit the final
-        if "== Initial Plan ==" in plan:
-            plan = plan.split("== Initial Plan ==")[0]
-        hash_ex = len(re.findall(r"Exchange hashpartitioning", plan))
-        single_ex = len(re.findall(r"Exchange SinglePartition", plan))
-        bcast = len(re.findall(r"BroadcastExchange", plan))
-        reuse = len(re.findall(r"Reused", plan))
-        python = bool(
-            re.search(r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)
-        )
-        cartesian = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
         oracle = "Y" if name in ORACLE else "rows-only"
         print(
-            f"| {name} | {oracle} | {hash_ex} | {single_ex} | {bcast} | {reuse} "
-            f"| {'PY' if python else '-'} | {'X' if cartesian else '-'} |"
+            f"| {name} | {oracle} | {c['hash_ex']} | {c['single_ex']} "
+            f"| {c['bcast']} | {final.count('Reused')} "
+            f"| {'PY' if c['python'] else '-'} | {'X' if c['cartesian'] else '-'} |"
         )
 
     if skipped:

@@ -23,9 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from bench import HEADLINE
+    from bench import HEADLINE, build_query
     from fact_hive_custom_spark.metrics import execution_metrics
-    from fact_hive_custom_spark.queries import QUERIES
     from fact_hive_custom_spark.session import get_session
 
     spark = get_session("query-metrics", quiet=True)
@@ -44,29 +43,14 @@ def main() -> None:
     print("| query | rows scanned | shuffle rows | shuffle MB | spill MB | wall s |")
     print("|---|---|---|---|---|---|")
 
-    import time as _time
-
-    from fact_hive_custom_spark.queries.sources_sinks import (
-        bucketed_layout_build,
-        bucketed_probe,
-    )
-
-    bucket: dict[str, tuple[str, str]] = {}
     for name in HEADLINE:
         try:
-            if name == "q_join_bucketed_build":
-                # table writes have no query DataFrame to instrument;
-                # report wall only (the build row exists so the probe
-                # row below measures ONLY the zero-exchange join)
-                t0 = _time.perf_counter()
-                bucket["t"] = bucketed_layout_build(spark, sf_dir)
-                w = _time.perf_counter() - t0
-                print(f"| {name} | (layout write) | | | | {w:.2f} |")
+            df = build_query(spark, name, sf_dir)
+            if df is None:
+                # a layout build: its table writes are the whole row and
+                # have no query plan to instrument (bench.py times it)
+                print(f"| {name} | (layout write) | | | | |")
                 continue
-            if name == "q_join_bucketed_probe":
-                df = bucketed_probe(spark, *bucket["t"])
-            else:
-                df = QUERIES[name](spark, sf_dir)
             out = execution_metrics(df)
         except Exception as e:
             print(f"| {name} | error: {type(e).__name__} | | | | |")

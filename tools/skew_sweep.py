@@ -5,12 +5,12 @@ query classes on the uniform sf1.0 fixture and on the hot-key variant
 answer to "would this query survive one user with 20% of the events /
 one SKU with 20% of the order lines".
 
-Execution is `write.format("noop")` (full pipeline, zero driver
-materialization), best of 2 runs per cell, AQE on with session
-defaults — exactly what the engine ships. A ratio near 1.0 means the
-plan's shuffles are either key-free, salted, or collapse before the
-hot key concentrates; a superlinear ratio marks a query whose
-docstring owes the salting treatment.
+Each cell is bench.run_query (build plus noop-sink action: full
+pipeline, zero driver materialization), best of 2 runs, AQE on with
+session defaults — exactly what the engine ships. A ratio near 1.0
+means the plan's shuffles are either key-free, salted, or collapse
+before the hot key concentrates; a superlinear ratio marks a query
+whose docstring owes the salting treatment.
 
 Usage:
     python tools/make_skew_fixture.py
@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -63,20 +62,14 @@ ROSTER = [
 
 
 def main() -> None:
+    from bench import run_query
     from fact_hive_custom_spark.queries import QUERIES
     from fact_hive_custom_spark.session import get_session
 
     spark = get_session("skew-sweep", quiet=True)
 
     def wall(name: str, sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+        return min(sum(run_query(spark, name, sf_dir)) for _ in range(2))
 
     tag = os.environ.get("SPARK_GRAFT_SKEW_TAG", "r14")
     print(f"# SKEW_{tag} — hot-key degradation sweep")
