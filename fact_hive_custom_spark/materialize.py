@@ -1,9 +1,18 @@
 """Lineage-truncating materialization whose durability follows the
 SparkContext.
 
-Every shared intermediate this engine materializes (PQ quantized
-corpus, graph edge lists, theta sketch segments, iterative
-centroids/frontiers) goes through `materialize(df)`:
+`materialize(df)` is the engine's only way to reuse an intermediate
+(shingle sets, day series, vocab tables, the PQ quantized corpus,
+graph edge lists, iterative centroids/frontiers). The engine never
+calls `persist()`/`cache()`: their CacheManager entry is keyed on the
+plan, which names the parquet path, so it outlives the query — a
+fixture rewritten in place is then answered from the old cache, and
+one pass reads the blocks a previous pass built instead of doing its
+own work. A checkpoint belongs to the DataFrame that made it and
+nothing else can match it. `tests/test_tools.py` fails on any
+persist or cache call in the package.
+
+Where the blocks live follows the SparkContext:
 
 - with a checkpoint directory on the SparkContext (stock
   `spark.checkpoint.dir`, or `sc.setCheckpointDir`) it is a reliable

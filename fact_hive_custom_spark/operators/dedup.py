@@ -19,9 +19,10 @@ Banding math: with r rows/band and b bands, P(candidate | jaccard=j)
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from fact_hive_custom_spark.materialize import materialize
 
 
 def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
@@ -117,11 +118,10 @@ def jaccard_pairs(
     if max_doc_freq is not None:
         sh = _df_capped(sh, max_doc_freq)
     # The capped shingle frame feeds three consumers (sizes, both pair
-    # join sides); persist it so the scan+explode+cap runs once. At
-    # 100 TB each recomputation is a full corpus pass — caching the
-    # (doc_id, long) pairs is ~16 bytes/shingle, spilling to disk if
-    # needed. Released by Spark's LRU / clearCache().
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # join sides); materialize it so the scan+explode+cap runs once.
+    # At 100 TB each recomputation is a full corpus pass — the
+    # (doc_id, long) pairs are ~16 bytes/shingle.
+    sh = materialize(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -183,20 +183,19 @@ def minhash_lsh_pairs(
     """
     # Same hashed-shingle representation as jaccard_pairs: signatures
     # hash the 64-bit key again per seed (a valid MinHash family), and
-    # the verification join shuffles longs. Persisted: the frame feeds
-    # four consumers (signatures, sizes, both verification join sides)
-    # and caching (doc_id, long) pairs is ~16 B/shingle. The r3 bench
-    # note that re-scan beat persist predates the bound-tokens shingle
-    # fix — with the scan 4.7× cheaper the cache build is cheap too,
-    # and the A/B flipped (sf1.0: 5.5 s persisted vs 6.2 s re-scan);
-    # at 100 TB re-scanning would be four full corpus tokenize passes.
-    # Released by Spark's LRU / clearCache(), like jaccard_pairs.
+    # the verification join shuffles longs. Materialized: the frame
+    # feeds four consumers (signatures, sizes, both verification join
+    # sides) at ~16 B/shingle. The r3 bench note that re-scan beat
+    # persist predates the bound-tokens shingle fix — with the scan
+    # 4.7× cheaper the cache build is cheap too, and the A/B flipped
+    # (sf1.0: 5.5 s persisted vs 6.2 s re-scan); at 100 TB re-scanning
+    # would be four full corpus tokenize passes.
     sh = shingles(docs, k=k).select(
         "doc_id", F.xxhash64("shingle").alias("shingle")
     )
     if max_doc_freq is not None:
         sh = _df_capped(sh, max_doc_freq)
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(sh)
     sig = minhash_signatures(sh, num_hashes=rows_per_band * num_bands)
 
     bands = F.array(

@@ -90,10 +90,11 @@ def connected_components(
     )
     for _ in range(max_iter):
         nxt = _small_star(_large_star(edges)).transform(materialize)
-        unchanged = (
-            nxt.count() == edges.count()
-            and nxt.join(edges, ["u", "v"], "left_anti").isEmpty()
-        )
+        # Both edge sets are distinct, so an edge in only one of them
+        # sums to ±1: the fixpoint test is one aggregate over their
+        # symmetric difference (one shuffle, one result job).
+        tagged = nxt.withColumn("s", F.lit(1)).union(edges.withColumn("s", F.lit(-1)))
+        unchanged = tagged.groupBy("u", "v").agg(F.sum("s").alias("s")).filter("s != 0").isEmpty()
         edges = nxt
         if unchanged:
             break

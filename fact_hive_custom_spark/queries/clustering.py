@@ -50,9 +50,6 @@ _KM_T = 2
 _KM_SCALE = 64
 
 
-_PCA_CACHE: list = []
-
-
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, us) — int8-quantized embedding shifted to [0, 254].
 
@@ -168,7 +165,7 @@ def _kmeans_parts(spark: SparkSession, sf_dir: str, rounds: int = _KM_T):
         assigned = _assign(q, _centroid_array(cent))
         # Lineage cap (the q_graph_kcore discipline): eagerly
         # localCheckpoint the K×D-row centroid relation each round so
-        # a cold one-shot caller pays T small jobs (one cached-corpus
+        # a cold one-shot caller pays T small jobs (one materialized-corpus
         # scan each) instead of one deeply nested DAG whose analysis
         # and nested broadcasts produced a 41 s/18 s cold-run cliff
         # over a ~5 s median (BENCH_r09 spread). Values are untouched
@@ -260,7 +257,7 @@ def q_llm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines the same way (no member rows → no updated centroid).
 
     Plan (pinned in tests/test_plans.py): per round the corpus is
-    scanned once from the cached codes-only relation, assignment is
+    scanned once from the materialized codes-only relation, assignment is
     an F.aggregate fold over ONE broadcast row holding all K
     centroids — map-side, whole-stage-codegen, the corpus never
     shuffles on vec_id — and the update's posexplode+groupBy shuffle
@@ -460,20 +457,16 @@ def q_llm_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n") * F.col("p") - F.col("si") * F.col("sj")).alias("a"),
         )
     )
-    # PERSIST the D²-row scatter matrix: every power-iteration round
-    # references it, and an unpersisted lineage re-runs the full
-    # corpus aggregation once per reference (measured: the executed
-    # plan repeated the two-Generate outer product ~16× and fell to
-    # SortMergeJoin before this cache was added). One corpus pass
-    # total; the iterations touch only the 4096 cached cells.
-    # Generation cache — previous build released on next call.
-    for h in _PCA_CACHE:
-        h.unpersist()
-    _PCA_CACHE.clear()
-    scatter = scatter.persist()
-    _PCA_CACHE.append(scatter)
-    # all-ones start, dims read from the CACHED matrix (re-deriving
-    # them from `s` would re-scan the corpus just to list 1..D)
+    # Materialize the D²-row scatter matrix: every power-iteration
+    # round references it, and an unmaterialized lineage re-runs the
+    # full corpus aggregation once per reference (measured: the
+    # executed plan repeated the two-Generate outer product ~16× and
+    # fell to SortMergeJoin). One corpus pass total; the iterations
+    # touch only the 4096 materialized cells.
+    scatter = materialize(scatter)
+    # all-ones start, dims read from the materialized matrix
+    # (re-deriving them from `s` would re-scan the corpus just to list
+    # 1..D)
     v = scatter.select("i").distinct().withColumn(
         "v", F.lit(1).cast("bigint")
     )
@@ -580,7 +573,7 @@ def q_llm_kmeans_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole train→assign→evaluate chain is oracle-checked end to end
     (the same discipline as q_llm_pq_trained_topk for the PQ family).
 
-    Plan: reuses the kmeans fold (codes cached, corpus never shuffles
+    Plan: reuses the kmeans fold (codes materialized, corpus never shuffles
     on vec_id during assignment); the label attach joins the
     assignment to the embeddings scan on vec_id (co-partitioned), the
     per-(cluster, label) count is map-combined, and the majority pick

@@ -21,8 +21,6 @@ Cross-engine determinism rules (SURVEY.md §7.4):
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -324,19 +322,18 @@ def q_llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same numbers, different plan; the driver compares values only.)"""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    # persisted: feeds both the corpus-stats scalar and the scoring
+    # materialized: feeds both the corpus-stats scalar and the scoring
     # unpivot — without it the tokenize+aggregate pass runs twice
     # (observed as two doc_id exchanges in the plan). One row per doc
-    # (id + 4 longs ≈ 40 B), so the cache is corpus-count-sized, not
-    # corpus-sized. Released by Spark's LRU, same policy as
-    # operators/dedup.py.
+    # (id + 4 longs ≈ 40 B), so it is corpus-count-sized, not
+    # corpus-sized.
     per_doc = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
         *[
             F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf_{t}")
             for t in _BM25_TERMS
         ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -1103,9 +1100,6 @@ def q_llm_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 'ee~~e'), verified identical in Spark and DuckDB. A fold-based
 # array rewrite would need a struct-accumulator HOF Spark has but
 # DuckDB's list_reduce cannot express.
-# Previous q_llm_bpe_train invocation's persisted vocab tables —
-# released at the next invocation (see its docstring, Cache hygiene).
-_BPE_TRAIN_CACHE: list = []
 
 _BPE_ORACLE_ROUND = """
     p{r} AS (
@@ -1167,21 +1161,12 @@ def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     round's winner is a limit(1) TakeOrdered whose single row is
     broadcast-cross-joined back onto the vocab so the replace() runs
     distributed — the same 1×n attach shape as q_llm_semdedup's pivot
-    row. Rounds chain as one lazy plan; every stage after the initial
-    corpus→vocab collapse is O(|vocab|) (see SCALING.md §Round-8b), so
-    at 100 TB adding merge rounds adds constant-sized stages, not
-    corpus passes. The sequence(1, size-1) guard drops fully-merged
-    single-symbol words per round (Spark's sequence(1, 0) yields a
-    DESCENDING [1,0], not an empty array).
-
-    Cache hygiene: the contract returns a LAZY DataFrame, so this
-    call can't unpersist its own four vocab tables before the caller
-    materializes them. Instead each invocation releases the PREVIOUS
-    invocation's tables (module-level handle list), bounding the
-    session-lifetime footprint to one generation — repeated builds in
-    the parity suite / plan audit / bench no longer accumulate.
-    Unpersisting never breaks correctness (a stale handle would just
-    recompute)."""
+    row. Each round's vocab table is materialized; every stage after
+    the initial corpus→vocab collapse is O(|vocab|) (see SCALING.md
+    §Round-8b), so at 100 TB adding merge rounds adds constant-sized
+    stages, not corpus passes. The sequence(1, size-1) guard drops
+    fully-merged single-symbol words per round (Spark's sequence(1, 0)
+    yields a DESCENDING [1,0], not an empty array)."""
     _wf0, outs, _wf3 = _bpe_train_parts(spark, sf_dir)
     out = outs[0]
     for o in outs[1:]:
@@ -1194,13 +1179,7 @@ def _bpe_train_parts(spark: SparkSession, sf_dir: str):
     returns (wf0, outs, wf3) — the initial '~~'-encoded
     word-frequency table, the three per-round merge-winner
     DataFrames, and the vocab after all three merges applied. See
-    q_llm_bpe_train's docstring for the plan and cache discipline."""
-    for h in _BPE_TRAIN_CACHE:
-        try:
-            h.unpersist()
-        except Py4JError:
-            pass  # stale handle from a stopped session — nothing to free
-    _BPE_TRAIN_CACHE.clear()
+    q_llm_bpe_train's docstring for the plan."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     wf = (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
@@ -1210,15 +1189,14 @@ def _bpe_train_parts(spark: SparkSession, sf_dir: str):
         .select(
             F.expr("array_join(split(word, ''), '~~')").alias("enc"), "wf"
         )
-        # Without the per-round persist the final 3-branch union is a
-        # TREE: round r's plan embeds every earlier round's argmax AND
-        # vocab-transform subtrees, so the corpus explode re-runs ~2^r
-        # times (measured 11.3 s at sf0.01). Persisting pins each
-        # round's |vocab|-sized table: one corpus pass, O(R) tiny
+        # Without the per-round materialize the final 3-branch union
+        # is a TREE: round r's plan embeds every earlier round's argmax
+        # AND vocab-transform subtrees, so the corpus explode re-runs
+        # ~2^r times (measured 11.3 s at sf0.01). Materializing pins
+        # each round's |vocab|-sized table: one corpus pass, O(R) tiny
         # vocab stages after it (0.9 s).
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize)
     )
-    _BPE_TRAIN_CACHE.append(wf)
     wf0 = wf
     outs = []
     for r in (1, 2, 3):
@@ -1258,8 +1236,7 @@ def _bpe_train_parts(spark: SparkSession, sf_dir: str):
         ).select(
             F.expr("replace(enc, ma || '~~' || mb, ma || mb)").alias("enc"),
             "wf",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _BPE_TRAIN_CACHE.append(wf)
+        ).transform(materialize)
     return wf0, outs, wf
 
 
@@ -1307,7 +1284,7 @@ def q_llm_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw corpus — applying a merge list is O(|vocab|) regardless of
     corpus size (the measured 8.3× vocab-first lesson, SCALING.md
     §Round-8b), and each summary is a map-combined 1-row aggregate
-    over the persisted per-round vocab (InMemoryTableScan — zero
+    over the materialized per-round vocab (Scan ExistingRDD — zero
     extra corpus passes beyond q_llm_bpe_train's one). The two 1-row
     frames meet in a broadcast attach. At 100 TB the corpus cost is
     the single explode+groupBy building the vocab; everything after

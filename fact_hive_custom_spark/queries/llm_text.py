@@ -2009,8 +2009,8 @@ def q_llm_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject heap (never a global sort). At 100 TB both
     passes are embarrassingly parallel scans - DSIR's selling point
     (no model, no embedding) is preserved exactly; to make pass 2 a
-    cache read instead of a re-scan, persist the tokenized relation
-    (the q_llm_kmeans generation-cache pattern)."""
+    read instead of a re-scan, materialize() the tokenized relation
+    (as q_llm_kmeans does its quantized corpus)."""
     # fan_out(documents) was tried here (r16) and measured a wash
     # (paired 1.8/2.0 → 2.1 s): per-token md5 into 1024 buckets is a
     # light map stage and both passes re-exchange immediately

@@ -19,10 +19,10 @@ bytes.
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import EMB_CONTRACT_SQL, load_embeddings
 
@@ -36,21 +36,11 @@ from fact_hive_custom_spark.tables import EMB_CONTRACT_SQL, load_embeddings
 # input.
 _MEDIA_HAM_T = 7
 
-# Previous q_llm_media_dedup invocation's persisted sketch relation —
-# released at the next invocation (the q_llm_bpe_train cache-hygiene
-# pattern): the banding self-join would otherwise recompute the whole
-# decode→quantize→pack pipeline once per side, including its two
-# corpus-wide 1-row aggregates. Measured at sf1.0 (21 k assets,
-# 6.9 M banded candidates): 24-27 s unpersisted → 6.5 s warm with the
-# persist + half-packing below. The persisted relation is 3 longs per
-# asset.
-_MEDIA_SKETCH_CACHE: list = []
-
 # The 64 hash bits pack into TWO bigint halves (hi = bits of features
 # 1-32, lo = 33-64), each < 2^32: one primitive xor + bit_count per
 # half verifies a candidate pair — no per-pair array allocation (the
 # 8-long-array zip_with variant measured 19 s for the sf1.0 candidate
-# join; the packed join measures 5.5 s on the same persisted input).
+# join; the packed join measures 5.5 s on the same input).
 # A single 64-bit pack is out: DuckDB's strict BIGINT << rejects
 # 1<<63. Band extraction (Spark-side only — the oracle is all-pairs
 # and never bands) shifts bytes out of the halves.
@@ -162,12 +152,10 @@ def q_llm_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (CASE WHEN element_at(qs, cast(i as int)) * 64 >= total"
         " THEN 1L ELSE 0L END) * shiftleft(1L, {top} - cast(i as int)))"
     )
-    for h in _MEDIA_SKETCH_CACHE:
-        try:
-            h.unpersist()
-        except Py4JError:
-            pass  # stale handle from a stopped session — nothing to free
-    _MEDIA_SKETCH_CACHE.clear()
+    # Materialized sketch relation (3 longs per asset): the banding
+    # self-join would otherwise recompute the whole
+    # decode→quantize→pack pipeline once per side, including its
+    # corpus-wide 1-row aggregate.
     hl = q.select(
         "media_id",
         F.expr("aggregate(qs, 0L, (acc, x) -> acc + x)").alias("total"),
@@ -176,8 +164,7 @@ def q_llm_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id",
         F.expr(half.format(a=1, b=32, top=32)).alias("hi"),
         F.expr(half.format(a=33, b=64, top=64)).alias("lo"),
-    ).persist()
-    _MEDIA_SKETCH_CACHE.append(hl)
+    ).transform(materialize)
     # Band j ∈ 0..7: byte j of the 64-bit hash, shifted out of the
     # packed halves. The two halves ride with each exploded band row
     # (16 bytes/asset in the banding exchange), so the Hamming verify

@@ -24,6 +24,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.sources.io import round_trip, stage_dir
 from fact_hive_custom_spark.tables import load_table
@@ -492,10 +493,10 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    # corrupt-record queries must cache before filtering on the
+    # corrupt-record queries must materialize before filtering on the
     # corrupt column (Spark requires referencing it from materialized
     # rows, not a pushed-down filter)
-    df = df.cache()
+    df = materialize(df)
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(

@@ -18,6 +18,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import load_table
 
@@ -1979,7 +1980,7 @@ def q_stat_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         e.groupBy("event_type", "d")
         .agg(F.sum("v").cast("bigint").alias("y"))
-        .persist()
+        .transform(materialize)
     )
     wcum = Window.partitionBy("event_type").orderBy("y").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

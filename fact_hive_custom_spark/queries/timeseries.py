@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import load_table
 
@@ -1135,9 +1136,9 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window needs no tiebreak chain.
 
     Plan: the corpus collapses to one map-combined (type, day) sum —
-    the only corpus-sized exchange — and that day series is PERSISTED
-    because three consumers read it (both pair-join sides and the
-    n_days count): without the cache the lineage re-scans the corpus
+    the only corpus-sized exchange — and that day series is
+    MATERIALIZED because three consumers read it (both pair-join sides
+    and the n_days count): without it the lineage re-scans the corpus
     three times; the O(days²/2) pair self-join and
     the median rank window run on the tiny per-type day series
     (bounded by the calendar, NOT by row count: 10 years ≈ 3.65 k
@@ -1159,13 +1160,13 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # The day series is consumed three times (both pair-join sides and
-    # the n_days count); persisting it means ONE corpus scan instead of
-    # three — the series itself is calendar-bounded, so the cache is
-    # tiny regardless of corpus size.
+    # the n_days count); materializing it means ONE corpus scan instead
+    # of three — the series itself is calendar-bounded, so it is tiny
+    # regardless of corpus size.
     s = (
         e.groupBy("event_type", "d")
         .agg(F.sum("v").cast("bigint").alias("y"))
-        .persist()
+        .transform(materialize)
     )
     nd = s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
     a = s.select(
@@ -1284,7 +1285,7 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuity correction (|S|−1, the normal-approximation standard)
     is applied via CASE so S = 0 maps to exactly 0.
 
-    Plan: identical skeleton to q_ts_theil_sen — ONE persisted
+    Plan: identical skeleton to q_ts_theil_sen — ONE materialized
     map-combined (type, day) sum feeds the pair join, the tie counts,
     and the day counts; everything after the first aggregate is
     calendar-bounded. The pair join broadcasts the tiny day series;
@@ -1305,7 +1306,7 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         e.groupBy("event_type", "d")
         .agg(F.sum("v").cast("bigint").alias("y"))
-        .persist()
+        .transform(materialize)
     )
     nd = s.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")

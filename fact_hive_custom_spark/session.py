@@ -71,15 +71,10 @@ def get_session(
         return spark
     try:
         jvm = spark.sparkContext._jvm
-        for noisy in (
+        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.sql.execution.window.WindowExec",
-            # bench re-runs cached queries; "already cached" is the
-            # expected idempotent path, not a problem
-            "org.apache.spark.sql.execution.CacheManager",
-        ):
-            jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-                noisy, jvm.org.apache.logging.log4j.Level.ERROR
-            )
+            jvm.org.apache.logging.log4j.Level.ERROR,
+        )
     except Exception:
         pass  # non-log4j2 logging backend: keep default verbosity
     return spark

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import pathlib
+import shutil
 import subprocess
 import sys
 import textwrap
@@ -14,6 +15,8 @@ import textwrap
 from pyspark.sql import functions as F
 
 from fact_hive_custom_spark.materialize import materialize
+from fact_hive_custom_spark.queries import ORACLE
+from tests.parity import DEFAULT_SF_DIR, compare, duck_connection
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 
@@ -64,3 +67,32 @@ def test_reliable_checkpoint_from_checkpoint_dir(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
+
+
+def test_in_place_fixture_rewrite_is_answered_fresh(spark, tmp_path):
+    """Two queries that reuse an intermediate, run, then run again in
+    the same session after documents.parquet and events.parquet are
+    overwritten in place with another scale's files: the second run
+    must answer from the new files. A lazy persist()/cache() keyed on
+    the parquet path would serve the old corpus here; materialize()
+    leaves no CacheManager entry behind."""
+    other = pathlib.Path(DEFAULT_SF_DIR)
+    src = other.parent / "sf0.001"
+    for f in src.glob("*.parquet"):
+        shutil.copyfile(f, tmp_path / f.name)
+    names = ("q_llm_jaccard_dedup", "q_ts_theil_sen")
+
+    def check() -> list[list]:
+        for name in names:
+            ok, detail = compare(spark, name, str(tmp_path))
+            assert ok, f"{name}: {detail}"
+        con = duck_connection(str(tmp_path))
+        return [sorted(con.sql(ORACLE[name]).fetchall()) for name in names]
+
+    before = check()
+    for t in ("documents", "events"):
+        shutil.copyfile(other / f"{t}.parquet", tmp_path / f"{t}.parquet")
+    after = check()
+    # the rewrite changes both answers, so a stale read cannot pass
+    assert all(b != a for b, a in zip(before, after))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -314,30 +314,16 @@ class TestPipelineOpPlanShapes:
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
     def test_bm25_single_corpus_pass(self, spark):
-        """BM25 must tokenize the corpus ONCE: the persisted per-doc
+        """BM25 must tokenize the corpus ONCE: the materialized per-doc
         conditional aggregate feeds both the stats scalar and the
-        scoring unpivot, so the plan has exactly one doc_id exchange
-        (reused via InMemoryRelation), one SinglePartition stats
-        exchange, and the final per-term ranking exchange."""
-        import re
-
-        # a prior invocation (parity test) leaves the per-doc frame
-        # cached; re-persisting an identical lineage then prints BOTH
-        # the original cached exchange and the fresh build plan (two
-        # plan_ids for one physical cache). Clear for a deterministic
-        # single-invocation plan.
-        spark.catalog.clearCache()
+        scoring unpivot, so the final plan reads it twice (Scan
+        ExistingRDD), never the corpus, and re-shuffles nothing on
+        doc_id — one SinglePartition stats exchange and the final
+        per-term ranking exchange."""
         plan = plan_of(spark, "q_llm_bm25_topk")
-        doc_ex = [
-            l
-            for l in plan.splitlines()
-            if "Exchange hashpartitioning(doc_id" in l
-        ]
-        # the cached relation's child plan prints once per consumer —
-        # distinct plan_ids, not line count, detect a real recompute
-        ids = {m.group(1) for l in doc_ex for m in [re.search(r"plan_id=(\d+)", l)] if m}
-        assert len(ids) <= 1, f"per-doc agg recomputed: {doc_ex}"
-        assert plan.count("InMemoryTableScan") >= 2, "both consumers should read the cache"
+        assert "Scan parquet" not in plan, "per-doc agg recomputed from the corpus"
+        assert "Exchange hashpartitioning(doc_id" not in plan, plan
+        assert plan.count("Scan ExistingRDD") >= 2, "both consumers should read the materialized frame"
 
     def test_transitions_two_exchanges(self, spark):
         """First-order transition counts: ONE per-user exchange feeds the
@@ -982,10 +968,12 @@ class TestRound8bPlans:
         """Iterative BPE: every exchange is keyed on word or the pair
         grouping — the '~~'-encoded symbol strings never key a shuffle;
         each data-dependent merge winner attaches as a 1-row broadcast
-        nested loop (no CartesianProduct, no collect-and-rebuild), the
-        argmax is a TakeOrdered heap (no global sort window), and the
-        per-round vocab tables are persisted (InMemoryTableScan) so the
-        3-branch union doesn't re-explode the corpus per round."""
+        nested loop inside its round's materialize (no CartesianProduct,
+        no collect-and-rebuild), the argmax is a TakeOrdered heap (no
+        global sort window), and the per-round vocab tables are
+        materialized, so each branch of the
+        3-branch union reads its round's vocab (Scan ExistingRDD) and
+        none re-explodes the corpus."""
         plan = plan_of(spark, "q_llm_bpe_train")
         keys = {
             line.split("hashpartitioning(")[1].split("#")[0]
@@ -996,7 +984,8 @@ class TestRound8bPlans:
         assert "CartesianProduct" not in plan
         assert plan.count("BroadcastNestedLoopJoin") <= 4, plan
         assert "TakeOrderedAndProject" in plan, plan
-        assert "InMemoryTableScan" in plan, plan
+        assert plan.count("Scan ExistingRDD") == 3, plan
+        assert "Scan parquet" not in plan, plan
         assert "Exchange SinglePartition" not in plan, plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -1200,12 +1189,14 @@ class TestPcaPowerPlan:
         whose row computes its product vector in one transform(),
         accumulated as D columnar SUMs and stack()-unpivoted — never a
         second posexplode over n·D² rows, never a self-join of the
-        long form on vec_id) and PERSISTED; the three matrix–vector
-        rounds reference the cache (InMemoryTableScan), attach vectors
-        by broadcast, and no join anywhere degrades to SortMergeJoin.
-        No cartesian of data against data, no Python."""
+        long form on vec_id) and MATERIALIZED; the three matrix–vector
+        rounds read the materialized matrix (Scan ExistingRDD, never
+        the corpus), attach vectors by broadcast, and no join anywhere
+        degrades to SortMergeJoin. No cartesian of data against data,
+        no Python."""
         plan = plan_of(spark, "q_llm_pca_power")
-        assert "InMemoryTableScan" in plan
+        assert "Scan ExistingRDD" in plan
+        assert "Scan parquet" not in plan
         assert "SortMergeJoin" not in plan, [
             l for l in plan.splitlines() if "SortMergeJoin" in l
         ]
@@ -1352,9 +1343,9 @@ class TestRankTestPlans:
 
     def test_theil_sen_pairs_on_cached_day_series(self, spark):
         """Theil-Sen (q_ts_theil_sen): the corpus collapses to the
-        cached (type, day) sum — exchanges key only on event_type
+        materialized (type, day) sum — exchanges key only on event_type
         (+day); the O(days²) pair join builds on the calendar-bounded
-        cached series (InMemoryTableScan), never re-scanning the
+        materialized series (Scan ExistingRDD), never re-scanning the
         corpus, and broadcasts one side. No Python, no cartesian."""
         plan = plan_of(spark, "q_ts_theil_sen")
         keys = set()
@@ -1362,19 +1353,16 @@ class TestRankTestPlans:
             if "Exchange hashpartitioning" in line and "Reused" not in line:
                 keys.add(line.split("hashpartitioning(")[1].split("#")[0])
         assert keys <= {"event_type"}, keys
-        # all three consumers read the cache, not the corpus (explain
-        # text repeats the cache's lineage under each InMemoryTableScan,
-        # so count cache hits rather than counting Scan parquet lines)
-        assert plan.count("InMemoryTableScan") >= 3, plan.count(
-            "InMemoryTableScan"
-        )
+        # all three consumers read the materialized series, not the corpus
+        assert plan.count("Scan ExistingRDD") >= 3, plan.count("Scan ExistingRDD")
+        assert "Scan parquet" not in plan
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
     def test_mann_kendall_pairs_on_cached_day_series(self, spark):
         """Mann-Kendall (q_ts_mann_kendall): same skeleton as
-        theil_sen — the persisted (type, day) sum feeds the pair
-        join, tie counts, and day counts (three-plus cache reads, no
+        theil_sen — the materialized (type, day) sum feeds the pair
+        join, tie counts, and day counts (three-plus reads of it, no
         corpus re-scan); exchanges key only on event_type (+day/y).
         No Python, no cartesian."""
         plan = plan_of(spark, "q_ts_mann_kendall")
@@ -1383,9 +1371,8 @@ class TestRankTestPlans:
             if "Exchange hashpartitioning" in line and "Reused" not in line:
                 keys.add(line.split("hashpartitioning(")[1].split("#")[0])
         assert keys <= {"event_type", "ta"}, keys
-        assert plan.count("InMemoryTableScan") >= 3, plan.count(
-            "InMemoryTableScan"
-        )
+        assert plan.count("Scan ExistingRDD") >= 3, plan.count("Scan ExistingRDD")
+        assert "Scan parquet" not in plan
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -1538,8 +1525,8 @@ class TestBollingerPlan:
 
 class TestRunsTestPlan:
     def test_runs_cached_day_series_median_broadcast(self, spark):
-        """Runs test (q_stat_runs): the persisted (type, day) sum is
-        read by the median path and the sign path (InMemoryTableScan);
+        """Runs test (q_stat_runs): the materialized (type, day) sum is
+        read by the median path and the sign path (Scan ExistingRDD);
         the median attaches by broadcast; every exchange keys on
         event_type. No cartesian, no Python."""
         plan = plan_of(spark, "q_stat_runs")
@@ -1548,7 +1535,8 @@ class TestRunsTestPlan:
             if "Exchange hashpartitioning" in line and "Reused" not in line:
                 keys.add(line.split("hashpartitioning(")[1].split("#")[0])
         assert keys <= {"event_type"}, keys
-        assert "InMemoryTableScan" in plan
+        assert plan.count("Scan ExistingRDD") >= 2
+        assert "Scan parquet" not in plan
         assert "BroadcastHashJoin" in plan
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

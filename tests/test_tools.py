@@ -48,6 +48,20 @@ def test_env_knob_inventory():
     assert set(found) == ENV_KNOBS, found
 
 
+# materialize() is the engine's only reuse path (its docstring says why).
+CACHE_CALL = re.compile(r"\.persist\(|\.cache\(\)|unpersist|StorageLevel")
+
+
+def test_no_cache_calls_in_engine():
+    found = [
+        f"{path.relative_to(ROOT)}:{i}: {line.strip()}"
+        for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if CACHE_CALL.search(line)
+    ]
+    assert not found, found
+
+
 def test_session_leaves_environ_unchanged(tmp_path):
     """A fresh process builds the session and forces a Python worker
     (pandas_udf) from the stock daemon; os.environ must not change."""
