@@ -208,9 +208,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
+    from fact_hive_custom_spark.queries.sources_sinks import sweep_bucketed_orphans
     from fact_hive_custom_spark.session import get_session
 
     spark = get_session("fact_hive_custom_spark-bench", quiet=True)
+    sweep_bucketed_orphans(spark)  # earlier runs' bucketed tables, untimed
 
     run_query(spark, "q_agg_flagship", sf_dir)  # JVM/codegen warmup, untimed
 

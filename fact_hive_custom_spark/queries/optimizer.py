@@ -50,6 +50,7 @@ def q_scan_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.repartition("event_date").write.mode("overwrite").partitionBy(
         "event_date"
     ).parquet(fact_path)
+    # partition discovery types event_date from the directory names
     fact = spark.read.parquet(fact_path)
 
     # Calendar dim as a real file source (not a literal LocalRelation) so
@@ -58,7 +59,7 @@ def q_scan_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.range(0, 31).select(
         F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int")).alias("d")
     ).coalesce(1).write.mode("overwrite").parquet(cal_path)
-    dim = spark.read.parquet(cal_path).filter(
+    dim = spark.read.schema("d DATE").parquet(cal_path).filter(
         (F.col("d") >= F.lit("2024-01-10")) & (F.col("d") <= F.lit("2024-01-16"))
     )
 

@@ -1,9 +1,11 @@
 """Scan / source / sink operators (SURVEY.md §2.2.A).
 
-Scans are plain `spark.read.parquet` — the vectorized reader plus
-Catalyst give column pruning and predicate pushdown for free; the
-queries here exist to *prove* that (tests assert `PushedFilters` /
-`ReadSchema` in the physical plan, tests/test_plans.py).
+Scans go through `tables.load_table`: a parquet read with the schema
+taken from the file footer, so planning runs no inference job. The
+vectorized reader plus Catalyst give column pruning and predicate
+pushdown for free; the queries here exist to *prove* that (tests
+assert `PushedFilters` / `ReadSchema` in the physical plan,
+tests/test_plans.py).
 """
 
 from __future__ import annotations

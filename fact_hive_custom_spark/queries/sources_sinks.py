@@ -119,6 +119,7 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     path = stage_dir("orders_by_status")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
+    # partition discovery types o_orderstatus from the directory names
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("o_totalprice"), 4).alias("total")
@@ -189,6 +190,31 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bucketed_probe(spark, orders_tbl, lineitem_tbl)
 
 
+def sweep_bucketed_orphans(spark: SparkSession) -> None:
+    """Drop the bucketed tables of *finished* `bucketed_layout_build`
+    runs: warehouse dirs under its name prefixes older than an hour,
+    which no live invocation can still be reading. The build cannot
+    drop its own tables (the returned probe reads the bucket files
+    lazily), so callers sweep once per process, before any timing
+    (bench.py, the test session)."""
+    import shutil
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    wh_dir = warehouse.removeprefix("file:")
+    if not os.path.isdir(wh_dir):
+        return
+    now = time.time()
+    for name in os.listdir(wh_dir):
+        if name.startswith(("fhcs_orders_bkt", "fhcs_lineitem_bkt")):
+            p = os.path.join(wh_dir, name)
+            try:
+                if now - os.path.getmtime(p) > 3600:
+                    spark.sql(f"DROP TABLE IF EXISTS {name}")
+                    shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass
+
+
 def bucketed_layout_build(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
@@ -196,31 +222,15 @@ def bucketed_layout_build(
     under per-run names; returns (orders_tbl, lineitem_tbl). This is
     the recurring-layout investment: on a cluster it runs once per
     ingest, not once per query."""
-    import shutil
     import uuid
 
     # Per-run table names: two concurrent invocations (parallel test
     # workers, bench alongside parity) must not race on a shared
-    # DROP/rmtree/saveAsTable under a fixed name. The returned frame
-    # reads the bucket files lazily, so the tables can't be dropped
-    # here; instead sweep orphans from *finished* runs — only dirs
-    # older than an hour, which no live invocation can still be using.
+    # DROP/rmtree/saveAsTable under a fixed name. The tables outlive
+    # this call; sweep_bucketed_orphans removes them later.
     run = uuid.uuid4().hex[:12]
     orders_tbl = f"fhcs_orders_bkt_{run}"
     lineitem_tbl = f"fhcs_lineitem_bkt_{run}"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh_dir = warehouse.removeprefix("file:")
-    if os.path.isdir(wh_dir):
-        now = time.time()
-        for name in os.listdir(wh_dir):
-            if name.startswith(("fhcs_orders_bkt", "fhcs_lineitem_bkt")):
-                p = os.path.join(wh_dir, name)
-                try:
-                    if now - os.path.getmtime(p) > 3600:
-                        spark.sql(f"DROP TABLE IF EXISTS {name}")
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
     for tbl, src, key in (
         (orders_tbl, "orders", "o_orderkey"),
         (lineitem_tbl, "lineitem", "l_orderkey"),
@@ -378,6 +388,7 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("append")
         .parquet(path)
     )
+    # merging the two files' footer schemas is what this query shows
     merged = spark.read.option("mergeSchema", "true").parquet(path)
     return merged.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -424,10 +435,10 @@ def q_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag = stage_dir(f"compact_frag_{uuid.uuid4().hex[:12]}")
     e.repartition(64).write.mode("overwrite").parquet(frag)
     compacted = stage_dir(f"compact_out_{uuid.uuid4().hex[:12]}")
-    spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(
-        compacted
-    )
-    c = spark.read.parquet(compacted)
+    spark.read.schema(e.schema).parquet(frag).repartition(4).write.mode(
+        "overwrite"
+    ).parquet(compacted)
+    c = spark.read.schema(e.schema).parquet(compacted)
     return c.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("user_id").cast("bigint").alias("n_users"),

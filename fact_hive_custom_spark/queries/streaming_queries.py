@@ -296,14 +296,15 @@ def q_stream_sink_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"feb_parquet_{uuid.uuid4().hex[:8]}",
     )
 
+    events = streaming_events(spark, sf_dir)
     mem = run_stream_to_memory(
         spark,
-        streaming_events(spark, sf_dir).groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
+        events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
         "q_stream_sink_modes",
         output_mode="complete",
     )
-    run_stream_foreach_batch_parquet(spark, streaming_events(spark, sf_dir), out_dir)
-    parquet_rows = spark.read.parquet(out_dir).agg(
+    run_stream_foreach_batch_parquet(spark, events, out_dir)
+    parquet_rows = spark.read.schema(events.schema).parquet(out_dir).agg(
         F.count(F.lit(1)).alias("foreach_batch_rows")
     )
     return mem.agg(F.sum("n").alias("memory_rows_total")).crossJoin(parquet_rows)
@@ -396,7 +397,11 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fact_hive_custom_spark.operators.merge import cdc_latest
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        state = spark.read.parquet(state_dir) if os.path.isdir(state_dir) else None
+        state = (
+            spark.read.schema(staged_schema).parquet(state_dir)
+            if os.path.isdir(state_dir)
+            else None
+        )
         new_state = cdc_latest(
             state, batch_df, key=["user_id"], order_by=["us", "event_id"]
         )
@@ -415,7 +420,7 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    return spark.read.parquet(state_dir).select(
+    return spark.read.schema(staged_schema).parquet(state_dir).select(
         "user_id",
         F.col("event_type").alias("last_type"),
         F.col("value").alias("last_value"),

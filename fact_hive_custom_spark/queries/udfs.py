@@ -142,13 +142,9 @@ def q_udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (tok,)
 
     spark.udtf.register("split_words", SplitWords)
-    # Unique view name: reusing "documents" here would poison the
-    # register_views per-session cache in tables.py — a later spark.sql
-    # query at a different sf_dir would silently read this sf_dir's data.
-    view = f"documents_udtf_{abs(hash(sf_dir)) % 10**8}"
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(view)
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents_udtf")
     return spark.sql(
-        f"SELECT d.doc_id, t.token FROM {view} d, LATERAL split_words(d.text) t"
+        "SELECT d.doc_id, t.token FROM documents_udtf d, LATERAL split_words(d.text) t"
     )
 
 

@@ -20,52 +20,32 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Streaming readers need an explicit schema; the fixture's ts encoding
-# has varied across driver versions (int64 nanos vs parquet
-# timestamp[us] → TIMESTAMP_NTZ), so the schema is built around a
-# footer probe instead of a hardcoded type — mirroring
-# tables.load_table's adaptive batch read.
+from fact_hive_custom_spark.tables import footer_schema, normalize_ts
 
-
-def events_raw_schema(ts_dtype: T.DataType) -> T.StructType:
-    """events schema with `ts` in the fixture's physical encoding."""
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("ts", ts_dtype, True),
-            T.StructField("user_id", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-            T.StructField("props", T.StringType(), True),
-        ]
-    )
+# Streaming readers need an explicit schema. It comes from the events
+# file's footer, as the batch read's does (tables.footer_schema): the
+# fixture's ts encoding has varied across driver versions (int64 nanos
+# vs parquet timestamp[us] → TIMESTAMP_NTZ), so no field list is
+# hardcoded.
 
 
 def events_ts_dtype(spark: SparkSession, sf_dir: str) -> T.DataType:
-    """Probe how the fixture encodes events.ts (parquet footer only)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return df.schema["ts"].dataType
+    """How the fixture encodes events.ts, read from the parquet footer."""
+    return footer_schema(os.path.join(sf_dir, "events.parquet"))["ts"].dataType
 
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, normalized like the batch read."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # see tables.load_table
-    ts_dtype = events_ts_dtype(spark, sf_dir)
     raw = (
-        spark.readStream.schema(events_raw_schema(ts_dtype))
+        spark.readStream.schema(footer_schema(os.path.join(sf_dir, "events.parquet")))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(ts_dtype, T.LongType):
-        # Integer division (`div`) — double division loses µs precision
-        # on int64 nanos (> 2^53); see tables.load_table.
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_ts(raw)
 
 
 def run_stream_to_memory(

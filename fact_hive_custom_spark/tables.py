@@ -1,9 +1,11 @@
 """Table catalog: the fixture star schema (FIXTURES.md).
 
 `load_table` is the single scan entry point — every query goes through
-it so scans stay uniform: plain `spark.read.parquet`, letting the
-vectorized Parquet reader + Catalyst handle pushdown and pruning.
-`register_views` exposes the same tables to `spark.sql` queries.
+it so scans stay uniform: `spark.read.schema(...).parquet` with the
+schema taken from the file footer on the driver (`footer_schema`), so
+planning a scan runs no Spark job, and the vectorized Parquet reader +
+Catalyst still handle pushdown and pruning. `register_views` exposes
+the same tables to `spark.sql` queries.
 """
 
 from __future__ import annotations
@@ -11,6 +13,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -26,20 +30,65 @@ TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table (columnar Parquet, schema-on-read).
+def footer_schema(path: str) -> T.StructType:
+    """The Spark schema of one parquet file, read from its footer on the
+    driver: the names and types `spark.read.parquet` would infer, with
+    no inference job. A directory (a table Spark wrote) is read from
+    its first part file; its parts share one schema.
 
-    `events.ts` is normalized to a session-TZ TimestampType regardless
-    of how the fixture encodes it (the driver has shipped both):
+    Every field is nullable, as Spark's file sources make it anyway.
+    Timestamps without a UTC flag map to TIMESTAMP_NTZ, as Spark infers
+    them. A `timestamp[ns]` column maps to LongType: Spark can read it
+    only as long nanos, under `spark.sql.legacy.parquet.nanosAsLong`,
+    which the readers of such a column set (`load_table`, streaming).
+
+    Read on every call and never cached, so a fixture rewritten in
+    place is planned from its new footer at once.
+    """
+    import pyarrow.parquet as pq
+    from pyarrow.types import is_timestamp
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if os.path.isdir(path):
+        # names starting with "_" or "." are metadata, as Spark skips them
+        parts = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        if not parts:
+            raise FileNotFoundError(f"no parquet part file in {path}")
+        path = os.path.join(path, parts[0])
+
+    def spark_type(at) -> T.DataType:
+        if is_timestamp(at) and at.unit == "ns":
+            return T.LongType()
+        return from_arrow_type(at, prefer_timestamp_ntz=True)
+
+    return T.StructType(
+        [T.StructField(f.name, spark_type(f.type), True) for f in pq.read_schema(path)]
+    )
+
+
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """`events.ts` as a session-TZ TimestampType, from either encoding
+    the fixture has shipped:
 
     - parquet timestamp[us]: Spark reads TIMESTAMP_NTZ (no UTC flag);
       with the session pinned to UTC, a cast to TimestampType is a
       bit-identical relabel and matches DuckDB's naive TIMESTAMP read.
     - parquet timestamp[ns]: Spark 4 refuses to read it as a timestamp
-      (PARQUET_TYPE_ILLEGAL); we read long nanos
-      (legacy.parquet.nanosAsLong) and rebuild microseconds. Integer
-      `div` — `/` would promote int64 nanos to double and lose
+      (PARQUET_TYPE_ILLEGAL); it is read as long nanos
+      (legacy.parquet.nanosAsLong) and microseconds are rebuilt.
+      Integer `div` — `/` would promote int64 nanos to double and lose
       precision above 2^53, shifting some timestamps by 1 µs.
+    """
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one fixture table (columnar Parquet) with its footer schema.
+
+    `events.ts` is normalized to a session-TZ TimestampType regardless
+    of how the fixture encodes it (`normalize_ts`).
 
     The session timezone is pinned to UTC here (runtime conf) because
     queries may run under a caller-built session: TZ-dependent
@@ -47,17 +96,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     UTC-naive oracle regardless of the host session's defaults.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.schema(footer_schema(path)).parquet(path)
+    return normalize_ts(df) if name == "events" else df
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -88,26 +131,15 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-_registered: "weakref.WeakKeyDictionary[SparkSession, str]" = None  # type: ignore[assignment]
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql queries.
 
-    Idempotent per (session, sf_dir) — repeated calls with the same
-    scale factor skip the 10 parquet footer reads; a different sf_dir
-    swaps all views. (Weak keys: a dead session never pins the cache.)
+    Re-registers all ten views on every call: each is a footer read and
+    runs no job, and a fresh registration sees a fixture rewritten in
+    place, which a memo of the last sf_dir would not.
     """
-    global _registered
-    if _registered is None:
-        import weakref
-
-        _registered = weakref.WeakKeyDictionary()
-    if _registered.get(spark) == sf_dir:
-        return
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _registered[spark] = sf_dir
 
 
 # DuckDB fragment enforcing the same contract as load_embeddings():
@@ -134,8 +166,6 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count DESC, dim ASC tiebreak) — so the filter itself is
     engine-portable (EMB_CONTRACT_SQL is the DuckDB mirror).
     """
-    from pyspark.sql import functions as F
-
     emb = load_table(spark, sf_dir, "embeddings")
     mode_dim = (
         emb.filter(F.col("embedding").isNotNull())

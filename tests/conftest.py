@@ -4,6 +4,7 @@ import os
 
 import pytest
 
+from fact_hive_custom_spark.queries.sources_sinks import sweep_bucketed_orphans
 from fact_hive_custom_spark.session import get_session
 
 
@@ -37,4 +38,5 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     s = get_session("fact_hive_custom_spark-tests")
+    sweep_bucketed_orphans(s)
     yield s

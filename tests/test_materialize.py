@@ -70,29 +70,32 @@ def test_reliable_checkpoint_from_checkpoint_dir(tmp_path):
 
 
 def test_in_place_fixture_rewrite_is_answered_fresh(spark, tmp_path):
-    """Two queries that reuse an intermediate, run, then run again in
-    the same session after documents.parquet and events.parquet are
+    """Two queries that reuse an intermediate and one spark.sql query
+    over the registered views run, then run again in the same session
+    after documents.parquet, events.parquet and orders.parquet are
     overwritten in place with another scale's files: the second run
     must answer from the new files. A lazy persist()/cache() keyed on
-    the parquet path would serve the old corpus here; materialize()
-    leaves no CacheManager entry behind."""
+    the parquet path would serve the old corpus here, and so would a
+    view kept from the first registration; materialize() leaves no
+    CacheManager entry behind, and register_views registers afresh."""
     other = pathlib.Path(DEFAULT_SF_DIR)
     src = other.parent / "sf0.001"
     for f in src.glob("*.parquet"):
         shutil.copyfile(f, tmp_path / f.name)
-    names = ("q_llm_jaccard_dedup", "q_ts_theil_sen")
+    names = ("q_llm_jaccard_dedup", "q_ts_theil_sen", "q_agg_grouping_sets")
 
-    def check() -> list[list]:
+    def check() -> list[list[str]]:
         for name in names:
             ok, detail = compare(spark, name, str(tmp_path))
             assert ok, f"{name}: {detail}"
         con = duck_connection(str(tmp_path))
-        return [sorted(con.sql(ORACLE[name]).fetchall()) for name in names]
+        # repr: grouping-set rows carry NULLs, which do not sort
+        return [sorted(map(repr, con.sql(ORACLE[name]).fetchall())) for name in names]
 
     before = check()
-    for t in ("documents", "events"):
+    for t in ("documents", "events", "orders"):
         shutil.copyfile(other / f"{t}.parquet", tmp_path / f"{t}.parquet")
     after = check()
-    # the rewrite changes both answers, so a stale read cannot pass
+    # the rewrite changes every answer, so a stale read cannot pass
     assert all(b != a for b, a in zip(before, after))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1,18 +1,25 @@
 """Fixture-ingestion contract: events.ts must normalize to the SAME
 UTC TimestampType column regardless of the parquet encoding the driver
 ships (int64 nanos in early rounds, timestamp[us] since round 4 —
-the round-3 CORRECTNESS gate went red on exactly this drift)."""
+the round-3 CORRECTNESS gate went red on exactly this drift). Every
+scan is planned from the file footer: the schema equals Spark's own
+inference and building a query runs no Spark job."""
 
 from __future__ import annotations
 
 import datetime
+import os
+import time
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from fact_hive_custom_spark.streaming.jobs import events_ts_dtype, streaming_events
-from fact_hive_custom_spark.tables import load_table
+from fact_hive_custom_spark.queries import QUERIES
+from fact_hive_custom_spark.tables import TABLES, footer_schema, load_table
+from tests.parity import DEFAULT_SF_DIR
 
 _BASE_US = [1_706_600_000_000_000, 1_706_600_001_500_000]
 
@@ -66,3 +73,59 @@ def test_streaming_reader_matches_batch_normalization(spark, tmp_path, unit):
     out = run_stream_to_memory(spark, agg, f"ts_enc_{unit}", "complete").collect()
     assert out[0].lo == datetime.datetime(2024, 1, 30, 7, 33, 20)
     assert out[0].hi == datetime.datetime(2024, 1, 30, 7, 33, 21, 500000)
+
+
+def _inferred(spark, path):
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path).schema
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_equals_inferred(spark, scale):
+    sf_dir = os.path.join("/root/testdata", scale)
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"no fixture at {sf_dir}")
+    for name in TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        # StructType equality covers names, types and nullability
+        assert footer_schema(path) == _inferred(spark, path), name
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_footer_schema_equals_inferred_for_events_encodings(spark, tmp_path, unit):
+    path = os.path.join(_write_events(tmp_path, unit), "events.parquet")
+    assert footer_schema(path) == _inferred(spark, path)
+
+
+def test_footer_schema_equals_inferred_for_spark_written_dir(spark, tmp_path):
+    path = str(tmp_path / "documents.parquet")
+    spark.range(6).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text").repartition(
+        2
+    ).write.parquet(path)
+    assert footer_schema(path) == _inferred(spark, path)
+
+
+def _group_jobs(sc, group: str) -> list[int]:
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["q_agg_flagship", "q_agg_grouping_sets"])
+def test_query_construction_runs_no_job(spark, name):
+    """Building a plain scan row (DataFrame and spark.sql over the
+    registered views) runs no Spark job; its action runs at least one.
+    The status store is fed asynchronously, in event order, so once the
+    action's job shows up every job started while building has too."""
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    try:
+        sc.setJobGroup(f"{tag}-build", name)
+        df = QUERIES[name](spark, DEFAULT_SF_DIR)
+        sc.setJobGroup(f"{tag}-action", name)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not _group_jobs(sc, f"{tag}-action") and time.time() < deadline:
+        time.sleep(0.05)
+    assert _group_jobs(sc, f"{tag}-action")
+    assert _group_jobs(sc, f"{tag}-build") == []

@@ -62,6 +62,35 @@ def test_no_cache_calls_in_engine():
     assert not found, found
 
 
+# Fixture scans go through tables.load_table, which plans from the file
+# footer; a schema-less read runs a Spark inference job before the
+# query's own work. Engine-written stage outputs may be read back in
+# these files if the line passes the writer's schema (and so does not
+# match) or the line above gives the reason for inferring.
+SCHEMALESS_READ = re.compile(r"\bread(\.option\([^)]*\))*\.parquet\(")
+STAGE_READERS = {
+    "fact_hive_custom_spark/queries/optimizer.py",
+    "fact_hive_custom_spark/queries/sources_sinks.py",
+    "fact_hive_custom_spark/queries/streaming_queries.py",
+}
+
+
+def test_no_schemaless_parquet_reads_in_engine():
+    found = []
+    for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py")):
+        rel = str(path.relative_to(ROOT))
+        if rel == "fact_hive_custom_spark/tables.py":
+            continue
+        lines = path.read_text().splitlines()
+        for i, line in enumerate(lines, 1):
+            if not SCHEMALESS_READ.search(line) or line.lstrip().startswith("#"):
+                continue
+            reason = i > 1 and lines[i - 2].lstrip().startswith("#")
+            if rel not in STAGE_READERS or not reason:
+                found.append(f"{rel}:{i}: {line.strip()}")
+    assert not found, found
+
+
 def test_session_leaves_environ_unchanged(tmp_path):
     """A fresh process builds the session and forces a Python worker
     (pandas_udf) from the stock daemon; os.environ must not change."""
