@@ -186,7 +186,7 @@ def q_agg_approx_cd(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS with grouping() null-vs-subtotal disambiguation."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,

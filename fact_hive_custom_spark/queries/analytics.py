@@ -541,9 +541,9 @@ _TRI_CAP = 50  # max users per co-occurrence bucket (hot-bucket guard)
 
 def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (u < v) distinct edge list of the minute-bucket user
-    co-occurrence graph with the _TRI_CAP hot-bucket guard — shared by
-    q_graph_triangles and q_graph_degree_dist so both analyze the SAME
-    graph (one source of truth for its semantics)."""
+    co-occurrence graph with the _TRI_CAP hot-bucket guard. Every query
+    over that graph builds it here, and every oracle reads it from
+    _COOC_EDGE_CTES, so all of them analyze the SAME graph."""
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(
@@ -593,10 +593,11 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_graph_triangles",
-    oracle=f"""
-    WITH b AS (
+# DuckDB CTEs `b`, `ok` and `e(u, v)`: the SQL twin of
+# _cooccurrence_edges (same minute buckets, same _TRI_CAP hot-bucket
+# guard, same u < v canonical form). Every graph oracle over the
+# co-occurrence graph reads its edges from here.
+_COOC_EDGE_CTES = f"""b AS MATERIALIZED (
         SELECT event_type, epoch_us(ts) // {_US_PER_MIN} AS bucket,
                user_id
         FROM events
@@ -614,7 +615,13 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN ok USING (event_type, bucket)
         JOIN b c ON c.event_type = a.event_type
                AND c.bucket = a.bucket AND a.user_id < c.user_id
-    ),
+    )"""
+
+
+@register(
+    "q_graph_triangles",
+    oracle=f"""
+    WITH {_COOC_EDGE_CTES},
     deg AS (
         SELECT u AS node, COUNT(*) AS d FROM (
             SELECT u FROM e UNION ALL SELECT v FROM e
@@ -941,25 +948,7 @@ def q_event_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_degree_dist",
     oracle=f"""
-    WITH b AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_MIN} AS bucket,
-               user_id
-        FROM events
-        WHERE user_id IS NOT NULL AND ts IS NOT NULL
-          AND event_type IS NOT NULL
-        GROUP BY 1, 2, 3
-    ),
-    ok AS MATERIALIZED (
-        SELECT event_type, bucket FROM b
-        GROUP BY 1, 2 HAVING COUNT(*) <= {_TRI_CAP}
-    ),
-    e AS MATERIALIZED (
-        SELECT DISTINCT a.user_id AS u, c.user_id AS v
-        FROM b a
-        JOIN ok USING (event_type, bucket)
-        JOIN b c ON c.event_type = a.event_type
-               AND c.bucket = a.bucket AND a.user_id < c.user_id
-    ),
+    WITH {_COOC_EDGE_CTES},
     deg AS (
         SELECT node, COUNT(*) AS d FROM (
             SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e
@@ -1364,25 +1353,7 @@ def q_orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_link_predict",
     oracle=f"""
-    WITH b AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_MIN} AS bucket,
-               user_id
-        FROM events
-        WHERE user_id IS NOT NULL AND ts IS NOT NULL
-          AND event_type IS NOT NULL
-        GROUP BY 1, 2, 3
-    ),
-    ok AS MATERIALIZED (
-        SELECT event_type, bucket FROM b
-        GROUP BY 1, 2 HAVING COUNT(*) <= {_TRI_CAP}
-    ),
-    e AS MATERIALIZED (
-        SELECT DISTINCT a.user_id AS u, c.user_id AS v
-        FROM b a
-        JOIN ok USING (event_type, bucket)
-        JOIN b c ON c.event_type = a.event_type
-               AND c.bucket = a.bucket AND a.user_id < c.user_id
-    ),
+    WITH {_COOC_EDGE_CTES},
     adj AS (
         SELECT u AS node, v AS nbr FROM e
         UNION ALL SELECT v AS node, u AS nbr FROM e
@@ -1679,31 +1650,6 @@ def q_orders_repeat_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared DuckDB CTE block producing the canonical co-occurrence edge
-# list `e(u, v)` — the SQL twin of _cooccurrence_edges (same minute
-# buckets, same _TRI_CAP hot-bucket guard, same u < v canonical form).
-_COOC_EDGE_CTES = f"""
-    b AS MATERIALIZED (
-        SELECT event_type, epoch_us(ts) // {_US_PER_MIN} AS bucket,
-               user_id
-        FROM events
-        WHERE user_id IS NOT NULL AND ts IS NOT NULL
-          AND event_type IS NOT NULL
-        GROUP BY 1, 2, 3
-    ),
-    ok AS MATERIALIZED (
-        SELECT event_type, bucket FROM b
-        GROUP BY 1, 2 HAVING COUNT(*) <= {_TRI_CAP}
-    ),
-    e AS MATERIALIZED (
-        SELECT DISTINCT a.user_id AS u, c.user_id AS v
-        FROM b a
-        JOIN ok USING (event_type, bucket)
-        JOIN b c ON c.event_type = a.event_type
-               AND c.bucket = a.bucket AND a.user_id < c.user_id
-    )
-"""
-
 _KCORE_K = 3
 _KCORE_ROUNDS = 4
 
@@ -1712,7 +1658,7 @@ def _kcore_oracle() -> str:
     """Chained-CTE peel: each round recomputes degrees on the
     surviving edge set and drops nodes below _KCORE_K (both
     endpoints must survive for the edge to survive)."""
-    ctes = [_COOC_EDGE_CTES.strip(), "e0 AS MATERIALIZED (SELECT u, v FROM e)"]
+    ctes = [_COOC_EDGE_CTES, "e0 AS MATERIALIZED (SELECT u, v FROM e)"]
     for r in range(1, _KCORE_ROUNDS + 1):
         p = r - 1
         ctes.append(
@@ -1819,7 +1765,7 @@ def _bfs_oracle() -> str:
     """Chained-CTE breadth-first expansion from the lowest-id node:
     frontier f{r} = neighbors(f{r-1}) − visited, r = 1..3."""
     ctes = [
-        _COOC_EDGE_CTES.strip(),
+        _COOC_EDGE_CTES,
         "v0 AS MATERIALIZED (SELECT MIN(u) AS node FROM e)",
         "f0 AS MATERIALIZED (SELECT node FROM v0)",
     ]
@@ -1944,7 +1890,7 @@ def _label_prop_oracle() -> str:
     each round every node takes the min label over itself and its
     neighbors (self-loop rows in `adj` carry the "itself")."""
     ctes = [
-        _COOC_EDGE_CTES.strip(),
+        _COOC_EDGE_CTES,
         """nodes AS MATERIALIZED (
         SELECT u AS node FROM e UNION SELECT v FROM e
     )""",
@@ -2372,7 +2318,7 @@ def q_event_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_assortativity",
     oracle=f"""
-    WITH {_COOC_EDGE_CTES.strip()},
+    WITH {_COOC_EDGE_CTES},
     deg AS (
         SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
             SELECT u AS node FROM e UNION ALL SELECT v FROM e
@@ -2633,7 +2579,7 @@ def q_orders_monthly_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_clustering_coeff",
     oracle=f"""
-    WITH {_COOC_EDGE_CTES.strip()},
+    WITH {_COOC_EDGE_CTES},
     deg AS (
         SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
             SELECT u AS node FROM e UNION ALL SELECT v FROM e
@@ -2760,7 +2706,7 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_adamic_adar",
     oracle=f"""
-    WITH {_COOC_EDGE_CTES.strip()},
+    WITH {_COOC_EDGE_CTES},
     adj AS (
         SELECT u AS node, v AS nbr FROM e
         UNION ALL SELECT v AS node, u AS nbr FROM e

@@ -40,7 +40,7 @@ from fact_hive_custom_spark.functions.vectors import argmin, centre_array, sqdis
 from fact_hive_custom_spark.materialize import materialize
 
 from fact_hive_custom_spark.queries.registry import register
-from fact_hive_custom_spark.tables import EMB_CONTRACT_SQL, load_embeddings
+from fact_hive_custom_spark.tables import int8_grid, int8_grid_sql, load_embeddings
 
 # K seeds (the K lowest vec_ids — deterministic and SQL-expressible,
 # the same convention as the PQ/IVF codebooks), T full Lloyd update
@@ -53,7 +53,7 @@ _KM_SCALE = 64
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, us) — int8-quantized embedding shifted to [0, 254].
 
-    Same global-scale grid as corpus.py _pq_parts; the +127
+    tables.int8_grid, the grid of the PQ family and PCA; the +127
     shift makes every component non-negative so the fixed-point mean
     rounding below is floor-division-portable across engines.
     Materialized eagerly (r15): every Lloyd round re-reads it, and
@@ -65,21 +65,9 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     Blocks free on RDD GC; set `spark.checkpoint.dir` on a cluster.
     """
     emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
-    g = emb.agg(
-        F.max(
-            F.expr("array_max(transform(embedding, x -> abs(cast(x as double))))")
-        ).alias("gscale")
-    )
     q = (
-        emb.crossJoin(F.broadcast(g))
-        .filter(F.col("gscale") > 0)
-        .select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> cast(floor("
-                "(cast(x as double) * 127) / gscale + 0.5) as bigint) + 127)"
-            ).alias("us"),
-        )
+        int8_grid(emb, shift=127)
+        .withColumnRenamed("qs", "us")
         # the fixture corpus is one parquet file → one scan partition;
         # round-robin so the per-row assignment fold parallelizes
         # (measured lesson from q_llm_semdedup). NOT a hash
@@ -200,22 +188,10 @@ def _km_assign_cte(cent: str, tag: str) -> str:
 @register(
     "q_llm_kmeans",
     oracle=f"""
-    WITH emb AS ({EMB_CONTRACT_SQL}),
-    g AS (
-        SELECT max(list_max(list_transform(embedding,
-                   x -> abs(CAST(x AS DOUBLE))))) AS gscale
-        FROM emb
-    ),
-    q AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor((CAST(x AS DOUBLE) * 127) / gscale + 0.5)
-                        AS BIGINT) + 127) AS us
-        FROM emb, g WHERE gscale > 0
-    ),
+    WITH {int8_grid_sql(shift=127)},
     ql AS (
-        SELECT vec_id, CAST(d AS BIGINT) AS dim, us[CAST(d AS INT)] AS u
-        FROM q, unnest(generate_series(1, len(us))) AS t(d)
+        SELECT vec_id, CAST(d AS BIGINT) AS dim, qs[CAST(d AS INT)] AS u
+        FROM q, unnest(generate_series(1, len(qs))) AS t(d)
     ),
     c0 AS (
         SELECT vec_id AS cid, dim, {_KM_SCALE} * u AS c FROM ql
@@ -300,19 +276,7 @@ def _pca_round_cte(prev: str, tag: str) -> str:
 @register(
     "q_llm_pca_power",
     oracle=f"""
-    WITH emb AS ({EMB_CONTRACT_SQL}),
-    g AS (
-        SELECT max(list_max(list_transform(embedding,
-                   x -> abs(CAST(x AS DOUBLE))))) AS gscale
-        FROM emb
-    ),
-    q AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor((CAST(x AS DOUBLE) * 127) / gscale + 0.5)
-                        AS BIGINT)) AS qs
-        FROM emb, g WHERE gscale > 0
-    ),
+    WITH {int8_grid_sql()},
     ql AS (
         SELECT vec_id, CAST(d AS BIGINT) AS i, qs[CAST(d AS INT)] AS u
         FROM q, unnest(generate_series(1, len(qs))) AS t(d)
@@ -379,23 +343,7 @@ def q_llm_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     scatter and the 64-row vector iterate via broadcast joins —
     constant-size work independent of corpus, no collect, no
     Python."""
-    emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
-    g = emb.agg(
-        F.max(
-            F.expr("array_max(transform(embedding, x -> abs(cast(x as double))))")
-        ).alias("gscale")
-    )
-    q = (
-        emb.crossJoin(F.broadcast(g))
-        .filter(F.col("gscale") > 0)
-        .select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> cast(floor("
-                "(cast(x as double) * 127) / gscale + 0.5) as bigint))"
-            ).alias("qs"),
-        )
-    )
+    q = int8_grid(load_embeddings(spark, sf_dir).select("vec_id", "embedding"))
     # Outer-product accumulation, r15 shape: explode ONCE (n·D rows),
     # compute row i's product vector against the whole array in one
     # transform(), and aggregate the D products as D columnar SUMs —
@@ -504,22 +452,10 @@ def q_llm_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_llm_kmeans_purity",
     oracle=f"""
-    WITH emb AS ({EMB_CONTRACT_SQL}),
-    g AS (
-        SELECT max(list_max(list_transform(embedding,
-                   x -> abs(CAST(x AS DOUBLE))))) AS gscale
-        FROM emb
-    ),
-    q AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor((CAST(x AS DOUBLE) * 127) / gscale + 0.5)
-                        AS BIGINT) + 127) AS us
-        FROM emb, g WHERE gscale > 0
-    ),
+    WITH {int8_grid_sql(shift=127)},
     ql AS (
-        SELECT vec_id, CAST(d AS BIGINT) AS dim, us[CAST(d AS INT)] AS u
-        FROM q, unnest(generate_series(1, len(us))) AS t(d)
+        SELECT vec_id, CAST(d AS BIGINT) AS dim, qs[CAST(d AS INT)] AS u
+        FROM q, unnest(generate_series(1, len(qs))) AS t(d)
     ),
     c0 AS (
         SELECT vec_id AS cid, dim, {_KM_SCALE} * u AS c FROM ql

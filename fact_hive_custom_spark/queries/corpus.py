@@ -30,6 +30,8 @@ from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import (
     EMB_CONTRACT_SQL,
+    int8_grid,
+    int8_grid_sql,
     load_embeddings,
     load_table,
 )
@@ -1327,7 +1329,7 @@ _PQ_M = 8
 _PQ_SUB = 8
 _PQ_K = 16
 
-# Shared oracle CTE chain: contract → global scale → int8 grid →
+# Shared oracle CTE chain: the int8 grid (tables.int8_grid_sql) →
 # centroid table → subvector explodes → per-(vector, subspace,
 # centroid) integer L2² → per-(vector, subspace) argmin code.
 # Parameterized on the centroids-per-subspace dial (pq_k), the
@@ -1343,34 +1345,16 @@ def _pq_cte_prefix(
     if opq:
         qs_expr = (
             f"list_transform(generate_series(0, {d - 1}),"
-            " p -> list_extract(qs0, CAST(p // "
+            " p -> list_extract(qs, CAST(p // "
             f"{pq_sub} + (p % {pq_sub}) * {pq_m} + 1 AS INT)))"
         )
-        q_cte = f"""q0 AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor((CAST(x AS DOUBLE) * 127) / gscale + 0.5)
-                        AS BIGINT)) AS qs0
-        FROM emb, g WHERE gscale > 0
-    ),
+        q_cte = f"""{int8_grid_sql(name="q0")},
     q AS (
         SELECT vec_id, {qs_expr} AS qs FROM q0
     )"""
     else:
-        q_cte = """q AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor((CAST(x AS DOUBLE) * 127) / gscale + 0.5)
-                        AS BIGINT)) AS qs
-        FROM emb, g WHERE gscale > 0
-    )"""
-    return f"""emb AS ({EMB_CONTRACT_SQL}),
-    g AS (
-        SELECT max(list_max(list_transform(embedding,
-                   x -> abs(CAST(x AS DOUBLE))))) AS gscale
-        FROM emb
-    ),
-    {q_cte},
+        q_cte = int8_grid_sql()
+    return f"""{q_cte},
     cent AS (
         SELECT vec_id AS cid, qs AS cqs FROM q
         QUALIFY row_number() OVER (ORDER BY vec_id) <= {pq_k}
@@ -1525,25 +1509,7 @@ def _pq_parts(
     if pq_m is None:
         pq_m = _PQ_M
     pq_sub = (_PQ_M * _PQ_SUB) // pq_m
-    g = emb.agg(
-        F.max(
-            F.expr(
-                "array_max(transform(embedding,"
-                " x -> abs(cast(x as double))))"
-            )
-        ).alias("gscale")
-    )
-    q = (
-        emb.crossJoin(F.broadcast(g))
-        .filter(F.col("gscale") > 0)
-        .select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> cast(floor("
-                "(cast(x as double) * 127) / gscale + 0.5) as bigint))"
-            ).alias("qs"),
-        )
-    )
+    q = int8_grid(emb)
     if opq:
         q = q.select(
             "vec_id", F.expr(_opq_perm_expr("qs", pq_m, pq_sub)).alias("qs")

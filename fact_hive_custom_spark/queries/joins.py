@@ -440,7 +440,7 @@ def q_join_self(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery — Catalyst rewrites to a left semi join."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice FROM orders
@@ -459,7 +459,7 @@ def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery: orders above the global average price."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderkey, ROUND(o_totalprice, 4) AS o_totalprice
@@ -481,7 +481,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS — Catalyst decorrelates to a semi join (§4)."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, c_name FROM customer c

@@ -325,7 +325,7 @@ def q_sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from fact_hive_custom_spark.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderstatus,

@@ -20,7 +20,13 @@ from pyspark.sql import functions as F
 
 from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
-from fact_hive_custom_spark.tables import load_table
+from fact_hive_custom_spark.tables import (
+    DAILY_CENTS_SQL,
+    EVENT_CENTS_SQL,
+    daily_cents,
+    event_cents,
+    load_table,
+)
 
 
 @register(
@@ -1447,13 +1453,8 @@ def q_stat_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_spearman",
-    oracle="""
-    WITH e AS (
-        SELECT event_type, epoch_us(ts) // 86400000000 AS d,
-               CAST(round(value * 100) AS BIGINT) AS v
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-          AND event_type IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {EVENT_CENTS_SQL},
     s AS (
         SELECT event_type, d,
                CAST(SUM(v) AS BIGINT) AS y,
@@ -1516,24 +1517,12 @@ def q_stat_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     Constant series (da or db = 0) → NULL, engine-identical.
 
     Plan: the corpus collapses to ONE map-combined (type, day)
-    aggregate; the four rank/count windows share a single exchange on
+    aggregate of the tables.event_cents rows (the daily_cents sum plus
+    a row count); the four rank/count windows share a single exchange on
     event_type and run over the calendar-bounded day series; the
     final moment aggregate is per-type. One corpus-sized exchange
     end to end."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("event_type").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.expr("unix_micros(ts) DIV 86400000000").alias("d"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-    )
-    s = e.groupBy("event_type", "d").agg(
+    s = event_cents(spark, sf_dir).groupBy("event_type", "d").agg(
         F.sum("v").cast("bigint").alias("y"),
         F.count(F.lit(1)).cast("bigint").alias("c"),
     )
@@ -1878,17 +1867,8 @@ def q_orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_runs",
-    oracle="""
-    WITH e AS (
-        SELECT event_type, epoch_us(ts) // 86400000000 AS d,
-               CAST(round(value * 100) AS BIGINT) AS v
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-          AND event_type IS NOT NULL
-    ),
-    s AS (
-        SELECT event_type, d, CAST(SUM(v) AS BIGINT) AS y
-        FROM e GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_CENTS_SQL},
     cum AS (
         SELECT event_type, y,
                CAST(SUM(1) OVER (
@@ -1960,28 +1940,12 @@ def q_stat_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes int64 near n ≈ 5e4 days). Degenerate splits (n1 or n2 = 0,
     or p = n i.e. n1 = n2 = 1) → NULL.
 
-    Plan: the (type, day) sum is the only corpus-sized exchange; the
-    median rank window, the sign sequence, the lag window, and the
-    final aggregate all run on the calendar-bounded day series under
-    one event_type partitioning; the median attaches by broadcast."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("event_type").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.expr("unix_micros(ts) DIV 86400000000").alias("d"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-    )
-    s = (
-        e.groupBy("event_type", "d")
-        .agg(F.sum("v").cast("bigint").alias("y"))
-        .transform(materialize)
-    )
+    Plan: the tables.daily_cents (type, day) sum is the only
+    corpus-sized exchange; the median rank window, the sign sequence,
+    the lag window, and the final aggregate all run on the
+    calendar-bounded day series under one event_type partitioning;
+    the median attaches by broadcast."""
+    s = daily_cents(spark, sf_dir).transform(materialize)
     wcum = Window.partitionBy("event_type").orderBy("y").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -2953,13 +2917,44 @@ def q_stat_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_stat_mutual_info",
-    oracle=f"""
-    WITH e AS (
-        SELECT event_type AS x,
+def _dow_contingency(
+    spark: SparkSession, sf_dir: str, key: str, x: str
+) -> DataFrame:
+    """(x, y, obs, r, c, n): the contingency table of `x` (a SQL
+    expression over the events with `key` and `ts` set) by day of week
+    y, with each cell's row, column and grand totals. y comes from the
+    integer day number ((d+4) % 7, 1970-01-01 = Thursday → 0 = Monday),
+    with no calendar or timezone function, so the ns-parquet/µs-Spark
+    timestamp gap cannot leak in. One map-combined groupBy collapses
+    the corpus to the cells; the total windows run on the cell table.
+    _dow_contingency_sql is the DuckDB mirror."""
+    obs = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col(key).isNotNull() & F.col("ts").isNotNull())
+        .select(
+            F.expr(x).alias("x"),
+            F.expr(f"(unix_micros(ts) DIV {_US_PER_DAY} + 4) % 7").alias("y"),
+        )
+        .groupBy("x", "y")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
+    )
+    return obs.select(
+        "x",
+        "y",
+        "obs",
+        F.sum("obs").over(Window.partitionBy("x")).cast("bigint").alias("r"),
+        F.sum("obs").over(Window.partitionBy("y")).cast("bigint").alias("c"),
+        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
+    )
+
+
+def _dow_contingency_sql(key: str, x: str) -> str:
+    """DuckDB CTEs `e`, `obs` (x, y, obs) and `tot` (with r, c, n):
+    _dow_contingency's relation."""
+    return f"""e AS (
+        SELECT {x} AS x,
                (epoch_us(ts) // {_US_PER_DAY} + 4) % 7 AS y
-        FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
+        FROM events WHERE {key} IS NOT NULL AND ts IS NOT NULL
     ),
     obs AS (
         SELECT x, y, CAST(COUNT(*) AS BIGINT) AS obs
@@ -2971,7 +2966,13 @@ def q_stat_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(obs) OVER (PARTITION BY y) AS BIGINT) AS c,
                CAST(SUM(obs) OVER () AS BIGINT) AS n
         FROM obs
-    ),
+    )"""
+
+
+@register(
+    "q_stat_mutual_info",
+    oracle=f"""
+    WITH {_dow_contingency_sql("event_type", "event_type")},
     cells AS (
         SELECT x, y, obs,
                CAST(floor(ln(CAST(obs AS DOUBLE) * n / (CAST(r AS DOUBLE) * c))
@@ -2996,30 +2997,9 @@ def q_stat_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression shape on both engines, obs·n and r·c stay < 2^53 so
     the only rounding is the ln itself).
 
-    Day-of-week comes from the integer day number ((d+4) % 7,
-    1970-01-01 = Thursday → 0 = Monday) — no calendar/timezone
-    function, so the ns-parquet/µs-Spark timestamp gap cannot leak in.
-
-    Plan: ONE map-combined groupBy collapses the corpus to ≤ |types|·7
-    cells; marginal windows and the MI reduction run on that tiny cell
-    table (the chisq skeleton)."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
-        .select(
-            F.col("event_type").alias("x"),
-            F.expr(f"(unix_micros(ts) DIV {_US_PER_DAY} + 4) % 7").alias("y"),
-        )
-    )
-    obs = e.groupBy("x", "y").agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    tot = obs.select(
-        "x",
-        "y",
-        "obs",
-        F.sum("obs").over(Window.partitionBy("x")).cast("bigint").alias("r"),
-        F.sum("obs").over(Window.partitionBy("y")).cast("bigint").alias("c"),
-        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
+    Plan: the _dow_contingency cell table (≤ |types|·7 cells); the MI
+    reduction runs on it."""
+    tot = _dow_contingency(spark, sf_dir, "event_type", "event_type")
     cells = tot.select(
         "x",
         "y",
@@ -3045,22 +3025,7 @@ def q_stat_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stat_cramers_v",
     oracle=f"""
-    WITH e AS (
-        SELECT user_id % 4 AS x,
-               (epoch_us(ts) // {_US_PER_DAY} + 4) % 7 AS y
-        FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-    ),
-    obs AS (
-        SELECT x, y, CAST(COUNT(*) AS BIGINT) AS obs
-        FROM e GROUP BY x, y
-    ),
-    tot AS (
-        SELECT x, y, obs,
-               CAST(SUM(obs) OVER (PARTITION BY x) AS BIGINT) AS r,
-               CAST(SUM(obs) OVER (PARTITION BY y) AS BIGINT) AS c,
-               CAST(SUM(obs) OVER () AS BIGINT) AS n
-        FROM obs
-    ),
+    WITH {_dow_contingency_sql("user_id", "user_id % 4")},
     cells AS (
         SELECT obs, n,
                CAST(floor(
@@ -3096,26 +3061,10 @@ def q_stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     any cross-row sum); the normalization is one engine-identical
     integer division by N·(min dims − 1).
 
-    Plan: one map-combined groupBy to ≤ 4·7 cells, marginal windows
-    and the scalar reduction on the cell table; the dims relation is
-    a 1-row staple joined by broadcast cross."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-        .select(
-            (F.col("user_id") % 4).alias("x"),
-            F.expr(f"(unix_micros(ts) DIV {_US_PER_DAY} + 4) % 7").alias("y"),
-        )
-    )
-    obs = e.groupBy("x", "y").agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    tot = obs.select(
-        "x",
-        "y",
-        "obs",
-        F.sum("obs").over(Window.partitionBy("x")).cast("bigint").alias("r"),
-        F.sum("obs").over(Window.partitionBy("y")).cast("bigint").alias("c"),
-        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
+    Plan: the _dow_contingency cell table (≤ 4·7 cells) and the
+    scalar reduction on it; the dims relation is a 1-row staple joined
+    by broadcast cross."""
+    tot = _dow_contingency(spark, sf_dir, "user_id", "user_id % 4")
     cells = tot.select(
         "obs",
         "n",
@@ -3127,7 +3076,7 @@ def q_stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * 1000000 + 0.5) as bigint)"
         ).alias("term_ppm"),
     )
-    dims = obs.agg(
+    dims = tot.select("x", "y", "obs").agg(
         F.countDistinct("x").cast("bigint").alias("nr"),
         F.countDistinct("y").cast("bigint").alias("nc"),
     )
@@ -3305,22 +3254,7 @@ def q_stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stat_theil_u",
     oracle=f"""
-    WITH e AS (
-        SELECT event_type AS x,
-               (epoch_us(ts) // {_US_PER_DAY} + 4) % 7 AS y
-        FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-    ),
-    obs AS (
-        SELECT x, y, CAST(COUNT(*) AS BIGINT) AS obs
-        FROM e GROUP BY x, y
-    ),
-    tot AS (
-        SELECT x, y, obs,
-               CAST(SUM(obs) OVER (PARTITION BY x) AS BIGINT) AS r,
-               CAST(SUM(obs) OVER (PARTITION BY y) AS BIGINT) AS c,
-               CAST(SUM(obs) OVER () AS BIGINT) AS n
-        FROM obs
-    ),
+    WITH {_dow_contingency_sql("event_type", "event_type")},
     mi AS (
         SELECT CAST(CAST(SUM(CAST(obs AS HUGEINT)
                    * CAST(floor(ln(CAST(obs AS DOUBLE) * n
@@ -3354,26 +3288,9 @@ def q_stat_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-pinned per-cell/per-row logs, and the final ratio is one
     engine-identical integer division in HUGEINT/DECIMAL(38,0).
 
-    Plan: identical to q_stat_mutual_info — one map-combined groupBy
-    to ≤|types|·7 cells, marginal windows on the cell table,
+    Plan: the _dow_contingency cell table of q_stat_mutual_info, then
     single-row algebra."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
-        .select(
-            F.col("event_type").alias("x"),
-            F.expr(f"(unix_micros(ts) DIV {_US_PER_DAY} + 4) % 7").alias("y"),
-        )
-    )
-    obs = e.groupBy("x", "y").agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    tot = obs.select(
-        "x",
-        "y",
-        "obs",
-        F.sum("obs").over(Window.partitionBy("x")).cast("bigint").alias("r"),
-        F.sum("obs").over(Window.partitionBy("y")).cast("bigint").alias("c"),
-        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
+    tot = _dow_contingency(spark, sf_dir, "event_type", "event_type")
     d38 = "decimal(38,0)"
     mi = tot.agg(
         F.expr(

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
-from fact_hive_custom_spark.tables import load_table
+from fact_hive_custom_spark.tables import DAILY_CENTS_SQL, daily_cents, load_table
 
 _US_PER_HOUR = 3_600_000_000
 _US_PER_DAY = 86_400_000_000
@@ -1086,16 +1086,7 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ts_theil_sen",
     oracle=f"""
-    WITH e AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_DAY} AS d,
-               CAST(round(value * 100) AS BIGINT) AS v
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-          AND event_type IS NOT NULL
-    ),
-    s AS (
-        SELECT event_type, d, CAST(SUM(v) AS BIGINT) AS y
-        FROM e GROUP BY 1, 2
-    ),
+    WITH {DAILY_CENTS_SQL},
     nd AS (SELECT event_type, COUNT(*) AS n_days FROM s GROUP BY 1),
     pr AS (
         SELECT a.event_type AS event_type,
@@ -1135,39 +1126,22 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope_e6 are interchangeable for a rank-picked VALUE, so the
     rank window needs no tiebreak chain.
 
-    Plan: the corpus collapses to one map-combined (type, day) sum —
-    the only corpus-sized exchange — and that day series is
-    MATERIALIZED because three consumers read it (both pair-join sides
-    and the n_days count): without it the lineage re-scans the corpus
-    three times; the O(days²/2) pair self-join and
-    the median rank window run on the tiny per-type day series
-    (bounded by the calendar, NOT by row count: 10 years ≈ 3.65 k
-    points → ≤ 6.7 M pairs per type, still executor-local). At 100 TB
-    the scan dominates; everything after the first aggregate is
+    Plan: the corpus collapses to the tables.daily_cents series, one
+    map-combined (type, day) sum — the only corpus-sized exchange —
+    and that day series is MATERIALIZED because three consumers read
+    it (both pair-join sides and the n_days count): without it the
+    lineage re-scans the corpus three times; the O(days²/2) pair
+    self-join and the median rank window run on the tiny per-type day
+    series (bounded by the calendar, NOT by row count: 10 years ≈
+    3.65 k points → ≤ 6.7 M pairs per type, still executor-local). At
+    100 TB the scan dominates; everything after the first aggregate is
     day-bounded. For minute-grain series, pre-bucket to days first —
     the pair set grows with the SQUARE of the series length."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("event_type").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.expr(f"unix_micros(ts) DIV {_US_PER_DAY}").alias("d"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-    )
     # The day series is consumed three times (both pair-join sides and
     # the n_days count); materializing it means ONE corpus scan instead
     # of three — the series itself is calendar-bounded, so it is tiny
     # regardless of corpus size.
-    s = (
-        e.groupBy("event_type", "d")
-        .agg(F.sum("v").cast("bigint").alias("y"))
-        .transform(materialize)
-    )
+    s = daily_cents(spark, sf_dir).transform(materialize)
     nd = s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
     a = s.select(
         F.col("event_type").alias("ta"),
@@ -1211,16 +1185,7 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ts_mann_kendall",
     oracle=f"""
-    WITH e AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_DAY} AS d,
-               CAST(round(value * 100) AS BIGINT) AS v
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-          AND event_type IS NOT NULL
-    ),
-    s AS (
-        SELECT event_type, d, CAST(SUM(v) AS BIGINT) AS y
-        FROM e GROUP BY 1, 2
-    ),
+    WITH {DAILY_CENTS_SQL},
     nd AS (SELECT event_type, COUNT(*) AS n FROM s GROUP BY 1),
     pr AS (
         SELECT a.event_type AS event_type,
@@ -1285,29 +1250,12 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuity correction (|S|−1, the normal-approximation standard)
     is applied via CASE so S = 0 maps to exactly 0.
 
-    Plan: identical skeleton to q_ts_theil_sen — ONE materialized
-    map-combined (type, day) sum feeds the pair join, the tie counts,
-    and the day counts; everything after the first aggregate is
-    calendar-bounded. The pair join broadcasts the tiny day series;
-    no corpus-sized exchange keys on anything but (type, day)."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("event_type").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.expr(f"unix_micros(ts) DIV {_US_PER_DAY}").alias("d"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-    )
-    s = (
-        e.groupBy("event_type", "d")
-        .agg(F.sum("v").cast("bigint").alias("y"))
-        .transform(materialize)
-    )
+    Plan: as q_ts_theil_sen — ONE materialized tables.daily_cents
+    series feeds the pair join, the tie counts, and the day counts;
+    everything after the first aggregate is calendar-bounded. The pair
+    join broadcasts the tiny day series; no corpus-sized exchange keys
+    on anything but (type, day)."""
+    s = daily_cents(spark, sf_dir).transform(materialize)
     nd = s.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
@@ -1392,16 +1340,7 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ts_drawdown",
     oracle=f"""
-    WITH e AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_DAY} AS d,
-               CAST(round(value * 100) AS BIGINT) AS v
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-          AND event_type IS NOT NULL
-    ),
-    s AS (
-        SELECT event_type, d, CAST(SUM(v) AS BIGINT) AS y
-        FROM e GROUP BY 1, 2
-    ),
+    WITH {DAILY_CENTS_SQL},
     c AS (
         SELECT event_type, d,
                CAST(SUM(y) OVER (
@@ -1441,27 +1380,12 @@ def q_ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction (peak ≥ cum always once peak starts at the first
     cum; first day's drawdown is 0).
 
-    Plan: one map-combined (type, day) sum is the only corpus-sized
-    exchange; both prefix windows (cumsum, running max) share the
-    single event_type partitioning over the calendar-bounded series;
-    one per-type aggregate ends it. Nothing beyond the first
+    Plan: the tables.daily_cents (type, day) sum is the only
+    corpus-sized exchange; both prefix windows (cumsum, running max)
+    share the single event_type partitioning over the calendar-bounded
+    series; one per-type aggregate ends it. Nothing beyond the first
     aggregate scales with row count."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("event_type").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.expr(f"unix_micros(ts) DIV {_US_PER_DAY}").alias("d"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-    )
-    s = e.groupBy("event_type", "d").agg(
-        F.sum("v").cast("bigint").alias("y")
-    )
+    s = daily_cents(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("d").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1507,16 +1431,7 @@ def q_ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ts_bollinger",
     oracle=f"""
-    WITH e AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_DAY} AS d,
-               CAST(round(value * 100) AS BIGINT) AS v
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-          AND event_type IS NOT NULL
-    ),
-    s AS (
-        SELECT event_type, d, CAST(SUM(v) AS BIGINT) AS y
-        FROM e GROUP BY 1, 2
-    ),
+    WITH {DAILY_CENTS_SQL},
     w AS (
         SELECT event_type, d, y,
                CAST(SUM(y) OVER (PARTITION BY event_type ORDER BY d
@@ -1567,25 +1482,11 @@ def q_ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-day windows are evaluated (wn = 7), so both engines agree at
     series edges by construction.
 
-    Plan: the one corpus-sized exchange is the (type, day) sum; the
-    three rolling windows share one event_type partitioning over the
-    calendar-bounded series; one per-type aggregate ends it."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("event_type").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.expr(f"unix_micros(ts) DIV {_US_PER_DAY}").alias("d"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-    )
-    s = e.groupBy("event_type", "d").agg(
-        F.sum("v").cast("bigint").alias("y")
-    )
+    Plan: the one corpus-sized exchange is the tables.daily_cents
+    (type, day) sum; the three rolling windows share one event_type
+    partitioning over the calendar-bounded series; one per-type
+    aggregate ends it."""
+    s = daily_cents(spark, sf_dir)
     w7 = Window.partitionBy("event_type").orderBy("d").rowsBetween(-6, 0)
     d38 = "decimal(38,0)"
     w = s.select(
@@ -1632,16 +1533,7 @@ def q_ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ts_forecast_naive",
     oracle=f"""
-    WITH e AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_DAY} AS d,
-               CAST(round(value * 100) AS BIGINT) AS v
-        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-          AND event_type IS NOT NULL
-    ),
-    s AS (
-        SELECT event_type, d, CAST(SUM(v) AS BIGINT) AS y
-        FROM e GROUP BY 1, 2
-    ),
+    WITH {DAILY_CENTS_SQL},
     f AS (
         SELECT event_type, d, y,
                lag(y, 7) OVER (
@@ -1680,26 +1572,11 @@ def q_ts_forecast_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY 7 calendar days (d − dlag = 7 guards series gaps — lag()
     counts rows, not days) and y ≠ 0.
 
-    Plan: one map-combined (type, day) sum, two lag windows sharing
-    the event_type partitioning over the calendar-bounded series, one
-    per-type aggregate. Nothing after the first exchange scales with
-    row count."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("event_type").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.expr(f"unix_micros(ts) DIV {_US_PER_DAY}").alias("d"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-    )
-    s = e.groupBy("event_type", "d").agg(
-        F.sum("v").cast("bigint").alias("y")
-    )
+    Plan: the tables.daily_cents (type, day) sum, two lag windows
+    sharing the event_type partitioning over the calendar-bounded
+    series, one per-type aggregate. Nothing after the first exchange
+    scales with row count."""
+    s = daily_cents(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("d")
     f = s.select(
         "event_type",

@@ -365,7 +365,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     are quarantined identically on both engines: under <> correlation
     a NULL suppkey can never match, but a NULL orderkey would differ
     between groupBy and equi-join handling (SURVEY §7.4)."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "orders", "supplier")
     return spark.sql(_Q21_SQL)
 
 
@@ -416,7 +416,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a co-partitioned shuffle join on l_partkey — both legs
     and the probe share one key, so one partitioning serves all.
     Final single-row SUM is exact cents."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_Q17_SQL)
 
 
@@ -477,7 +477,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast dim side; the outer supplier IN is another LeftSemi on
     a tiny distinct suppkey set. Exchanges carry (keys, bigint)
     partials only — never line rows. All quantities exact BIGINT."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "part", "supplier")
     return spark.sql(_Q20_SQL)
 
 
@@ -518,7 +518,7 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     side, then a tiny per-priority aggregate. The quarter predicate
     prunes the orders scan (row-group min/max on o_orderdate) BEFORE
     the semi join, so the probe side is ~1/28th of the fact."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "orders")
     return spark.sql(
         """
         SELECT o.o_orderpriority, COUNT(*) AS order_count
@@ -631,7 +631,9 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges are the two fact⋈fact orderkey/custkey hops. Group key
     includes the derived year — computed engine-side as BIGINT so the
     oracle's hash agrees on type."""
-    register_views(spark, sf_dir)
+    register_views(
+        spark, sf_dir, "customer", "lineitem", "nation", "orders", "supplier"
+    )
     return spark.sql(
         """
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -959,7 +961,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates reduce to single rows and broadcast; the NOT EXISTS
     decorrelates to a LeftAnti against the date-pruned orders scan
     keyed on custkey. Nothing wider than (custkey) ever shuffles."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "nation", "orders")
     return spark.sql(
         """
         SELECT n.n_name AS cntry,

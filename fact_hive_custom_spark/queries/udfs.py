@@ -382,7 +382,7 @@ def q_udf_sql_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from fact_hive_custom_spark.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION fhcs_split_payments(

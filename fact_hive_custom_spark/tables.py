@@ -6,6 +6,11 @@ schema taken from the file footer on the driver (`footer_schema`), so
 planning a scan runs no Spark job, and the vectorized Parquet reader +
 Catalyst still handle pushdown and pruning. `register_views` exposes
 the same tables to `spark.sql` queries.
+
+Relations that queries in several modules share are defined here
+once, each as a Spark builder plus the DuckDB CTE fragment its
+oracles use: the embeddings contract, the daily-cents series and the
+int8 embedding grid.
 """
 
 from __future__ import annotations
@@ -38,11 +43,14 @@ def footer_schema(path: str) -> T.StructType:
 
     Every field is nullable, as Spark's file sources make it anyway.
     Timestamps without a UTC flag map to TIMESTAMP_NTZ, as Spark infers
-    them. A `timestamp[ns]` column maps to LongType: Spark can read it
-    only as long nanos, under `spark.sql.legacy.parquet.nanosAsLong`,
-    which the readers of such a column set (`load_table`, streaming).
+    them. A legacy INT96 column maps to TimestampType, as Spark infers
+    it; pyarrow reports it as `timestamp[ns]`, and only the footer's
+    physical type tells it apart. Any other `timestamp[ns]` column maps
+    to LongType: Spark can read it only as long nanos, under
+    `spark.sql.legacy.parquet.nanosAsLong`, which the readers of such a
+    column set (`load_table`, streaming).
 
-    Read on every call and never cached, so a fixture rewritten in
+    One footer read per call, never cached, so a fixture rewritten in
     place is planned from its new footer at once.
     """
     import pyarrow.parquet as pq
@@ -56,13 +64,20 @@ def footer_schema(path: str) -> T.StructType:
             raise FileNotFoundError(f"no parquet part file in {path}")
         path = os.path.join(path, parts[0])
 
-    def spark_type(at) -> T.DataType:
-        if is_timestamp(at) and at.unit == "ns":
+    footer = pq.read_metadata(path).schema
+    # keyed by column path: a list column's leaf is not at its field index
+    leaves = [footer.column(i) for i in range(len(footer))]
+    physical = {c.path: c.physical_type for c in leaves}
+
+    def spark_type(f) -> T.DataType:
+        if physical.get(f.name) == "INT96":
+            return T.TimestampType()
+        if is_timestamp(f.type) and f.type.unit == "ns":
             return T.LongType()
-        return from_arrow_type(at, prefer_timestamp_ntz=True)
+        return from_arrow_type(f.type, prefer_timestamp_ntz=True)
 
     return T.StructType(
-        [T.StructField(f.name, spark_type(f.type), True) for f in pq.read_schema(path)]
+        [T.StructField(f.name, spark_type(f), True) for f in footer.to_arrow_schema()]
     )
 
 
@@ -131,15 +146,67 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql queries.
+def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register the named fixture tables as temp views for a spark.sql
+    query, which names the tables it reads.
 
-    Re-registers all ten views on every call: each is a footer read and
-    runs no job, and a fresh registration sees a fixture rewritten in
-    place, which a memo of the last sf_dir would not.
+    Registers afresh on every call: each view is a footer read and runs
+    no job, and a fresh registration sees a fixture rewritten in place,
+    which a memo of the last sf_dir would not.
     """
-    for name in TABLES:
+    for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+_US_PER_DAY = 86_400_000_000
+
+
+def event_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, d, v): every event with `ts`, `value` and
+    `event_type` set, d its UTC day number and v its value in whole
+    cents. The rows `daily_cents` sums; EVENT_CENTS_SQL is the DuckDB
+    mirror."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .filter(
+            F.col("ts").isNotNull()
+            & F.col("value").isNotNull()
+            & F.col("event_type").isNotNull()
+        )
+        .select(
+            "event_type",
+            F.expr(f"unix_micros(ts) DIV {_US_PER_DAY}").alias("d"),
+            F.round(F.col("value") * 100).cast("bigint").alias("v"),
+        )
+    )
+
+
+def daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, d, y): the daily-revenue series, y the exact cent
+    sum of the type's events on day d. It is the one corpus-sized
+    aggregate of the series queries (trend, drawdown, bands, forecast,
+    runs); everything they do after it is bounded by the calendar, not
+    by the row count. DAILY_CENTS_SQL is the DuckDB mirror."""
+    return (
+        event_cents(spark, sf_dir)
+        .groupBy("event_type", "d")
+        .agg(F.sum("v").cast("bigint").alias("y"))
+    )
+
+
+# DuckDB mirrors of event_cents (CTE `e`) and daily_cents (CTE `s`):
+# substitute via `WITH {DAILY_CENTS_SQL}, ... FROM s`.
+EVENT_CENTS_SQL = f"""e AS (
+        SELECT event_type, epoch_us(ts) // {_US_PER_DAY} AS d,
+               CAST(round(value * 100) AS BIGINT) AS v
+        FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+          AND event_type IS NOT NULL
+    )"""
+DAILY_CENTS_SQL = f"""{EVENT_CENTS_SQL},
+    s AS (
+        SELECT event_type, d, CAST(SUM(v) AS BIGINT) AS y
+        FROM e GROUP BY 1, 2
+    )"""
 
 
 # DuckDB fragment enforcing the same contract as load_embeddings():
@@ -186,3 +253,43 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(mode_dim), F.size("embedding") == F.col("dim"))
         .drop("dim")
     )
+
+
+def int8_grid(emb: DataFrame, shift: int = 0) -> DataFrame:
+    """(vec_id, qs): contract embeddings on one global int8 grid.
+    gscale is the largest |x| in the whole corpus and each component
+    maps to floor(x·127/gscale + 0.5), plus `shift` (k-means shifts by
+    127 so every component is non-negative). An all-zero corpus has no
+    grid and yields no rows. int8_grid_sql is the DuckDB mirror.
+    q_llm_embed_quantize scales each vector by its own max instead."""
+    g = emb.agg(
+        F.max(
+            F.expr("array_max(transform(embedding, x -> abs(cast(x as double))))")
+        ).alias("gscale")
+    )
+    qs = "cast(floor((cast(x as double) * 127) / gscale + 0.5) as bigint)"
+    if shift:
+        qs += f" + {shift}"
+    return (
+        emb.crossJoin(F.broadcast(g))
+        .filter(F.col("gscale") > 0)
+        .select("vec_id", F.expr(f"transform(embedding, x -> {qs})").alias("qs"))
+    )
+
+
+def int8_grid_sql(shift: int = 0, name: str = "q") -> str:
+    """DuckDB CTEs `emb` (the contract), `g` (the scale) and `name`
+    (vec_id, qs): int8_grid's relation."""
+    return f"""emb AS ({EMB_CONTRACT_SQL}),
+    g AS (
+        SELECT max(list_max(list_transform(embedding,
+                   x -> abs(CAST(x AS DOUBLE))))) AS gscale
+        FROM emb
+    ),
+    {name} AS (
+        SELECT vec_id,
+               list_transform(embedding,
+                   x -> CAST(floor((CAST(x AS DOUBLE) * 127) / gscale + 0.5)
+                        AS BIGINT) + {shift}) AS qs
+        FROM emb, g WHERE gscale > 0
+    )"""

@@ -8,6 +8,7 @@ inference and building a query runs no Spark job."""
 from __future__ import annotations
 
 import datetime
+import inspect
 import os
 import time
 import uuid
@@ -16,6 +17,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from fact_hive_custom_spark import tables
 from fact_hive_custom_spark.streaming.jobs import events_ts_dtype, streaming_events
 from fact_hive_custom_spark.queries import QUERIES
 from fact_hive_custom_spark.tables import TABLES, footer_schema, load_table
@@ -25,22 +27,29 @@ _BASE_US = [1_706_600_000_000_000, 1_706_600_001_500_000]
 
 
 def _write_events(dirpath, unit: str) -> str:
-    vals = _BASE_US if unit == "us" else [v * 1000 for v in _BASE_US]
+    """events.parquet with `ts` as timestamp[us], timestamp[ns], or
+    (`int96`) the legacy INT96 encoding Hive and old Spark write."""
+    vals = [v * 1000 for v in _BASE_US] if unit == "ns" else _BASE_US
     table = pa.table(
         {
             "event_id": pa.array([0, 1], pa.int64()),
-            "ts": pa.array(vals, pa.timestamp(unit)),
+            "ts": pa.array(vals, pa.timestamp("ns" if unit == "ns" else "us")),
             "user_id": pa.array([7, 8], pa.int64()),
             "event_type": pa.array(["view", "click"]),
             "value": pa.array([1.5, 2.5], pa.float64()),
             "props": pa.array(["{}", "{}"]),
         }
     )
-    pq.write_table(table, str(dirpath / "events.parquet"), version="2.6")
+    pq.write_table(
+        table,
+        str(dirpath / "events.parquet"),
+        version="2.6",
+        use_deprecated_int96_timestamps=unit == "int96",
+    )
     return str(dirpath)
 
 
-@pytest.mark.parametrize("unit", ["us", "ns"])
+@pytest.mark.parametrize("unit", ["us", "ns", "int96"])
 def test_load_table_normalizes_any_ts_encoding(spark, tmp_path, unit):
     d = tmp_path / f"enc_{unit}"
     d.mkdir()
@@ -91,7 +100,7 @@ def test_footer_schema_equals_inferred(spark, scale):
         assert footer_schema(path) == _inferred(spark, path), name
 
 
-@pytest.mark.parametrize("unit", ["us", "ns"])
+@pytest.mark.parametrize("unit", ["us", "ns", "int96"])
 def test_footer_schema_equals_inferred_for_events_encodings(spark, tmp_path, unit):
     path = os.path.join(_write_events(tmp_path, unit), "events.parquet")
     assert footer_schema(path) == _inferred(spark, path)
@@ -129,3 +138,28 @@ def test_query_construction_runs_no_job(spark, name):
         time.sleep(0.05)
     assert _group_jobs(sc, f"{tag}-action")
     assert _group_jobs(sc, f"{tag}-build") == []
+
+
+def test_register_views_loads_only_the_tables_the_query_reads(spark, monkeypatch):
+    loaded = []
+    real = tables.load_table
+    monkeypatch.setattr(
+        tables, "load_table", lambda s, d, name: loaded.append(name) or real(s, d, name)
+    )
+    QUERIES["q_agg_grouping_sets"](spark, DEFAULT_SF_DIR)
+    assert loaded == ["orders"]
+
+
+VIEW_QUERIES = sorted(
+    name for name, fn in QUERIES.items() if "register_views(" in inspect.getsource(fn)
+)
+
+
+def test_view_queries_name_every_table_they_read(spark):
+    """With no fixture view registered beforehand, each spark.sql row
+    still analyzes: the tables it names are all the tables it reads."""
+    assert len(VIEW_QUERIES) >= 12, VIEW_QUERIES
+    for name in VIEW_QUERIES:
+        for table in TABLES:
+            spark.catalog.dropTempView(table)
+        QUERIES[name](spark, DEFAULT_SF_DIR)

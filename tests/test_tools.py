@@ -55,10 +55,64 @@ CACHE_CALL = re.compile(r"\.persist\(|\.cache\(\)|unpersist|StorageLevel")
 def test_no_cache_calls_in_engine():
     found = [
         f"{path.relative_to(ROOT)}:{i}: {line.strip()}"
-        for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py"))
+        for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py")) + TOOLS
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if CACHE_CALL.search(line)
     ]
+    assert not found, found
+
+
+# A relation several queries share has one Spark builder and one DuckDB
+# fragment, in the file named here; each pattern is a defining line of
+# one of them, so a second match anywhere in the package is a hand copy.
+SHARED_RELATIONS = {
+    "daily cents": (
+        "fact_hive_custom_spark/tables.py",
+        [
+            r'\.alias\("d"\),\s*F\.round\(F\.col\("value"\) \* 100\)\.cast\("bigint"\)'
+            r'\.alias\("v"\)',
+            r"AS d,\s*CAST\(round\(value \* 100\) AS BIGINT\) AS v\b",
+        ],
+    ),
+    "day-of-week contingency": (
+        "fact_hive_custom_spark/queries/stats.py",
+        [
+            r'F\.sum\("obs"\)\.over\(Window\.partitionBy\("x"\)\)',
+            r"SUM\(obs\) OVER \(PARTITION BY x\)",
+        ],
+    ),
+    "int8 embedding grid": (
+        "fact_hive_custom_spark/tables.py",
+        [
+            r"cast\(x as double\) \* 127\) / gscale",
+            r"CAST\(x AS DOUBLE\) \* 127\) / gscale",
+        ],
+    ),
+    "co-occurrence edges": (
+        "fact_hive_custom_spark/queries/analytics.py",
+        [
+            r'F\.col\("n_users"\) <= _TRI_CAP',
+            r"HAVING COUNT\(\*\) <= \{_TRI_CAP\}",
+        ],
+    ),
+}
+
+
+def test_shared_relations_defined_once():
+    texts = {
+        str(path.relative_to(ROOT)): path.read_text()
+        for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py"))
+    }
+    found = []
+    for relation, (home, patterns) in SHARED_RELATIONS.items():
+        for pattern in patterns:
+            hits = [
+                f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                for rel, text in texts.items()
+                for m in re.finditer(pattern, text)
+            ]
+            if len(hits) != 1 or not hits[0].startswith(home + ":"):
+                found.append(f"{relation}: {hits}, expected once in {home}")
     assert not found, found
 
 

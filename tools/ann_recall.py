@@ -32,6 +32,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from fact_hive_custom_spark.materialize import materialize
     from fact_hive_custom_spark.operators.similarity import (
         cosine_topk,
         ivf_topk,
@@ -41,9 +42,9 @@ def main() -> None:
     from fact_hive_custom_spark.tables import load_table
 
     spark = get_session("ann-recall", quiet=True)
-    emb = load_table(spark, sf_dir, "embeddings").cache()
+    emb = load_table(spark, sf_dir, "embeddings").transform(materialize)
     n_corpus = emb.count()
-    probes = emb.filter(F.col("vec_id") < n_probes).cache()
+    probes = emb.filter(F.col("vec_id") < n_probes).transform(materialize)
     n_probes = probes.count()
 
     def pairs(df) -> set:

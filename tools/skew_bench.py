@@ -31,6 +31,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from fact_hive_custom_spark.materialize import materialize
     from fact_hive_custom_spark.operators.skew import salted_join
     from fact_hive_custom_spark.session import get_session
     from fact_hive_custom_spark.tables import load_table
@@ -46,15 +47,14 @@ def main() -> None:
             .otherwise(F.abs(F.xxhash64("l_linenumber", "l_orderkey")) % 1000),
         )
         .select("k", "l_quantity", "l_extendedprice")
-        .cache()
+        .transform(materialize)
     )
     n = fact.count()
     dim = (
         spark.range(1000)
         .select(F.col("id").cast("long").alias("k"), (F.col("id") * 7).alias("payload"))
-        .cache()
+        .transform(materialize)
     )
-    dim.count()
 
     top = fact.groupBy("k").count().orderBy(F.desc("count")).first()
     print("# Skew join measurement")
