@@ -15,11 +15,24 @@ Two tiers, same contract (pairs of near-duplicate doc ids):
 Banding math: with r rows/band and b bands, P(candidate | jaccard=j)
 = 1-(1-j^r)^b. Defaults r=3, b=8 (24 hashes) put the S-curve knee at
 (1/b)^(1/r) ≈ 0.5, giving ≈99.7% recall at j=0.8.
+
+Shared relations, each defined once here:
+
+- `hashed_shingles` — the (doc_id, 64-bit shingle hash) frame all four
+  pair operators and q_llm_decontaminate start from; `shingles_sql(k)`
+  is its DuckDB twin, the `toks`/`sh` CTEs every shingle oracle reads
+  (shingle strings, not hashes);
+- `_prefix_ranked` — the rarest-first ranking and ⌈τn⌉ prefix
+  predicate of `prefix_jaccard_pairs` and `prefix_containment_pairs`;
+- `_candidate_overlap` — the candidate-pair → |A∩B| verification join
+  of `minhash_lsh_pairs` and both prefix joins;
+- `_jaccard_at_least` — the size join and threshold tail of
+  `jaccard_pairs` and `minhash_lsh_pairs`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fact_hive_custom_spark.materialize import materialize
@@ -52,6 +65,35 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k:
     )
 
 
+def hashed_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
+    """(doc_id, shingle) with each k-shingle as its 64-bit xxhash64 —
+    the representation every pair operator joins on.
+
+    Longs, not strings: the pair join is the dominant shuffle and
+    longs move/compare ~3× cheaper than 3-word strings. A hash
+    collision would need two distinct shingles in overlapping docs to
+    collide in 64 bits (~2^-64 per pair) — negligible against
+    float-rounding noise.
+    """
+    return shingles(docs, k=k).select("doc_id", F.xxhash64("shingle").alias("shingle"))
+
+
+def shingles_sql(k: int) -> str:
+    """DuckDB twin of `shingles` over the `documents` view: the CTEs
+    `toks` (doc_id, t) and `sh` (doc_id, shingle), distinct k-word
+    shingle strings per document, written to follow a `WITH`.
+    Documents under k tokens (and NULL text) produce no rows."""
+    return f"""toks AS (
+        SELECT doc_id, string_split(text, ' ') AS t FROM documents
+    ),
+    sh AS (
+        SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(t) - {k - 2}, 1)),
+                                     i -> array_to_string(list_slice(t, i, i + {k - 1}), ' '))) AS shingle
+        FROM toks WHERE len(t) >= {k}
+    )"""
+
+
 def _df_capped(sh: DataFrame, max_doc_freq: int) -> DataFrame:
     """Drop shingles whose document frequency exceeds the cap — the
     CCNet/Gopher stop-shingle filter shared by jaccard_pairs and
@@ -71,6 +113,14 @@ def _df_capped(sh: DataFrame, max_doc_freq: int) -> DataFrame:
     note from round 14 stands: the df is counted on the 64-bit HASH,
     the SQL oracle on the shingle STRING — the same ~2^-64-per-pair
     collision assumption the pair join already makes.
+
+    r16 re-measure (PERF_r15.json had jaccard_pairs at 0.56×):
+    paired fresh-JVM A/B of this anti-join cap vs the r14 window cap
+    vs anti-join + repartition(shingle) pre-persist, 3 alternated
+    rounds — medians 2.21 / 2.18 / 2.31 s, statistically identical
+    (AQE broadcasts the sf0.1 self-join, so cache partitioning is
+    moot locally; at scale the map-side-agg cap still strictly
+    dominates the full window shuffle+sort). Kept.
     """
     hot = (
         sh.groupBy("shingle")
@@ -79,6 +129,41 @@ def _df_capped(sh: DataFrame, max_doc_freq: int) -> DataFrame:
         .select("shingle")
     )
     return sh.join(hot, "shingle", "left_anti")
+
+
+def _candidate_overlap(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter) — exact |A∩B| for each candidate pair.
+
+    Both sides' full shingle sets join onto the candidates keyed
+    (doc, shingle), so verification touches only candidate pairs:
+    candidate count ≈ true-dup count, and this stage stays tiny
+    regardless of corpus size.
+    """
+    return (
+        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(
+            sh.alias("sb"),
+            (F.col("doc_b") == F.col("sb.doc_id")) & (F.col("sa.shingle") == F.col("sb.shingle")),
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
+def _jaccard_at_least(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the pairs of `inter` (doc_a, doc_b,
+    n_inter) whose Jaccard over the shingle sets of `sh` is ≥
+    threshold, jaccard 6-dp rounded."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    sa = sizes.alias("sa")
+    sb = sizes.alias("sb")
+    jac = F.col("n_inter") / (F.col("sa.n_shingles") + F.col("sb.n_shingles") - F.col("n_inter"))
+    return (
+        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .filter(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
 
 
 def jaccard_pairs(
@@ -102,19 +187,7 @@ def jaccard_pairs(
     shingle is hot (asserted on fixtures in tests). Pass None to
     disable (exact oracle semantics at any frequency).
     """
-    # Join on the 64-bit hash of the shingle, not the string: the pair
-    # join is the dominant shuffle and longs move/compare ~3× cheaper
-    # than 3-word strings. A hash collision would need two distinct
-    # shingles in overlapping docs to collide in 64 bits (~2^-64 per
-    # pair) — negligible against float-rounding noise.
-    # r16 re-measure (driver PERF_r15 flagged 0.56×): paired fresh-JVM
-    # A/B of this anti-join cap vs the r14 window cap vs anti-join +
-    # repartition(shingle) pre-persist, 3 alternated rounds — medians
-    # 2.21 / 2.18 / 2.31 s, statistically identical (AQE broadcasts
-    # the sf0.1 self-join, so cache partitioning is moot locally; at
-    # scale the map-side-agg cap still strictly dominates the full
-    # window shuffle+sort). Kept.
-    sh = shingles(docs, k=k).select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    sh = hashed_shingles(docs, k=k)
     if max_doc_freq is not None:
         sh = _df_capped(sh, max_doc_freq)
     # The capped shingle frame feeds three consumers (sizes, both pair
@@ -122,7 +195,6 @@ def jaccard_pairs(
     # At 100 TB each recomputation is a full corpus pass — the
     # (doc_id, long) pairs are ~16 bytes/shingle.
     sh = materialize(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -130,15 +202,7 @@ def jaccard_pairs(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("n_inter") / (F.col("sa.n_shingles") + F.col("sb.n_shingles") - F.col("n_inter"))
-    return (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_at_least(inter, sh, threshold)
 
 
 def minhash_signatures(sh: DataFrame, num_hashes: int = 24) -> DataFrame:
@@ -181,18 +245,15 @@ def minhash_lsh_pairs(
     fixtures), and mirrored exactly by the capped SQL oracle
     otherwise. Pass None for uncapped semantics.
     """
-    # Same hashed-shingle representation as jaccard_pairs: signatures
-    # hash the 64-bit key again per seed (a valid MinHash family), and
-    # the verification join shuffles longs. Materialized: the frame
-    # feeds four consumers (signatures, sizes, both verification join
-    # sides) at ~16 B/shingle. The r3 bench note that re-scan beat
-    # persist predates the bound-tokens shingle fix — with the scan
-    # 4.7× cheaper the cache build is cheap too, and the A/B flipped
-    # (sf1.0: 5.5 s persisted vs 6.2 s re-scan); at 100 TB re-scanning
-    # would be four full corpus tokenize passes.
-    sh = shingles(docs, k=k).select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
-    )
+    # Signatures hash the 64-bit shingle key again per seed (a valid
+    # MinHash family), and the verification join shuffles longs.
+    # Materialized: the frame feeds four consumers (signatures, sizes,
+    # both verification join sides) at ~16 B/shingle. The r3 bench
+    # note that re-scan beat persist predates the bound-tokens shingle
+    # fix — with the scan 4.7× cheaper the cache build is cheap too,
+    # and the A/B flipped (sf1.0: 5.5 s persisted vs 6.2 s re-scan);
+    # at 100 TB re-scanning would be four full corpus tokenize passes.
+    sh = hashed_shingles(docs, k=k)
     if max_doc_freq is not None:
         sh = _df_capped(sh, max_doc_freq)
     sh = materialize(sh)
@@ -225,30 +286,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-
-    # Exact verification restricted to candidates: join shingle sets of
-    # both sides, compute |∩| and sizes. Candidate count ≈ true-dup
-    # count, so this stage is tiny regardless of corpus size.
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    sa = sh.alias("sa")
-    inter = (
-        candidates.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id")) & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    za = sizes.alias("za")
-    zb = sizes.alias("zb")
-    jac = F.col("n_inter") / (F.col("za.n_shingles") + F.col("zb.n_shingles") - F.col("n_inter"))
-    return (
-        inter.join(za, F.col("doc_a") == F.col("za.doc_id"))
-        .join(zb, F.col("doc_b") == F.col("zb.doc_id"))
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_at_least(_candidate_overlap(candidates, sh), sh, threshold)
 
 
 def simhash_64(
@@ -291,6 +329,36 @@ def simhash_64(
     return voted.select("doc_id", fingerprint.alias("simhash"))
 
 
+def _prefix_ranked(
+    sh: DataFrame, tau_num: int, tau_den: int
+) -> tuple[DataFrame, Column, DataFrame]:
+    """Rarest-first prefix ranking for the τ = tau_num/tau_den prefix
+    filters: returns (ranked, in_prefix, sizes).
+
+    `ranked` is `sh` with each shingle's global document frequency
+    `df`, its doc's set size `n` and its rank `rk` in the doc by
+    (df, shingle); `in_prefix` keeps the first n − ⌈τ·n⌉ + 1 ranks,
+    ⌈τ·n⌉ in exact integer arithmetic; `sizes` is (doc_id, n). One
+    shuffle keyed shingle (the df window), one keyed doc_id (size and
+    rank share the exchange).
+    """
+    dfw = Window.partitionBy("shingle")
+    szw = Window.partitionBy("doc_id")
+    rkw = Window.partitionBy("doc_id").orderBy("df", "shingle")
+    ranked = (
+        sh.withColumn("df", F.count(F.lit(1)).over(dfw))
+        .withColumn("n", F.count(F.lit(1)).over(szw))
+        .withColumn("rk", F.row_number().over(rkw))
+    )
+    in_prefix = (
+        F.col("rk")
+        <= F.col("n")
+        - F.expr(f"({tau_num} * n + {tau_den} - 1) DIV {tau_den}")
+        + 1
+    )
+    return ranked, in_prefix, ranked.select("doc_id", "n").distinct()
+
+
 def prefix_jaccard_pairs(
     docs: DataFrame,
     tau_num: int = 4,
@@ -327,23 +395,9 @@ def prefix_jaccard_pairs(
     keyed (doc, shingle) touch only candidate pairs. Returns
     (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard 6-dp rounded.
     """
-    sh = shingles(docs, k=k).select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
-    )
-    dfw = Window.partitionBy("shingle")
-    szw = Window.partitionBy("doc_id")
-    rkw = Window.partitionBy("doc_id").orderBy("df", "shingle")
-    ranked = (
-        sh.withColumn("df", F.count(F.lit(1)).over(dfw))
-        .withColumn("n", F.count(F.lit(1)).over(szw))
-        .withColumn("rk", F.row_number().over(rkw))
-    )
-    pref = ranked.filter(
-        F.col("rk")
-        <= F.col("n")
-        - F.expr(f"({tau_num} * n + {tau_den} - 1) DIV {tau_den}")
-        + 1
-    ).select("doc_id", "shingle", "n")
+    sh = hashed_shingles(docs, k=k)
+    ranked, in_prefix, sizes = _prefix_ranked(sh, tau_num, tau_den)
+    pref = ranked.filter(in_prefix).select("doc_id", "shingle", "n")
     cand = (
         pref.alias("a")
         .join(pref.alias("b"), "shingle")
@@ -359,19 +413,9 @@ def prefix_jaccard_pairs(
         )
         .distinct()
     )
-    sizes = ranked.select("doc_id", "n").distinct()
-    inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("sb.doc_id") == F.col("doc_b"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     return (
-        inter.join(
+        _candidate_overlap(cand, sh)
+        .join(
             sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
             "doc_a",
         )
@@ -423,23 +467,9 @@ def prefix_containment_pairs(
     containment direction ≥ τ > ½... (both directions pass only for
     equal sets, where the id order picks one canonical row).
     """
-    sh = shingles(docs, k=k).select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
-    )
-    dfw = Window.partitionBy("shingle")
-    szw = Window.partitionBy("doc_id")
-    rkw = Window.partitionBy("doc_id").orderBy("df", "shingle")
-    ranked = (
-        sh.withColumn("df", F.count(F.lit(1)).over(dfw))
-        .withColumn("n", F.count(F.lit(1)).over(szw))
-        .withColumn("rk", F.row_number().over(rkw))
-    )
-    pref_a = ranked.filter(
-        F.col("rk")
-        <= F.col("n")
-        - F.expr(f"({tau_num} * n + {tau_den} - 1) DIV {tau_den}")
-        + 1
-    ).select(
+    sh = hashed_shingles(docs, k=k)
+    ranked, in_prefix, sizes = _prefix_ranked(sh, tau_num, tau_den)
+    pref_a = ranked.filter(in_prefix).select(
         F.col("doc_id").alias("doc_a"), "shingle", F.col("n").alias("na")
     )
     full_b = ranked.select(
@@ -454,19 +484,9 @@ def prefix_containment_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    sizes = ranked.select("doc_id", "n").distinct()
-    inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("sb.doc_id") == F.col("doc_b"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     return (
-        inter.join(
+        _candidate_overlap(cand, sh)
+        .join(
             sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
             "doc_a",
         )

@@ -19,9 +19,8 @@ from pyspark.sql import functions as F
 from fact_hive_custom_spark.materialize import materialize
 
 from fact_hive_custom_spark.queries.registry import register
-from fact_hive_custom_spark.tables import load_table
+from fact_hive_custom_spark.tables import _US_PER_DAY, load_table
 
-_US_PER_DAY = 86_400_000_000
 _US_PER_HOUR = 3_600_000_000
 _US_PER_MIN = 60_000_000
 

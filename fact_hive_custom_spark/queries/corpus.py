@@ -8,6 +8,12 @@ training (overlapping chunks), language-model count statistics
 (bigrams), search-index construction (postings lists), and embedding
 compression (int8 scalar quantization).
 
+The word-bigram relation (doc_id, w1, w2) behind q_llm_bigram_lm,
+q_llm_bigram_ppl, q_llm_pmi_bigrams, q_llm_kn_continuation and
+q_llm_lm_interp is defined once: `_word_bigrams` (over
+`_multiword_tokens`) in Spark, `_WORD_BIGRAMS_SQL` in the oracles.
+The string bigrams of q_llm_ngram_counts are a different relation.
+
 Cross-engine determinism rules (SURVEY.md §7.4):
 - token positions are 1-based `element_at`/`list_extract` on both
   engines — never 0-based subscripts (Spark's `arr[i]` is 0-based,
@@ -679,22 +685,64 @@ def q_llm_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_llm_bigram_lm",
-    oracle="""
-    WITH toks AS (
-        SELECT string_split(text, ' ') AS t FROM documents
+def _multiword_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, toks) — the whitespace tokens of each document with at
+    least two of them: the documents the word-bigram relation covers."""
+    return docs.select(
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
+    ).filter(F.size("toks") >= 2)
+
+
+def _word_bigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, w1, w2) — every adjacent word pair of each document,
+    one row per position; documents under two tokens (and NULL text)
+    give none. The tokens are a bound column ahead of the pair lambda,
+    so each document is split once, not once per position (the
+    functions/text.py trap).
+
+    Takes the documents frame, so a caller's own pre-filter on it
+    stays in its plan. `_WORD_BIGRAMS_SQL` is the oracle twin."""
+    # fan_out(documents) was tried on q_llm_bigram_ppl (r16) and
+    # measured SLOWER (paired 1.8/1.8 → 2.5/2.5 s): the split+explode
+    # per-row work is light and every caller's counting groupBy
+    # re-exchanges immediately anyway, so the widening shuffle + lost
+    # scan fusion is a net cost. The fan_out wins stay with the
+    # md5-heavy map stages (permutation, quantile sketch, ngram
+    # novelty).
+    return _multiword_tokens(docs).select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, size(toks) - 1),"
+                " i -> struct(element_at(toks, i) AS w1,"
+                "             element_at(toks, i + 1) AS w2))"
+            )
+        ).alias("b"),
+    ).select("doc_id", "b.w1", "b.w2")
+
+
+# DuckDB twin of _multiword_tokens / _word_bigrams over the `documents`
+# view: the CTEs `toks` (doc_id, t) and `bg` (doc_id, w1, w2), written
+# to follow a WITH. Positions are 1-based on both engines.
+_WORD_BIGRAMS_SQL = """toks AS (
+        SELECT doc_id, string_split(text, ' ') AS t FROM documents
         WHERE len(string_split(text, ' ')) >= 2
     ),
-    pairs AS (
-        SELECT unnest(list_transform(
-                   generate_series(1, len(t) - 1),
-                   i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS p
-        FROM toks
-    ),
     bg AS (
-        SELECT p.w1 AS w1, p.w2 AS w2 FROM pairs
-    ),
+        SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM (
+            SELECT doc_id,
+                   unnest(list_transform(
+                       generate_series(1, len(t) - 1),
+                       i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS p
+            FROM toks
+        )
+    )"""
+
+
+@register(
+    "q_llm_bigram_lm",
+    oracle=f"""
+    WITH {_WORD_BIGRAMS_SQL},
     counted AS (
         SELECT w1, w2, COUNT(*) AS cnt FROM bg GROUP BY w1, w2
     )
@@ -722,19 +770,7 @@ def q_llm_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject with the (cnt, w1, w2) unique tiebreak.
     At 100 TB the shuffle carries map-combined (bigram, count) pairs
     only — never document text."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.split(F.col("text"), " ").alias("toks")).filter(
-        F.size("toks") >= 2
-    )
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                "             element_at(toks, i + 1) AS w2))"
-            )
-        ).alias("b")
-    ).select("b.w1", "b.w2")
+    bg = _word_bigrams(load_table(spark, sf_dir, "documents"))
     counted = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt"))
     return (
         counted.withColumn("tot", F.sum("cnt").over(Window.partitionBy("w1")))
@@ -2138,20 +2174,9 @@ def q_llm_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_llm_bigram_ppl",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        WHERE len(string_split(text, ' ')) >= 2
-    ),
-    bg AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, len(t) - 1),
-                   i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS p
-        FROM toks
-    ),
-    dbg AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM bg),
-    c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM dbg GROUP BY w1, w2),
+    oracle=f"""
+    WITH {_WORD_BIGRAMS_SQL},
+    c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY w1, w2),
     c1 AS (SELECT w1, SUM(c12) AS c1 FROM c12 GROUP BY w1),
     v AS (
         SELECT COUNT(DISTINCT tok) AS v FROM (
@@ -2162,7 +2187,7 @@ def q_llm_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT d.doc_id,
                CAST(floor(-ln((c12.c12 + 1.0) / (c1.c1 + v.v)) * 1000000
                           + 0.5) AS BIGINT) AS nll_e6
-        FROM dbg d
+        FROM bg d
         JOIN c12 ON d.w1 = c12.w1 AND d.w2 = c12.w2
         JOIN c1 ON d.w1 = c1.w1
         CROSS JOIN v
@@ -2194,29 +2219,11 @@ def q_llm_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the counting shuffle produced, re-keys once on w1, and the final
     per-doc sum shuffles (doc_id, int) pairs. Top-20 is
     TakeOrderedAndProject. Words move; text never does."""
-    # fan_out(documents) was tried here (r16) and measured SLOWER
-    # (paired 1.8/1.8 → 2.5/2.5 s): the split+explode per-row work is
-    # light and the counting groupBy re-exchanges immediately anyway,
-    # so the widening shuffle + lost scan fusion is a net cost. The
-    # fan_out wins stay with the md5-heavy map stages (permutation,
-    # quantile sketch, ngram novelty).
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
-    ).filter(F.size("toks") >= 2)
-    dbg = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                "             element_at(toks, i + 1) AS w2))"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.w1", "b.w2")
+    dbg = _word_bigrams(d)
     c12 = dbg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    v = toks.select(F.explode("toks").alias("tok")).agg(
+    v = _multiword_tokens(d).select(F.explode("toks").alias("tok")).agg(
         F.countDistinct("tok").alias("v")
     )
     scored = (
@@ -2676,20 +2683,11 @@ def q_llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_llm_pmi_bigrams",
-    oracle="""
-    WITH t AS (
-        SELECT string_split(text, ' ') AS toks FROM documents
-        WHERE len(string_split(text, ' ')) >= 2
-    ),
-    bg AS (
-        SELECT unnest(list_transform(
-                   generate_series(1, len(toks) - 1),
-                   i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS p
-        FROM t
-    ),
+    oracle=f"""
+    WITH {_WORD_BIGRAMS_SQL},
     c12 AS (
-        SELECT p.w1 AS w1, p.w2 AS w2, CAST(COUNT(*) AS BIGINT) AS c12
-        FROM bg GROUP BY 1, 2
+        SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12
+        FROM bg GROUP BY w1, w2
     ),
     c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c12 GROUP BY w1),
     c2 AS (SELECT w2, CAST(SUM(c12) AS BIGINT) AS c2 FROM c12 GROUP BY w2),
@@ -2728,19 +2726,7 @@ def q_llm_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the support filter prunes the join input before the two marginal
     hash joins. Final top-20 is TakeOrderedAndProject. At 100 TB the
     exchanges carry (bigram, count) pairs only."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.split(F.col("text"), " ").alias("toks")).filter(
-        F.size("toks") >= 2
-    )
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                "             element_at(toks, i + 1) AS w2))"
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
+    bg = _word_bigrams(load_table(spark, sf_dir, "documents"))
     c12 = bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("c12")
     )
@@ -2844,19 +2830,9 @@ def q_llm_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_llm_kn_continuation",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        WHERE len(string_split(text, ' ')) >= 2
-    ),
-    bg AS (
-        SELECT DISTINCT
-               unnest(list_transform(
-                   generate_series(1, len(t) - 1),
-                   i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS p
-        FROM toks
-    ),
-    types AS (SELECT DISTINCT p.w1 AS w1, p.w2 AS w2 FROM bg),
+    oracle=f"""
+    WITH {_WORD_BIGRAMS_SQL},
+    types AS (SELECT DISTINCT w1, w2 FROM bg),
     cont AS (
         SELECT w2, CAST(COUNT(*) AS BIGINT) AS cont FROM types GROUP BY w2
     ),
@@ -2882,20 +2858,8 @@ def q_llm_kn_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combine on the pair key); the continuation count is a
     re-aggregation OF THE TYPE TABLE; |types| is a 1-row broadcast
     staple; top-50 is TakeOrderedAndProject."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.split(F.col("text"), " ").alias("t")).filter(
-        F.size("t") >= 2
-    )
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> struct(element_at(t, i) AS w1,"
-                "             element_at(t, i + 1) AS w2))"
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
-    types = bg.distinct()
+    bg = _word_bigrams(load_table(spark, sf_dir, "documents"))
+    types = bg.select("w1", "w2").distinct()
     cont = types.groupBy("w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("cont")
     )
@@ -2916,22 +2880,11 @@ def q_llm_kn_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_llm_lm_interp",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 2
-    ),
-    bg AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, len(t) - 1),
-                   i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS p
-        FROM toks
-    ),
-    dbg AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM bg),
+    oracle=f"""
+    WITH {_WORD_BIGRAMS_SQL},
     c12 AS (
         SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12
-        FROM dbg WHERE doc_id % 2 = 0 GROUP BY w1, w2
+        FROM bg WHERE doc_id % 2 = 0 GROUP BY w1, w2
     ),
     c1 AS (
         SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c12 GROUP BY w1
@@ -2954,7 +2907,7 @@ def q_llm_kn_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
                    + 0.25 * (COALESCE(uni.cu, 0) + 1.0)
                      / (tv.t + tv.v + 1.0)) * 1000000 + 0.5) AS BIGINT)
                    AS nll_e6
-        FROM dbg d
+        FROM bg d
         LEFT JOIN c12 ON d.w1 = c12.w1 AND d.w2 = c12.w2
         LEFT JOIN c1 ON d.w1 = c1.w1
         LEFT JOIN uni ON d.w2 = uni.w2
@@ -2989,30 +2942,16 @@ def q_llm_lm_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out stream left-joins counts on the SAME keys the counting
     shuffles produced, and the final per-doc sum moves (doc_id, int)
     pairs. Top-20 is TakeOrderedAndProject. Text never shuffles."""
-    # fan_out was measured a loss on the identical bigram_ppl shape
-    # (r16 paired A/B — light split+explode map stage, immediate
-    # re-exchange at the counting groupBy); not applied here.
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.filter(F.col("text").isNotNull()).select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
-    ).filter(F.size("toks") >= 2)
-    dbg = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                "             element_at(toks, i + 1) AS w2))"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.w1", "b.w2")
+    d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    dbg = _word_bigrams(d)
     train = dbg.filter(F.col("doc_id") % 2 == 0)
     c12 = train.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("c12")
     )
     c1 = c12.groupBy("w1").agg(F.sum("c12").cast("bigint").alias("c1"))
     uni = (
-        toks.filter(F.col("doc_id") % 2 == 0)
+        _multiword_tokens(d)
+        .filter(F.col("doc_id") % 2 == 0)
         .select(F.explode("toks").alias("w2"))
         .groupBy("w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cu"))

@@ -12,7 +12,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fact_hive_custom_spark.functions.vectors import argmin, centre_array, dot, norm
-from fact_hive_custom_spark.operators.dedup import jaccard_pairs, minhash_lsh_pairs
+from fact_hive_custom_spark.operators.dedup import (
+    jaccard_pairs,
+    minhash_lsh_pairs,
+    shingles,
+    shingles_sql,
+)
 from fact_hive_custom_spark.operators.graph import connected_components
 from fact_hive_custom_spark.operators.similarity import cosine_topk
 from fact_hive_custom_spark.queries.registry import register
@@ -46,7 +51,9 @@ def q_llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exact 3-gram-shingle Jaccard ≥ 0.8 pair set, parameterized on the
+# Exact 3-gram-shingle Jaccard ≥ 0.8 pair set over the shared shingle
+# CTEs (operators/dedup.py:shingles_sql, the DuckDB twin of the
+# operators' hashed_shingles), parameterized on the
 # hot-shingle cap so the oracle computes the SAME capped Jaccard the
 # Spark operator does (shingles with doc-frequency > cap dropped before
 # pairing, sizes on the capped space). Capped (cap=1000, the operators'
@@ -69,31 +76,23 @@ def _exact_jaccard_oracle(max_doc_freq: int | None = None) -> str:
     # three sweep rows (jaccard_dedup, minhash_lsh, dedup_clusters),
     # so the window tax triples (r15 verdict item 7).
     cap = (
-        "SELECT doc_id, shingle FROM sh_all"
+        "SELECT doc_id, shingle FROM sh"
         if max_doc_freq is None
-        else f"""SELECT s.doc_id, s.shingle FROM sh_all s
+        else f"""SELECT s.doc_id, s.shingle FROM sh s
         ANTI JOIN (
-            SELECT shingle FROM sh_all
+            SELECT shingle FROM sh
             GROUP BY shingle HAVING COUNT(*) > {max_doc_freq}
         ) hot ON s.shingle = hot.shingle"""
     )
     return f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    sh_all AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 1, 1)),
-                                     i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS shingle
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
+    WITH {shingles_sql(3)},
+    kept AS (
         {cap}
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    sizes AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
     pairs AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY a.doc_id, b.doc_id
     )
     SELECT doc_a, doc_b,
@@ -184,16 +183,8 @@ def q_llm_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_llm_containment",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 1, 1)),
-                                     i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS shingle
-        FROM toks WHERE len(t) >= 3
-    ),
+    oracle=f"""
+    WITH {shingles_sql(3)},
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     pairs AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
@@ -1592,16 +1583,7 @@ _MHE_H = 16  # portable md5-seeded MinHash family size
 @register(
     "q_llm_minhash_est",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 1, 1)),
-                      i -> array_to_string(list_slice(t, i, i + 2), ' ')))
-                   AS shingle
-        FROM toks WHERE len(t) >= 3
-    ),
+    WITH {shingles_sql(3)},
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
     pairs AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1658,21 +1640,7 @@ def q_llm_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, seed, min) longs); the calibration join then runs on
     |pairs|·H rows. At 100 TB only the signature leg runs in
     production; the exact leg exists to certify it here."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split(F.col("text"), " ").alias("t")).filter(
-        F.size("t") >= 3
-    )
-    sh = toks.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(t) - 2),"
-                    " i -> concat_ws(' ', slice(t, i, 3)))"
-                )
-            )
-        ).alias("shingle"),
-    )
+    sh = shingles(load_table(spark, sf_dir, "documents"), k=3)
     sizes = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )

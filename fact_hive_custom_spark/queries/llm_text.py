@@ -8,7 +8,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fact_hive_custom_spark.operators.dedup import simhash_64
+from fact_hive_custom_spark.operators.dedup import (
+    hashed_shingles,
+    shingles_sql,
+    simhash_64,
+)
 from fact_hive_custom_spark.operators.similarity import cosine_pairs
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import (
@@ -337,16 +341,8 @@ def q_llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_llm_decontaminate",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 3, 1)),
-                      i -> array_to_string(list_slice(t, i, i + 4), ' '))) AS shingle
-        FROM toks WHERE len(t) >= 5
-    ),
+    oracle=f"""
+    WITH {shingles_sql(5)},
     ev AS (SELECT * FROM sh WHERE doc_id < 20),
     tr AS (SELECT DISTINCT shingle FROM sh WHERE doc_id >= 20),
     tot AS (SELECT doc_id, COUNT(*) AS n_shingles FROM ev GROUP BY doc_id),
@@ -368,17 +364,14 @@ def q_llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole training corpus, with a flag at ≥ 0.5 containment — the
     standard n-gram-overlap contamination check run before training.
 
-    Shingles hash to longs map-side (same xxhash64 representation and
-    collision argument as jaccard_pairs); the train side dedupes to a
-    distinct-shingle set and the check is one left-semi join on the
-    hash — at 100 TB the eval side is tiny (benchmarks), so the join
+    Shingles hash to longs map-side (operators/dedup.py
+    hashed_shingles, the pair operators' frame); the train side
+    dedupes to a distinct-shingle set and the check is one left-semi
+    join on the hash — at 100 TB the eval side is tiny (benchmarks), so the join
     broadcasts and the training corpus is a single narrow pass that
     never shuffles text.
     """
-    d = load_table(spark, sf_dir, "documents")
-    from fact_hive_custom_spark.operators.dedup import shingles
-
-    sh = shingles(d, k=5).select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    sh = hashed_shingles(load_table(spark, sf_dir, "documents"), k=5)
     ev = sh.filter(F.col("doc_id") < 20)
     tr = sh.filter(F.col("doc_id") >= 20).select("shingle").distinct()
     tot = ev.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))

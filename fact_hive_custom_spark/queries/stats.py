@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import (
+    _US_PER_DAY,
     DAILY_CENTS_SQL,
     EVENT_CENTS_SQL,
     daily_cents,
@@ -590,10 +591,10 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_orders_rfm",
-    oracle="""
+    oracle=f"""
     WITH base AS (
         SELECT o_custkey,
-               MAX(epoch_us(o_orderdate)) // 86400000000 AS last_day,
+               MAX(epoch_us(o_orderdate)) // {_US_PER_DAY} AS last_day,
                COUNT(*) AS freq,
                CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) AS monetary_cents
@@ -639,7 +640,7 @@ def q_orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.expr(
                 "MAX(unix_micros(CAST(o_orderdate AS TIMESTAMP)))"
-                " DIV 86400000000"
+                f" DIV {_US_PER_DAY}"
             ).alias("last_day"),
             F.count(F.lit(1)).alias("freq"),
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
@@ -2476,9 +2477,6 @@ def q_stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST({jb_expr} AS BIGINT)").alias("jb_e6"),
         F.expr(f"{jb_expr} >= 5991465").alias("nonnormal"),
     ).orderBy("event_type")
-
-
-_US_PER_DAY = 86_400_000_000
 
 
 @register(

@@ -24,10 +24,14 @@ from pyspark.sql import functions as F
 
 from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
-from fact_hive_custom_spark.tables import DAILY_CENTS_SQL, daily_cents, load_table
+from fact_hive_custom_spark.tables import (
+    _US_PER_DAY,
+    DAILY_CENTS_SQL,
+    daily_cents,
+    load_table,
+)
 
 _US_PER_HOUR = 3_600_000_000
-_US_PER_DAY = 86_400_000_000
 
 
 @register(

@@ -123,6 +123,10 @@ DOC_QUERIES = [
     "q_llm_lm_interp",
     "q_llm_js_divergence",
     "q_sql_lateral_view",
+    # prefix-filter dedup joins and bigram perplexity
+    "q_llm_prefix_jaccard",
+    "q_llm_containment",
+    "q_llm_bigram_ppl",
 ]
 
 # Queries over the embeddings table (element/label dtype sensitive).

@@ -216,13 +216,12 @@ def test_minhash_cap_bounds_hot_shingle_candidates(spark):
     from pyspark.sql import Window as W
 
     from fact_hive_custom_spark.operators.dedup import (
+        hashed_shingles,
         minhash_signatures,
-        shingles,
     )
 
     sh = (
-        shingles(load_table(spark, SKEW_DIR, "documents"), k=3)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle"))
+        hashed_shingles(load_table(spark, SKEW_DIR, "documents"), k=3)
         .withColumn(
             "__df", F.count(F.lit(1)).over(W.partitionBy("shingle"))
         )

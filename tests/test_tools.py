@@ -95,6 +95,35 @@ SHARED_RELATIONS = {
             r"HAVING COUNT\(\*\) <= \{_TRI_CAP\}",
         ],
     ),
+    # The string bigrams of q_llm_ngram_counts / q_llm_repetition and the
+    # md5 k-gram hashes of the fingerprint family are other relations;
+    # none of these patterns match them.
+    "word bigrams": (
+        "fact_hive_custom_spark/queries/corpus.py",
+        [
+            r"i -> struct\(element_at\((\w+), i\) AS w1",
+            r"struct_pack\(w1 := (\w+)\[i\], w2 := \1\[i \+ 1\]\)",
+        ],
+    ),
+    "k-shingle set": (
+        "fact_hive_custom_spark/operators/dedup.py",
+        [
+            r'F\.xxhash64\("shingle"\)\.alias\("shingle"\)',
+            r"i -> array_to_string\(list_slice\(t, i, i \+ [^)]*\), ' '\)\)\)\s+AS shingle",
+        ],
+    ),
+    "dedup prefix ranking and verification": (
+        "fact_hive_custom_spark/operators/dedup.py",
+        [
+            r"\{tau_num\} \* n \+ \{tau_den\} - 1\) DIV \{tau_den\}",
+            r'F\.col\("sa\.shingle"\) == F\.col\("sb\.shingle"\)',
+            r'F\.col\("\w+\.n_shingles"\) \+ F\.col\("\w+\.n_shingles"\)',
+        ],
+    ),
+    "microseconds per day": (
+        "fact_hive_custom_spark/tables.py",
+        [r"(?m)^_US_PER_DAY\s*=", r"\b86_?400_?000_?000\b"],
+    ),
 }
 
 

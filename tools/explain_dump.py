@@ -11,6 +11,12 @@ skipped. Each query is written to <out_dir>/<name>_<suffix>.txt.
 Plans are the INITIAL physical plans (no query execution) — the
 judge-facing artifact for before/after plan-shape claims in
 OPTIMIZATION_r*.md.
+
+A query with two or more DISTINCT aggregates prints the groups of its
+Expand in an order that follows expression-id hashes, so the same code
+can print another order after other queries ran in the session. For a
+parent-vs-change diff, dump each such query in its own invocation (a
+fresh session).
 """
 
 from __future__ import annotations
