@@ -2,8 +2,8 @@
 """Benchmark harness: runs the headline query set at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints two JSON lines: per-pass
-diagnostics (runs, spread, the [build_s, action_s] split, load1), then
-the headline
+diagnostics (runs, spread, the [build_s, action_s] split, the number
+of classes each run compiled, load1), then the headline
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ...}
 
@@ -208,6 +208,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
+    from fact_hive_custom_spark.metrics import codegen_compiles
     from fact_hive_custom_spark.queries.sources_sinks import sweep_bucketed_orphans
     from fact_hive_custom_spark.session import get_session
 
@@ -217,24 +218,29 @@ def main() -> None:
     run_query(spark, "q_agg_flagship", sf_dir)  # JVM/codegen warmup, untimed
 
     # THREE timed passes per query, reported as median + spread: the
-    # first execution pays one-off JIT/codegen-cache costs and the
-    # shared container shows ±20-30% host-steal drift (BASELINE.md),
-    # so a single-shot number makes cross-round deltas unfalsifiable.
-    # Median of [cold-ish, warm, warm] lands on a warm run but
-    # survives one spike; the per-query min/max spread is printed so
-    # noise is visible, not inferred. Pass 1 runs every query once
-    # (uniform warmth for passes 2-3). The 1-minute load average is
-    # sampled before each pass so a slow pass can be told from a busy
-    # host.
+    # first execution compiles the query's generated classes (the
+    # session's codegen cache keeps them for later passes, session.py)
+    # and the shared container shows ±20-30% host-steal drift
+    # (BASELINE.md), so a single-shot number makes cross-round deltas
+    # unfalsifiable. Median of [cold-ish, warm, warm] lands on a warm
+    # run but survives one spike; the per-query min/max spread is
+    # printed so noise is visible, not inferred. Pass 1 runs every
+    # query once (uniform warmth for passes 2-3). The 1-minute load
+    # average is sampled before each pass so a slow pass can be told
+    # from a busy host, and each run's compile count shows whether a
+    # warm pass still paid for code generation.
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
     build_action: dict[str, list[tuple[float, float]]] = {
         name: [] for name in HEADLINE
     }
+    compiles: dict[str, list[int]] = {name: [] for name in HEADLINE}
     load1: list[float] = []
     for _pass in range(3):
         load1.append(round(os.getloadavg()[0], 2))
         for name in HEADLINE:
+            c0 = codegen_compiles(spark)
             build_s, action_s = run_query(spark, name, sf_dir)
+            compiles[name].append(codegen_compiles(spark) - c0)
             build_action[name].append((build_s, action_s))
             runs[name].append(round(build_s + action_s, 3))
 
@@ -255,6 +261,7 @@ def main() -> None:
                 "value_min": round(sum(min(r) for r in runs.values()), 3),
                 "value_max": round(sum(max(r) for r in runs.values()), 3),
                 "build_action": build_action,
+                "compiles": compiles,
                 "load1": load1,
             }
         ),

@@ -30,9 +30,14 @@ def ngram_shingles_of(toks: Column | str, k: int) -> Column:
     The position sequence is guarded: Spark's sequence(1, n) runs
     BACKWARDS for n < 1, so short documents get an explicit empty
     array instead of a descending-range surprise.
+
+    Each shingle is `concat_ws`, not `array_join`: both give the same
+    string, but Spark types `array_join` as nullable, which puts an
+    inferred `isnotnull(shingle)` filter on each side of every
+    self-join on string shingles.
     """
     n = F.size(toks)
     idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
         F.array().cast("array<int>")
     )
-    return F.array_distinct(F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " ")))
+    return F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k))))

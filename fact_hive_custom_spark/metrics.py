@@ -26,8 +26,14 @@ layer with three entry points, all stock Spark:
    data — the idiomatic Spark way to audit a pipeline at 100 TB,
    where "count the rows again" is a second full scan.
 
-All metric extraction is read-only py4j traversal of the executed
-plan; nothing here adds a job, a stage, or a byte of shuffle.
+4. `codegen_compiles(spark)` — the JVM's running count of Janino
+   compilations of generated code. The difference across a query run
+   is the number of classes it compiled (0 when every class it needs
+   is still in the generated-code cache; session.py sizes that cache).
+
+All metric extraction is read-only py4j access (a walk of the executed
+plan, a JVM counter); nothing here adds a job, a stage, or a byte of
+shuffle.
 """
 
 from __future__ import annotations
@@ -41,6 +47,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 __all__ = [
     "MetricsListener",
     "QueryRecord",
+    "codegen_compiles",
     "execution_metrics",
     "install_listener",
     "observed",
@@ -170,6 +177,18 @@ def observed(df: DataFrame, name: str, *exprs) -> tuple[DataFrame, Observation]:
     inside the same pass, no second scan."""
     obs = Observation(name)
     return df.observe(obs, *exprs), obs
+
+
+# ------------------------------------------------------- codegen counter
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM (all sessions): the count
+    of Spark's `CodegenMetrics.METRIC_COMPILATION_TIME` histogram. A
+    cache hit in `CodeGenerator.compile` does not count. Works with the
+    UI off; read it before and after a run and take the difference."""
+    source = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return int(source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
 
 
 # ------------------------------------------------- QueryExecutionListener

@@ -9,6 +9,24 @@ few Pandas-UDF operators, UTC session timezone so timestamp semantics
 are engine-independent. Python workers fork from the stock
 `pyspark.daemon`, and building a session changes no process
 environment.
+
+Generated-code cache: `spark.sql.codegen.cache.maxEntries` is 8192
+(Spark's default is 100). One pass over a query set generates this
+many distinct classes at sf0.01 (4 cores, stage ids in class names):
+perfbench `relational` 40, perfbench `pipeline` 121, `bench.HEADLINE`
+1,098, the whole registry 4,468. Under a 100-entry LRU every set but
+`relational` evicts each class before its next use, so every pass
+compiled all of them again (Janino, then the JIT). The cache key is
+the generated source, so `spark.sql.codegen.useIdInClassName` is off:
+AQE numbers codegen stages in the order it creates query stages, and
+that order varies from run to run. With both, a query the session has
+already run compiles nothing (`metrics.codegen_compiles`;
+`tests/test_metrics.py` pins 0 for a second `pipeline` pass). The
+residue is a few queries whose generated source still differs from
+run to run: a second whole-registry pass compiled 28 and 22 classes
+over 8 queries in two runs. q_agg_theta_sketch, q_graph_triangles,
+q_llm_dataset_card, q_llm_cosine_dedup and q_scan_merge_schema were
+in both.
 """
 
 from __future__ import annotations
@@ -53,6 +71,14 @@ def get_session(
         # Reliable checkpoints (materialize() with spark.checkpoint.dir
         # set) delete their files when the checkpointed RDD is GC'd.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # Compiled-class cache (static conf). Distinct classes per pass at
+        # sf0.01: relational 40, pipeline 121, HEADLINE 1,098, registry
+        # 4,468; 8192 is the next power of two above the registry.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
+        # No AQE-assigned stage id in the cache key (module docstring):
+        # with it, q_llm_jaccard_dedup recompiled 4 classes in 5 of 16
+        # warm runs at sf0.001; without it, in 0 of 16.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

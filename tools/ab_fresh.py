@@ -9,6 +9,8 @@ JSON line per query:
     build_median     median of the construction part (build_query,
                      including eager jobs)
     action_median    median of the final noop-sink action
+    compiles         classes compiled in each pass (metrics.
+                     codegen_compiles): the codegen layer of an A/B
 
 Any bench.py row works, the q_join_bucketed build/probe split included.
 
@@ -51,6 +53,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from bench import run_query
+    from fact_hive_custom_spark.metrics import codegen_compiles
     from fact_hive_custom_spark.session import get_session
 
     spark = get_session("ab-fresh", quiet=True)
@@ -60,7 +63,11 @@ def main() -> int:
         return sorted(xs)[len(xs) // 2]
 
     for name in args.queries:
-        splits = [run_query(spark, name, sf_dir) for _ in range(args.passes)]
+        splits, compiles = [], []
+        for _ in range(args.passes):
+            c0 = codegen_compiles(spark)
+            splits.append(run_query(spark, name, sf_dir))
+            compiles.append(codegen_compiles(spark) - c0)
         times = [round(b + a, 3) for b, a in splits]
         print(
             json.dumps(
@@ -71,6 +78,7 @@ def main() -> int:
                     "median": median(times),
                     "build_median": median([b for b, _ in splits]),
                     "action_median": median([a for _, a in splits]),
+                    "compiles": compiles,
                 }
             ),
             flush=True,
