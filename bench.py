@@ -3,7 +3,8 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints two JSON lines: per-pass
 diagnostics (runs, spread, the [build_s, action_s] split, the number
-of classes each run compiled, load1), then the headline
+of classes each run compiled, each run's jobs and stages per phase,
+load1), then the headline
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ...}
 
@@ -12,8 +13,9 @@ transfer). One JVM-warmup run of the flagship precedes timing.
 BASELINE.md records the reference numbers for this machine.
 
 `build_query` / `run_query` are the one place a registry query is
-built and timed; the tools (ab_fresh, skew_sweep,
-query_metrics_report, explain_dump) import them.
+built and timed, and `phase_jobs` the one place its jobs are counted;
+the tools (ab_fresh, plan_snapshot, skew_sweep, explain_dump) import
+them.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 # The headline set: one representative per operator class, weighted
 # toward the queries whose plans matter at 100 TB (wide aggs, joins of
@@ -189,19 +192,63 @@ def build_query(spark, name: str, sf_dir: str):
     return QUERIES[name](spark, sf_dir)
 
 
-def run_query(spark, name: str, sf_dir: str) -> tuple[float, float]:
+def run_query(
+    spark, name: str, sf_dir: str, tag: str | None = None
+) -> tuple[float, float]:
     """Run bench row `name` once; returns (build_s, action_s).
 
     build_s covers `build_query`: analysis plus any eager jobs the
     query runs while being built. action_s is the noop-sink write
-    (full execution, no driver transfer)."""
+    (full execution, no driver transfer). With a `tag`, each phase runs
+    in its own job group for `phase_jobs`; the group switches fall
+    outside both timed spans."""
+    if tag:
+        set_phase(spark, tag, "build")
     t0 = time.perf_counter()
     df = build_query(spark, name, sf_dir)
     t1 = time.perf_counter()
+    if tag:
+        set_phase(spark, tag, "action")
+    t2 = time.perf_counter()
     if df is not None:
         df.write.format("noop").mode("overwrite").save()
-    t2 = time.perf_counter()
-    return round(t1 - t0, 3), round(t2 - t1, 3)
+    t3 = time.perf_counter()
+    return round(t1 - t0, 3), round(t3 - t2, 3)
+
+
+def new_tag() -> str:
+    """A fresh tag for `run_query` / `set_phase` and `phase_jobs`."""
+    return uuid.uuid4().hex
+
+
+def set_phase(spark, tag: str, phase: str) -> None:
+    """Run this thread's next Spark jobs in job group `<tag>:<phase>`."""
+    spark.sparkContext.setJobGroup(f"{tag}:{phase}", phase)
+
+
+def phase_jobs(spark, tag: str) -> dict[str, list[int]]:
+    """{"build": [jobs, stages], "action": [jobs, stages]} of the jobs
+    run under `tag` (`set_phase`): the one job counter of the bench,
+    the tools and the tests. Stock Spark, UI off.
+
+    Clears this thread's job group, then drains the listener bus, so
+    the status store holds every job the phases started. `stages`
+    counts the stages that ran tasks; a stage skipped because its
+    shuffle output was already written ran nothing. A streaming
+    query's micro-batch jobs run in the stream's own job group and are
+    not counted."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    st = sc.statusTracker()
+    out = {}
+    for phase in ("build", "action"):
+        jobs = st.getJobIdsForGroup(f"{tag}:{phase}")
+        infos = [st.getJobInfo(j) for j in jobs]
+        stages = {s for info in infos if info for s in info.stageIds}
+        ran = [s for s in stages if (i := st.getStageInfo(s)) and i.numCompletedTasks]
+        out[phase] = [len(jobs), len(ran)]
+    return out
 
 
 def main() -> None:
@@ -227,20 +274,24 @@ def main() -> None:
     # printed so noise is visible, not inferred. Pass 1 runs every
     # query once (uniform warmth for passes 2-3). The 1-minute load
     # average is sampled before each pass so a slow pass can be told
-    # from a busy host, and each run's compile count shows whether a
-    # warm pass still paid for code generation.
+    # from a busy host, each run's compile count shows whether a warm
+    # pass still paid for code generation, and its per-phase job and
+    # stage counts (read after the run, outside its timing) show what
+    # it ran.
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
     build_action: dict[str, list[tuple[float, float]]] = {
         name: [] for name in HEADLINE
     }
     compiles: dict[str, list[int]] = {name: [] for name in HEADLINE}
+    jobs: dict[str, list[dict[str, list[int]]]] = {name: [] for name in HEADLINE}
     load1: list[float] = []
     for _pass in range(3):
         load1.append(round(os.getloadavg()[0], 2))
         for name in HEADLINE:
-            c0 = codegen_compiles(spark)
-            build_s, action_s = run_query(spark, name, sf_dir)
+            c0, tag = codegen_compiles(spark), new_tag()
+            build_s, action_s = run_query(spark, name, sf_dir, tag)
             compiles[name].append(codegen_compiles(spark) - c0)
+            jobs[name].append(phase_jobs(spark, tag))
             build_action[name].append((build_s, action_s))
             runs[name].append(round(build_s + action_s, 3))
 
@@ -262,6 +313,7 @@ def main() -> None:
                 "value_max": round(sum(max(r) for r in runs.values()), 3),
                 "build_action": build_action,
                 "compiles": compiles,
+                "jobs": jobs,
                 "load1": load1,
             }
         ),

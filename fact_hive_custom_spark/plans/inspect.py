@@ -252,13 +252,13 @@ def nested_hof_count(df: DataFrame) -> int:
 
 
 def plan_counts(df: DataFrame) -> dict:
-    """Scale-relevant shape counts from the (unexecuted, pre-AQE)
-    physical plan — the registry-wide drift fingerprint
-    (PLAN_SNAPSHOT.json / tests/test_plan_snapshot.py). Unexecuted on
-    purpose: the initial plan is deterministic for a fixed fixture and
-    costs only Catalyst planning, so the whole 375-query registry
-    fingerprints in ~2 minutes; runtime demotions/coalescing are
-    audited separately by tools/plan_audit.py (PLANS.md)."""
+    """Scale-relevant shape counts from the physical plan — the
+    registry-wide drift fingerprint (PLAN_SNAPSHOT.json /
+    tests/test_plan_snapshot.py). Before execution this is the pre-AQE
+    plan, which is deterministic for a fixed fixture and costs only
+    Catalyst planning, so it is the gated fingerprint. After
+    execution it is the AQE-final plan, with runtime demotions and
+    coalescing applied; tools/plan_snapshot.py records both."""
     plan = executed_plan(df)
     if "== Initial Plan ==" in plan:  # defensive; unexecuted plans don't split
         plan = plan.split("== Initial Plan ==")[0]

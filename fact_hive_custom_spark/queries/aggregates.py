@@ -1256,7 +1256,7 @@ def q_agg_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers (the sketch chain, the exact triple-distinct agg,
     # both sides of the exact-intersection join); uncheckpointed,
     # each replayed the orders scan + distinct exchange (14 scans
-    # / 22 exchanges in the executed plan — PLANS.md row). One eager
+    # / 22 exchanges executed then; PLAN_SNAPSHOT.json `final` now). One eager
     # materialization of the already-collapsed relation is O(distinct
     # members) — the sketch's own input size. Likewise the merged
     # sketch (≤ 2K = 512 rows) feeds FIVE consumers; checkpointing it

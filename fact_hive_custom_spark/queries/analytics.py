@@ -584,7 +584,7 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # initial plan at commit 10bd700 (`python tools/explain_dump.py
         # <out_dir> before q_graph_triangles`);
         # ReuseExchange recovered only part (14 shuffles + 10
-        # broadcasts still executed, PLANS.md row). Edge volume is
+        # broadcasts still executed; PLAN_SNAPSHOT.json `final` now). Edge volume is
         # O(buckets × cap²) by the _TRI_CAP guard — bounded, and the
         # relation every consumer needs anyway. Cluster note: set
         # `spark.checkpoint.dir` (operators/graph.py).

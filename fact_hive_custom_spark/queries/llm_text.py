@@ -1642,7 +1642,7 @@ def q_llm_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collide, everything else hashes apart; verification touches only
     banded candidates (never all pairs). At 100 TB this is the
     standard Hamming-LSH join: candidate volume is governed by the
-    10-bit band entropy, measured for the media twin in METRICS.md."""
+    10-bit band entropy (the media twin's PLAN_SNAPSHOT.json `volume`)."""
     sh = q_llm_simhash(spark, sf_dir)
     bands = sh.select(
         "doc_id",

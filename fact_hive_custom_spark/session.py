@@ -47,8 +47,8 @@ def get_session(
     are stock Spark; none are required for correctness, only for
     performance posture (SURVEY.md §4).
 
-    `quiet=True` lowers the WindowExec and CacheManager loggers to
-    ERROR; the bench and tooling entry points pass it.
+    `quiet=True` lowers the WindowExec logger to ERROR; the bench and
+    tooling entry points pass it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = (

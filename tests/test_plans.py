@@ -1909,7 +1909,8 @@ class TestRound11Pins:
         reused across the degree / orientation / triple consumers
         (the q_graph_triangles ReuseExchange discipline). Reuse is an
         AQE runtime decision, so finalize the adaptive plan by
-        executing (the plan_audit recipe) before asserting."""
+        executing (as tools/plan_snapshot.py does for its `final`
+        counts) before asserting."""
         df = QUERIES["q_graph_clustering_coeff"](spark, SF_DIR)
         jqe = df._jdf.queryExecution()
         jqe.executedPlan().execute().count()

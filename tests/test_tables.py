@@ -10,13 +10,12 @@ from __future__ import annotations
 import datetime
 import inspect
 import os
-import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+import bench
 from fact_hive_custom_spark import tables
 from fact_hive_custom_spark.streaming.jobs import events_ts_dtype, streaming_events
 from fact_hive_custom_spark.queries import QUERIES
@@ -114,30 +113,16 @@ def test_footer_schema_equals_inferred_for_spark_written_dir(spark, tmp_path):
     assert footer_schema(path) == _inferred(spark, path)
 
 
-def _group_jobs(sc, group: str) -> list[int]:
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", ["q_agg_flagship", "q_agg_grouping_sets"])
 def test_query_construction_runs_no_job(spark, name):
     """Building a plain scan row (DataFrame and spark.sql over the
-    registered views) runs no Spark job; its action runs at least one.
-    The status store is fed asynchronously, in event order, so once the
-    action's job shows up every job started while building has too."""
-    sc = spark.sparkContext
-    tag = uuid.uuid4().hex
-    try:
-        sc.setJobGroup(f"{tag}-build", name)
-        df = QUERIES[name](spark, DEFAULT_SF_DIR)
-        sc.setJobGroup(f"{tag}-action", name)
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    deadline = time.time() + 30
-    while not _group_jobs(sc, f"{tag}-action") and time.time() < deadline:
-        time.sleep(0.05)
-    assert _group_jobs(sc, f"{tag}-action")
-    assert _group_jobs(sc, f"{tag}-build") == []
+    registered views) runs no Spark job; its action runs at least one
+    (bench.phase_jobs, the shared job counter)."""
+    tag = bench.new_tag()
+    bench.run_query(spark, name, DEFAULT_SF_DIR, tag)
+    jobs = bench.phase_jobs(spark, tag)
+    assert jobs["build"] == [0, 0]
+    assert jobs["action"][0] >= 1
 
 
 def test_register_views_loads_only_the_tables_the_query_reads(spark, monkeypatch):

@@ -11,6 +11,8 @@ JSON line per query:
     action_median    median of the final noop-sink action
     compiles         classes compiled in each pass (metrics.
                      codegen_compiles): the codegen layer of an A/B
+    jobs             each pass's {"build": [jobs, stages],
+                     "action": [jobs, stages]} (bench.phase_jobs)
 
 Any bench.py row works, the q_join_bucketed build/probe split included.
 
@@ -52,7 +54,7 @@ def main() -> int:
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from bench import run_query
+    from bench import new_tag, phase_jobs, run_query
     from fact_hive_custom_spark.metrics import codegen_compiles
     from fact_hive_custom_spark.session import get_session
 
@@ -63,11 +65,12 @@ def main() -> int:
         return sorted(xs)[len(xs) // 2]
 
     for name in args.queries:
-        splits, compiles = [], []
+        splits, compiles, jobs = [], [], []
         for _ in range(args.passes):
-            c0 = codegen_compiles(spark)
-            splits.append(run_query(spark, name, sf_dir))
+            c0, tag = codegen_compiles(spark), new_tag()
+            splits.append(run_query(spark, name, sf_dir, tag))
             compiles.append(codegen_compiles(spark) - c0)
+            jobs.append(phase_jobs(spark, tag))
         times = [round(b + a, 3) for b, a in splits]
         print(
             json.dumps(
@@ -79,6 +82,7 @@ def main() -> int:
                     "build_median": median([b for b, _ in splits]),
                     "action_median": median([a for _, a in splits]),
                     "compiles": compiles,
+                    "jobs": jobs,
                 }
             ),
             flush=True,
