@@ -1,30 +1,25 @@
 """Vector column expressions over array<numeric>.
 
-Higher-order functions only (zip_with + aggregate fold): the math runs
-inside whole-stage codegen — no UDF, no Python, no ML-lib vector
-boxing. The fold is left-to-right, which matches sequential oracles
-bit-for-bit (matters for 6-dp rounding parity).
+Higher-order functions only (zip_with + aggregate fold): no UDF, no
+Python, no ML-lib vector boxing. The fold is left-to-right, which
+matches sequential oracles bit-for-bit (matters for 6-dp rounding
+parity).
 
-`centre_array` + `argmin` are the one nearest-centre primitive: pack
-a small centre set into a sorted array row, broadcast it, and fold it
-per row map-side (k-means, PQ codes and Lloyd rounds, IVF cells,
-semdedup pivots).
+`nearest` is the one nearest-centre primitive (k-means, PQ codes and
+Lloyd rounds, IVF cells, semdedup and cosine_pairs pivots, the
+ivf_topk index): a broadcast join of the centres, one distance fold
+per (row, centre) pair, and one min_by aggregate per row. The earlier
+shape folded a packed centre array per row, nesting this module's
+fold inside a second one, and a lambda nested in a lambda runs
+outside whole-stage codegen. In paired fresh-JVM A/Bs the join was
+2.7× faster at sf1.0 in cosine_pairs, and in the other families no
+slower at sf0.1 and 1.2–2.2× faster at sf1.0.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# Starting `best` of an integer-distance fold: above any sqdist on the
-# (scaled) int8 grid, and far from BIGINT overflow.
-L2_WORST = 2**62
-
-
-def _col(c: str | Column) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -62,44 +57,34 @@ def sqdist(a: str | Column, b: str | Column, scale: int = 1) -> Column:
     )
 
 
-def centre_array(
-    df: DataFrame, id: str, vec: str | Column, *by: str
+def nearest(
+    rows: DataFrame,
+    centres: DataFrame,
+    key: str | list[str],
+    cid: str,
+    dist: Column,
+    *carry: Column,
+    on: str | list[str] = (),
 ) -> DataFrame:
-    """Pack centres into one row per `by` group (one row in all when
-    `by` is empty) holding `cents`: the id-sorted array of
-    struct(cid, cv) that `argmin` folds. Small by construction — it is
-    broadcast into the corpus."""
-    packed = F.struct(F.col(id).alias("cid"), _col(vec).alias("cv"))
-    return df.groupBy(*by).agg(
-        F.sort_array(F.collect_list(packed)).alias("cents")
-    )
-
-
-def argmin(
-    vec: str | Column,
-    cents: str | Column,
-    dist: Callable[[Column, Column], Column],
-    worst=L2_WORST,
-) -> Column:
-    """Nearest centre of `vec`: fold the `cents` array from
-    `centre_array`, returning struct(best, cid) where `best` is the
-    minimum of dist(vec, cv) and `cid` its centre. The strict `<` over
-    the id-sorted array keeps the lowest cid on equal distances — the
-    oracles' ORDER BY dist, cid. `worst` must exceed every distance.
-    The fold is map-side: the corpus crosses no exchange."""
-
-    def step(acc, p):
-        d = dist(_col(vec), p["cv"])
-        better = d < acc["best"]
-        return F.struct(
-            F.when(better, d).otherwise(acc["best"]).alias("best"),
-            F.when(better, p["cid"]).otherwise(acc["cid"]).alias("cid"),
+    """Nearest centre per `key` group of `rows`: broadcast-join the
+    small `centres` frame (on the `on` columns, e.g. the PQ subspace
+    `m`; a cross join when `on` is empty), score each pair with `dist`
+    (it may read both sides), then group by `key` into
+    - `cluster`: the `cid` of least `dist`, the lowest cid on equal
+      distances (the oracles' ORDER BY dist, cid);
+    - `best`: that least `dist`;
+    - the `carry` aggregates, which may read the `dist` column.
+    The aggregate is partial map-side, so the exchange on `key` moves
+    one row per key and task, not one per candidate centre."""
+    cents = F.broadcast(centres)
+    pairs = rows.join(cents, on) if on else rows.crossJoin(cents)
+    d, c = F.col("dist"), F.col(cid)
+    return (
+        pairs.withColumn("dist", dist)
+        .groupBy(key)
+        .agg(
+            F.min_by(c, F.struct(d, c)).alias("cluster"),
+            F.min(d).alias("best"),
+            *carry,
         )
-
-    return F.aggregate(
-        cents,
-        F.struct(
-            F.lit(worst).alias("best"), F.lit(None).cast("bigint").alias("cid")
-        ),
-        step,
     )

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from fact_hive_custom_spark.materialize import materialize
 
-from fact_hive_custom_spark.functions.vectors import cosine, dot as _dot, norm as _norm
+from fact_hive_custom_spark.functions.vectors import cosine, nearest, dot as _dot, norm as _norm
 
 __all__ = ["cosine", "cosine_pairs", "cosine_topk", "ivf_topk", "signlsh_topk"]
 
@@ -319,7 +319,7 @@ def _pivot_blocks(
         _norm(F.col(vec_col)).alias("nrm"),
     )
     # r15: 16 rows, materialized once — three consumers (the
-    # assignment fold, both cluster-pair sides) each re-ran the
+    # assignment, both cluster-pair sides) each re-ran the
     # corpus-wide TakeOrdered pivot selection otherwise (part of the
     # 40-scan initial plan of q_llm_cosine_dedup).
     # r16 NOTE (VERDICT item 4, consolidation REJECTED on measurement):
@@ -332,69 +332,30 @@ def _pivot_blocks(
     # broadcast decision. Two tiny jobs are cheaper than one bad plan.
     pivots = _select_pivots(u, num_pivots, seed).transform(materialize)
 
-    # Nearest pivot per vector (r16 REVERT of the r15 argmax fold,
-    # measured): the 16-way broadcast crossJoin + map-side-combined
-    # groupBy(vid) min_by. The r15 commit replaced this with a
-    # nested-HOF fold over a 1-row broadcast pivot array ("no
-    # corpus-sized shuffle") and bundled it with the pivot
-    # checkpoints; the bundled A/B win (~16→6 s sf0.1) was actually
-    # the CHECKPOINTS'. Separated this round and paired-A/B'd
-    # interleaved, fold vs crossjoin, same checkpoints both sides:
-    # sf1.0 warm 26.7/23.1 vs 9.7/8.5 s (2.7×), sf0.1 6.0/4.8 vs
-    # 4.4/3.6 s — the fold nests dot() (zip_with+aggregate) inside
-    # another F.aggregate, the interpreted-HOF penalty the r15
-    # ivf_topk rejection already priced at ~3×, and it loses at BOTH
-    # measured decades. The groupBy(vid) exchange moves (vid, vec,
-    # nrm) once, with the 16 candidate rows collapsed map-side by
-    # partial aggregation; min_by(struct(-pcos, pid)) keeps the
-    # bit-exact tie order (highest cosine, then lowest id — verified
-    # hash-identical to the fold's strict `>` at sf0.01).
+    # Nearest pivot per vector: the highest clamped cosine, the lowest
+    # pivot_id on ties; angle = acos(max cos) = acos(-best).
     cos_to_pivot = _dot(F.col("vec"), F.col("pivot_vec")) / (
         F.col("nrm") * F.col("pivot_nrm")
     )
-    assigned = _nearest_pivot(
+    assigned = nearest(
         u,
         pivots,
         "vid",
-        F.least(F.greatest(cos_to_pivot, F.lit(-1.0)), F.lit(1.0)),
-        F.acos(F.max("pcos")).alias("angle"),
+        "pivot_id",
+        -F.least(F.greatest(cos_to_pivot, F.lit(-1.0)), F.lit(1.0)),
         F.first("vec").alias("vec"),
         F.first("nrm").alias("nrm"),
-    ).select("vid", "vec", "nrm", "cluster", "angle")
+    ).select(
+        "vid", "vec", "nrm", "cluster", F.acos(-F.col("best")).alias("angle")
+    )
     # Materialize once: `assigned` now holds the crossjoin+aggregate
     # subtree and feeds 5 consumers (radii, both block sides, both
     # rescore sides) — the r15 checkpoint-payback rule's exact shape.
     # Paired r16: sf0.1 3.0/3.2 vs 3.4/4.0 s, sf1.0 7.0/8.0 vs
-    # 7.6/11.0 s. (The r15 semdedup-assigned REJECTION was for the
-    # fold-based assigned, whose subtree had no exchange to save.)
+    # 7.6/11.0 s.
     assigned = materialize(assigned)
     radii = assigned.groupBy("cluster").agg(F.max("angle").alias("radius"))
     return _cluster_pairs(pivots, radii, threshold, assigned)
-
-
-def _nearest_pivot(
-    u: DataFrame, pivots: DataFrame, key: str, pcos: Column, *carry: Column
-) -> DataFrame:
-    """Nearest pivot per `key` by cosine `pcos`: broadcast crossJoin of
-    the pivot set, then a groupBy(key) whose min_by(struct(-pcos, pid))
-    is combined map-side — highest cosine, lowest pivot_id on ties.
-    `carry` are further aggregates over the same groups (they may read
-    the `pcos` column)."""
-    return (
-        u.crossJoin(F.broadcast(pivots))
-        .withColumn("pcos", pcos)
-        .groupBy(key)
-        .agg(
-            F.min_by(
-                F.col("pivot_id"),
-                F.struct(
-                    (-F.col("pcos")).alias("npc"),
-                    F.col("pivot_id").alias("pid"),
-                ),
-            ).alias("cluster"),
-            *carry,
-        )
-    )
 
 
 def _cluster_pairs(pivots, radii, threshold, assigned):
@@ -452,7 +413,7 @@ def ivf_topk(
 
     1. corpus vectors are assigned to their nearest of `num_pivots`
        deterministic pivots (same pivot family as cosine_pairs) —
-       map-side, the corpus shuffles once on cluster id;
+       functions/vectors.py nearest, one map-combined exchange on id;
     2. each probe ranks the (broadcast) pivot set and selects its
        `nprobe` nearest clusters;
     3. the probe scores ONLY vectors in those clusters — candidate
@@ -473,7 +434,7 @@ def ivf_topk(
     spherical centroid). This is the "train the codebook" upgrade
     ANN_RECALL.md points at: same per-round shape as the
     oracle-checked q_llm_kmeans (queries/clustering.py — broadcast
-    fold assignment, K×D partially-aggregated update shuffle, one
+    join assignment, K×D partially-aggregated update shuffle, one
     corpus scan per round), but in float cosine space where the
     serving path lives. Measured rows in ANN_RECALL.md (refined=N).
     """
@@ -495,11 +456,12 @@ def ivf_topk(
         rcos = _dot(F.col("corpus_vec"), F.col("pivot_vec")) / (
             F.col("cnrm") * F.col("pivot_nrm")
         )
-        memb = _nearest_pivot(
+        memb = nearest(
             u,
             pivots,
             "neighbor_id",
-            rcos,
+            "pivot_id",
+            -rcos,
             F.first("corpus_vec").alias("corpus_vec"),
         )
         pivots = (
@@ -519,11 +481,12 @@ def ivf_topk(
     pcos_c = _dot(F.col("corpus_vec"), F.col("pivot_vec")) / (
         F.col("cnrm") * F.col("pivot_nrm")
     )
-    assigned = _nearest_pivot(
+    assigned = nearest(
         u,
         pivots,
         "neighbor_id",
-        pcos_c,
+        "pivot_id",
+        -pcos_c,
         F.first("corpus_vec").alias("corpus_vec"),
         F.first("cnrm").alias("cnrm"),
     )

@@ -21,22 +21,21 @@ IVF/PQ, SemDeDup cluster induction, corpus bucketing).
 
 Scale design (100 TB): per Lloyd round the corpus is scanned ONCE
 (codes-only: vec_id + 64 ints ≈ 0.5 kB/row), assignment is a
-map-side fold over a broadcast K-row centroid array
-(functions/vectors.py argmin — the corpus NEVER shuffles on vec_id),
-and the update shuffle carries only K×D partial (sum, count) pairs
-per task — independent of corpus size. T rounds = T+1 scans, the
-textbook distributed-k-means cost. The quantized relation is built once
-with `materialize()` (an eager checkpoint) and every round reads it.
+broadcast join of the K centroid rows plus a per-vector min_by
+(functions/vectors.py nearest), combined map-side so the one vec_id
+exchange moves one row per vector and task, and the update shuffle
+carries only K×D partial (sum, count) pairs per task — independent
+of corpus size. T rounds = T+1 scans, the textbook distributed-k-means
+cost. The quantized relation is built once with `materialize()` (an
+eager checkpoint) and every round reads it.
 """
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fact_hive_custom_spark.functions.vectors import argmin, centre_array, sqdist
+from fact_hive_custom_spark.functions.vectors import nearest, sqdist
 from fact_hive_custom_spark.materialize import materialize
 
 from fact_hive_custom_spark.queries.registry import register
@@ -69,9 +68,8 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         int8_grid(emb, shift=127)
         .withColumnRenamed("qs", "us")
         # the fixture corpus is one parquet file → one scan partition;
-        # round-robin so the per-row assignment fold parallelizes
-        # (measured lesson from q_llm_semdedup). NOT a hash
-        # shuffle on vec_id — the plan pin forbids that.
+        # round-robin so the map-side distance stage of every round
+        # runs on all cores (measured lesson from q_llm_semdedup)
         .repartition(spark.sparkContext.defaultParallelism)
     )
     # r16 re-measure (driver PERF_r15 flagged 0.72×): paired fresh-JVM
@@ -82,34 +80,29 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q.transform(materialize)
 
 
-def _centroid_array(cent_long: DataFrame) -> DataFrame:
-    """K×D long-form centroids → ONE row holding the cid-sorted
-    `cents` array, ready to broadcast into the fold."""
-    carr = cent_long.groupBy("cid").agg(
+def _centroids(cent_long: DataFrame) -> DataFrame:
+    """K×D long-form centroids → K rows of (cid, carr), the
+    dim-ordered centroid array."""
+    return cent_long.groupBy("cid").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("dim", "c"))),
             lambda s: s["c"],
         ).alias("carr")
     )
-    return centre_array(carr, "cid", "carr")
 
 
-def _assign(q: DataFrame, cent_arr: DataFrame) -> DataFrame:
-    """Map-side argmin assignment: fold the broadcast centroid array
-    per row — exact integer L2² on the scale-64 grid, ties to the
-    lowest cid, matching the oracle's ORDER BY dist, cid. The corpus
-    crosses NO exchange here."""
-    dist = partial(sqdist, scale=_KM_SCALE)
-    return (
-        q.crossJoin(F.broadcast(cent_arr))
-        .withColumn("acc", argmin("us", "cents", dist))
-        .select(
-            "vec_id",
-            "us",
-            F.col("acc.cid").alias("cluster"),
-            F.col("acc.best").alias("dist"),
-        )
-    )
+def _assign(q: DataFrame, cents: DataFrame) -> DataFrame:
+    """Nearest centroid per vector — exact integer L2² on the scale-64
+    grid, ties to the lowest cid, matching the oracle's
+    ORDER BY dist, cid."""
+    return nearest(
+        q,
+        cents,
+        "vec_id",
+        "cid",
+        sqdist("us", "carr", scale=_KM_SCALE),
+        F.first("us").alias("us"),
+    ).select("vec_id", "us", "cluster", F.col("best").alias("dist"))
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -150,7 +143,7 @@ def _kmeans_parts(spark: SparkSession, sf_dir: str, rounds: int = _KM_T):
         )
     )
     for _ in range(rounds):
-        assigned = _assign(q, _centroid_array(cent))
+        assigned = _assign(q, _centroids(cent))
         # Lineage cap (the q_graph_kcore discipline): eagerly
         # localCheckpoint the K×D-row centroid relation each round so
         # a cold one-shot caller pays T small jobs (one materialized-corpus
@@ -159,7 +152,7 @@ def _kmeans_parts(spark: SparkSession, sf_dir: str, rounds: int = _KM_T):
         # over a ~5 s median (BENCH_r09 spread). Values are untouched
         # — the trajectory stays bit-identical to the oracle.
         cent = _update(assigned).transform(materialize)
-    return cent, _assign(q, _centroid_array(cent))
+    return cent, _assign(q, _centroids(cent))
 
 
 def _km_assign_cte(cent: str, tag: str) -> str:
@@ -234,12 +227,12 @@ def q_llm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan (pinned in tests/test_plans.py): per round the corpus is
     scanned once from the materialized codes-only relation, assignment is
-    an F.aggregate fold over ONE broadcast row holding all K
-    centroids — map-side, whole-stage-codegen, the corpus never
-    shuffles on vec_id — and the update's posexplode+groupBy shuffle
-    carries only K×D partially-aggregated (sum, count) pairs per
-    task. At 100 TB: T+1 codes-only scans + T constant-size shuffles,
-    the canonical distributed k-means shape."""
+    a broadcast join of the K centroid rows and a map-side-combined
+    min_by per vec_id (one exchange of one row per vector and task),
+    and the update's posexplode+groupBy shuffle carries only K×D
+    partially-aggregated (sum, count) pairs per task. At 100 TB: T+1
+    codes-only scans, T+1 assignment exchanges of the codes and T
+    constant-size update shuffles."""
     _cent, assigned = _kmeans_parts(spark, sf_dir, _KM_T)
     return (
         assigned.groupBy(F.col("cluster").alias("cluster_id"))
@@ -509,8 +502,8 @@ def q_llm_kmeans_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole train→assign→evaluate chain is oracle-checked end to end
     (the same discipline as q_llm_pq_trained_topk for the PQ family).
 
-    Plan: reuses the kmeans fold (codes materialized, corpus never shuffles
-    on vec_id during assignment); the label attach joins the
+    Plan: reuses the kmeans assignment (codes materialized, one
+    vec_id exchange per assignment); the label attach joins the
     assignment to the embeddings scan on vec_id (co-partitioned), the
     per-(cluster, label) count is map-combined, and the majority pick
     is a window over ≤ K·|labels| rows."""

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fact_hive_custom_spark.functions.vectors import argmin, centre_array, sqdist
+from fact_hive_custom_spark.functions.vectors import nearest, sqdist
 from fact_hive_custom_spark.materialize import materialize
 
 from fact_hive_custom_spark.queries.registry import register
@@ -1429,17 +1429,20 @@ _PQ_CTE_PREFIX = _pq_cte_prefix()
 
 
 def _pq_codes(sub: DataFrame, csub: DataFrame) -> DataFrame:
-    """`sub` plus `acc` = struct(best, cid): each subvector's nearest
+    """(vec_id, m, cluster, best, sv): each subvector's nearest
     codebook centroid in its subspace by exact integer L2², ties to
     the lowest cid — identical to the oracle's
-    min_by(cid, dist·1e7 + cid); `best` is MIN(dist). The M-row
-    codebook array broadcasts and the argmin folds map-side, so no
-    exchange is touched — the round-≤14 K-way join + (vec_id, m)
-    groupBy materialized |corpus|·M·K rows and shuffled the
-    subvectors (r15, guide §2.4)."""
-    cents = centre_array(csub, "cid", "cv", "m")
-    return sub.join(F.broadcast(cents), "m").withColumn(
-        "acc", argmin("sv", "cents", sqdist)
+    min_by(cid, dist·1e7 + cid); `best` is MIN(dist). The ≤M·K-row
+    codebook broadcasts on m, and the (vec_id, m) exchange moves one
+    map-side-combined row per cell and task."""
+    return nearest(
+        sub,
+        csub,
+        ["vec_id", "m"],
+        "cid",
+        sqdist("sv", "cv"),
+        F.first("sv").alias("sv"),
+        on="m",
     )
 
 
@@ -1456,16 +1459,12 @@ def _pq_lloyd(sub: DataFrame, csub: DataFrame, rounds: int) -> DataFrame:
 
     Scale shape per round: one broadcast of the ≤M·K-row codebook
     into the subvector stream, one codes-sized shuffle keyed
-    (vec_id, m) for the argmin (partial min_by map-side), one
+    (vec_id, m) for the assignment (partial min_by map-side), one
     M·K·SUB-bounded update shuffle — the q_llm_kmeans plan, once per
     subspace, all subspaces in the same jobs."""
     for _ in range(rounds):
-        # Assignment is the map-side broadcast-array argmin fold
-        # (_pq_codes): no K-way join blowup, no (vec_id, m) shuffle
-        # carrying the subvectors — the round-14 asg exchanged
-        # |corpus|·M rows with their 8-int arrays every round (r15).
         asg = _pq_codes(sub, csub).select(
-            "vec_id", "m", "sv", F.col("acc.cid").alias("code")
+            "m", "sv", F.col("cluster").alias("code")
         )
         csub = (
             asg.select(
@@ -1564,10 +1563,10 @@ def _pq_parts(
     # free on RDD GC (the _pq_lloyd / label-prop convention); on a
     # real cluster set `spark.checkpoint.dir` (executor-loss
     # recovery — operators/graph.py note). The RoundRobin repartition
-    # is the semdedup single-file lesson — the map-side argmin fold
-    # below must not inherit a one-partition parquet scan — and is
-    # REPARTITION_BY_NUM, exempt from AQE byte-coalescing (the
-    # SCALING.md §round-14 width rule; NOT a hash shuffle on vec_id).
+    # is the semdedup single-file lesson — the map-side distance stage
+    # of every assignment below must not inherit a one-partition
+    # parquet scan — and is REPARTITION_BY_NUM, exempt from AQE
+    # byte-coalescing (the SCALING.md §round-14 width rule).
     q = q.repartition(
         q.sparkSession.sparkContext.defaultParallelism
     ).transform(materialize)
@@ -1596,17 +1595,11 @@ def _pq_parts(
     )
     if train_rounds:
         csub = _pq_lloyd(sub, csub, train_rounds)
-    # Code assignment = the same map-side argmin fold as the Lloyd
-    # rounds: `best` now costs ZERO exchanges (sub is a map-side
-    # explode of the cached q; the codebook broadcasts as M array
-    # rows) versus the round-≤14 |corpus|·M·K-row join + (vec_id, m)
-    # min_by shuffle. acc.best IS min(dist) — the fold key is
-    # dist-major — so distortion semantics are untouched (r15).
     best = _pq_codes(sub, csub).select(
         "vec_id",
         "m",
-        F.col("acc.cid").alias("code"),
-        F.col("acc.best").alias("min_dist"),
+        F.col("cluster").alias("code"),
+        F.col("best").alias("min_dist"),
     )
     return q, sub, csub, best
 
@@ -1673,18 +1666,9 @@ def pq_adc_topk(
         piv = q.filter(F.col("vec_id") < _PQ_K).select(
             F.col("vec_id").alias("pid"), F.col("qs").alias("pqs")
         )
-        # IVF assignment via the same broadcast-array argmin fold as
-        # the code assignment: one projection over the cached q — the
-        # round-≤14 form crossJoined all 16 pivots into the corpus and
-        # shuffled |corpus|·16 rows through a groupBy argmin (the
-        # "fixed cost" the round-15 baseline addendum priced at
-        # +2.6 s sf0.1). Tie order (lowest pid) is preserved by the
-        # pid-sorted array + strict `<` (r15).
-        assign = (
-            q.crossJoin(F.broadcast(centre_array(piv, "pid", "pqs")))
-            .withColumn("acc", argmin("qs", "cents", sqdist))
-            .select("vec_id", F.col("acc.cid").alias("cluster"))
-        )
+        assign = nearest(
+            q, piv, "vec_id", "pid", sqdist("qs", "pqs")
+        ).select("vec_id", "cluster")
         wc = Window.partitionBy("probe_id").orderBy("cdist", "pid")
         probecl = (
             q.filter(F.col("vec_id") < n_probes)
@@ -1841,10 +1825,11 @@ def q_llm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite dist·1e7 + cid, exact in int64.
 
     Scale: the codebook is 16 rows — broadcast; the subspace explode
-    is 8× map-side; the per-(vector, subspace) argmin is a groupBy
-    over broadcast-join output that never shuffles the corpus (codes
-    pivot back with one exchange on vec_id). At 100 TB: scan-bound,
-    one narrow shuffle of 9 integers per vector."""
+    is 8× map-side; the per-(vector, subspace) argmin is a
+    map-combined min_by over the broadcast-join output, exchanged on
+    (vec_id, m), and the codes pivot back with one exchange on
+    vec_id. At 100 TB: scan-bound, two narrow shuffles of integer
+    code rows."""
     _q, sub, csub, best = _pq_parts(load_embeddings(spark, sf_dir))
     code_cols = [
         F.max(F.when(F.col("m") == m, F.col("code")))

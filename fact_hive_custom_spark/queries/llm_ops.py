@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fact_hive_custom_spark.functions.vectors import argmin, centre_array, dot, norm
+from fact_hive_custom_spark.functions.vectors import dot, nearest, norm
+from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -1209,13 +1210,27 @@ def q_llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _neg_cos6(e, p):
-    """q_llm_semdedup's assignment distance: −round(cos, 6) to pivot
-    struct `p`, so argmin picks the highest 6-dp cosine and, among
-    equal ones, the lowest pivot id. dot/(‖a‖·‖b‖) over the row's `nrm`
-    and the pivot's precomputed norm is the identical value tree to
-    cosine(), one nested fold instead of three."""
-    return -F.round(dot(e, p["pivot_vec"]) / (F.col("nrm") * p["pivot_nrm"]), 6)
+def _assign_pivots(emb: DataFrame, pivots: DataFrame) -> DataFrame:
+    """q_llm_semdedup's assignment: each (vec_id, embedding, nrm) row
+    gets the `cluster` of highest 6-dp cosine among (pivot_id,
+    pivot_vec, pivot_nrm), the lowest pivot id among equal ones — the
+    oracle's ORDER BY ROUND(cos, 6) DESC, pivot_id. dot/(‖a‖·‖b‖)
+    over both precomputed norms is the identical value tree to
+    cosine(), one fold instead of three."""
+    cos6 = F.round(
+        dot(F.col("embedding"), F.col("pivot_vec"))
+        / (F.col("nrm") * F.col("pivot_nrm")),
+        6,
+    )
+    return nearest(
+        emb,
+        pivots,
+        "vec_id",
+        "pivot_id",
+        -cos6,
+        F.first("embedding").alias("embedding"),
+        F.first("nrm").alias("nrm"),
+    ).select("vec_id", "embedding", "nrm", "cluster")
 
 
 @register(
@@ -1266,53 +1281,52 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output, i.e. the lowest id of each duplicate group. 32
     clusters at fixture scale (the paper's regime is |corpus|/avg-
     cluster-size clusters; the dial shifts work between the O(P)
-    assignment fold and the O(Σ|cluster|²) pair stage).
+    assignment and the O(Σ|cluster|²) pair stage).
 
     This is the scale path the exact q_llm_cosine_dedup oracles
     cannot be at 100 TB: pairwise work is confined WITHIN clusters —
     cost drops from O(n²) to Σ|cluster|², the clustering reuses the
     IVF machinery (deterministic pivots, broadcast, nearest-pivot
-    assignment — functions/vectors.py argmin), and missing
+    assignment — functions/vectors.py nearest), and missing
     cross-cluster duplicates is the documented, bounded approximation
     the paper accepts. Both engines compute the IDENTICAL rule (32 lowest-id
     pivots — limit(32) below, LIMIT 32 in the oracle — 6-dp rounded
     cosine, pivot-id tiebreak), so the oracle checks it exactly.
 
-    Physical strategy at 100 TB: pivots broadcast as ONE array-of-
-    structs row (kB) and assignment is a genuinely map-side argmax —
-    an F.aggregate fold over the pivot array inside whole-stage
-    codegen, so the corpus reaches its cluster WITHOUT ever being
-    shuffled on vec_id (the naive crossJoin+groupBy assignment
-    shuffles the full corpus, embeddings included, once more than
-    needed). The corpus then shuffles ONCE on cluster id and the
-    per-cluster self-join runs co-partitioned — no pair ever crosses
-    an exchange. The fold-order of the cosine (zip_with +
+    Physical strategy at 100 TB: the 32 pivots broadcast (kB) and
+    assignment is functions/vectors.py nearest — a cross join with the
+    pivots, one cosine fold per (vector, pivot) pair, and a min_by per
+    vec_id combined map-side, so the vec_id exchange moves one row per
+    vector and task. The corpus then shuffles ONCE on cluster id and
+    the per-cluster self-join runs co-partitioned — no pair ever
+    crosses an exchange. The fold-order of the cosine (zip_with +
     left-to-right aggregate) matches the oracle bit-for-bit before
-    rounding (functions/vectors.py); fold ties keep the first
-    (lowest) pivot_id, the oracle's tiebreak. Norms are computed once
-    per row before the pair join, so each pair costs ONE fold (the
-    dot product) — dot/(‖a‖·‖b‖) is the identical expression tree to
-    cosine(), so the 6-dp values are bit-equal.
+    rounding (functions/vectors.py); min_by's (−cos6, pivot_id) key
+    keeps the lowest pivot_id on equal 6-dp cosines, the oracle's
+    tiebreak. Norms are computed once per row before both the pivot
+    and the pair join, so each pair costs ONE fold (the dot product)
+    — dot/(‖a‖·‖b‖) is the identical expression tree to cosine(), so
+    the 6-dp values are bit-equal.
 
     Known trade-off (SCALING.md §known-trade-offs): each pair costs
     one HigherOrderFunction fold (~7 µs measured — and NEVER nest
-    HOFs: a norm fold inside the pivot fold was measured ~3× slower,
-    hence both norms precompute per row), chosen because the fold's
-    left-to-right order is bit-identical to the DuckDB oracle. In
+    HOFs: a fold inside another fold runs outside codegen, measured
+    ~3× slower, hence both norms precompute per row), chosen because
+    the fold's left-to-right order is bit-identical to the DuckDB
+    oracle. In
     production the within-cluster scoring hands off to the same
     pivot-blocked Arrow/BLAS matmul kernel as
     operators/similarity.py cosine_pairs (measured 653 s → 8 s), whose
     reordered summation is numerically equivalent at any real dedup
     threshold but not bit-pinned at the 6-dp rounding edge."""
-    # norm once per ROW up front: the assignment fold and the pair
-    # join both consume it — nesting norm's fold inside the pivot
-    # fold was measured 2.7× slower (nested HOFs evaluate interpreted).
+    # norm once per ROW up front: the pivot assignment and the pair
+    # join both consume it — a norm fold nested inside another fold
+    # was measured 2.7× slower (nested HOFs evaluate interpreted).
     # Round-robin repartition first: the fixture corpus is ONE parquet
-    # file → one scan partition → the per-row assignment fold runs
-    # serial (measured: it, not the pair join, dominated sf1.0). At
-    # 100 TB the corpus arrives in thousands of files and this is a
-    # no-op-sized safety; RoundRobin, not hash — the pin forbids
-    # shuffling the corpus on vec_id.
+    # file → one scan partition → the map-side distance stage of the
+    # assignment runs serial (measured: it, not the pair join,
+    # dominated sf1.0). At 100 TB the corpus arrives in thousands of
+    # files and this is a no-op-sized safety.
     emb = (
         load_embeddings(spark, sf_dir)
         .select("vec_id", "embedding")
@@ -1328,14 +1342,12 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nrm").alias("pivot_nrm"),
         )
     )
-    # one row holding the sorted pivot array: broadcast-joined 1×n, no
-    # row multiplication, no re-aggregation of the corpus
-    parr = centre_array(pivots, "pivot_id", F.struct("pivot_vec", "pivot_nrm"))
-    assigned = (
-        emb.crossJoin(F.broadcast(parr))
-        .withColumn("acc", argmin("embedding", "cents", _neg_cos6, worst=2.0))
-        .select("vec_id", "embedding", "nrm", F.col("acc.cid").alias("cluster"))
-    )
+    # Materialized once: both sides of the pair join read `assigned`,
+    # and each would re-run the pivot cross join, the min_by and its
+    # vec_id exchange. Paired fresh-JVM A/B, lazy vs materialized,
+    # per-run medians: sf0.1 3.63/2.90/3.15 vs 2.14/2.11/2.16 s, sf1.0
+    # 28.1/31.4 vs 21.0/22.9 s.
+    assigned = materialize(_assign_pivots(emb, pivots))
     # Pair-stage parallelism: a plain join on `cluster` has only 32
     # distinct keys, so at most 32 tasks score Σ|cluster|² pairs
     # (measured 48 s at sf1.0). Salt the keeper side into S

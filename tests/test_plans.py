@@ -6,6 +6,8 @@ while results stay correct."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,15 @@ SF_DIR = "/root/testdata/sf0.01"
 
 def plan_of(spark, name: str) -> str:
     return plans.executed_plan(QUERIES[name](spark, SF_DIR))
+
+
+def hash_keys(plan: str) -> list[tuple[str, ...]]:
+    """Key columns of every non-reused hash exchange, sorted."""
+    return sorted(
+        tuple(re.findall(r"(\w+)#", line.split("hashpartitioning(")[1].rsplit(", ", 1)[0]))
+        for line in plan.splitlines()
+        if "Exchange hashpartitioning" in line and "Reused" not in line
+    )
 
 
 class TestScanEfficiency:
@@ -881,21 +892,40 @@ class TestRound8TpchPlans:
 
 
 class TestSemDedupPlan:
-    def test_semdedup_assignment_is_map_side(self, spark):
-        """Cluster assignment must be the folded-pivot-array argmax:
-        the corpus is NEVER exchanged on vec_id (the naive
-        crossJoin+groupBy assignment re-shuffles the full corpus,
-        embeddings included); the one permitted nested-loop is the
-        1×n broadcast attach of the single pivot-array row; all math
-        stays in codegen."""
-        plan = plan_of(spark, "q_llm_semdedup")
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning" in line and "Reused" not in line:
-                assert "vec_id" not in line, line
-        # exactly two bounded 1×n attaches: the pivot-array row and
-        # the embedding contract's modal-dim scalar (tables.py)
-        assert plan.count("BroadcastNestedLoopJoin") <= 2, plan
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    def test_semdedup_assignment_is_map_side(self, spark, monkeypatch):
+        """Cluster assignment is functions/vectors.py nearest: every
+        (vector, pivot) cosine and the partial min_by run map-side, in
+        codegen, so the one vec_id exchange moves one combined row per
+        vector and task; the 32-row pivot cross join is one of at
+        most two nested-loop joins (the other attaches the embedding
+        contract's modal-dim scalar, tables.py). The assignment is
+        materialized, so the pair stage
+        reads it once and never reshuffles the corpus on vec_id. No
+        nested HOF, no cartesian, no Python anywhere."""
+        from fact_hive_custom_spark.materialize import materialize
+        from fact_hive_custom_spark.queries import llm_ops
+
+        seen = []  # (plan, nested HOFs) of the assignment, before it runs
+
+        def record(df):
+            seen.append((plans.executed_plan(df), plans.nested_hof_count(df)))
+            return materialize(df)
+
+        monkeypatch.setattr(llm_ops, "materialize", record)
+        df = QUERIES["q_llm_semdedup"](spark, SF_DIR)
+        ((aplan, a_nested),) = seen
+        assert hash_keys(aplan) == [("dim",), ("dim",), ("vec_id",)], aplan
+        assert "partial_min_by" in aplan, aplan
+        assert aplan.count("BroadcastNestedLoopJoin") <= 2, aplan
+        plan = plans.executed_plan(df)
+        assert "Scan ExistingRDD" in plan, plan
+        assert hash_keys(plan) == [
+            ("cluster", "bkt"), ("cluster", "bkt"), ("dropped",)
+        ], plan
+        assert a_nested == 0 and plans.nested_hof_count(df) == 0
+        for text in (aplan, plan):
+            assert "CartesianProduct" not in text
+            assert "BatchEvalPython" not in text and "ArrowEvalPython" not in text
 
 
 class TestRound8bPlans:
@@ -1094,24 +1124,21 @@ class TestMediaDedupPlan:
 
 
 class TestKMeansPlan:
-    def test_kmeans_corpus_never_shuffles_on_vec_id(self, spark):
+    def test_kmeans_assignment_is_one_vec_id_exchange(self, spark):
         """Lloyd k-means (clustering.py): the corpus reaches its
-        cluster through a map-side fold over ONE broadcast centroid
-        row — never a hash shuffle on vec_id (the only RoundRobin
-        exchange is the cached scan-parallelism split). Every hash
-        exchange carries either the K×D partially-aggregated update
-        (cid/dim keys) or a bounded dim-contract relation; the
-        codes relation is cached (T+1 rounds share one quantize
-        pass); no cartesian of data against data, no Python."""
-        plan = plan_of(spark, "q_llm_kmeans")
-        keys = set()
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning" in line and "Reused" not in line:
-                keys.add(line.split("hashpartitioning(")[1].split("#")[0])
-        assert "vec_id" not in keys, keys
-        assert keys <= {"cid", "_groupingexpression", "dim", "cluster"}, keys
-        # assignment is the fold over the broadcast centroid array
-        assert "aggregate(cents" in plan
+        cluster through functions/vectors.py nearest — a broadcast
+        join of the K centroid rows and a min_by per vec_id combined
+        map-side, so the assignment's one hash exchange is on vec_id.
+        The only other exchanges pack the K centroid rows (cid) and
+        summarize the final clusters (cluster); the codes relation and
+        the Lloyd rounds are checkpointed (T+1 rounds share one
+        quantize pass); no nested HOF, no cartesian of data against
+        data, no Python."""
+        df = QUERIES["q_llm_kmeans"](spark, SF_DIR)
+        plan = plans.executed_plan(df)
+        assert hash_keys(plan) == [("cid",), ("cluster",), ("vec_id",)], plan
+        assert "partial_min_by" in plan, plan
+        assert plans.nested_hof_count(df) == 0, plan
         # r15: the quantized corpus AND the per-round centroids are
         # both eagerly checkpointed (localCheckpoint replaced the lazy
         # persist after a paired A/B — clustering.py _quantized), so
@@ -1123,9 +1150,9 @@ class TestKMeansPlan:
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
     def test_kmeans_round_update_partially_aggregated(self, spark):
-        """One Lloyd ROUND in isolation (the unit the final plan now
-        checkpoints away): assignment folds the broadcast centroid
-        array with no vec_id exchange, and the K×D update shuffle is
+        """One Lloyd ROUND in isolation (the unit the final plan
+        checkpoints away): the assignment is one map-side-combined
+        min_by exchange on vec_id, and the K×D update shuffle is
         partially aggregated map-side."""
         import os
 
@@ -1146,38 +1173,33 @@ class TestKMeansPlan:
                 (F.lit(cl._KM_SCALE) * F.col("u")).cast("bigint").alias("c"),
             )
         )
-        one_round = cl._update(cl._assign(q, cl._centroid_array(cent0)))
+        one_round = cl._update(cl._assign(q, cl._centroids(cent0)))
         plan = one_round._jdf.queryExecution().executedPlan().toString()
-        assert "aggregate(cents" in plan
+        assert hash_keys(plan) == [("cid", "_groupingexpression"), ("vec_id",)], plan
+        assert "partial_min_by" in plan, plan
         assert "partial_sum(u" in plan
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning(vec_id" in line:
-                raise AssertionError(line)
+        assert plans.nested_hof_count(one_round) == 0, plan
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 class TestPQTrainPlan:
     def test_pq_train_shuffles_stay_on_code_keys(self, spark):
-        """PQ codebook training (q_llm_pq_train): since round 15 the
-        per-round argmin is the map-side broadcast-array fold
-        (corpus.py _pq_argmin — the q_llm_kmeans assignment pattern),
-        so there is NO (vec_id, m) assignment exchange at all; the
-        only hash exchanges key the bounded codebook-update cells
-        (m, cid, pos) or the embedding contract's dim — never a
-        wide-vector reshuffle and never the corpus on vec_id. The
-        codebook attaches by broadcast each round; the update is
-        partially aggregated map-side; no cartesian of data against
+        """PQ codebook training (q_llm_pq_train): each round's
+        assignment is functions/vectors.py nearest — the codebook
+        broadcast-joins on the subspace m, and a min_by per
+        (vec_id, m) cell is combined map-side before its one exchange;
+        the codebook update exchanges the bounded (m, code) cells. The
+        training rounds are checkpointed, so the final plan holds the
+        last assignment and update. Never a wide-vector reshuffle on
+        vec_id alone, no nested HOF, no cartesian of data against
         data, no Python."""
-        plan = plan_of(spark, "q_llm_pq_train")
-        keys = set()
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning" in line and "Reused" not in line:
-                keys.add(line.split("hashpartitioning(")[1].split("#")[0])
-        assert keys <= {"m", "dim", "cid", "subspace"}, keys
+        df = QUERIES["q_llm_pq_train"](spark, SF_DIR)
+        plan = plans.executed_plan(df)
+        assert hash_keys(plan) == [("m", "code"), ("vec_id", "m")], plan
         assert "BroadcastExchange" in plan
-        assert "aggregate(cents" in plan, plan
-        assert "partial_min_by" not in plan, plan
+        assert "partial_min_by" in plan, plan
+        assert plans.nested_hof_count(df) == 0, plan
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -1581,17 +1603,17 @@ class TestBacklogPlan:
 
 class TestKmeansPurityPlan:
     def test_purity_label_attach_on_vec_id_no_wide_reshuffle(self, spark):
-        """Purity (q_llm_kmeans_purity): inherits the kmeans fold (no
-        exchange keys on vec_id inside assignment — the pinned kmeans
-        property); the label attach joins on vec_id, the
+        """Purity (q_llm_kmeans_purity): inherits the kmeans
+        assignment (the pinned kmeans shape); the label attach joins
+        on vec_id, the
         (cluster, label) count is map-combined, the majority pick is
         a window over the bounded label matrix. No cartesian of data
         against data, no Python."""
         plan = plan_of(spark, "q_llm_kmeans_purity")
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-        # assignment argmax is a fold, not a per-centroid shuffle:
-        # no exchange may key on the assignment's dist column
+        # the assignment's min_by is combined per vector, not
+        # shuffled per centroid: no exchange may key on its dist
         for line in plan.splitlines():
             if "Exchange hashpartitioning(dist" in line:
                 raise AssertionError(line)

@@ -375,8 +375,8 @@ class TestKMeansInvariants:
         centroid per vector, and the fixed-point mean minimizes the
         per-cluster SSE up to the ±½-ulp scale-64 rounding — so
         inertia(T=0) ≥ inertia(T=1) ≥ inertia(T=2) must hold on the
-        real fixture. Guards both the fold's argmin direction and the
-        update's mean arithmetic."""
+        real fixture. Guards both the assignment's argmin direction and
+        the update's mean arithmetic."""
         from pyspark.sql import functions as F
 
         from fact_hive_custom_spark.queries.clustering import _kmeans_parts

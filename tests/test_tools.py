@@ -124,6 +124,11 @@ SHARED_RELATIONS = {
         "fact_hive_custom_spark/tables.py",
         [r"(?m)^_US_PER_DAY\s*=", r"\b86_?400_?000_?000\b"],
     ),
+    # every nearest-centre assignment: min_by(cid, struct(dist, cid))
+    "nearest centre": (
+        "fact_hive_custom_spark/functions/vectors.py",
+        [r"F\.min_by\(\s*[\w.]+(?:\([^()]*\))?,\s*F\.struct\("],
+    ),
 }
 
 
