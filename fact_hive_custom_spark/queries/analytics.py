@@ -19,9 +19,8 @@ from pyspark.sql import functions as F
 from fact_hive_custom_spark.materialize import materialize
 
 from fact_hive_custom_spark.queries.registry import register
-from fact_hive_custom_spark.tables import _US_PER_DAY, load_table
+from fact_hive_custom_spark.tables import _US_PER_DAY, _US_PER_HOUR, load_table
 
-_US_PER_HOUR = 3_600_000_000
 _US_PER_MIN = 60_000_000
 
 
@@ -137,21 +136,64 @@ def q_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_event_transitions",
-    oracle="""
-    WITH e AS (
-        SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events WHERE ts IS NOT NULL
+def _ordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, event_type, us, event_id): every event with `ts` set.
+    NULL-ts rows are unorderable: Spark sorts nulls FIRST, DuckDB
+    LAST, so keeping them would silently shift every chain."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("ts").isNotNull())
+        .select(
+            "user_id",
+            "event_type",
+            F.unix_micros("ts").alias("us"),
+            "event_id",
+        )
+    )
+
+
+def _transition_counts(e: DataFrame) -> DataFrame:
+    """(from_type, to_type, n): each user's consecutive event types in
+    (us, event_id) order over _ordered_events `e`, counted per pair.
+    The order is the unique (us, event_id) chain, so ties cannot
+    reorder across engines. One window shuffle on user_id, then a
+    |types|²-row count. _TRANSITION_CTES is the DuckDB mirror."""
+    w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    return (
+        e.select(
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(w).alias("to_type"),
+        )
+        .filter(F.col("to_type").isNotNull())
+        .groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+# DuckDB CTEs `e`, `nx` and `tc(from_type, to_type, n)`: the SQL twin of
+# _ordered_events and _transition_counts. MATERIALIZED keeps DuckDB
+# from re-running the window per reference; it changes no answer.
+_TRANSITION_CTES = """e AS MATERIALIZED (
+        SELECT user_id, event_type, epoch_us(ts) AS us, event_id
+        FROM events WHERE ts IS NOT NULL
     ),
-    nx AS (
+    nx AS MATERIALIZED (
         SELECT event_type AS from_type,
                lead(event_type) OVER (
                    PARTITION BY user_id ORDER BY us, event_id) AS to_type
         FROM e
-    )
-    SELECT from_type, to_type, COUNT(*) AS n_transitions
-    FROM nx WHERE to_type IS NOT NULL
-    GROUP BY from_type, to_type
+    ),
+    tc AS MATERIALIZED (
+        SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
+        FROM nx WHERE to_type IS NOT NULL GROUP BY from_type, to_type
+    )"""
+
+
+@register(
+    "q_event_transitions",
+    oracle=f"""
+    WITH {_TRANSITION_CTES}
+    SELECT from_type, to_type, n AS n_transitions FROM tc
     """,
 )
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,30 +204,10 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one window shuffle on user_id for the lead(), then a
     low-cardinality (from, to) count whose shuffle carries map-side
     partials — at 100 TB the transition matrix is |types|² rows no
-    matter the input size. Order is the unique (us, event_id) chain,
-    so ties can't reorder across engines."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        # NULL-ts rows are unorderable: Spark sorts nulls FIRST,
-        # DuckDB LAST - keeping them silently shifts every chain
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("us"),
-            "event_id",
-        )
-    )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    nx = e.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    )
-    return (
-        nx.filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-    )
+    matter the input size."""
+    return _transition_counts(
+        _ordered_events(spark, sf_dir)
+    ).withColumnRenamed("n", "n_transitions")
 
 
 @register(
@@ -259,40 +281,26 @@ def _pagerank_oracle() -> str:
     (operands non-negative, so DuckDB `//` == Spark `div`), making the
     fixpoint bit-identical across engines — no float summation order."""
     head = f"""
-    WITH e AS (
-        SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events WHERE ts IS NOT NULL
-    ),
-    nx AS (
-        SELECT event_type AS from_type,
-               lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY us, event_id) AS to_type
-        FROM e
-    ),
-    edges AS (
-        SELECT from_type, to_type, COUNT(*) AS w
-        FROM nx WHERE to_type IS NOT NULL
-        GROUP BY 1, 2
-    ),
+    WITH {_TRANSITION_CTES},
     outw AS (
-        SELECT from_type, CAST(SUM(w) AS BIGINT) AS ow FROM edges GROUP BY 1
+        SELECT from_type, CAST(SUM(n) AS BIGINT) AS ow FROM tc GROUP BY 1
     ),
-    nodes AS (SELECT DISTINCT event_type AS node FROM events
-               WHERE ts IS NOT NULL),
+    nodes AS (SELECT DISTINCT event_type AS node FROM e),
     r0 AS (SELECT node, CAST({_PR_SCALE} AS BIGINT) AS rank_ppm FROM nodes)"""
     iters = []
     for k in range(1, _PR_ITER + 1):
         iters.append(f"""
     r{k} AS (
-        SELECT n.node,
+        SELECT v.node,
                CAST({15 * _PR_SCALE // 100}
-                    + COALESCE(CAST(SUM((r.rank_ppm * 85 * e.w)
+                    + COALESCE(CAST(SUM((r.rank_ppm * 85 * t.n)
                                         // (100 * o.ow)) AS BIGINT), 0)
                     AS BIGINT) AS rank_ppm
-        FROM nodes n
-        LEFT JOIN edges e ON e.to_type = n.node
-        LEFT JOIN outw o ON o.from_type = e.from_type
-        LEFT JOIN r{k - 1} r ON r.node = e.from_type
-        GROUP BY n.node
+        FROM nodes v
+        LEFT JOIN tc t ON t.to_type = v.node
+        LEFT JOIN outw o ON o.from_type = t.from_type
+        LEFT JOIN r{k - 1} r ON r.node = t.from_type
+        GROUP BY v.node
     )""")
     return (
         head + "," + ",".join(iters)
@@ -322,23 +330,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/graph.py:connected_components does (Kiveris et al.,
     SoCC'14 lineage-capping pattern).
     """
-    e = (
-        load_table(spark, sf_dir, "events")
-        # NULL-ts rows are unorderable: Spark sorts nulls FIRST,
-        # DuckDB LAST - keeping them silently shifts every chain
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("us"),
-            "event_id",
-        )
-    )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    nx = e.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    )
+    e = _ordered_events(spark, sf_dir)
     # Materialize the aggregated graph once and CUT the lineage:
     # without this, every iteration re-derives edges from the RAW
     # events (window + groupBy × 3 = three full corpus passes at
@@ -346,14 +338,9 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operators/graph.py) pins the |types|² frames on executors and
     # keeps each iteration's plan rooted at the tiny materialized
     # RDDs — the big input is scanned exactly once.
-    edges = (
-        nx.filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .transform(materialize)
-    )
+    edges = _transition_counts(e).transform(materialize)
     outw = edges.groupBy("from_type").agg(
-        F.sum("w").cast("bigint").alias("ow")
+        F.sum("n").cast("bigint").alias("ow")
     ).transform(materialize)
     nodes = (
         e.select(F.col("event_type").alias("node"))
@@ -372,7 +359,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(
                 F.col("to_type").alias("node"),
-                F.expr("(rank_ppm * 85 * w) div (100 * ow)").alias("c"),
+                F.expr("(rank_ppm * 85 * n) div (100 * ow)").alias("c"),
             )
             .groupBy("node")
             .agg(F.sum("c").cast("bigint").alias("in_mass"))
@@ -405,10 +392,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_id AS purchase_id, user_id,
            CASE WHEN last_click_us IS NOT NULL
-                 AND us - last_click_us <= {3_600_000_000}
+                 AND us - last_click_us <= {_US_PER_HOUR}
                 THEN (us - last_click_us) // 1000000 END AS latency_s,
            CASE WHEN last_click_us IS NULL THEN 'organic'
-                WHEN us - last_click_us <= {3_600_000_000} THEN 'click'
+                WHEN us - last_click_us <= {_US_PER_HOUR} THEN 'click'
                 ELSE 'expired' END AS attribution
     FROM m WHERE event_type = 'purchase'
     """,
@@ -453,18 +440,18 @@ def q_event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "click", F.col("us"))
         ).over(w),
     )
-    hour_us = 3_600_000_000
     return m.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         "user_id",
         F.when(
             F.col("last_click_us").isNotNull()
-            & (F.col("us") - F.col("last_click_us") <= hour_us),
+            & (F.col("us") - F.col("last_click_us") <= _US_PER_HOUR),
             F.expr("(us - last_click_us) DIV 1000000"),
         ).alias("latency_s"),
         F.when(F.col("last_click_us").isNull(), F.lit("organic"))
         .when(
-            F.col("us") - F.col("last_click_us") <= hour_us, F.lit("click")
+            F.col("us") - F.col("last_click_us") <= _US_PER_HOUR,
+            F.lit("click"),
         )
         .otherwise(F.lit("expired"))
         .alias("attribution"),
@@ -617,21 +604,66 @@ _COOC_EDGE_CTES = f"""b AS MATERIALIZED (
     )"""
 
 
-@register(
-    "q_graph_triangles",
-    oracle=f"""
-    WITH {_COOC_EDGE_CTES},
-    deg AS (
-        SELECT u AS node, COUNT(*) AS d FROM (
-            SELECT u FROM e UNION ALL SELECT v FROM e
-        ) t(u) GROUP BY 1
+def _oriented_edges(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(deg, pairs) of the canonical (u < v) edge list `e`: deg(node, d)
+    every node's degree, and pairs(dst, src, ns_src, ns_dst) every edge
+    oriented from its lower-(degree, id) endpoint src to dst, with both
+    endpoints' sorted out-neighbour lists: ns_src ∩ ns_dst are the
+    triangles closed at that edge, each triangle at exactly one edge
+    (q_graph_triangles describes the method). Inner joins are safe: an
+    edge whose dst has no out-neighbours closes no triangle.
+    _TRIANGLE_CTES is the DuckDB mirror."""
+    deg = (
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    )
+    # e already has u < v, so ties on degree keep u as the source
+    oriented = (
+        e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
+        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
+        .select(
+            F.when(F.col("du") <= F.col("dv"), F.col("u"))
+            .otherwise(F.col("v"))
+            .alias("src"),
+            F.when(F.col("du") <= F.col("dv"), F.col("v"))
+            .otherwise(F.col("u"))
+            .alias("dst"),
+        )
+    )
+    outs = oriented.groupBy("src").agg(
+        F.sort_array(F.collect_list("dst")).alias("ns")
+    )
+    pairs = oriented.join(
+        outs.withColumnRenamed("ns", "ns_src"), "src"
+    ).join(
+        outs.select(F.col("src").alias("dst"), F.col("ns").alias("ns_dst")),
+        "dst",
+    )
+    return deg, pairs
+
+
+# DuckDB CTEs `deg(node, d)` and `tri(a, b2, c)` over _COOC_EDGE_CTES'
+# `e`: the degrees and every triangle once, its corners in id order.
+_TRIANGLE_CTES = """deg AS (
+        SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
+            SELECT u AS node FROM e UNION ALL SELECT v FROM e
+        ) t GROUP BY 1
     ),
-    tri AS (
+    tri AS MATERIALIZED (
         SELECT e1.u AS a, e1.v AS b2, e2.v AS c
         FROM e e1
         JOIN e e2 ON e2.u = e1.v
         JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-    )
+    )"""
+
+
+@register(
+    "q_graph_triangles",
+    oracle=f"""
+    WITH {_COOC_EDGE_CTES},
+    {_TRIANGLE_CTES}
     SELECT CAST((SELECT COUNT(*) FROM tri) AS BIGINT) AS n_triangles,
            CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
            CAST((SELECT COUNT(*) FROM deg) AS BIGINT) AS n_nodes,
@@ -676,45 +708,12 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-both-sides close join, whose tens-of-MB edge-set
     assumption a denser graph would break).
 
-    The edge build is NOT persisted: its deduplicating exchange
-    (hashpartitioning(u, v)) is identical across all consumers
-    (orientation, degree, edge count), so Spark's ReuseExchange
-    computes it once within the plan — same work sharing as the old
-    MEMORY_AND_DISK persist without leaking cached blocks across a
-    243-query run (round-6 ADVICE)."""
+    The edge list is materialized once inside _cooccurrence_edges, so
+    orientation, degree and the edge count all read that checkpoint."""
     e = _cooccurrence_edges(spark, sf_dir)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    # orient: src = endpoint with smaller (degree, id); e already has
-    # u < v, so ties on degree keep u as the source
-    oriented = (
-        e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
-        .select(
-            F.when(F.col("du") <= F.col("dv"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("src"),
-            F.when(F.col("du") <= F.col("dv"), F.col("v"))
-            .otherwise(F.col("u"))
-            .alias("dst"),
-        )
-    )
-    outs = oriented.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("ns")
-    )
-    # inner joins are safe for the count: an edge whose dst has no
-    # out-neighbors contributes zero triangles
+    deg, pairs = _oriented_edges(e)
     n_tri = (
-        oriented.join(outs.withColumnRenamed("ns", "ns_src"), "src")
-        .join(
-            outs.select(F.col("src").alias("dst"), F.col("ns").alias("ns_dst")),
-            "dst",
-        )
-        .select(F.size(F.array_intersect("ns_src", "ns_dst")).alias("k"))
+        pairs.select(F.size(F.array_intersect("ns_src", "ns_dst")).alias("k"))
         .agg(
             F.coalesce(F.sum("k"), F.lit(0))
             .cast("bigint")
@@ -1400,11 +1399,9 @@ def q_graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals broadcast; the score is exact-integer Jaccard ppm with
     a TakeOrdered top-50 under the (score, a, b) total order.
 
-    The edge build is not persisted: its deduplicating exchange is
-    identical across the three consumers (adjacency twice, anti-join
-    once), so ReuseExchange computes it once within the plan without
-    leaking cached blocks across a multi-query run (round-6
-    ADVICE)."""
+    The edge list is materialized once inside _cooccurrence_edges,
+    so its three consumers (adjacency twice, anti-join once) read
+    that checkpoint."""
     e = _cooccurrence_edges(spark, sf_dir)
     adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
@@ -1983,25 +1980,13 @@ def _markov_oracle() -> str:
     matrix: v_{t+1}(j) = Σ_i v_t(i)·c_ij DIV c_i, per-term floored —
     exact integers so both engines walk the identical trajectory."""
     ctes = [
-        """e AS MATERIALIZED (
-        SELECT user_id, event_type, epoch_us(ts) AS us, event_id
-        FROM events WHERE ts IS NOT NULL
-    )""",
-        """nx AS MATERIALIZED (
-        SELECT event_type AS f,
-               lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY us, event_id) AS t
-        FROM e
-    )""",
-        """tc AS MATERIALIZED (
-        SELECT f, t, CAST(COUNT(*) AS BIGINT) AS c
-        FROM nx WHERE t IS NOT NULL GROUP BY f, t
-    )""",
-        "st AS MATERIALIZED (SELECT DISTINCT f AS s FROM tc)",
+        _TRANSITION_CTES,
+        "st AS MATERIALIZED (SELECT DISTINCT from_type AS s FROM tc)",
         """tm AS MATERIALIZED (
-        SELECT tc.f, tc.t, tc.c,
-               CAST(SUM(tc.c) OVER (PARTITION BY tc.f) AS BIGINT) AS rc
-        FROM tc JOIN st ON tc.t = st.s
+        SELECT tc.from_type AS f, tc.to_type AS t, tc.n AS c,
+               CAST(SUM(tc.n) OVER (PARTITION BY tc.from_type) AS BIGINT)
+                   AS rc
+        FROM tc JOIN st ON tc.to_type = st.s
     )""",
         f"v0 AS MATERIALIZED (SELECT s, CAST({_MKV_SCALE} AS HUGEINT) AS v FROM st)",
     ]
@@ -2050,22 +2035,11 @@ def q_event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|² transition matrix; every power round is algebra on that
     broadcast-sized relation. At 100 TB only the window exchange
     touches corpus-sized data — identical cost to q_event_transitions."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("us"),
-            "event_id",
-        )
+    tc = _transition_counts(_ordered_events(spark, sf_dir)).select(
+        F.col("from_type").alias("f"),
+        F.col("to_type").alias("t"),
+        F.col("n").alias("c"),
     )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    nx = e.select(
-        F.col("event_type").alias("f"),
-        F.lead("event_type").over(w).alias("t"),
-    ).filter(F.col("t").isNotNull())
-    tc = nx.groupBy("f", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     st = tc.select(F.col("f").alias("s")).distinct()
     tm = (
         tc.join(st, tc["t"] == st["s"], "left_semi")
@@ -2579,17 +2553,7 @@ def q_orders_monthly_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_graph_clustering_coeff",
     oracle=f"""
     WITH {_COOC_EDGE_CTES},
-    deg AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
-            SELECT u AS node FROM e UNION ALL SELECT v FROM e
-        ) t GROUP BY 1
-    ),
-    tri AS MATERIALIZED (
-        SELECT e1.u AS a, e1.v AS b2, e2.v AS c
-        FROM e e1
-        JOIN e e2 ON e2.u = e1.v
-        JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-    ),
+    {_TRIANGLE_CTES},
     pernode AS (
         SELECT node, CAST(COUNT(*) AS BIGINT) AS t FROM (
             SELECT a AS node FROM tri
@@ -2632,43 +2596,14 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket 0 via the left join.
 
     Plan at 100 TB: identical exchange discipline to q_graph_triangles
-    (canonical-edge dedup exchange reused across degree/orientation
-    consumers by ReuseExchange), plus one (node)-keyed exchange for
-    the per-node counts; the bucket histogram is a ≤11-row final
-    aggregate."""
-    e = _cooccurrence_edges(spark, sf_dir)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
-    oriented = (
-        e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
-        .select(
-            F.when(F.col("du") <= F.col("dv"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("src"),
-            F.when(F.col("du") <= F.col("dv"), F.col("v"))
-            .otherwise(F.col("u"))
-            .alias("dst"),
-        )
-    )
-    outs = oriented.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("ns")
-    )
-    triples = (
-        oriented.join(outs.withColumnRenamed("ns", "ns_src"), "src")
-        .join(
-            outs.select(F.col("src").alias("dst"), F.col("ns").alias("ns_dst")),
-            "dst",
-        )
-        .select(
-            "src",
-            "dst",
-            F.explode(F.array_intersect("ns_src", "ns_dst")).alias("w"),
-        )
+    (the materialized edge list read by degree and orientation), plus
+    one (node)-keyed exchange for the per-node counts; the bucket
+    histogram is a ≤11-row final aggregate."""
+    deg, pairs = _oriented_edges(_cooccurrence_edges(spark, sf_dir))
+    triples = pairs.select(
+        "src",
+        "dst",
+        F.explode(F.array_intersect("ns_src", "ns_dst")).alias("w"),
     )
     pernode = (
         triples.select(F.col("src").alias("node"))

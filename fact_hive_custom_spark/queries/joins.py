@@ -19,7 +19,7 @@ from fact_hive_custom_spark.operators.asof import (
     asof_join_nearest,
 )
 from fact_hive_custom_spark.queries.registry import register
-from fact_hive_custom_spark.tables import load_table, register_views
+from fact_hive_custom_spark.tables import _US_PER_HOUR, load_table, register_views
 
 
 @register(
@@ -298,9 +298,9 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours = (
         e.select(F.date_trunc("hour", F.col("ts")).alias("h_start"))
         .distinct()
-        .withColumn("band", F.expr("unix_micros(h_start) DIV 3600000000"))
+        .withColumn("band", F.expr(f"unix_micros(h_start) DIV {_US_PER_HOUR}"))
     )
-    eb = e.withColumn("band", F.expr("unix_micros(ts) DIV 3600000000"))
+    eb = e.withColumn("band", F.expr(f"unix_micros(ts) DIV {_US_PER_HOUR}"))
     joined = F.broadcast(hours).join(
         eb,
         (hours["band"] == eb["band"])
@@ -526,7 +526,7 @@ def q_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OVL_US = 3_600_000_000  # 1 h interval length / bucket grain
+_OVL_US = _US_PER_HOUR  # 1 h interval length / bucket grain
 
 
 @register(
@@ -811,7 +811,7 @@ def q_join_sort_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_join_asof_tolerance",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT e.event_id, e.event_type,
                epoch_us(e.ts) AS us,
@@ -828,7 +828,7 @@ def q_join_sort_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
     )
     SELECT event_id,
-           CASE WHEN us - click_us <= 3600000000
+           CASE WHEN us - click_us <= {_US_PER_HOUR}
                 THEN click_id END AS asof_click_id
     FROM m WHERE event_type = 'error'
     """,
@@ -864,7 +864,7 @@ def q_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "event_id",
         F.when(
-            F.unix_micros("ts") - F.col("asof_click_us") <= 3_600_000_000,
+            F.unix_micros("ts") - F.col("asof_click_us") <= _US_PER_HOUR,
             F.col("asof_click_id"),
         ).alias("asof_click_id"),
     )

@@ -30,6 +30,18 @@ from fact_hive_custom_spark.tables import (
 )
 
 
+# chi-square 0.05 critical values (e6-scaled) for df 1..10 — the same
+# large-N convention as q_stat_ttest_welch's 3.841459 single-df pin:
+# df1·F is compared against chi2(df1), exact for df2 → infinity.
+_CHI2_CRIT_E6 = (
+    3841459, 5991465, 7814728, 9487729, 11070498,
+    12591587, 14067140, 15507313, 16918978, 18307038,
+)
+_CHI2_CASE = " ".join(
+    f"WHEN {df} THEN {c}" for df, c in enumerate(_CHI2_CRIT_E6, start=1)
+)
+
+
 @register(
     "q_agg_weighted_median",
     oracle="""
@@ -175,27 +187,65 @@ def q_agg_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_stat_chisq",
-    oracle="""
-    WITH e AS (
-        SELECT user_id % 2 AS variant, event_type AS outcome
-        FROM events
-        WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+def _contingency(
+    spark: SparkSession, sf_dir: str, keys: tuple[str, ...], x: str, y: str
+) -> DataFrame:
+    """(x, y, obs, r, c, n): the two-way contingency table of the SQL
+    expressions `x` and `y` over the events with every `keys` column
+    set, with each cell's row, column and grand totals. One
+    map-combined groupBy collapses the corpus to the cells; the total
+    windows run on the cell table. _contingency_sql is the DuckDB
+    mirror."""
+    obs = (
+        load_table(spark, sf_dir, "events")
+        .filter(" AND ".join(f"{k} IS NOT NULL" for k in keys))
+        .select(F.expr(x).alias("x"), F.expr(y).alias("y"))
+        .groupBy("x", "y")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
+    )
+    return obs.select(
+        "x",
+        "y",
+        "obs",
+        F.sum("obs").over(Window.partitionBy("x")).cast("bigint").alias("r"),
+        F.sum("obs").over(Window.partitionBy("y")).cast("bigint").alias("c"),
+        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
+    )
+
+
+def _contingency_sql(keys: tuple[str, ...], x: str, y: str) -> str:
+    """DuckDB CTEs `e`, `obs` (x, y, obs) and `tot` (with r, c, n):
+    _contingency's relation."""
+    where = " AND ".join(f"{k} IS NOT NULL" for k in keys)
+    return f"""e AS (
+        SELECT {x} AS x,
+               {y} AS y
+        FROM events WHERE {where}
     ),
     obs AS (
-        SELECT variant, outcome, CAST(COUNT(*) AS BIGINT) AS obs
-        FROM e GROUP BY variant, outcome
+        SELECT x, y, CAST(COUNT(*) AS BIGINT) AS obs
+        FROM e GROUP BY x, y
     ),
     tot AS (
-        SELECT variant, outcome, obs,
-               CAST(SUM(obs) OVER (PARTITION BY variant) AS BIGINT) AS r,
-               CAST(SUM(obs) OVER (PARTITION BY outcome) AS BIGINT) AS c,
+        SELECT x, y, obs,
+               CAST(SUM(obs) OVER (PARTITION BY x) AS BIGINT) AS r,
+               CAST(SUM(obs) OVER (PARTITION BY y) AS BIGINT) AS c,
                CAST(SUM(obs) OVER () AS BIGINT) AS n
         FROM obs
-    ),
+    )"""
+
+
+# (user_id parity × event_type): the A/B contingency table of
+# q_stat_chisq and q_stat_gtest
+_AB_CELLS = (("user_id", "event_type"), "user_id % 2", "event_type")
+
+
+@register(
+    "q_stat_chisq",
+    oracle=f"""
+    WITH {_contingency_sql(*_AB_CELLS)},
     cells AS (
-        SELECT variant, outcome, obs,
+        SELECT x AS variant, y AS outcome, obs,
                CAST(floor(
                    (obs - CAST(r AS DOUBLE) * c / n)
                    * (obs - CAST(r AS DOUBLE) * c / n)
@@ -229,25 +279,7 @@ def q_stat_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB to |variants|×|outcomes| rows; the three marginal windows
     then run over that tiny cell table (cells, not events), so cost is
     the count shuffle and nothing else."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
-    )
-    obs = (
-        ev.select(
-            (F.col("user_id") % 2).alias("variant"),
-            F.col("event_type").alias("outcome"),
-        )
-        .groupBy("variant", "outcome")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    )
-    tot = obs.select(
-        "variant",
-        "outcome",
-        "obs",
-        F.sum("obs").over(Window.partitionBy("variant")).cast("bigint").alias("r"),
-        F.sum("obs").over(Window.partitionBy("outcome")).cast("bigint").alias("c"),
-        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
+    tot = _contingency(spark, sf_dir, *_AB_CELLS)
     term = F.expr(
         "cast(floor("
         " (obs - cast(r as double) * c / n)"
@@ -255,7 +287,12 @@ def q_stat_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
         " / (cast(r as double) * c / n)"
         " * 1000000 + 0.5) as bigint)"
     )
-    cells = tot.select("variant", "outcome", "obs", term.alias("term_ppm"))
+    cells = tot.select(
+        F.col("x").alias("variant"),
+        F.col("y").alias("outcome"),
+        "obs",
+        term.alias("term_ppm"),
+    )
     return cells.select(
         "variant",
         "outcome",
@@ -437,17 +474,38 @@ def q_agg_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("flag")
 
 
-@register(
-    "q_pareto_deciles",
-    oracle="""
-    WITH rev AS (
+def _customer_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(o_custkey, rev_cents): each customer's order revenue in exact
+    cents — the one fact-sized shuffle of the spend-inequality
+    queries, map-side combined down to |customers| rows.
+    _CUSTOMER_CENTS_CTE is the DuckDB mirror."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull())
+        .groupBy("o_custkey")
+        .agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            .cast("bigint")
+            .alias("rev_cents")
+        )
+    )
+
+
+# DuckDB CTE `rev(o_custkey, rev_cents)`: the SQL twin of _customer_cents.
+_CUSTOMER_CENTS_CTE = """rev AS (
         SELECT o_custkey,
                CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) AS rev_cents
         FROM orders
         WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
         GROUP BY o_custkey
-    ),
+    )"""
+
+
+@register(
+    "q_pareto_deciles",
+    oracle=f"""
+    WITH {_CUSTOMER_CENTS_CTE},
     rk AS (
         SELECT rev_cents,
                ntile(10) OVER (ORDER BY rev_cents DESC, o_custkey)
@@ -479,16 +537,7 @@ def q_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream algebra). ntile's floor-division distribution is
     identical on both engines given the total (rev DESC, custkey)
     tiebreak; money stays exact cents, shares exact ppm."""
-    rev = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull())
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("rev_cents")
-        )
-    )
+    rev = _customer_cents(spark, sf_dir)
     rk = rev.select(
         "rev_cents",
         F.ntile(10)
@@ -516,18 +565,11 @@ def q_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_agg_gini",
-    oracle="""
-    WITH rev AS (
-        SELECT o_custkey,
-               CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS x
-        FROM orders
-        WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
-        GROUP BY o_custkey
-    ),
+    oracle=f"""
+    WITH {_CUSTOMER_CENTS_CTE},
     rk AS (
-        SELECT x,
-               row_number() OVER (ORDER BY x, o_custkey) AS i
+        SELECT rev_cents AS x,
+               row_number() OVER (ORDER BY rev_cents, o_custkey) AS i
         FROM rev
     ),
     agg AS (
@@ -555,27 +597,17 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits in HUGEINT/DECIMAL(38) so a trillion-cent corpus cannot
     overflow, and both engines evaluate the identical integer
     expression — G arrives exact, no float division anywhere."""
-    rev = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull())
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
-    rk = rev.select(
-        "x",
+    rk = _customer_cents(spark, sf_dir).select(
+        "rev_cents",
         F.row_number()
-        .over(Window.orderBy(F.asc("x"), F.asc("o_custkey")))
+        .over(Window.orderBy(F.asc("rev_cents"), F.asc("o_custkey")))
         .alias("i"),
     )
     d38 = "decimal(38,0)"
     agg = rk.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(d38)).alias("s"),
-        F.sum((F.col("i") * F.col("x")).cast(d38)).alias("s1"),
+        F.sum(F.col("rev_cents").cast(d38)).alias("s"),
+        F.sum((F.col("i") * F.col("rev_cents")).cast(d38)).alias("s1"),
     )
     return agg.select(
         F.col("n").cast("bigint").alias("n_customers"),
@@ -816,7 +848,7 @@ def q_stat_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_kruskal",
-    oracle="""
+    oracle=f"""
     WITH p AS (
         SELECT event_type, CAST(round(value * 100) AS BIGINT) AS x
         FROM events WHERE value IS NOT NULL
@@ -865,13 +897,7 @@ def q_stat_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(CASE WHEN n * n * n - n - tt > 0
                      AND (CAST(h_e6 AS HUGEINT) * (n * n * n - n))
                          // (n * n * n - n - tt)
-                         > CASE k - 1
-                               WHEN 1 THEN 3841459 WHEN 2 THEN 5991465
-                               WHEN 3 THEN 7814728 WHEN 4 THEN 9487729
-                               WHEN 5 THEN 11070498 WHEN 6 THEN 12591587
-                               WHEN 7 THEN 14067140 WHEN 8 THEN 15507313
-                               WHEN 9 THEN 16918978 WHEN 10 THEN 18307038
-                               ELSE NULL END
+                         > CASE k - 1 {_CHI2_CASE} ELSE NULL END
                 THEN 1 ELSE 0 END AS BIGINT) AS signif_5pct
     FROM h
     """,
@@ -960,15 +986,7 @@ def q_stat_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
             " - 3000000 * (n + 1) AS BIGINT), 0)"
         ).alias("h_e6"),
     )
-    crit = (
-        "CASE k - 1"
-        " WHEN 1 THEN 3841459 WHEN 2 THEN 5991465"
-        " WHEN 3 THEN 7814728 WHEN 4 THEN 9487729"
-        " WHEN 5 THEN 11070498 WHEN 6 THEN 12591587"
-        " WHEN 7 THEN 14067140 WHEN 8 THEN 15507313"
-        " WHEN 9 THEN 16918978 WHEN 10 THEN 18307038"
-        " ELSE NULL END"
-    )
+    crit = f"CASE k - 1 {_CHI2_CASE} ELSE NULL END"
     hc = (
         "(CAST(h_e6 AS decimal(38,0)) * (n * n * n - n))"
         " DIV (n * n * n - n - tt)"
@@ -990,24 +1008,63 @@ def q_stat_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_stat_mannwhitney",
-    oracle="""
-    WITH p AS (
+def _type_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ty, x): every event with `value` set, ty its event type and x
+    its value in whole cents."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
+        .select(
+            F.col("event_type").alias("ty"),
+            F.round(F.col("value") * 100).cast("bigint").alias("x"),
+        )
+    )
+
+
+def _cents_grid(p: DataFrame) -> DataFrame:
+    """(ty, x, c): the densified count grid of _type_cents `p`, one
+    row per (type, distinct cents value) pair, c = 0 where the type
+    never takes the value. One map-combined count per (ty, x), then a
+    |V|·k cross join with the broadcast type list: every relation
+    after the count is bounded by the cents domain |V|, not by the row
+    count. _CENTS_GRID_CTES is the DuckDB mirror."""
+    cnt = p.groupBy("ty", "x").agg(F.count(F.lit(1)).alias("c"))
+    vx = p.select("x").distinct()
+    tys = p.select("ty").distinct()
+    return (
+        vx.crossJoin(F.broadcast(tys))
+        .join(cnt, ["ty", "x"], "left")
+        .select("ty", "x", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
+    )
+
+
+# DuckDB CTEs `p(ty, x)` and `grid(ty, x, c)`: the SQL twin of
+# _type_cents and _cents_grid.
+_CENTS_GRID_CTES = """p AS (
         SELECT event_type AS ty, CAST(round(value * 100) AS BIGINT) AS x
         FROM events WHERE value IS NOT NULL
     ),
     cnt AS (SELECT ty, x, COUNT(*) AS c FROM p GROUP BY ty, x),
     vx AS (SELECT DISTINCT x FROM p),
     tys AS (SELECT DISTINCT ty FROM p),
-    g AS (
-        SELECT t.ty, v.x, COALESCE(c.c, 0) AS c,
-               COALESCE(SUM(COALESCE(c.c, 0)) OVER (
-                   PARTITION BY t.ty ORDER BY v.x
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS cume
+    grid AS (
+        SELECT t.ty, v.x, COALESCE(c.c, 0) AS c
         FROM tys t CROSS JOIN vx v
         LEFT JOIN cnt c ON c.ty = t.ty AND c.x = v.x
+    )"""
+
+
+@register(
+    "q_stat_mannwhitney",
+    oracle=f"""
+    WITH {_CENTS_GRID_CTES},
+    g AS (
+        SELECT ty, x, c,
+               COALESCE(SUM(c) OVER (
+                   PARTITION BY ty ORDER BY x
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS cume
+        FROM grid
     ),
     pr AS (
         SELECT a.ty AS type_a, b.ty AS type_b,
@@ -1073,23 +1130,7 @@ def q_stat_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the first count is O(|V|·k²), independent of row count N.
     At 100 TB the corpus contributes exactly one count shuffle; no
     raw row ever reaches a window or a join."""
-    p = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            F.col("event_type").alias("ty"),
-            F.round(F.col("value") * 100).cast("bigint").alias("x"),
-        )
-    )
-    cnt = p.groupBy("ty", "x").agg(F.count(F.lit(1)).alias("c"))
-    vx = p.select("x").distinct()
-    tys = p.select("ty").distinct()
-    grid = (
-        vx.crossJoin(F.broadcast(tys))
-        .join(cnt, ["ty", "x"], "left")
-        .select("ty", "x", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
-    )
-    g = grid.select(
+    g = _cents_grid(_type_cents(spark, sf_dir)).select(
         "ty",
         "x",
         "c",
@@ -1177,21 +1218,14 @@ def q_stat_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_ks2",
-    oracle="""
-    WITH p AS (
-        SELECT event_type AS ty, CAST(round(value * 100) AS BIGINT) AS x
-        FROM events WHERE value IS NOT NULL
-    ),
-    cnt AS (SELECT ty, x, COUNT(*) AS c FROM p GROUP BY ty, x),
-    vx AS (SELECT DISTINCT x FROM p),
-    tys AS (SELECT DISTINCT ty FROM p),
+    oracle=f"""
+    WITH {_CENTS_GRID_CTES},
     g AS (
-        SELECT t.ty, v.x,
-               SUM(COALESCE(c.c, 0)) OVER (
-                   PARTITION BY t.ty ORDER BY v.x
+        SELECT ty, x,
+               SUM(c) OVER (
+                   PARTITION BY ty ORDER BY x
                    ROWS UNBOUNDED PRECEDING) AS cumi
-        FROM tys t CROSS JOIN vx v
-        LEFT JOIN cnt c ON c.ty = t.ty AND c.x = v.x
+        FROM grid
     ),
     tot AS (SELECT ty, CAST(COUNT(*) AS HUGEINT) AS n FROM p GROUP BY ty),
     pr AS (
@@ -1241,32 +1275,18 @@ def q_stat_ks2(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Everything after the first count is O(|V|·k²) whatever
     N is; the value domain |V| (cents-bounded) is the dial — bucket x
     first if the domain were unbounded."""
-    p = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            F.col("event_type").alias("ty"),
-            F.round(F.col("value") * 100).cast("bigint").alias("x"),
-        )
-    )
-    cnt = p.groupBy("ty", "x").agg(F.count(F.lit(1)).alias("c"))
-    vx = p.select("x").distinct()
-    tys = p.select("ty").distinct()
+    p = _type_cents(spark, sf_dir)
     d38 = "decimal(38,0)"
-    g = (
-        vx.crossJoin(F.broadcast(tys))
-        .join(cnt, ["ty", "x"], "left")
-        .select(
-            "ty",
-            "x",
-            F.sum(F.coalesce(F.col("c"), F.lit(0)))
-            .over(
-                Window.partitionBy("ty")
-                .orderBy("x")
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            .alias("cumi"),
+    g = _cents_grid(p).select(
+        "ty",
+        "x",
+        F.sum("c")
+        .over(
+            Window.partitionBy("ty")
+            .orderBy("x")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
+        .alias("cumi"),
     )
     tot = p.groupBy("ty").agg(F.count(F.lit(1)).cast(d38).alias("n"))
     a = g.select(
@@ -1572,7 +1592,7 @@ def q_stat_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_levene",
-    oracle="""
+    oracle=f"""
     WITH p AS (
         SELECT event_type AS g,
                CAST(round(value * 100) AS BIGINT) AS x
@@ -1623,13 +1643,7 @@ def q_stat_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN ssw_e6 <= 0 OR k < 2 THEN NULL
                 ELSE (k - 1) * (((n - k) * ssb_e6 * 1000000)
                                 // ((k - 1) * ssw_e6))
-                     >= (CASE k - 1
-                         WHEN 1 THEN 3841459 WHEN 2 THEN 5991465
-                         WHEN 3 THEN 7814728 WHEN 4 THEN 9487729
-                         WHEN 5 THEN 11070498 WHEN 6 THEN 12591587
-                         WHEN 7 THEN 14067140 WHEN 8 THEN 15507313
-                         WHEN 9 THEN 16918978 WHEN 10 THEN 18307038
-                         ELSE NULL END)
+                     >= (CASE k - 1 {_CHI2_CASE} ELSE NULL END)
            END AS unequal_variance
     FROM ss
     """,
@@ -1718,15 +1732,7 @@ def q_stat_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ssb_e6"),
         F.expr("q * 1000000 - a").alias("ssw_e6"),
     )
-    crit = (
-        "CASE CAST(k - 1 AS INT)"
-        " WHEN 1 THEN 3841459 WHEN 2 THEN 5991465"
-        " WHEN 3 THEN 7814728 WHEN 4 THEN 9487729"
-        " WHEN 5 THEN 11070498 WHEN 6 THEN 12591587"
-        " WHEN 7 THEN 14067140 WHEN 8 THEN 15507313"
-        " WHEN 9 THEN 16918978 WHEN 10 THEN 18307038"
-        " ELSE NULL END"
-    )
+    crit = f"CASE CAST(k - 1 AS INT) {_CHI2_CASE} ELSE NULL END"
     f_e6 = "((n - k) * ssb_e6 * 1000000) DIV ((k - 1) * ssw_e6)"
     return ss.select(
         F.col("n").cast("bigint").alias("n_total"),
@@ -2165,9 +2171,6 @@ def q_stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("type_a", "type_b")
 
 
-# chi-square 0.05 critical values (e6-scaled) for df 1..8 — the same
-# large-N convention as q_stat_ttest_welch's 3.841459 single-df pin:
-# df1·F is compared against chi2(df1), exact for df2 → infinity.
 def _dfloor(a: str, b: str) -> str:
     """Exact floor-division of non-negative DECIMAL(38,0) expressions
     as a SQL fragment, safe where Spark's `DIV` is not.
@@ -2198,15 +2201,6 @@ def _dfloor(a: str, b: str) -> str:
         f"'_dfloor quotient overflowed DECIMAL(38,0) ~1e32 headroom')"
         f" AS DECIMAL(38,0)) ELSE ({q}) END)"
     )
-
-
-_CHI2_CRIT_E6 = (
-    3841459, 5991465, 7814728, 9487729,
-    11070498, 12591587, 14067140, 15507313,
-)
-_CHI2_CASE = " ".join(
-    f"WHEN {df} THEN {c}" for df, c in enumerate(_CHI2_CRIT_E6, start=1)
-)
 
 
 @register(
@@ -2334,7 +2328,7 @@ def q_stat_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_jarque_bera",
-    oracle="""
+    oracle=f"""
     WITH p AS (
         SELECT event_type,
                CAST(round(value * 100) AS BIGINT) AS x
@@ -2381,7 +2375,7 @@ def q_stat_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
                 // 6000000 AS BIGINT) AS jb_e6,
            (n * (skew2_e6 * 1000000
                  + ((kurt_e6 - 3000000) * (kurt_e6 - 3000000)) // 4))
-               // 6000000 >= 5991465 AS nonnormal
+               // 6000000 >= {_CHI2_CRIT_E6[1]} AS nonnormal
     FROM jb
     ORDER BY event_type
     """,
@@ -2475,7 +2469,7 @@ def q_stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("skew2_e6").cast("bigint").alias("skew2_e6"),
         F.col("kurt_e6").cast("bigint").alias("kurt_e6"),
         F.expr(f"CAST({jb_expr} AS BIGINT)").alias("jb_e6"),
-        F.expr(f"{jb_expr} >= 5991465").alias("nonnormal"),
+        F.expr(f"{jb_expr} >= {_CHI2_CRIT_E6[1]}").alias("nonnormal"),
     ).orderBy("event_type")
 
 
@@ -2915,62 +2909,18 @@ def q_stat_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dow_contingency(
-    spark: SparkSession, sf_dir: str, key: str, x: str
-) -> DataFrame:
-    """(x, y, obs, r, c, n): the contingency table of `x` (a SQL
-    expression over the events with `key` and `ts` set) by day of week
-    y, with each cell's row, column and grand totals. y comes from the
-    integer day number ((d+4) % 7, 1970-01-01 = Thursday → 0 = Monday),
-    with no calendar or timezone function, so the ns-parquet/µs-Spark
-    timestamp gap cannot leak in. One map-combined groupBy collapses
-    the corpus to the cells; the total windows run on the cell table.
-    _dow_contingency_sql is the DuckDB mirror."""
-    obs = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col(key).isNotNull() & F.col("ts").isNotNull())
-        .select(
-            F.expr(x).alias("x"),
-            F.expr(f"(unix_micros(ts) DIV {_US_PER_DAY} + 4) % 7").alias("y"),
-        )
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    )
-    return obs.select(
-        "x",
-        "y",
-        "obs",
-        F.sum("obs").over(Window.partitionBy("x")).cast("bigint").alias("r"),
-        F.sum("obs").over(Window.partitionBy("y")).cast("bigint").alias("c"),
-        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
-
-
-def _dow_contingency_sql(key: str, x: str) -> str:
-    """DuckDB CTEs `e`, `obs` (x, y, obs) and `tot` (with r, c, n):
-    _dow_contingency's relation."""
-    return f"""e AS (
-        SELECT {x} AS x,
-               (epoch_us(ts) // {_US_PER_DAY} + 4) % 7 AS y
-        FROM events WHERE {key} IS NOT NULL AND ts IS NOT NULL
-    ),
-    obs AS (
-        SELECT x, y, CAST(COUNT(*) AS BIGINT) AS obs
-        FROM e GROUP BY x, y
-    ),
-    tot AS (
-        SELECT x, y, obs,
-               CAST(SUM(obs) OVER (PARTITION BY x) AS BIGINT) AS r,
-               CAST(SUM(obs) OVER (PARTITION BY y) AS BIGINT) AS c,
-               CAST(SUM(obs) OVER () AS BIGINT) AS n
-        FROM obs
-    )"""
+# y of the day-of-week tables: the integer day number's weekday
+# ((d+4) % 7, 1970-01-01 = Thursday → 0 = Monday), with no calendar or
+# timezone function, so the ns-parquet/µs-Spark timestamp gap cannot
+# leak in. _DOW_SQL is the DuckDB mirror.
+_DOW = f"(unix_micros(ts) DIV {_US_PER_DAY} + 4) % 7"
+_DOW_SQL = f"(epoch_us(ts) // {_US_PER_DAY} + 4) % 7"
 
 
 @register(
     "q_stat_mutual_info",
     oracle=f"""
-    WITH {_dow_contingency_sql("event_type", "event_type")},
+    WITH {_contingency_sql(("event_type", "ts"), "event_type", _DOW_SQL)},
     cells AS (
         SELECT x, y, obs,
                CAST(floor(ln(CAST(obs AS DOUBLE) * n / (CAST(r AS DOUBLE) * c))
@@ -2995,9 +2945,11 @@ def q_stat_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression shape on both engines, obs·n and r·c stay < 2^53 so
     the only rounding is the ln itself).
 
-    Plan: the _dow_contingency cell table (≤ |types|·7 cells); the MI
-    reduction runs on it."""
-    tot = _dow_contingency(spark, sf_dir, "event_type", "event_type")
+    Plan: the day-of-week _contingency cell table (≤ |types|·7 cells);
+    the MI reduction runs on it."""
+    tot = _contingency(
+        spark, sf_dir, ("event_type", "ts"), "event_type", _DOW
+    )
     cells = tot.select(
         "x",
         "y",
@@ -3023,7 +2975,7 @@ def q_stat_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stat_cramers_v",
     oracle=f"""
-    WITH {_dow_contingency_sql("user_id", "user_id % 4")},
+    WITH {_contingency_sql(("user_id", "ts"), "user_id % 4", _DOW_SQL)},
     cells AS (
         SELECT obs, n,
                CAST(floor(
@@ -3059,10 +3011,10 @@ def q_stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     any cross-row sum); the normalization is one engine-identical
     integer division by N·(min dims − 1).
 
-    Plan: the _dow_contingency cell table (≤ 4·7 cells) and the
+    Plan: the day-of-week _contingency cell table (≤ 4·7 cells) and the
     scalar reduction on it; the dims relation is a 1-row staple joined
     by broadcast cross."""
-    tot = _dow_contingency(spark, sf_dir, "user_id", "user_id % 4")
+    tot = _contingency(spark, sf_dir, ("user_id", "ts"), "user_id % 4", _DOW)
     cells = tot.select(
         "obs",
         "n",
@@ -3252,7 +3204,7 @@ def q_stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stat_theil_u",
     oracle=f"""
-    WITH {_dow_contingency_sql("event_type", "event_type")},
+    WITH {_contingency_sql(("event_type", "ts"), "event_type", _DOW_SQL)},
     mi AS (
         SELECT CAST(CAST(SUM(CAST(obs AS HUGEINT)
                    * CAST(floor(ln(CAST(obs AS DOUBLE) * n
@@ -3286,9 +3238,11 @@ def q_stat_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-pinned per-cell/per-row logs, and the final ratio is one
     engine-identical integer division in HUGEINT/DECIMAL(38,0).
 
-    Plan: the _dow_contingency cell table of q_stat_mutual_info, then
-    single-row algebra."""
-    tot = _dow_contingency(spark, sf_dir, "event_type", "event_type")
+    Plan: the day-of-week _contingency cell table of
+    q_stat_mutual_info, then single-row algebra."""
+    tot = _contingency(
+        spark, sf_dir, ("event_type", "ts"), "event_type", _DOW
+    )
     d38 = "decimal(38,0)"
     mi = tot.agg(
         F.expr(
@@ -3325,23 +3279,43 @@ def q_stat_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _parity_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(variant, hit): every event with `user_id` and `event_type` set,
+    variant its user's parity cohort (user_id % 2) and hit 1 for a
+    purchase, else 0 — the two-arm conversion sample of the A/B
+    tests. _PARITY_HITS_CTE is the DuckDB mirror."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
+        .select(
+            (F.col("user_id") % 2).alias("variant"),
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("hit"),
+        )
+    )
+
+
+# DuckDB CTE `e(variant, hit)`: the SQL twin of _parity_hits.
+_PARITY_HITS_CTE = """e AS (
+        SELECT user_id % 2 AS variant,
+               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS hit
+        FROM events
+        WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+    )"""
+
+
 @register(
     "q_stat_prop_ztest",
-    oracle="""
-    WITH e AS (
-        SELECT user_id % 2 AS cohort,
-               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_PARITY_HITS_CTE},
     g AS (
-        SELECT cohort,
+        SELECT variant,
                CAST(COUNT(*) AS HUGEINT) AS n,
-               CAST(SUM(y) AS HUGEINT) AS x
-        FROM e GROUP BY cohort
+               CAST(SUM(hit) AS HUGEINT) AS x
+        FROM e GROUP BY variant
     ),
     p AS (
         SELECT a.n AS n1, a.x AS x1, b.n AS n2, b.x AS x2
-        FROM g a JOIN g b ON a.cohort = 0 AND b.cohort = 1
+        FROM g a JOIN g b ON a.variant = 0 AND b.variant = 1
     )
     SELECT CAST(n1 AS BIGINT) AS n1, CAST(x1 AS BIGINT) AS x1,
            CAST(n2 AS BIGINT) AS n2, CAST(x2 AS BIGINT) AS x2,
@@ -3377,23 +3351,15 @@ def q_stat_prop_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the chisq skeleton — ONE map-combined cohort aggregate is
     the only corpus-sized exchange; the rest is a 2-row self-join and
     scalar algebra."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
-        .select(
-            (F.col("user_id") % 2).alias("cohort"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        )
-    )
     d38 = "decimal(38,0)"
-    g = e.groupBy("cohort").agg(
+    g = _parity_hits(spark, sf_dir).groupBy("variant").agg(
         F.count(F.lit(1)).cast(d38).alias("n"),
-        F.sum("y").cast(d38).alias("x"),
+        F.sum("hit").cast(d38).alias("x"),
     )
-    a = g.filter(F.col("cohort") == 0).select(
+    a = g.filter(F.col("variant") == 0).select(
         F.col("n").alias("n1"), F.col("x").alias("x1")
     )
-    b = g.filter(F.col("cohort") == 1).select(
+    b = g.filter(F.col("variant") == 1).select(
         F.col("n").alias("n2"), F.col("x").alias("x2")
     )
     p = a.crossJoin(b)
@@ -3416,21 +3382,17 @@ def q_stat_prop_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_odds_ratio",
-    oracle="""
-    WITH e AS (
-        SELECT user_id % 2 AS cohort,
-               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_PARITY_HITS_CTE},
     g AS (
-        SELECT cohort,
-               CAST(SUM(y) AS HUGEINT) AS a,
-               CAST(COUNT(*) - SUM(y) AS HUGEINT) AS b
-        FROM e GROUP BY cohort
+        SELECT variant,
+               CAST(SUM(hit) AS HUGEINT) AS a,
+               CAST(COUNT(*) - SUM(hit) AS HUGEINT) AS b
+        FROM e GROUP BY variant
     ),
     p AS (
         SELECT x.a AS a, x.b AS b, z.a AS c, z.b AS d
-        FROM g x JOIN g z ON x.cohort = 0 AND z.cohort = 1
+        FROM g x JOIN g z ON x.variant = 0 AND z.variant = 1
     )
     SELECT CAST(a AS BIGINT) AS n11, CAST(b AS BIGINT) AS n10,
            CAST(c AS BIGINT) AS n01, CAST(d AS BIGINT) AS n00,
@@ -3458,23 +3420,15 @@ def q_stat_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the prop_ztest skeleton — one map-combined cohort pivot,
     then 1×1 algebra."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
-        .select(
-            (F.col("user_id") % 2).alias("cohort"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        )
-    )
     d38 = "decimal(38,0)"
-    g = e.groupBy("cohort").agg(
-        F.sum("y").cast(d38).alias("a"),
-        (F.count(F.lit(1)) - F.sum("y")).cast(d38).alias("b"),
+    g = _parity_hits(spark, sf_dir).groupBy("variant").agg(
+        F.sum("hit").cast(d38).alias("a"),
+        (F.count(F.lit(1)) - F.sum("hit")).cast(d38).alias("b"),
     )
-    x = g.filter(F.col("cohort") == 0).select(
+    x = g.filter(F.col("variant") == 0).select(
         F.col("a").alias("a"), F.col("b").alias("b")
     )
-    z = g.filter(F.col("cohort") == 1).select(
+    z = g.filter(F.col("variant") == 1).select(
         F.col("a").alias("c"), F.col("b").alias("d")
     )
     p = x.crossJoin(z)
@@ -3497,25 +3451,10 @@ def q_stat_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_gtest",
-    oracle="""
-    WITH e AS (
-        SELECT user_id % 2 AS variant, event_type AS outcome
-        FROM events
-        WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-    ),
-    obs AS (
-        SELECT variant, outcome, CAST(COUNT(*) AS BIGINT) AS obs
-        FROM e GROUP BY variant, outcome
-    ),
-    tot AS (
-        SELECT variant, outcome, obs,
-               CAST(SUM(obs) OVER (PARTITION BY variant) AS BIGINT) AS r,
-               CAST(SUM(obs) OVER (PARTITION BY outcome) AS BIGINT) AS c,
-               CAST(SUM(obs) OVER () AS BIGINT) AS n
-        FROM obs
-    ),
+    oracle=f"""
+    WITH {_contingency_sql(*_AB_CELLS)},
     cells AS (
-        SELECT variant, outcome, obs,
+        SELECT x AS variant, y AS outcome, obs,
                CAST(floor(ln(CAST(obs AS DOUBLE) * n
                              / (CAST(r AS DOUBLE) * c))
                     * 1000000 + 0.5) AS BIGINT) AS term_e6
@@ -3550,28 +3489,10 @@ def q_stat_gtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks the event log to |variants| x |outcomes| cells; the
     marginal windows run over that tiny frame. At 100 TB the only
     cost is the counting shuffle."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
-    )
-    obs = (
-        ev.select(
-            (F.col("user_id") % 2).alias("variant"),
-            F.col("event_type").alias("outcome"),
-        )
-        .groupBy("variant", "outcome")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    )
-    tot = obs.select(
-        "variant",
-        "outcome",
-        "obs",
-        F.sum("obs").over(Window.partitionBy("variant")).cast("bigint").alias("r"),
-        F.sum("obs").over(Window.partitionBy("outcome")).cast("bigint").alias("c"),
-        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
+    tot = _contingency(spark, sf_dir, *_AB_CELLS)
     cells = tot.select(
-        "variant",
-        "outcome",
+        F.col("x").alias("variant"),
+        F.col("y").alias("outcome"),
         "obs",
         F.expr(
             "CAST(floor(ln(CAST(obs AS DOUBLE) * n"
@@ -3739,13 +3660,8 @@ def q_stat_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stat_wilson_ci",
-    oracle="""
-    WITH e AS (
-        SELECT user_id % 2 AS variant,
-               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS hit
-        FROM events
-        WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_PARITY_HITS_CTE},
     agg AS (
         SELECT variant, CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(hit) AS BIGINT) AS x
@@ -3790,19 +3706,9 @@ def q_stat_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-combined groupBy collapses the event log to
     |variants| (n, x) pairs; the interval is per-row scalar algebra
     on that tiny frame. The counting shuffle is the query."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
-    )
-    agg = (
-        ev.select(
-            (F.col("user_id") % 2).alias("variant"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("hit"),
-        )
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("hit").cast("bigint").alias("x"),
-        )
+    agg = _parity_hits(spark, sf_dir).groupBy("variant").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("hit").cast("bigint").alias("x"),
     )
     lo = (
         "CAST(floor(((CAST(x AS DOUBLE) / n + 3.8416 / (2.0 * n))"
@@ -4168,12 +4074,7 @@ _SPRT_A_E12 = round(math.log(0.95 / 0.05) * 1_000_000_000_000)
 @register(
     "q_stat_sprt",
     oracle=f"""
-    WITH e AS (
-        SELECT user_id % 2 AS variant,
-               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS hit
-        FROM events
-        WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-    ),
+    WITH {_PARITY_HITS_CTE},
     agg AS (
         SELECT variant, CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(hit) AS BIGINT) AS x
@@ -4216,22 +4117,10 @@ def q_stat_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-combined groupBy over the event log (2 rows out) —
     the giant-input/tiny-state shape; at 100 TB the test costs one
     scan and the LLR algebra is free."""
-    e = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
-    )
     d38 = "DECIMAL(38,0)"
-    agg = (
-        e.select(
-            (F.col("user_id") % 2).alias("variant"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .alias("hit"),
-        )
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("hit").cast("bigint").alias("x"),
-        )
+    agg = _parity_hits(spark, sf_dir).groupBy("variant").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("hit").cast("bigint").alias("x"),
     )
     llr = (
         f"CAST(x AS {d38}) * {_SPRT_C1_E12}"

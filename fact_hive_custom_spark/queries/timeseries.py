@@ -26,12 +26,11 @@ from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import (
     _US_PER_DAY,
+    _US_PER_HOUR,
     DAILY_CENTS_SQL,
     daily_cents,
     load_table,
 )
-
-_US_PER_HOUR = 3_600_000_000
 
 
 @register(
@@ -2285,10 +2284,36 @@ def q_ts_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_ts_holt_linear",
-    oracle="""
-    WITH RECURSIVE cell AS (
+def _priority_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(priority, pts): per order priority, its 1996-H1 daily order
+    revenue as the date-sorted array of (day, v) structs, v the exact
+    cent sum of the day's orders — the series the Holt smoothers fold.
+    The corpus-sized work is ONE map-combined groupBy to
+    |priorities|·|days| cells; each series is at most 181 structs.
+    _PRIORITY_DAYS_CTES is the DuckDB mirror."""
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate").isNotNull()
+        & F.col("o_orderpriority").isNotNull()
+        & F.col("o_totalprice").isNotNull()
+        & (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
+        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("date"))
+    )
+    cell = o.groupBy(
+        F.col("o_orderpriority").alias("priority"),
+        F.col("o_orderdate").alias("day"),
+    ).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("v")
+    )
+    return cell.groupBy("priority").agg(
+        F.sort_array(F.collect_list(F.struct("day", "v"))).alias("pts")
+    )
+
+
+# DuckDB CTEs `cell` and `pts(priority, day, v, t)`: the SQL twin of
+# _priority_days, one row per point, t its position in the series.
+_PRIORITY_DAYS_CTES = """cell AS (
         SELECT o_orderpriority AS priority, o_orderdate AS day,
                CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) AS v
@@ -2304,7 +2329,13 @@ def q_ts_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(row_number() OVER (
                    PARTITION BY priority ORDER BY day) AS BIGINT) AS t
         FROM cell
-    ),
+    )"""
+
+
+@register(
+    "q_ts_holt_linear",
+    oracle=f"""
+    WITH RECURSIVE {_PRIORITY_DAYS_CTES},
     rec AS (
         SELECT priority, t, day, v,
                CAST(v AS BIGINT) AS level, CAST(0 AS BIGINT) AS trend
@@ -2351,26 +2382,7 @@ def q_ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     state per calendar shard and chain (SCALING.md trade-off note);
     at 60M orders this plan never materializes more than 181 structs
     per series."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate").isNotNull()
-        & F.col("o_orderpriority").isNotNull()
-        & F.col("o_totalprice").isNotNull()
-        & (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("date"))
-    )
-    cell = o.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderdate").alias("day"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("v")
-    )
-    series = cell.groupBy("priority").agg(
-        F.sort_array(
-            F.collect_list(F.struct("day", "v"))
-        ).alias("pts")
-    )
+    series = _priority_days(spark, sf_dir)
     # fold state: rows = the emitted array, l/b = current level/trend,
     # t = position. l1 must be inlined twice in the trend update
     # (lambdas have no let-binding).
@@ -2671,23 +2683,7 @@ def _hw_oracle() -> str:
         + " END"
     )
     return f"""
-    WITH RECURSIVE cell AS (
-        SELECT o_orderpriority AS priority, o_orderdate AS day,
-               CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS v
-        FROM orders
-        WHERE o_orderdate IS NOT NULL AND o_orderpriority IS NOT NULL
-          AND o_totalprice IS NOT NULL
-          AND o_orderdate >= DATE '1996-01-01'
-          AND o_orderdate < DATE '1996-07-01'
-        GROUP BY 1, 2
-    ),
-    pts AS (
-        SELECT priority, day, v,
-               CAST(row_number() OVER (
-                   PARTITION BY priority ORDER BY day) AS BIGINT) AS t
-        FROM cell
-    ),
+    WITH RECURSIVE {_PRIORITY_DAYS_CTES},
     init AS (
         SELECT priority,
                CAST(floor(SUM(CASE WHEN t <= 7 THEN v ELSE 0 END) / 7.0)
@@ -2758,24 +2754,8 @@ def q_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to q_ts_holt_linear - one map-combined groupBy to
     |series| x |days| cells, then a per-series fold over <= 181
     structs; sequential per key, parallel across keys."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate").isNotNull()
-        & F.col("o_orderpriority").isNotNull()
-        & F.col("o_totalprice").isNotNull()
-        & (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("date"))
-    )
-    cell = o.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderdate").alias("day"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("v")
-    )
     series = (
-        cell.groupBy("priority")
-        .agg(F.sort_array(F.collect_list(F.struct("day", "v"))).alias("pts"))
+        _priority_days(spark, sf_dir)
         .filter(F.size("pts") >= 8)
         .withColumn(
             "l7",

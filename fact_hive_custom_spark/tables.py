@@ -159,6 +159,7 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
 
 
 _US_PER_DAY = 86_400_000_000
+_US_PER_HOUR = 3_600_000_000
 
 
 def event_cents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,8 +6,9 @@ order-insensitive value multiset must all match.
 
 Two tiers (r16, VERDICT r15 item 2 — the full 383-query sweep alone
 ran ~25 min and pushed the suite past the driver's verify window):
-the queries the driver itself benches (bench.HEADLINE) run in the
-default tier on every `pytest tests/`; the remaining registry runs
+the queries the driver itself benches (bench.HEADLINE), plus one
+consumer of each shared relation builder, run in the default tier on
+every `pytest tests/`; the remaining registry runs
 under FHC_SLOW_TESTS=1 (the exhaustive tier the builder runs at round
 close — tools/self_correctness.py additionally covers the FULL
 registry in the driver's own format)."""
@@ -20,7 +21,16 @@ import bench
 from fact_hive_custom_spark.queries import QUERIES
 from tests.parity import DEFAULT_SF_DIR, compare
 
-_FAST = set(bench.HEADLINE)
+# One cheap consumer of each shared relation builder that no headline
+# query runs, so a drift in a shared builder fails the default tier.
+_FAST = set(bench.HEADLINE) | {
+    "q_event_transitions",
+    "q_stat_chisq",
+    "q_stat_ks2",
+    "q_stat_prop_ztest",
+    "q_agg_gini",
+    "q_stat_kruskal",  # the chi-square critical table
+}
 
 
 @pytest.mark.parametrize(

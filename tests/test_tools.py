@@ -74,12 +74,69 @@ SHARED_RELATIONS = {
             r"AS d,\s*CAST\(round\(value \* 100\) AS BIGINT\) AS v\b",
         ],
     ),
-    "day-of-week contingency": (
+    "two-way contingency": (
         "fact_hive_custom_spark/queries/stats.py",
         [
             r'F\.sum\("obs"\)\.over\(Window\.partitionBy\("x"\)\)',
+            r'F\.sum\("obs"\)\.over\(Window\.partitionBy\(\)\)',
             r"SUM\(obs\) OVER \(PARTITION BY x\)",
+            r"SUM\(obs\) OVER \(\)",
         ],
+    ),
+    "event-type transitions": (
+        "fact_hive_custom_spark/queries/analytics.py",
+        [
+            r'F\.lead\("event_type"\)\.over\(w\)',
+            r"lead\(event_type\) OVER \(\s*"
+            r"PARTITION BY user_id ORDER BY us, event_id\)",
+        ],
+    ),
+    # q_graph_clustering_coeff and q_graph_triangles: orientation, the
+    # out-neighbour lists, and the oracle's triangle enumeration
+    "oriented triangles": (
+        "fact_hive_custom_spark/queries/analytics.py",
+        [
+            r'F\.sort_array\(F\.collect_list\("dst"\)\)',
+            r"JOIN e e3 ON e3\.u = e1\.u AND e3\.v = e2\.v",
+        ],
+    ),
+    "(type, cents) grid": (
+        "fact_hive_custom_spark/queries/stats.py",
+        [
+            r"vx\.crossJoin\(F\.broadcast\(tys\)\)",
+            r"FROM tys t CROSS JOIN vx v",
+        ],
+    ),
+    # q_stat_friedman's month blocks span a full year: another relation
+    "priority day cells": (
+        "fact_hive_custom_spark/queries/timeseries.py",
+        [
+            r'F\.col\("o_orderpriority"\)\.alias\("priority"\),\s*'
+            r'F\.col\("o_orderdate"\)\.alias\("day"\)',
+            r"o_orderpriority AS priority, o_orderdate AS day",
+        ],
+    ),
+    "parity cohorts": (
+        "fact_hive_custom_spark/queries/stats.py",
+        [
+            r'\(F\.col\("user_id"\) % 2\)\.alias\("\w+"\),\s*'
+            r'F\.when\(F\.col\("event_type"\) == "purchase"',
+            r"user_id % 2 AS \w+,\s*CASE WHEN event_type = 'purchase'",
+        ],
+    ),
+    "customer revenue": (
+        "fact_hive_custom_spark/queries/stats.py",
+        [
+            r'\.groupBy\("o_custkey"\)\s*\.agg\(\s*'
+            r'F\.sum\(F\.round\(F\.col\("o_totalprice"\) \* 100\)',
+            r"AS \w+\s+FROM orders\s+WHERE o_custkey IS NOT NULL"
+            r" AND o_totalprice IS NOT NULL\s+GROUP BY o_custkey",
+        ],
+    ),
+    # the chi-square 0.05 critical table; 5991465 is its df-2 entry
+    "chi-square criticals": (
+        "fact_hive_custom_spark/queries/stats.py",
+        [r"(?m)^_CHI2_CRIT_E6\s*=", r"\b5991465\b"],
     ),
     "int8 embedding grid": (
         "fact_hive_custom_spark/tables.py",
@@ -122,7 +179,12 @@ SHARED_RELATIONS = {
     ),
     "microseconds per day": (
         "fact_hive_custom_spark/tables.py",
-        [r"(?m)^_US_PER_DAY\s*=", r"\b86_?400_?000_?000\b"],
+        [
+            r"(?m)^_US_PER_DAY\s*=",
+            r"\b86_?400_?000_?000\b",
+            r"(?m)^_US_PER_HOUR\s*=",
+            r"\b3_?600_?000_?000\b",
+        ],
     ),
     # every nearest-centre assignment: min_by(cid, struct(dist, cid))
     "nearest centre": (

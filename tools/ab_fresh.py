@@ -14,6 +14,11 @@ JSON line per query:
     jobs             each pass's {"build": [jobs, stages],
                      "action": [jobs, stages]} (bench.phase_jobs)
 
+median, build_median and action_median are each taken separately
+(statistics.median: the mean of the middle two for an even pass
+count), so the parts can come from different passes and need not add
+up to the total.
+
 Any bench.py row works, the q_join_bucketed build/probe split included.
 
 Usage:
@@ -42,6 +47,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -61,9 +67,6 @@ def main() -> int:
     spark = get_session("ab-fresh", quiet=True)
     run_query(spark, "q_agg_flagship", sf_dir)  # warmup, untimed (bench.py parity)
 
-    def median(xs: list[float]) -> float:
-        return sorted(xs)[len(xs) // 2]
-
     for name in args.queries:
         splits, compiles, jobs = [], [], []
         for _ in range(args.passes):
@@ -78,9 +81,9 @@ def main() -> int:
                     "query": name,
                     "sf_dir": sf_dir,
                     "passes": times,
-                    "median": median(times),
-                    "build_median": median([b for b, _ in splits]),
-                    "action_median": median([a for _, a in splits]),
+                    "median": statistics.median(times),
+                    "build_median": statistics.median([b for b, _ in splits]),
+                    "action_median": statistics.median([a for _, a in splits]),
                     "compiles": compiles,
                     "jobs": jobs,
                 }
