@@ -2,13 +2,21 @@
 SparkContext.
 
 `materialize(df)` is the engine's only way to reuse an intermediate
-(shingle sets, day series, vocab tables, the PQ quantized corpus,
-graph edge lists, iterative centroids/frontiers). The engine never
-calls `persist()`/`cache()`: their CacheManager entry is keyed on the
-plan, which names the parquet path, so it outlives the query — a
-fixture rewritten in place is then answered from the old cache, and
-one pass reads the blocks a previous pass built instead of doing its
-own work. A checkpoint belongs to the DataFrame that made it and
+(shingle sets, the Theil-Sen and Mann-Kendall day series, BPE vocab
+tables, the k-means and PQ quantized corpora, graph edge lists, the
+Markov transition matrix, sketch relations, per-round centroids,
+codebooks, BFS frontiers and k-core edges). Each call costs at least
+one eager job, so each call site names the measurement that keeps it.
+"Measured against the identity" gives per-run medians, materialized vs
+lazy, of paired fresh-JVM runs (`tools/ab_fresh.py --passes 3`, 4
+cores, 3 alternated pairs); calls that tied or lost that A/B were
+deleted, and `tests/test_tools.py` pins the count per file.
+
+The engine never calls `persist()`/`cache()`: their CacheManager entry
+is keyed on the plan, which names the parquet path, so it outlives the
+query — a fixture rewritten in place is then answered from the old
+cache, and one pass reads the blocks a previous pass built instead of
+doing its own work. A checkpoint belongs to the DataFrame that made it and
 nothing else can match it. `tests/test_tools.py` fails on any
 persist or cache call in the package.
 

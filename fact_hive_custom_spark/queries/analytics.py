@@ -334,10 +334,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the aggregated graph once and CUT the lineage:
     # without this, every iteration re-derives edges from the RAW
     # events (window + groupBy × 3 = three full corpus passes at
-    # 100 TB). localCheckpoint (same device as connected_components,
-    # operators/graph.py) pins the |types|² frames on executors and
-    # keeps each iteration's plan rooted at the tiny materialized
-    # RDDs — the big input is scanned exactly once.
+    # 100 TB). materialize() (same device as connected_components,
+    # operators/graph.py) keeps each iteration's plan rooted at the
+    # tiny materialized |types|² frames — the big input is scanned
+    # exactly once.
     edges = _transition_counts(e).transform(materialize)
     outw = edges.groupBy("from_type").agg(
         F.sum("n").cast("bigint").alias("ow")
@@ -563,11 +563,9 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # r15: materialize the edge list once. The round-6 ADVICE
         # dropped a MEMORY_AND_DISK persist here because cached blocks
-        # leaked across the suite; localCheckpoint frees on RDD GC
-        # (the label-prop convention — which checkpointed this same
-        # relation at ITS call site for exactly this reason). Without
-        # it the triangles consumer replayed the bucket-join pair
-        # build per reference: 54 scans / 110 exchanges in the
+        # leaked across the suite; a local materialize() frees on RDD
+        # GC. Without it the triangles consumer replayed the bucket-join
+        # pair build per reference: 54 scans / 110 exchanges in the
         # initial plan at commit 10bd700 (`python tools/explain_dump.py
         # <out_dir> before q_graph_triangles`);
         # ReuseExchange recovered only part (14 shuffles + 10
@@ -1708,14 +1706,14 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs loop to fixpoint with the same per-round body — each round
     is degree-count + two semi-joins, all keyed on node id.
 
-    Scale: each round's edge frame is localCheckpoint-ed (the
+    Scale: each round's edge frame is materialize()d (the
     pagerank/connected-components lineage cap) so round r+1's plan
     roots at materialized edges, not a 4×-replayed window over the
     raw corpus; degrees are map-combined counts and survivors join
     back as semi-joins on the edge's own hash layout. The raw events
     are scanned exactly ONCE (edge build); every later pass is
     |edges|-sized."""
-    edges = _cooccurrence_edges(spark, sf_dir)  # checkpointed inside
+    edges = _cooccurrence_edges(spark, sf_dir)  # materialized inside
     outs = []
     for r in range(1, _KCORE_ROUNDS + 1):
         deg = (
@@ -1820,14 +1818,14 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the events corpus builds edges ONCE; each hop is
     |edges| ⨝ |frontier| keyed on node id with the visited set as an
     anti-join — no per-node state ever sits on the driver, and each
-    round's frontier/visited frames are localCheckpoint-ed so round
-    r+1 plans root at materialized node sets (the pagerank lineage
-    cap). Degenerate seeds (isolated min-id node) just produce empty
-    frontiers — every round still emits its histogram row."""
-    edges = _cooccurrence_edges(spark, sf_dir)  # checkpointed inside
-    visited = (
-        edges.agg(F.min("u").alias("node")).transform(materialize)
-    )
+    round's frontier is materialize()d, so round r+1 joins a
+    materialized node set. Degenerate seeds (isolated min-id node)
+    just produce empty frontiers — every round still emits its
+    histogram row."""
+    edges = _cooccurrence_edges(spark, sf_dir)  # materialized inside
+    # Measured against the identity: sf1.0 5.62/5.04/5.56 vs 5.83/6.22/5.66 s
+    # (sf0.1 lazy-better: 2.85/2.60/2.46 vs 2.50/2.58/2.35).
+    visited = edges.agg(F.min("u").alias("node")).transform(materialize)
     frontier = visited
     outs = [
         visited.select(
@@ -1850,8 +1848,10 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
+        # Measured against the identity: sf0.1 3.44/3.78/3.13 vs
+        # 4.56/4.81/4.57 s, sf1.0 7.33/7.41/6.09 vs 7.86/8.42/7.87.
         frontier = nbrs.join(visited, "node", "left_anti").transform(materialize)
-        visited = visited.unionAll(frontier).transform(materialize)
+        visited = visited.unionAll(frontier)
         outs.append(
             frontier.agg(
                 F.lit(r).cast("bigint").alias("dist"),
@@ -1935,10 +1935,9 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: events scanned ONCE (edge build), then every round is one
     |2·edges+nodes|-row join + map-combined MIN groupBy keyed on
-    node id; labels and adjacency are localCheckpoint-ed so round
-    r+1 roots at materialized frames (lineage cap). At 100 TB the
-    per-round exchange carries (node, label) pairs only."""
-    edges = _cooccurrence_edges(spark, sf_dir)  # checkpointed inside
+    node id. At 100 TB the per-round exchange carries (node, label)
+    pairs only."""
+    edges = _cooccurrence_edges(spark, sf_dir)  # materialized inside
     nodes = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select("v"))
@@ -1948,7 +1947,6 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("u").alias("node"), F.col("v").alias("other"))
         .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("other")))
         .unionAll(nodes.select("node", F.col("node").alias("other")))
-        .transform(materialize)
     )
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(_LP_ROUNDS):
@@ -1961,7 +1959,6 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("node")
             .agg(F.min("olbl").alias("label"))
-            .transform(materialize)
         )
     return (
         labels.groupBy("label")
@@ -2041,6 +2038,8 @@ def q_event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("c"),
     )
     st = tc.select(F.col("f").alias("s")).distinct()
+    # Measured against the identity: sf0.1 1.85/1.69/1.55 vs 2.22/2.48/2.20
+    # s, sf1.0 4.85/4.21/4.07 vs 7.18/7.39/6.83.
     tm = (
         tc.join(st, tc["t"] == st["s"], "left_semi")
         .select(
@@ -2062,7 +2061,6 @@ def q_event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast(d38)
                 .alias("v")
             )
-            .transform(materialize)
         )
     tot = v.agg(F.sum("v").cast(d38).alias("tv"))
     return (

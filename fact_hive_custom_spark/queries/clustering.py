@@ -55,13 +55,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables.int8_grid, the grid of the PQ family and PCA; the +127
     shift makes every component non-negative so the fixed-point mean
     rounding below is floor-division-portable across engines.
-    Materialized eagerly (r15): every Lloyd round re-reads it, and
-    the paired A/B preferred localCheckpoint over the round-9 lazy
-    persist — q_llm_kmeans warm 3.9–5.3 → 2.7–3.0 s and the 13 s
-    cold cliff gone, because truncating the lineage removes the
-    contract+quantize subtree from every round's plan analysis and
-    broadcast builds (same result as the PQ family's q, corpus.py).
-    Blocks free on RDD GC; set `spark.checkpoint.dir` on a cluster.
+    Materialized, because every Lloyd round re-reads it.
     """
     emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
     q = (
@@ -72,11 +66,8 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         # runs on all cores (measured lesson from q_llm_semdedup)
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    # r16 re-measure (driver PERF_r15 flagged 0.72×): paired fresh-JVM
-    # A/B of localCheckpoint vs eager persist+count vs lazy persist,
-    # 3 alternated rounds — no variant separable from host noise; the
-    # quietest round ordered checkpoint 4.05 < persist 4.94 < lazy
-    # 6.24 s, agreeing with the r15 warm A/B. Kept.
+    # Measured against the identity (q_llm_kmeans): sf0.1 1.83/1.80/1.77
+    # vs 2.74/2.36/2.02 s, sf1.0 4.39/4.16/4.74 vs 5.92/5.33/5.61.
     return q.transform(materialize)
 
 
@@ -144,8 +135,8 @@ def _kmeans_parts(spark: SparkSession, sf_dir: str, rounds: int = _KM_T):
     )
     for _ in range(rounds):
         assigned = _assign(q, _centroids(cent))
-        # Lineage cap (the q_graph_kcore discipline): eagerly
-        # localCheckpoint the K×D-row centroid relation each round so
+        # Lineage cap (the q_graph_kcore discipline): materialize()
+        # the K×D-row centroid relation each round so
         # a cold one-shot caller pays T small jobs (one materialized-corpus
         # scan each) instead of one deeply nested DAG whose analysis
         # and nested broadcasts produced a 41 s/18 s cold-run cliff

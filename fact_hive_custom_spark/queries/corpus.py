@@ -322,26 +322,22 @@ def q_llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation (doc length + one tf counter per query
     term in the same groupBy), so the corpus is tokenized once and
     shuffles once on doc_id with map-side partial aggregation. The
-    (n_docs, avgdl, per-term df) scalar derives from that frame and
-    broadcasts back; stack() unpivots the tf columns into (term, tf,
-    df) rows for scoring. Ranking is per-term row_number over the
+    (n_docs, avgdl, per-term df) scalar derives from that frame (its
+    doc_id exchange is reused, not re-run) and broadcasts back;
+    stack() unpivots the tf columns into (term, tf, df) rows for
+    scoring. Ranking is per-term row_number over the
     ROUNDED score with a doc_id tiebreak — deterministic on both
     engines. (The relational oracle recomputes tf/df/dl from scratch —
     same numbers, different plan; the driver compares values only.)"""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    # materialized: feeds both the corpus-stats scalar and the scoring
-    # unpivot — without it the tokenize+aggregate pass runs twice
-    # (observed as two doc_id exchanges in the plan). One row per doc
-    # (id + 4 longs ≈ 40 B), so it is corpus-count-sized, not
-    # corpus-sized.
     per_doc = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
         *[
             F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf_{t}")
             for t in _BM25_TERMS
         ],
-    ).transform(materialize)
+    )
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -1490,7 +1486,7 @@ def _pq_lloyd(sub: DataFrame, csub: DataFrame, rounds: int) -> DataFrame:
                 ).alias("cv")
             )
             # Lineage cap (the q_graph_kcore discipline): the ≤M·K-row
-            # codebook is eagerly localCheckpoint-ed per round so a
+            # codebook is materialize()d per round so a
             # cold one-shot caller pays `rounds` small jobs instead of
             # one nested DAG re-deriving every earlier round inside
             # each broadcast (BENCH_r09's 41 s cold max vs 5 s median).

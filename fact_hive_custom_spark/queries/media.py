@@ -152,10 +152,9 @@ def q_llm_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (CASE WHEN element_at(qs, cast(i as int)) * 64 >= total"
         " THEN 1L ELSE 0L END) * shiftleft(1L, {top} - cast(i as int)))"
     )
-    # Materialized sketch relation (3 longs per asset): the banding
-    # self-join would otherwise recompute the whole
-    # decode→quantize→pack pipeline once per side, including its
-    # corpus-wide 1-row aggregate.
+    # Materialized sketch relation (3 longs per asset), read by both
+    # sides of the banding self-join. Measured against the identity: sf0.1
+    # 0.90/0.91/0.83 vs 2.74/3.15/2.76 s, sf1.0 3.2/2.7/3.0 vs 28.0/24.5/20.4.
     hl = q.select(
         "media_id",
         F.expr("aggregate(qs, 0L, (acc, x) -> acc + x)").alias("total"),

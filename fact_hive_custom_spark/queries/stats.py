@@ -18,7 +18,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fact_hive_custom_spark.materialize import materialize
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import (
     _US_PER_DAY,
@@ -1952,7 +1951,7 @@ def q_stat_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lag window, and the final aggregate all run on the
     calendar-bounded day series under one event_type partitioning;
     the median attaches by broadcast."""
-    s = daily_cents(spark, sf_dir).transform(materialize)
+    s = daily_cents(spark, sf_dir)
     wcum = Window.partitionBy("event_type").orderBy("y").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

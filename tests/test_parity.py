@@ -7,7 +7,8 @@ order-insensitive value multiset must all match.
 Two tiers (r16, VERDICT r15 item 2 — the full 383-query sweep alone
 ran ~25 min and pushed the suite past the driver's verify window):
 the queries the driver itself benches (bench.HEADLINE), plus one
-consumer of each shared relation builder, run in the default tier on
+consumer of each shared relation builder and each query that lost a
+materialize() call, run in the default tier on
 every `pytest tests/`; the remaining registry runs
 under FHC_SLOW_TESTS=1 (the exhaustive tier the builder runs at round
 close — tools/self_correctness.py additionally covers the FULL
@@ -22,7 +23,8 @@ from fact_hive_custom_spark.queries import QUERIES
 from tests.parity import DEFAULT_SF_DIR, compare
 
 # One cheap consumer of each shared relation builder that no headline
-# query runs, so a drift in a shared builder fails the default tier.
+# query runs, so a drift in a shared builder fails the default tier;
+# and each non-headline query whose materialize() calls were deleted.
 _FAST = set(bench.HEADLINE) | {
     "q_event_transitions",
     "q_stat_chisq",
@@ -30,6 +32,10 @@ _FAST = set(bench.HEADLINE) | {
     "q_stat_prop_ztest",
     "q_agg_gini",
     "q_stat_kruskal",  # the chi-square critical table
+    "q_graph_bfs",  # the visited set is no longer materialized
+    "q_event_markov_stationary",  # nor are the power rounds
+    "q_stat_runs",  # nor the day series
+    "q_llm_bm25_topk",  # nor the per-doc term counts
 }
 
 

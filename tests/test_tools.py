@@ -62,6 +62,34 @@ def test_no_cache_calls_in_engine():
     assert not found, found
 
 
+# Every materialize() call in the package, per file. Each call costs at
+# least one eager job, so each one carries a measured reason at its call
+# site; a new call fails here until it is added together with that reason.
+MATERIALIZE_SITES = {
+    "fact_hive_custom_spark/operators/dedup.py": 2,
+    "fact_hive_custom_spark/operators/graph.py": 2,
+    "fact_hive_custom_spark/operators/similarity.py": 2,
+    "fact_hive_custom_spark/queries/aggregates.py": 2,
+    "fact_hive_custom_spark/queries/analytics.py": 9,
+    "fact_hive_custom_spark/queries/clustering.py": 3,
+    "fact_hive_custom_spark/queries/corpus.py": 4,
+    "fact_hive_custom_spark/queries/llm_ops.py": 1,
+    "fact_hive_custom_spark/queries/media.py": 1,
+    "fact_hive_custom_spark/queries/sources_sinks.py": 1,
+    "fact_hive_custom_spark/queries/timeseries.py": 2,
+}
+MATERIALIZE_CALL = re.compile(r"\.transform\(materialize\)|(?<![\w.`])(?<!def )materialize\((?!\))")
+
+
+def test_materialize_site_inventory():
+    found = {
+        str(path.relative_to(ROOT)): n
+        for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py"))
+        if (n := len(MATERIALIZE_CALL.findall(path.read_text())))
+    }
+    assert found == MATERIALIZE_SITES, found
+
+
 # A relation several queries share has one Spark builder and one DuckDB
 # fragment, in the file named here; each pattern is a defining line of
 # one of them, so a second match anywhere in the package is a hand copy.
