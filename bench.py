@@ -155,11 +155,11 @@ HEADLINE = [
     # that re-derives the series per step shows as a multiple)
     "q_ir_rbo",
     "q_ts_holt_winters",
-    # round-14: the two-phase cogroup (census broadcast + salted
-    # pandas partials + JVM merge — a regression shuffling the census
-    # as a join, or a salt that stops engaging, shows here as a step
-    # change; the skew half of the contract is pinned in
-    # tests/test_skew.py)
+    # the co-grouped pandas UDF: one Python call per hash bucket
+    # (shuffle.partitions calls), per-key partials, one JVM merge. A
+    # regression back to one call per key costs ~1 ms per group and
+    # shows here as a step change (14,999 groups at sf0.1); the skew
+    # half of the contract is pinned in tests/test_skew.py
     "q_udf_cogroup",
 ]
 

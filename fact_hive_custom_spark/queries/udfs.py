@@ -17,13 +17,6 @@ from pyspark.sql.functions import pandas_udf, udtf
 from fact_hive_custom_spark.queries.registry import register
 from fact_hive_custom_spark.tables import load_table
 
-# q_udf_cogroup hot-key census threshold: a key whose row count on
-# either side exceeds this gets a 32-way salt before the pandas
-# cogroup, bounding every task's frame. 100k rows ≈ a few MB of Arrow
-# batch — comfortably one task — while the census keeps uniform
-# fixtures (every key far below it) on the salt-0 single-group plan.
-_COGROUP_HOT_ROWS = 100_000
-
 
 @register(
     "q_udf_python",
@@ -182,6 +175,53 @@ def q_udf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def cogroup_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q_udf_cogroup before its merge: each pandas call's per-key
+    partial rows (k, kn = key IS NULL, side 0 orders / 1 events, and
+    the four sums). A key has one row per (bucket, side) it reached."""
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def side(table: str, key: str, row_id: str, value: str, scale: int):
+        return (
+            load_table(spark, sf_dir, table)
+            .select(
+                F.coalesce(key, F.lit(0)).alias("k"),
+                F.col(key).isNull().alias("kn"),
+                F.coalesce(
+                    F.round(F.col(value) * scale).cast("bigint"), F.lit(0)
+                ).alias("v"),
+                F.pmod(
+                    F.xxhash64(key, F.pmod(row_id, F.lit(32))), F.lit(nparts)
+                ).alias("bucket"),
+            )
+            .repartition(nparts, "bucket")
+            .groupBy("bucket")
+        )
+
+    def reconcile_bucket(o_pdf: pd.DataFrame, e_pdf: pd.DataFrame) -> pd.DataFrame:
+        def fold(pdf, n, s, tag):
+            return pdf.groupby(["k", "kn"], sort=False)["v"].agg(
+                **{n: "size", s: "sum"}
+            ).assign(side=tag)
+
+        return pd.concat(
+            [
+                fold(o_pdf, "n_orders", "spend_c", 0).assign(n_events=0, value_e4=0),
+                fold(e_pdf, "n_events", "value_e4", 1).assign(n_orders=0, spend_c=0),
+            ]
+        ).reset_index()
+
+    return (
+        side("orders", "o_custkey", "o_orderkey", "o_totalprice", 100)
+        .cogroup(side("events", "user_id", "event_id", "value", 10000))
+        .applyInPandas(
+            reconcile_bucket,
+            schema="k bigint, kn boolean, side int, n_orders bigint,"
+            " spend_c bigint, n_events bigint, value_e4 bigint",
+        )
+    )
+
+
 @register(
     "q_udf_cogroup",
     oracle="""
@@ -205,146 +245,56 @@ def q_udf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_udf_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-grouped map (`groupBy().cogroup().applyInPandas`): the
-    two-sided grouped UDF — each key's order history and event history
-    arrive together as two pandas frames, the shape of reconciliation
-    jobs (ledger vs activity) where neither side's aggregate alone
-    suffices. Keys present on either side are emitted (cogroup is a
-    full-outer alignment).
+    two-sided grouped UDF. Each side's rows arrive together as two
+    pandas frames, the shape of reconciliation jobs (ledger vs
+    activity) where neither side's aggregate alone suffices. Keys
+    present on either side are emitted (a full-outer alignment).
 
-    TWO-PHASE under skew (round 14, VERDICT r13 item 2): the
-    reconciliation here is a commutative-monoid fold (counts + integer
-    sums), so the cogroup can run on a SUB-KEYED grain and merge
-    per-key afterward. A map-combined census counts rows per key on
-    each side; keys above _COGROUP_HOT_ROWS on either side get a
-    content-deterministic 32-way salt (pmod of o_orderkey/event_id —
-    stable across retries, unlike rand()), all other keys salt 0 so
-    the uniform-data plan pays only the census. The pandas stage then
-    emits per-(key, salt) PARTIALS — every task's frame is bounded by
-    max(_COGROUP_HOT_ROWS, rows/32) even when one key holds 20% of a
-    side (the round-13 measured 1.31× straggler) — and a tiny JVM
-    groupBy merges ≤ 32 partial rows per key exactly (integer
-    cents/1e-4 units end-to-end, so the merge is associative and the
-    SQL oracle is unchanged). Non-decomposable cogroup logic (true
-    sequence alignment) cannot take this rewrite and keeps the
-    documented per-key bound — that contract lives here, in the one
-    query that demonstrates the operator.
+    Cost model: the operator makes one Python call per cogroup group,
+    about 1 ms each, plus the pandas groupby work per row inside the
+    call. Grouped by (key, salt) it would make 14,999 calls at sf0.1
+    (15 s on 4 cores). So each side groups by a BUCKET in
+    [0, P = shuffle.partitions), and the call folds its bucket with
+    one pandas groupby per side: P calls in all, whatever the key
+    count (1.4 s at sf0.1). The fold is a commutative monoid (counts
+    plus integer cents and 1e-4 units), so the call emits per-key
+    partials tagged with their side and one JVM aggregate merges them
+    exactly.
 
-    Plan: two map-combined census aggs (tiny output, broadcast), both
-    sides shuffle ONCE on (key, salt) into a single Arrow-batched
-    FlatMapCoGroupsInPandas, one hash-agg merge. At 100 TB this is
-    still two co-partitioned data-sized exchanges and no join.
+    Frame bound: a call holds its whole bucket, about rows / P of each
+    side, so on a cluster the partition count sizes the pandas frames.
+    Every row carries a salt, pmod(o_orderkey or event_id, 32):
+    content-deterministic, so stable across retries, unlike rand().
+    The bucket is pmod(xxhash64(key, salt), P), so a hot key spreads
+    over up to min(32, P) buckets instead of landing whole in one
+    call, and the merge re-sums its partials (sf1.0 hot-key fixture,
+    one user with 20% of events: 1.03× the uniform wall).
+    Non-decomposable cogroup logic (true sequence alignment) cannot
+    take this rewrite and must keep a per-key group.
 
-    The (key, salt) exchange is a USER-SPECIFIED repartition, not the
+    NULL keys: the oracle's FULL OUTER JOIN never matches NULL to
+    NULL, so a NULL key yields one row per side that has it. Pandas
+    would hand a NULL bigint over as float NaN, so the key crosses as
+    (coalesce(key, 0), key IS NULL) and stays int64; the merge groups
+    on (custkey, CASE WHEN custkey IS NULL THEN side END). NULL values
+    count as rows and add 0, as COUNT(*) and COALESCE(SUM, 0) do.
+
+    The bucket exchange is a USER-SPECIFIED repartition, not the
     cogroup's implicit one, and that is load-bearing (measured, round
     14): AQE's byte-based partition coalescing saw the collapsed
     keyed rows as "small" and merged the pandas stage down to ~one
-    task — but this operator's cost is ~1 ms of Python per GROUP, not
-    bytes, so coalescing serialized 15k groups (28.6 s at sf0.1;
-    3.1 s with coalescing off). A repartition with an explicit
-    partition count is exempt from AQE coalescing and satisfies the
-    cogroup's ClusteredDistribution, so the implicit exchange is
-    elided and parallelism is pinned at spark.sql.shuffle.partitions
-    (2.4 s warm — 7× off the coalesced wall, same result). The rule
-    generalizes: byte heuristics undersize any Python-cost-dominated
-    stage; pin its width explicitly."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
-    )
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.round(F.col("value") * 10000).cast("bigint").alias("v_e4"),
-    )
-
-    hot = (
-        o.groupBy(F.col("o_custkey").alias("hk"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .unionByName(
-            e.groupBy(F.col("user_id").alias("hk")).agg(
-                F.count(F.lit(1)).alias("c")
-            )
-        )
-        .groupBy("hk")
-        .agg(F.max("c").alias("c"))
-        .filter(F.col("c") > _COGROUP_HOT_ROWS)
-        .select("hk")
-    )
-    # NULL-key straggler bound (round 15, ADVICE): the == census join
-    # never matches a NULL custkey/user_id, so a pathologically hot
-    # NULL key would land all its rows in one pandas group. Rather
-    # than a null-safe join (measured: eqNullSafe's composite hash key
-    # taxed every probe row, ~22 → ~27 s at sf1.0), salt ALL NULL-key
-    # rows unconditionally — NULL keys are anomaly rows, fanning even
-    # a cold one across 32 salts adds ≤31 tiny groups and the merge
-    # agg re-sums them; results are exact either way. coalesce(salt,0)
-    # likewise covers a NULL orderkey/event_id on a salted row.
-    os_ = o.join(
-        F.broadcast(hot), o["o_custkey"] == hot["hk"], "left"
-    ).select(
-        "o_custkey",
-        "price_c",
-        F.when(
-            F.col("hk").isNotNull() | F.col("o_custkey").isNull(),
-            F.coalesce(F.pmod(F.col("o_orderkey"), F.lit(32)), F.lit(0)),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("salt"),
-    )
-    es_ = e.join(
-        F.broadcast(hot), e["user_id"] == hot["hk"], "left"
-    ).select(
-        "user_id",
-        "v_e4",
-        F.when(
-            F.col("hk").isNotNull() | F.col("user_id").isNull(),
-            F.coalesce(F.pmod(F.col("event_id"), F.lit(32)), F.lit(0)),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("salt"),
-    )
-
-    def reconcile_partial(
-        key, o_pdf: pd.DataFrame, e_pdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        return pd.DataFrame(
-            [
-                {
-                    # key[0] can be None on a NULL-key fixture; keep it a
-                    # real NULL group (the merge agg preserves it).
-                    "custkey": None if key[0] is None else int(key[0]),
-                    "n_orders": len(o_pdf),
-                    "spend_c": int(o_pdf["price_c"].sum()) if len(o_pdf) else 0,
-                    "n_events": len(e_pdf),
-                    "value_e4": int(e_pdf["v_e4"].sum()) if len(e_pdf) else 0,
-                }
-            ]
-        )
-
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    partials = (
-        os_.repartition(nparts, "o_custkey", "salt")
-        .groupBy("o_custkey", "salt")
-        .cogroup(
-            es_.repartition(nparts, "user_id", "salt").groupBy(
-                "user_id", "salt"
-            )
-        )
-        .applyInPandas(
-            reconcile_partial,
-            schema="custkey bigint, n_orders bigint, spend_c bigint,"
-            " n_events bigint, value_e4 bigint",
-        )
-    )
-    return partials.groupBy("custkey").agg(
-        F.sum("n_orders").cast("bigint").alias("n_orders"),
-        F.sum("spend_c").cast("bigint").alias("spend_c"),
-        F.sum("n_events").cast("bigint").alias("n_events"),
-        F.sum("value_e4").cast("bigint").alias("value_e4"),
-    )
+    task, serializing its Python work (28.6 s at sf0.1; 3.1 s with
+    coalescing off). A repartition with an explicit partition count
+    is exempt from AQE coalescing and satisfies the cogroup's
+    ClusteredDistribution, so the implicit exchange is elided and the
+    width stays at spark.sql.shuffle.partitions. Byte heuristics
+    undersize any Python-cost-dominated stage; pin its width."""
+    return cogroup_partials(spark, sf_dir).groupBy(
+        F.when(~F.col("kn"), F.col("k")).alias("custkey"),
+        F.when(F.col("kn"), F.col("side")).alias("null_side"),
+    ).agg(
+        *[F.sum(c).alias(c) for c in ("n_orders", "spend_c", "n_events", "value_e4")]
+    ).drop("null_side")
 
 
 @register(

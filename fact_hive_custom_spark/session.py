@@ -36,6 +36,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g. A fixed 48g let
+    the local-mode JVM grow until the kernel killed it on a 15 GB host
+    (sf1.0, 11 queries in one process)."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 48 << 30) >> 20}m"
+
+
 def get_session(
     app_name: str = "fact_hive_custom_spark",
     quiet: bool = False,
@@ -43,9 +51,9 @@ def get_session(
     """Build (or fetch) the engine's SparkSession.
 
     Runs on local[$SPARK_GRAFT_CPUS] (all local cores when unset) with
-    driver memory $SPARK_DRIVER_MEMORY (48g when unset). All settings
-    are stock Spark; none are required for correctness, only for
-    performance posture (SURVEY.md §4).
+    driver memory $SPARK_DRIVER_MEMORY (`default_driver_memory()` when
+    unset). All settings are stock Spark; none are required for
+    correctness, only for performance posture (SURVEY.md §4).
 
     `quiet=True` lowers the WindowExec logger to ERROR; the bench and
     tooling entry points pass it.
@@ -67,7 +75,10 @@ def get_session(
         # Deterministic timestamp semantics vs external oracles.
         .config("spark.sql.session.timeZone", "UTC")
         # Local mode: driver JVM is the only process; give it headroom.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         # Reliable checkpoints (materialize() with spark.checkpoint.dir
         # set) delete their files when the checkpointed RDD is GC'd.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")

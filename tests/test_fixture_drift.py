@@ -350,6 +350,8 @@ NULLABLE_EVT_QUERIES = [
     "q_stat_power_mde",
     # round-14 event consumers
     "q_stat_sprt",
+    # the co-grouped pandas UDF: a NULL user_id is its own output row
+    "q_udf_cogroup",
 ]
 
 
@@ -427,6 +429,8 @@ NULLABLE_ORD_QUERIES = [
     "q_sql_qualify",
     "q_ts_ljung_box",
     "q_ts_holt_winters",
+    # the co-grouped pandas UDF: a NULL o_custkey is its own output row
+    "q_udf_cogroup",
 ]
 
 
@@ -455,6 +459,39 @@ def null_orders_dir(tmp_path_factory):
 def test_null_orders_parity(spark, null_orders_dir, name):
     ok, detail = compare(spark, name, null_orders_dir)
     assert ok, f"{name} on NULL-laden orders: {detail}"
+
+
+@pytest.fixture(scope="module")
+def null_keys_both_sides_dir(tmp_path_factory):
+    """sf0.001 plus one order with a NULL o_custkey and one event with
+    a NULL user_id: a FULL OUTER JOIN on those keys never matches NULL
+    to NULL, so the oracle answers with two NULL-key rows."""
+    d = tmp_path_factory.mktemp("drift_null_keys")
+    sf_dir = _clone_fixture(d)
+    for table, key, row_id in (
+        ("orders", "o_custkey", "o_orderkey"),
+        ("events", "user_id", "event_id"),
+    ):
+        t = pq.read_table(f"{_SRC}/{table}.parquet")
+        base = t.to_pydict()
+        for col in base:
+            base[col].append(base[col][0])
+        base[row_id][-1] = max(base[row_id]) + 1
+        base[key][-1] = None
+        pq.write_table(
+            pa.table(base, schema=t.schema), f"{sf_dir}/{table}.parquet"
+        )
+    return sf_dir
+
+
+def test_cogroup_null_keys_on_both_sides(spark, null_keys_both_sides_dir):
+    from fact_hive_custom_spark.queries import QUERIES
+
+    ok, detail = compare(spark, "q_udf_cogroup", null_keys_both_sides_dir)
+    assert ok, f"q_udf_cogroup with NULL keys on both sides: {detail}"
+    rows = QUERIES["q_udf_cogroup"](spark, null_keys_both_sides_dir)
+    null_rows = rows.filter("custkey IS NULL").collect()
+    assert sorted((r.n_orders, r.n_events) for r in null_rows) == [(0, 1), (1, 0)]
 
 
 # Lineitem consumers probed against NULL-laden rows (2026-08-14): all

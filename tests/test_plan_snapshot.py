@@ -183,10 +183,12 @@ def test_no_unvetted_width_collapse_risk(spark, name):
 
 
 def test_width_net_fires_on_unpinned_cogroup(spark):
-    """Negative control (round-15 verdict item 2 'done' criterion): a
-    copy of q_udf_cogroup WITHOUT its user-specified (key, salt)
-    repartition must be flagged — proving the net would have caught
-    the worst round-14 collapse before it was measured."""
+    """Negative control: a cogroup like q_udf_cogroup's WITHOUT its
+    user-specified repartition must be flagged, proving the net would
+    have caught the worst round-14 collapse (AQE merged the pandas
+    stage to one task) before it was measured. The production query
+    pins its bucket exchange at shuffle.partitions; this control keys
+    on the raw customer id, which is enough to show the shape."""
     import pandas as pd
     from pyspark.sql import functions as F
 

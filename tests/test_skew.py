@@ -17,7 +17,9 @@ tools/skew_sweep.py — these tests pin the MECHANISMS):
   finalized plan) once its byte thresholds see the skew — at cluster
   scale the defaults (256 MB) see a 20-TB hot key without tuning;
 - the salted remedies stay EXACT on the hot key: salted_join /
-  salted_aggregate equal their plain equivalents on the skewed data.
+  salted_aggregate equal their plain equivalents on the skewed data,
+  and q_udf_cogroup spreads the hot user over several pandas calls
+  and still equals its JVM reference.
 """
 
 from __future__ import annotations
@@ -133,14 +135,13 @@ def test_salted_agg_exact_on_hot_key(spark):
 
 
 def test_cogroup_two_phase_salts_hot_key_and_stays_exact(spark):
-    """Round-14 two-phase q_udf_cogroup (VERDICT r13 item 2): on the
-    hot-key fixture the census must actually engage — the hot user's
-    events (>_COGROUP_HOT_ROWS rows) fan out across 32 salted pandas
-    groups instead of one straggler task — and the merged result must
-    equal the single-phase answer exactly (the partials are an
-    integer commutative monoid)."""
+    """q_udf_cogroup on the hot-key fixture: the salt spreads the hot
+    user's events over more than one pandas call (one pre-merge
+    partial row per bucket it reached) instead of one straggler call,
+    and the merged result equals the single-phase answer exactly (the
+    partials are an integer commutative monoid)."""
     from fact_hive_custom_spark.queries import QUERIES
-    from fact_hive_custom_spark.queries.udfs import _COGROUP_HOT_ROWS
+    from fact_hive_custom_spark.queries.udfs import cogroup_partials
 
     ev = load_table(spark, SKEW_DIR, "events")
     hot_user, hot_n = (
@@ -149,9 +150,13 @@ def test_cogroup_two_phase_salts_hot_key_and_stays_exact(spark):
         .orderBy(F.desc("count"))
         .first()[0:2]
     )
-    assert hot_n > _COGROUP_HOT_ROWS, (
-        f"fixture hot user holds {hot_n} rows — below the census "
-        f"threshold {_COGROUP_HOT_ROWS}; the test would pin nothing"
+    hot_calls = (
+        cogroup_partials(spark, SKEW_DIR)
+        .filter((F.col("k") == hot_user) & ~F.col("kn") & (F.col("side") == 1))
+        .count()
+    )
+    assert hot_calls > 1, (
+        f"hot user {hot_user} ({hot_n} events) reached {hot_calls} pandas call(s)"
     )
 
     got = {

@@ -48,6 +48,18 @@ def test_env_knob_inventory():
     assert set(found) == ENV_KNOBS, found
 
 
+@pytest.mark.parametrize(
+    "gib, want", [(1, "512m"), (15, "7680m"), (96, "49152m"), (512, "49152m")]
+)
+def test_default_driver_memory_is_half_the_host_capped(monkeypatch, gib, want):
+    from fact_hive_custom_spark import session
+
+    page = 4096
+    pages = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": (gib << 30) // page}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session.default_driver_memory() == want
+
+
 # materialize() is the engine's only reuse path (its docstring says why).
 CACHE_CALL = re.compile(r"\.persist\(|\.cache\(\)|unpersist|StorageLevel")
 
