@@ -3,8 +3,9 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints two JSON lines: per-pass
 diagnostics (runs, spread, the [build_s, action_s] split, the number
-of classes each run compiled, each run's jobs and stages per phase,
-load1), then the headline
+of classes each run compiled, the milliseconds the JIT compiled in
+each run, each run's process CPU seconds, each run's jobs and stages
+per phase, load1), then the headline
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ...}
 
@@ -13,7 +14,8 @@ transfer). One JVM-warmup run of the flagship precedes timing.
 BASELINE.md records the reference numbers for this machine.
 
 `build_query` / `run_query` are the one place a registry query is
-built and timed, and `phase_jobs` the one place its jobs are counted;
+built and timed (its process CPU included, `process_cpu_s`), and
+`phase_jobs` the one place its jobs are counted;
 the tools (ab_fresh, plan_snapshot, skew_sweep, explain_dump) import
 them.
 """
@@ -25,6 +27,7 @@ import os
 import sys
 import time
 import uuid
+from collections import defaultdict
 
 # The headline set: one representative per operator class, weighted
 # toward the queries whose plans matter at 100 TB (wide aggs, joins of
@@ -194,15 +197,17 @@ def build_query(spark, name: str, sf_dir: str):
 
 def run_query(
     spark, name: str, sf_dir: str, tag: str | None = None
-) -> tuple[float, float]:
-    """Run bench row `name` once; returns (build_s, action_s).
+) -> tuple[float, float, float | None]:
+    """Run bench row `name` once; returns (build_s, action_s, cpu_s).
 
     build_s covers `build_query`: analysis plus any eager jobs the
     query runs while being built. action_s is the noop-sink write
     (full execution, no driver transfer). With a `tag`, each phase runs
-    in its own job group for `phase_jobs`; the group switches fall
-    outside both timed spans."""
+    in its own job group for `phase_jobs`, and cpu_s is the run's
+    process CPU (`process_cpu_s`); the group switches and the CPU
+    reads fall outside both timed spans. Without one, cpu_s is None."""
     if tag:
+        cpu0 = process_cpu_s(spark)
         set_phase(spark, tag, "build")
     t0 = time.perf_counter()
     df = build_query(spark, name, sf_dir)
@@ -213,7 +218,41 @@ def run_query(
     if df is not None:
         df.write.format("noop").mode("overwrite").save()
     t3 = time.perf_counter()
-    return round(t1 - t0, 3), round(t3 - t2, 3)
+    cpu = round(process_cpu_s(spark) - cpu0, 3) if tag else None
+    return round(t1 - t0, 3), round(t3 - t2, 3), cpu
+
+
+_CLK_TCK = os.sysconf("SC_CLK_TCK")
+
+
+def _proc_stat(pid: str) -> list[str] | None:
+    """The fields of /proc/<pid>/stat after the command name."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()
+    except OSError:  # the process ended
+        return None
+
+
+def process_cpu_s(spark) -> float:
+    """CPU seconds, user plus system, of this process, the Spark JVM
+    and every live JVM descendant (the Python workers), with the reaped
+    children of the JVM and its descendants included. Read it before
+    and after a run and take the difference. Takes about 2 ms: one
+    read of /proc/<pid>/stat per process on the host."""
+    jvm = str(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    stats = {d: st for d in os.listdir("/proc") if d.isdigit() and (st := _proc_stat(d))}
+    children = defaultdict(list)
+    for pid, st in stats.items():
+        children[st[1]].append(pid)
+    t = os.times()
+    total, todo = t.user + t.system, [jvm]
+    while todo:
+        pid = todo.pop()
+        if pid in stats:  # utime, stime, cutime, cstime
+            total += sum(int(x) for x in stats[pid][11:15]) / _CLK_TCK
+        todo += children[pid]
+    return total
 
 
 def new_tag() -> str:
@@ -255,7 +294,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from fact_hive_custom_spark.metrics import codegen_compiles
+    from fact_hive_custom_spark.metrics import codegen_compiles, jit_compile_ms
     from fact_hive_custom_spark.queries.sources_sinks import sweep_bucketed_orphans
     from fact_hive_custom_spark.session import get_session
 
@@ -274,23 +313,28 @@ def main() -> None:
     # printed so noise is visible, not inferred. Pass 1 runs every
     # query once (uniform warmth for passes 2-3). The 1-minute load
     # average is sampled before each pass so a slow pass can be told
-    # from a busy host, each run's compile count shows whether a warm
-    # pass still paid for code generation, and its per-phase job and
-    # stage counts (read after the run, outside its timing) show what
-    # it ran.
+    # from a busy host, each run's compile count and JIT milliseconds
+    # show whether a warm pass still paid for code generation, its
+    # process CPU shows what it cost beyond wall time, and its
+    # per-phase job and stage counts (read after the run, outside its
+    # timing) show what it ran.
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
     build_action: dict[str, list[tuple[float, float]]] = {
         name: [] for name in HEADLINE
     }
     compiles: dict[str, list[int]] = {name: [] for name in HEADLINE}
+    jit_ms: dict[str, list[int]] = {name: [] for name in HEADLINE}
+    cpu_s: dict[str, list[float]] = {name: [] for name in HEADLINE}
     jobs: dict[str, list[dict[str, list[int]]]] = {name: [] for name in HEADLINE}
     load1: list[float] = []
     for _pass in range(3):
         load1.append(round(os.getloadavg()[0], 2))
         for name in HEADLINE:
-            c0, tag = codegen_compiles(spark), new_tag()
-            build_s, action_s = run_query(spark, name, sf_dir, tag)
+            c0, j0, tag = codegen_compiles(spark), jit_compile_ms(spark), new_tag()
+            build_s, action_s, cpu = run_query(spark, name, sf_dir, tag)
             compiles[name].append(codegen_compiles(spark) - c0)
+            jit_ms[name].append(jit_compile_ms(spark) - j0)
+            cpu_s[name].append(cpu)
             jobs[name].append(phase_jobs(spark, tag))
             build_action[name].append((build_s, action_s))
             runs[name].append(round(build_s + action_s, 3))
@@ -313,6 +357,8 @@ def main() -> None:
                 "value_max": round(sum(max(r) for r in runs.values()), 3),
                 "build_action": build_action,
                 "compiles": compiles,
+                "jit_ms": jit_ms,
+                "cpu_s": cpu_s,
                 "jobs": jobs,
                 "load1": load1,
             }

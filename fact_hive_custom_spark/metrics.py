@@ -1,24 +1,20 @@
 """Per-query metrics surface: QueryExecutionListener + plan metrics.
 
-The reference ships an (empty) stats hook (`h-stats.sh:1` — the HiveOS
-agent polls it for miner stats); the engine analogue is a real metrics
-layer with three entry points, all stock Spark:
+Five entry points, all stock Spark:
 
 1. `MetricsListener` — a `org.apache.spark.sql.util.
    QueryExecutionListener` implemented as a py4j callback proxy (the
    same mechanism PySpark uses for `StreamingQueryListener`). Once
    `install_listener(spark)` runs, EVERY action on the session is
-   recorded passively: function name (collect/save/…), wall duration,
-   and the executed plan's aggregated SQLMetrics. This is the
-   fleet-monitoring surface: on a cluster the records stream to the
-   metrics store; here they accumulate on the listener object.
+   recorded passively on the listener: function name
+   (collect/save/…), wall duration, and the executed plan's
+   aggregated SQLMetrics.
 
 2. `execution_metrics(df)` — active form: execute `df`'s own plan
    JVM-side (no sink, no driver transfer) and return the final
    (AQE-finalized) plan's per-node SQLMetrics plus a scale-relevant
-   summary (rows scanned, shuffle bytes/rows, spill, peak memory). This is what BENCH-style tooling
-   wants: "did this query shuffle 40 GB or 40 KB" measured, not
-   guessed from the plan string.
+   summary (rows scanned, shuffle bytes/rows, spill, peak memory):
+   "did this query shuffle 40 GB or 40 KB", measured.
 
 3. `observed(df, name, *exprs)` — `df.observe(Observation)` wrapper:
    zero-cost accumulator metrics (row counts, sums, null counts)
@@ -30,6 +26,9 @@ layer with three entry points, all stock Spark:
    compilations of generated code. The difference across a query run
    is the number of classes it compiled (0 when every class it needs
    is still in the generated-code cache; session.py sizes that cache).
+
+5. `jit_compile_ms(spark)` — the JVM's running total of JIT compile
+   milliseconds: across a run, the JIT layer of that run's CPU.
 
 All metric extraction is read-only py4j access (a walk of the executed
 plan, a JVM counter); nothing here adds a job, a stage, or a byte of
@@ -50,6 +49,7 @@ __all__ = [
     "codegen_compiles",
     "execution_metrics",
     "install_listener",
+    "jit_compile_ms",
     "observed",
     "plan_metrics",
     "uninstall_listener",
@@ -121,7 +121,6 @@ def _summarize(nodes: list[dict[str, Any]]) -> dict[str, int]:
     """
     s = {
         "rows_scanned": 0,
-        "rows_cache_read": 0,
         "files_read": 0,
         "shuffle_bytes_written": 0,
         "shuffle_records_written": 0,
@@ -131,14 +130,10 @@ def _summarize(nodes: list[dict[str, Any]]) -> dict[str, int]:
     }
     for i, row in enumerate(nodes):
         m = row["metrics"]
-        # File-source scans only (ShuffleExchangeExec's nodeName is
-        # plain "Exchange"; InMemoryTableScan is a CACHE read, counted
-        # separately so cached plans don't inflate rows_scanned).
+        # Scans only: ShuffleExchangeExec's nodeName is plain "Exchange".
         if row["node"].startswith("Scan "):
             s["rows_scanned"] += m.get("number of output rows", 0)
             s["files_read"] += m.get("number of files read", 0)
-        elif row["node"] == "InMemoryTableScan":
-            s["rows_cache_read"] += m.get("number of output rows", 0)
         if row["node"] == "Exchange":
             s["shuffle_bytes_written"] += m.get("shuffle bytes written", 0)
             s["shuffle_records_written"] += m.get("shuffle records written", 0)
@@ -191,6 +186,14 @@ def codegen_compiles(spark: SparkSession) -> int:
     return int(source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
 
 
+def jit_compile_ms(spark: SparkSession) -> int:
+    """Milliseconds the JVM's JIT compilers (HotSpot C1 and C2) have
+    spent so far, for the whole JVM like `codegen_compiles`: read it
+    before and after a run and take the difference."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return int(mf.getCompilationMXBean().getTotalCompilationTime())
+
+
 # ------------------------------------------------- QueryExecutionListener
 
 
@@ -209,9 +212,7 @@ class MetricsListener:
 
     Spark's ExecutionListenerManager dispatches onSuccess/onFailure
     asynchronously from the listener bus after each action, so records
-    appear shortly after the action returns; tests poll. On a real
-    cluster this class would forward each QueryRecord to a metrics
-    sink instead of a list — the capture side is identical.
+    appear shortly after the action returns; tests poll.
     """
 
     def __init__(self) -> None:
@@ -258,14 +259,10 @@ def install_listener(spark: SparkSession) -> MetricsListener:
 def uninstall_listener(spark: SparkSession, listener: MetricsListener) -> None:
     """Stop the listener recording.
 
-    Muting is Python-side by design: Spark's ListenerBus removes
-    listeners by REFERENCE equality (`_ eq listener`), and py4j mints
-    a fresh Java proxy on every conversion of a Python callback — the
-    unregister proxy can never be `eq` to the registered one, so a
-    JVM-side unregister of a Python QueryExecutionListener is
-    structurally unreachable. The dormant proxy costs one no-op
-    callback per action until the session ends; `active = False`
-    guarantees no further records regardless."""
+    Muting is Python-side: Spark's ListenerBus removes listeners by
+    reference (`_ eq listener`), and py4j mints a fresh Java proxy per
+    conversion, so a JVM-side unregister never matches. The dormant
+    proxy costs one no-op callback per action until the session ends."""
     listener.active = False
     # harmless if it ever starts matching (future Spark/py4j versions)
     spark._jsparkSession.listenerManager().unregister(listener)

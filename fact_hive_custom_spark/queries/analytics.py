@@ -315,62 +315,60 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm, run on the same per-user consecutive-event edges as
     q_event_transitions.
 
-    Determinism: ranks are BIGINT parts-per-million and every step is
-    integer multiply + truncating division, so both engines reach the
-    identical fixpoint — no float accumulation order to diverge.
-    Dangling mass (types with no outgoing edge) is dropped, the
-    standard simplification; documented rather than redistributed.
+    Ranks are BIGINT parts-per-million and every step is an integer
+    multiply and truncating division, so both engines reach the same
+    fixpoint. The mass of types with no outgoing edge is dropped, not
+    redistributed.
 
-    Scale shape: the expensive part is building the edge list — one
-    window shuffle over the raw events (same as q_event_transitions);
-    the iteration then runs on the aggregated |types|² edge matrix,
-    which Spark broadcasts, so 3 iterations add negligible cost. For
-    web-scale graphs (edges >> memory) the identical loop runs with
-    the rank frame checkpointed per iteration exactly as
-    operators/graph.py:connected_components does (Kiveris et al.,
-    SoCC'14 lineage-capping pattern).
+    Plan: the q_event_markov_stationary shape. One window shuffle over
+    the raw events builds the edges; one materialized relation holds
+    each edge with its source's out-weight `ow`, plus one row per node.
+    Each round is one LEFT join of that relation with the ranks
+    (|types| rows, the only side a left join can build, so the
+    broadcast cannot flip sides between runs) and one aggregate.
+    Against the out-weights and node set materialized apart and joined
+    in every round (sf0.01, 4 cores, `tools/ab_fresh.py`, 4 alternated
+    pairs): jobs 7 + 13 → 5 + 9, median pass 1.65–2.06 → 1.15–1.61 s,
+    process CPU 5.6–6.2 → 3.9–5.4 s.
     """
     e = _ordered_events(spark, sf_dir)
-    # Materialize the aggregated graph once and CUT the lineage:
-    # without this, every iteration re-derives edges from the RAW
-    # events (window + groupBy × 3 = three full corpus passes at
-    # 100 TB). materialize() (same device as connected_components,
-    # operators/graph.py) keeps each iteration's plan rooted at the
-    # tiny materialized |types|² frames — the big input is scanned
-    # exactly once.
-    edges = _transition_counts(e).transform(materialize)
-    outw = edges.groupBy("from_type").agg(
-        F.sum("n").cast("bigint").alias("ow")
-    ).transform(materialize)
-    nodes = (
-        e.select(F.col("event_type").alias("node"))
-        .distinct()
+    # The one relation every round joins: each edge with its source's
+    # out-weight `ow`, plus one is_node row per event type, so that a
+    # type with no in-edge still gets a rank. The flag, not a NULL,
+    # marks those rows: an event's type may be NULL, and so may an
+    # edge's from_type.
+    g = (
+        _transition_counts(e)
+        .select(
+            "*",
+            F.sum("n").over(Window.partitionBy("from_type")).cast("bigint").alias("ow"),
+            F.lit(False).alias("is_node"),
+        )
+        .unionByName(
+            e.select(F.col("event_type").alias("to_type"), F.lit(True).alias("is_node"))
+            .distinct(),
+            allowMissingColumns=True,
+        )
+        # Measured against the identity: sf0.01 1.24/1.35/1.31 vs
+        # 1.25/1.41/1.36 s, sf0.1 1.58/1.35/1.49 vs 1.87/1.98/1.81 s.
         .transform(materialize)
     )
-    ranks = nodes.withColumn(
-        "rank_ppm", F.lit(_PR_SCALE).cast("bigint")
+    # Ranks are keyed by the column the next round joins on.
+    ranks = g.filter("is_node").select(
+        F.col("to_type").alias("from_type"), F.lit(_PR_SCALE).cast("bigint").alias("rank_ppm")
     )
     base = 15 * _PR_SCALE // 100
     for _ in range(_PR_ITER):
-        contrib = (
-            edges.join(outw, "from_type")
-            .join(
-                ranks.withColumnRenamed("node", "from_type"), "from_type"
+        ranks = (
+            g.join(ranks, "from_type", "left")
+            .groupBy(F.col("to_type").alias("from_type"))
+            .agg(
+                F.expr(f"{base} + coalesce(sum((rank_ppm * 85 * n) div (100 * ow)), 0)")
+                .cast("bigint")
+                .alias("rank_ppm")
             )
-            .select(
-                F.col("to_type").alias("node"),
-                F.expr("(rank_ppm * 85 * n) div (100 * ow)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").cast("bigint").alias("in_mass"))
         )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (F.lit(base) + F.coalesce(F.col("in_mass"), F.lit(0)))
-            .cast("bigint")
-            .alias("rank_ppm"),
-        )
-    return ranks
+    return ranks.withColumnRenamed("from_type", "node")
 
 
 @register(
@@ -561,18 +559,12 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
         .distinct()
-        # r15: materialize the edge list once. The round-6 ADVICE
-        # dropped a MEMORY_AND_DISK persist here because cached blocks
-        # leaked across the suite; a local materialize() frees on RDD
-        # GC. Without it the triangles consumer replayed the bucket-join
-        # pair build per reference: 54 scans / 110 exchanges in the
-        # initial plan at commit 10bd700 (`python tools/explain_dump.py
-        # <out_dir> before q_graph_triangles`);
-        # ReuseExchange recovered only part (14 shuffles + 10
-        # broadcasts still executed; PLAN_SNAPSHOT.json `final` now). Edge volume is
-        # O(buckets × cap²) by the _TRI_CAP guard — bounded, and the
-        # relation every consumer needs anyway. Cluster note: set
-        # `spark.checkpoint.dir` (operators/graph.py).
+        # Materialized once: without it the triangles consumer replayed
+        # the bucket-join pair build per reference, 54 scans and 110
+        # exchanges in the initial plan at commit 10bd700, of which
+        # ReuseExchange recovered only part (14 shuffles and 10
+        # broadcasts still executed). The _TRI_CAP guard bounds the
+        # edges to O(buckets × cap²).
         .transform(materialize)
     )
 
@@ -702,9 +694,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides close join 28 s, this form 14–24 s). No broadcast hint
     anywhere — AQE broadcasts the ~|nodes|-row adjacency side only
     when it actually fits, and the plan degrades to a partitioned
-    join, not OOM, on a denser graph (this replaced the round-5
-    broadcast-both-sides close join, whose tens-of-MB edge-set
-    assumption a denser graph would break).
+    join, not OOM, on a denser graph.
 
     The edge list is materialized once inside _cooccurrence_edges, so
     orientation, degree and the edge count all read that checkpoint."""
@@ -754,13 +744,12 @@ def q_event_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: a row_number window over (user_id ORDER BY us, event_id)
     keeps only each user's first five events BEFORE any collection,
-    so per-user aggregation state is genuinely bounded at five structs
-    (round-6 ADVICE: the previous slice-after-collect form gathered
-    the FULL history into one array first). The window's exchange on
-    user_id is reused by the following groupBy — no extra shuffle —
-    and `array_sort` re-orders the ≤5 collected structs inside the
-    executor ((us, event_id) is a unique prefix, so the path string is
-    deterministic despite collect_list's arbitrary arrival order).
+    so per-user aggregation state is bounded at five structs, not the
+    full history. The window's exchange on user_id is reused by the
+    following groupBy — no extra shuffle — and `array_sort` re-orders
+    the ≤5 collected structs inside the executor ((us, event_id) is a
+    unique prefix, so the path string is deterministic despite
+    collect_list's arbitrary arrival order).
     The final top-10 is TakeOrderedAndProject.
 
     NULL quarantine (fixture-drift rule, SURVEY.md §7.4): NULL ts is

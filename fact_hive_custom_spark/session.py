@@ -1,32 +1,37 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs a single JVM (local[N]); production posture is a
-multi-executor cluster at ~100 TB — the configs below are chosen so the
-same code scales: AQE on (runtime re-plan, skew-join splitting,
-partition coalescing), shuffle partitions sized to cores locally (on a
-cluster this is overridden to ~2-3× total cores), Arrow enabled for the
-few Pandas-UDF operators, UTC session timezone so timestamp semantics
-are engine-independent. Python workers fork from the stock
-`pyspark.daemon`, and building a session changes no process
-environment.
+Local runs use one JVM (local[N]); the settings are chosen so the same
+code scales on a cluster: AQE on (runtime re-plan, skew-join splits,
+partition coalescing), shuffle partitions sized to the cores (a cluster
+overrides this to 2-3× its cores), Arrow for the pandas-UDF operators,
+and a UTC session time zone so timestamps mean the same in every engine.
+Python workers fork from the stock `pyspark.daemon`, and building a
+session changes no process environment.
 
-Generated-code cache: `spark.sql.codegen.cache.maxEntries` is 8192
-(Spark's default is 100). One pass over a query set generates this
-many distinct classes at sf0.01 (4 cores, stage ids in class names):
-perfbench `relational` 40, perfbench `pipeline` 121, `bench.HEADLINE`
-1,098, the whole registry 4,468. Under a 100-entry LRU every set but
-`relational` evicts each class before its next use, so every pass
-compiled all of them again (Janino, then the JIT). The cache key is
-the generated source, so `spark.sql.codegen.useIdInClassName` is off:
-AQE numbers codegen stages in the order it creates query stages, and
-that order varies from run to run. With both, a query the session has
-already run compiles nothing (`metrics.codegen_compiles`;
-`tests/test_metrics.py` pins 0 for a second `pipeline` pass). The
-residue is a few queries whose generated source still differs from
-run to run: a second whole-registry pass compiled 28 and 22 classes
-over 8 queries in two runs. q_agg_theta_sketch, q_graph_triangles,
-q_llm_dataset_card, q_llm_cosine_dedup and q_scan_merge_schema were
-in both.
+A short pass pays mostly for the code it runs, not for the data. For
+perfbench's five `pipeline` queries at sf0.01 (4 cores,
+`tools/ab_fresh.py`, per-query median passes summed), HotSpot's JIT
+reports 9.6 s of compilation (`metrics.jit_compile_ms`) against 13.2 s
+of process CPU. Two settings below cut fixed work:
+
+- Generated-code cache: 8192 entries (Spark's default is 100). One pass
+  generates this many distinct classes at sf0.01: perfbench
+  `relational` 40, `pipeline` 121, `bench.HEADLINE` 1,098, the whole
+  registry 4,468. Under a 100-entry LRU every set but `relational`
+  evicted each class before its next use, so every pass compiled them
+  all again (Janino, then the JIT). The cache key is the generated
+  source, so `spark.sql.codegen.useIdInClassName` is off: AQE numbers
+  codegen stages in the order it creates query stages, which varies
+  from run to run. A query the session has already run then compiles
+  nothing (`metrics.codegen_compiles`; `tests/test_metrics.py` pins 0
+  for a second `pipeline` pass; ROADMAP item 4 lists the residue).
+- Streaming checkpoint files: with no Hadoop native library, Spark's
+  default FileContext checkpoint manager forks a `readlink` for each
+  file it renames (AbstractFileSystem.renameInternal →
+  getFileLinkStatus → FileUtil.readLink → Shell.execCommand). One
+  q_stream_sink_modes run forked 144 `readlink`s and 63 `chmod`s, 0.5 s
+  of child CPU; through the FileSystem API it forks the 63 `chmod`s
+  only, 0.15 s.
 """
 
 from __future__ import annotations
@@ -82,28 +87,35 @@ def get_session(
         # Reliable checkpoints (materialize() with spark.checkpoint.dir
         # set) delete their files when the checkpointed RDD is GC'd.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        # Compiled-class cache (static conf). Distinct classes per pass at
-        # sf0.01: relational 40, pipeline 121, HEADLINE 1,098, registry
-        # 4,468; 8192 is the next power of two above the registry.
+        # Compiled-class cache (static conf, module docstring): 8192 is
+        # the next power of two above the registry's 4,468 classes.
         .config("spark.sql.codegen.cache.maxEntries", "8192")
         # No AQE-assigned stage id in the cache key (module docstring):
         # with it, q_llm_jaccard_dedup recompiled 4 classes in 5 of 16
         # warm runs at sf0.001; without it, in 0 of 16.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # Streaming checkpoint files (offsets, commits, metadata, state)
+        # through the FileSystem API, which forks no `readlink` (module
+        # docstring). On file: both managers check that the destination
+        # is absent, then rename through RawLocalFileSystem.rename, one
+        # rename(2): FileSystemBasedCheckpointFileManager.renameTempFile
+        # here, AbstractFileSystem.renameInternal in the default. So
+        # atomicity and no-overwrite are the same.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-    # Log hygiene — opt-in: several registered queries END in a
-    # deliberate global-window / single-partition step (final ranking
-    # over a few hundred pre-aggregated rows — SCALING.md
-    # §global-windows), and WindowExec warns on every one, flooding
-    # bench output with hundreds of identical lines. The plan pins in
-    # tests/test_plans.py assert the windowed inputs ARE tiny. Default
-    # sessions keep the warning: a genuinely unsafe large-input global
-    # window added later should warn loudly everywhere except the
-    # noise-sensitive bench runs.
+    # Several queries end in a deliberate global window over a few
+    # hundred pre-aggregated rows (SCALING.md §global-windows;
+    # tests/test_plans.py pins the inputs tiny), and WindowExec warns on
+    # each. Only quiet sessions mute it: a large-input one added later
+    # should warn everywhere but in the bench.
     if not quiet:
         return spark
     try:

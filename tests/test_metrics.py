@@ -180,3 +180,25 @@ class TestCodegenCache:
                 QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             compiled.append(metrics.codegen_compiles(spark) - c0)
         assert compiled[1] == 0, compiled
+
+    def test_jit_compile_ms_never_falls(self, spark):
+        """metrics.jit_compile_ms is the JVM's running JIT total: a
+        non-negative int that a query can only add to."""
+        from fact_hive_custom_spark.queries import QUERIES
+
+        j0 = metrics.jit_compile_ms(spark)
+        QUERIES["q_graph_pagerank"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        j1 = metrics.jit_compile_ms(spark)
+        assert isinstance(j0, int) and isinstance(j1, int)
+        assert 0 <= j0 <= j1, (j0, j1)
+
+
+class TestCheckpointFileManager:
+    def test_session_checkpoints_through_filesystem_api(self, spark):
+        """get_session routes streaming checkpoint files through the
+        FileSystem API, whose rename forks no `readlink` per file
+        (session.py)."""
+        assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        )

@@ -36,6 +36,7 @@ _FAST = set(bench.HEADLINE) | {
     "q_event_markov_stationary",  # nor are the power rounds
     "q_stat_runs",  # nor the day series
     "q_llm_bm25_topk",  # nor the per-doc term counts
+    "q_graph_pagerank",  # nor the out-weights and the node set
 }
 
 

@@ -58,8 +58,12 @@ def test_aqe_skew_split_fires_on_hot_join(spark):
     """The engine's first line of defense needs no code: AQE splits
     the hot partition at runtime. Thresholds are lowered to engage at
     fixture scale (the 20%-hot partition is ~20 MB here, 20 TB at
-    target scale where the 256 MB default sees it unaided)."""
+    target scale where the 256 MB default sees it unaided). With P
+    shuffle partitions the hot supplier's partition holds 20% + 80%/P
+    of lineitem against 80%/P for the median, so the factor of 2 (a
+    strict bound) needs P > 4: 16 here, whatever the core count."""
     confs = {
+        "spark.sql.shuffle.partitions": "16",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2m",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",

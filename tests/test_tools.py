@@ -82,7 +82,7 @@ MATERIALIZE_SITES = {
     "fact_hive_custom_spark/operators/graph.py": 2,
     "fact_hive_custom_spark/operators/similarity.py": 2,
     "fact_hive_custom_spark/queries/aggregates.py": 2,
-    "fact_hive_custom_spark/queries/analytics.py": 9,
+    "fact_hive_custom_spark/queries/analytics.py": 7,
     "fact_hive_custom_spark/queries/clustering.py": 3,
     "fact_hive_custom_spark/queries/corpus.py": 4,
     "fact_hive_custom_spark/queries/llm_ops.py": 1,
@@ -477,7 +477,7 @@ class TestQueryRunner:
             ("q_join_bucketed_probe", self.SF),
             ("q_join_bucketed_probe", fresh),  # no build has run here
         ):
-            build_s, action_s = bench.run_query(spark, name, sf_dir)
+            build_s, action_s, _ = bench.run_query(spark, name, sf_dir)
             assert build_s >= 0 and action_s >= 0, (name, sf_dir)
         assert bench.build_query(spark, "q_join_bucketed_build", self.SF) is None
 
@@ -500,8 +500,17 @@ class TestQueryRunner:
 
         for name in ("q_agg_flagship", "q_join_bucketed_probe"):
             t0 = time.perf_counter()
-            build_s, action_s = bench.run_query(spark, name, self.SF)
+            build_s, action_s, _ = bench.run_query(spark, name, self.SF)
             wall = time.perf_counter() - t0
             assert abs(build_s + action_s - wall) < 0.005, (
                 name, build_s, action_s, wall,
             )
+
+    def test_tagged_run_reports_process_cpu(self, spark):
+        """A tagged run reports its process CPU (bench.process_cpu_s: this
+        process, the JVM and its descendants); an untagged one reads none."""
+        import bench
+
+        tagged = bench.run_query(spark, "q_agg_flagship", self.SF, bench.new_tag())
+        assert tagged[2] > 0, tagged
+        assert bench.run_query(spark, "q_agg_flagship", self.SF)[2] is None

@@ -6,15 +6,19 @@ JSON line per query:
 
     query, sf_dir    the bench row and its fixture dir
     passes, median   per-pass total seconds and their median
+    cpu_median       median per-pass process CPU seconds: this process,
+                     the JVM and its descendants (bench.process_cpu_s)
     build_median     median of the construction part (build_query,
                      including eager jobs)
     action_median    median of the final noop-sink action
     compiles         classes compiled in each pass (metrics.
                      codegen_compiles): the codegen layer of an A/B
+    jit_ms           milliseconds the JIT compiled in each pass
+                     (metrics.jit_compile_ms): the JIT layer
     jobs             each pass's {"build": [jobs, stages],
                      "action": [jobs, stages]} (bench.phase_jobs)
 
-median, build_median and action_median are each taken separately
+median, cpu_median, build_median and action_median are each taken separately
 (statistics.median: the mean of the middle two for an even pass
 count), so the parts can come from different passes and need not add
 up to the total.
@@ -61,20 +65,21 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from bench import new_tag, phase_jobs, run_query
-    from fact_hive_custom_spark.metrics import codegen_compiles
+    from fact_hive_custom_spark.metrics import codegen_compiles, jit_compile_ms
     from fact_hive_custom_spark.session import get_session
 
     spark = get_session("ab-fresh", quiet=True)
     run_query(spark, "q_agg_flagship", sf_dir)  # warmup, untimed (bench.py parity)
 
     for name in args.queries:
-        splits, compiles, jobs = [], [], []
+        splits, compiles, jit_ms, jobs = [], [], [], []
         for _ in range(args.passes):
-            c0, tag = codegen_compiles(spark), new_tag()
+            c0, j0, tag = codegen_compiles(spark), jit_compile_ms(spark), new_tag()
             splits.append(run_query(spark, name, sf_dir, tag))
             compiles.append(codegen_compiles(spark) - c0)
+            jit_ms.append(jit_compile_ms(spark) - j0)
             jobs.append(phase_jobs(spark, tag))
-        times = [round(b + a, 3) for b, a in splits]
+        times = [round(b + a, 3) for b, a, _ in splits]
         print(
             json.dumps(
                 {
@@ -82,9 +87,11 @@ def main() -> int:
                     "sf_dir": sf_dir,
                     "passes": times,
                     "median": statistics.median(times),
-                    "build_median": statistics.median([b for b, _ in splits]),
-                    "action_median": statistics.median([a for _, a in splits]),
+                    "cpu_median": round(statistics.median([c for _, _, c in splits]), 3),
+                    "build_median": statistics.median([b for b, _, _ in splits]),
+                    "action_median": statistics.median([a for _, a, _ in splits]),
                     "compiles": compiles,
+                    "jit_ms": jit_ms,
                     "jobs": jobs,
                 }
             ),

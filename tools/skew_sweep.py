@@ -69,7 +69,7 @@ def main() -> None:
     spark = get_session("skew-sweep", quiet=True)
 
     def wall(name: str, sf_dir: str) -> float:
-        return min(sum(run_query(spark, name, sf_dir)) for _ in range(2))
+        return min(sum(run_query(spark, name, sf_dir)[:2]) for _ in range(2))
 
     tag = os.environ.get("SPARK_GRAFT_SKEW_TAG", "r14")
     print(f"# SKEW_{tag} — hot-key degradation sweep")
