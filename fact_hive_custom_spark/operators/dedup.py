@@ -247,15 +247,11 @@ def minhash_lsh_pairs(
     """
     # Signatures hash the 64-bit shingle key again per seed (a valid
     # MinHash family), and the verification join shuffles longs.
-    # Materialized: the frame feeds four consumers (signatures, sizes,
-    # both verification join sides) at ~16 B/shingle. The r3 bench
-    # note that re-scan beat persist predates the bound-tokens shingle
-    # fix — with the scan 4.7× cheaper the cache build is cheap too,
-    # and the A/B flipped (sf1.0: 5.5 s persisted vs 6.2 s re-scan);
-    # at 100 TB re-scanning would be four full corpus tokenize passes.
     sh = hashed_shingles(docs, k=k)
     if max_doc_freq is not None:
         sh = _df_capped(sh, max_doc_freq)
+    # Measured against the identity (q_llm_dedup_clusters): sf0.1
+    # 2.99/3.83/2.74 vs 4.03/4.02/3.18 s; sf1.0 not yet measured.
     sh = materialize(sh)
     sig = minhash_signatures(sh, num_hashes=rows_per_band * num_bands)
 

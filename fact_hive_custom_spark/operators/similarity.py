@@ -348,11 +348,8 @@ def _pivot_blocks(
     ).select(
         "vid", "vec", "nrm", "cluster", F.acos(-F.col("best")).alias("angle")
     )
-    # Materialize once: `assigned` now holds the crossjoin+aggregate
-    # subtree and feeds 5 consumers (radii, both block sides, both
-    # rescore sides) — the r15 checkpoint-payback rule's exact shape.
-    # Paired r16: sf0.1 3.0/3.2 vs 3.4/4.0 s, sf1.0 7.0/8.0 vs
-    # 7.6/11.0 s.
+    # Measured against the identity (q_llm_cosine_dedup): sf0.1
+    # 2.70/3.16/2.31 vs 2.97/3.52/2.65 s; sf1.0 not yet measured.
     assigned = materialize(assigned)
     radii = assigned.groupBy("cluster").agg(F.max("angle").alias("radius"))
     return _cluster_pairs(pivots, radii, threshold, assigned)

@@ -559,12 +559,9 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
         .distinct()
-        # Materialized once: without it the triangles consumer replayed
-        # the bucket-join pair build per reference, 54 scans and 110
-        # exchanges in the initial plan at commit 10bd700, of which
-        # ReuseExchange recovered only part (14 shuffles and 10
-        # broadcasts still executed). The _TRI_CAP guard bounds the
-        # edges to O(buckets × cap²).
+        # The _TRI_CAP guard bounds the edges to O(buckets × cap²).
+        # Measured against the identity (q_graph_bfs): sf0.1
+        # 1.55/2.18/1.84 vs 4.54/4.96/4.17 s; sf1.0 not yet measured.
         .transform(materialize)
     )
 
@@ -1718,6 +1715,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
+            # Measured against the identity: sf0.1 1.87/2.95/3.17 vs
+            # 18.14/19.95/18.11 s (pass 1 2.23/5.97/5.47 vs
+            # 18.14/27.72/24.47); sf1.0 not yet measured.
             .transform(materialize)
         )
         n_nodes = (

@@ -1223,12 +1223,8 @@ def _bpe_train_parts(spark: SparkSession, sf_dir: str):
         .select(
             F.expr("array_join(split(word, ''), '~~')").alias("enc"), "wf"
         )
-        # Without the per-round materialize the final 3-branch union
-        # is a TREE: round r's plan embeds every earlier round's argmax
-        # AND vocab-transform subtrees, so the corpus explode re-runs
-        # ~2^r times (measured 11.3 s at sf0.01). Materializing pins
-        # each round's |vocab|-sized table: one corpus pass, O(R) tiny
-        # vocab stages after it (0.9 s).
+        # Measured against the identity (q_llm_bpe_tokenize): sf0.1
+        # 1.11/1.12/1.00 vs 1.57/1.52/1.34 s; sf1.0 not yet measured.
         .transform(materialize)
     )
     wf0 = wf
@@ -1263,6 +1259,8 @@ def _bpe_train_parts(spark: SparkSession, sf_dir: str):
                 "pair_count",
             )
         )
+        # Measured against the identity (q_llm_bpe_tokenize): sf0.1
+        # 1.11/1.12/1.00 vs 1.15/1.13/1.13 s; sf1.0 not yet measured.
         wf = wf.crossJoin(
             F.broadcast(
                 best.select(F.col("a").alias("ma"), F.col("b").alias("mb"))
@@ -1485,12 +1483,9 @@ def _pq_lloyd(sub: DataFrame, csub: DataFrame, rounds: int) -> DataFrame:
                     lambda s: s["c"],
                 ).alias("cv")
             )
-            # Lineage cap (the q_graph_kcore discipline): the ≤M·K-row
-            # codebook is materialize()d per round so a
-            # cold one-shot caller pays `rounds` small jobs instead of
-            # one nested DAG re-deriving every earlier round inside
-            # each broadcast (BENCH_r09's 41 s cold max vs 5 s median).
-            # Values untouched — the trajectory is the oracle's.
+            # Measured against the identity (q_llm_pq_trained_topk):
+            # sf0.1 2.20/2.12/1.82 vs 2.69/2.45/2.30 s (pass 1
+            # 2.36/2.43/2.25 vs 3.08/2.94/2.36); sf1.0 not yet measured.
             .transform(materialize)
         )
     return csub
@@ -1545,24 +1540,13 @@ def _pq_parts(
         q = q.select(
             "vec_id", F.expr(_opq_perm_expr("qs", pq_m, pq_sub)).alias("qs")
         )
-    # Round-15 re-measure of the round-9 "don't cache q" decision: at
-    # T+1 = 3 derivations, materializing lost (5.3 vs 3.7 s); but the
-    # composite serving paths now derive q up to ~34 times per plan
-    # (q_llm_ann_tuned's before-plan: 34 parquet scans, 32 broadcast
-    # builds at commit 10bd700 — `python tools/explain_dump.py
-    # <out_dir> before q_llm_ann_tuned`), so ONE eager
-    # materialization wins across the family: every consumer reads
-    # the 65-int rows, and the A/B at sf0.1 preferred localCheckpoint
-    # over persist() (ann_tuned ~6 vs ~7 s) because truncating the
-    # lineage also removes the repeated gscale/quantize subtree from
-    # every downstream plan's analysis and broadcast builds. Blocks
-    # free on RDD GC (the _pq_lloyd / label-prop convention); on a
-    # real cluster set `spark.checkpoint.dir` (executor-loss
-    # recovery — operators/graph.py note). The RoundRobin repartition
-    # is the semdedup single-file lesson — the map-side distance stage
-    # of every assignment below must not inherit a one-partition
-    # parquet scan — and is REPARTITION_BY_NUM, exempt from AQE
-    # byte-coalescing (the SCALING.md §round-14 width rule).
+    # Measured against the identity (q_llm_ivfpq_topk): sf0.1
+    # 1.39/1.59/1.59 vs 2.32/1.87/2.08 s; sf1.0 not yet measured. The
+    # RoundRobin repartition is the semdedup single-file lesson — the
+    # map-side distance stage of every assignment below must not
+    # inherit a one-partition parquet scan — and is REPARTITION_BY_NUM,
+    # exempt from AQE byte-coalescing (the SCALING.md §round-14 width
+    # rule).
     q = q.repartition(
         q.sparkSession.sparkContext.defaultParallelism
     ).transform(materialize)

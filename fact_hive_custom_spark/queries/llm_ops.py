@@ -1344,9 +1344,8 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Materialized once: both sides of the pair join read `assigned`,
     # and each would re-run the pivot cross join, the min_by and its
-    # vec_id exchange. Paired fresh-JVM A/B, lazy vs materialized,
-    # per-run medians: sf0.1 3.63/2.90/3.15 vs 2.14/2.11/2.16 s, sf1.0
-    # 28.1/31.4 vs 21.0/22.9 s.
+    # vec_id exchange. Measured against the identity: sf0.1
+    # 2.14/2.11/2.16 vs 3.63/2.90/3.15 s, sf1.0 21.0/22.9 vs 28.1/31.4 s.
     assigned = materialize(_assign_pivots(emb, pivots))
     # Pair-stage parallelism: a plain join on `cluster` has only 32
     # distinct keys, so at most 32 tasks score Σ|cluster|² pairs

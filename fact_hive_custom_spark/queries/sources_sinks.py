@@ -504,9 +504,10 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    # corrupt-record queries must materialize before filtering on the
-    # corrupt column (Spark requires referencing it from materialized
-    # rows, not a pushed-down filter)
+    # Not a reuse: Spark refuses a raw CSV scan whose only referenced
+    # column is the corrupt-record column
+    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); the
+    # checkpointed rows answer.
     df = materialize(df)
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),

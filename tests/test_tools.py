@@ -7,6 +7,7 @@ process environment as it found it."""
 
 from __future__ import annotations
 
+import ast
 import os
 import pathlib
 import py_compile
@@ -93,13 +94,54 @@ MATERIALIZE_SITES = {
 MATERIALIZE_CALL = re.compile(r"\.transform\(materialize\)|(?<![\w.`])(?<!def )materialize\((?!\))")
 
 
+# The one call that is not a reuse: Spark refuses a raw CSV scan whose
+# only referenced column is the corrupt-record column, so its comment
+# names that error class instead of a measurement.
+NOT_A_REUSE = {"fact_hive_custom_spark/queries/sources_sinks.py::q_source_csv_malformed"}
+# Calls whose A/B against the identity tied or lost at sf0.1 and has
+# not been run at sf1.0, so neither keeping nor deleting them is
+# measured yet; each leaves this set once its sf1.0 pairs decide it.
+AWAITING_SF1 = {
+    "fact_hive_custom_spark/operators/dedup.py::jaccard_pairs",
+    "fact_hive_custom_spark/operators/similarity.py::_pivot_blocks",
+    "fact_hive_custom_spark/queries/aggregates.py::q_agg_theta_sketch",
+    "fact_hive_custom_spark/queries/clustering.py::_kmeans_parts",
+    "fact_hive_custom_spark/queries/analytics.py::q_basket_lift",
+}
+
+
+def _comment_above(lines: list[str], lineno: int) -> str:
+    """The comment block that ends on the line before 1-based `lineno`."""
+    block = []
+    for line in reversed(lines[: lineno - 1]):
+        if not line.lstrip().startswith("#"):
+            break
+        block.append(line)
+    return " ".join(block[::-1])
+
+
 def test_materialize_site_inventory():
-    found = {
-        str(path.relative_to(ROOT)): n
-        for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py"))
-        if (n := len(MATERIALIZE_CALL.findall(path.read_text())))
-    }
+    found, unmeasured = {}, []
+    for path in sorted((ROOT / "fact_hive_custom_spark").rglob("*.py")):
+        text = path.read_text()
+        calls = [text.count("\n", 0, m.start()) + 1 for m in MATERIALIZE_CALL.finditer(text)]
+        if not calls:
+            continue
+        rel = str(path.relative_to(ROOT))
+        found[rel] = len(calls)
+        lines, tree = text.splitlines(), ast.parse(text)
+        for ln in calls:
+            enclosing = [n for n in ast.walk(tree) if hasattr(n, "end_lineno") and n.lineno <= ln <= n.end_lineno]
+            stmt = max(n.lineno for n in enclosing if isinstance(n, ast.stmt))
+            func = max((n for n in enclosing if isinstance(n, ast.FunctionDef)), key=lambda n: n.lineno).name
+            # The reason sits directly above the call, or above the
+            # statement whose continuation line the call is on.
+            reason = _comment_above(lines, ln) or _comment_above(lines, stmt)
+            want = "QUERY_ONLY_CORRUPT_RECORD_COLUMN" if f"{rel}::{func}" in NOT_A_REUSE else "Measured against the identity"
+            if want not in " ".join(reason.replace("#", " ").split()) and f"{rel}::{func}" not in AWAITING_SF1:
+                unmeasured.append(f"{rel}:{ln} ({func})")
     assert found == MATERIALIZE_SITES, found
+    assert not unmeasured, unmeasured
 
 
 # A relation several queries share has one Spark builder and one DuckDB
