@@ -2,15 +2,18 @@
 SparkContext.
 
 `materialize(df)` is the engine's only way to reuse an intermediate
-(shingle sets, the Theil-Sen and Mann-Kendall day series, BPE vocab
-tables, the k-means and PQ quantized corpora, graph edge lists, the
-Markov transition matrix, sketch relations, per-round centroids,
-codebooks, BFS frontiers and k-core edges). Each call costs at least
-one eager job, so each call site names the measurement that keeps it.
-"Measured against the identity" gives per-run medians, materialized vs
-lazy, of paired fresh-JVM runs (`tools/ab_fresh.py --passes 3`, 4
-cores, 3 alternated pairs); calls that tied or lost that A/B were
-deleted, and `tests/test_tools.py` pins the count per file.
+(shingle sets, the Theil-Sen and Mann-Kendall day series, BPE word
+frequencies and vocab tables, the k-means and PQ quantized corpora,
+the PCA scatter matrix, graph edge lists, the Markov transition
+matrix, the theta and media sketch relations, pivot and semdedup
+cluster assignments, PQ codebooks, the BFS seed and frontiers and
+k-core edges). Each call costs at least one eager job, so each call
+site names the measurement that keeps it. "Measured against the
+identity" gives per-run medians, materialized vs lazy, of paired
+fresh-JVM runs (`tools/ab_fresh.py --passes 3`, 4 cores, 3 alternated
+pairs, at sf0.1 and at sf1.0); a call stays only where the
+materialized side won all 3 pairs at one of the two scales, and
+`tests/test_tools.py` pins the count per file.
 
 The engine never calls `persist()`/`cache()`: their CacheManager entry
 is keyed on the plan, which names the parquet path, so it outlives the

@@ -318,19 +318,7 @@ def _pivot_blocks(
         F.col(vec_col).alias("vec"),
         _norm(F.col(vec_col)).alias("nrm"),
     )
-    # r15: 16 rows, materialized once — three consumers (the
-    # assignment, both cluster-pair sides) each re-ran the
-    # corpus-wide TakeOrdered pivot selection otherwise (part of the
-    # 40-scan initial plan of q_llm_cosine_dedup).
-    # r16 NOTE (VERDICT item 4, consolidation REJECTED on measurement):
-    # deriving this 16-row frame by exploding the cached 1-row `parr`
-    # array (one materialization instead of two, construction jobs
-    # 6 → 4) was tried and paired-A/B'd SLOWER at sf1.0 — warm 21/25 s
-    # (this shape) vs 29/31 s (consolidated), interleaved runs.
-    # Suspected cause: the explode-derived frame loses the
-    # checkpoint's known-tiny statistics, degrading a downstream
-    # broadcast decision. Two tiny jobs are cheaper than one bad plan.
-    pivots = _select_pivots(u, num_pivots, seed).transform(materialize)
+    pivots = _select_pivots(u, num_pivots, seed)
 
     # Nearest pivot per vector: the highest clamped cosine, the lowest
     # pivot_id on ties; angle = acos(max cos) = acos(-best).

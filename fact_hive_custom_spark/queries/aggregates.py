@@ -1252,20 +1252,7 @@ def q_agg_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard/merge discipline — no single-reducer sort of a segment),
     merges touch ≤ 16·K rows, and every estimator input is ≤ K rows."""
     d38 = "decimal(38,0)"
-    # r15: the distinct (seg, ck) relation feeds FOUR independent
-    # consumers (the sketch chain, the exact triple-distinct agg,
-    # both sides of the exact-intersection join); uncheckpointed,
-    # each replayed the orders scan + distinct exchange (14 scans
-    # / 22 exchanges executed then; PLAN_SNAPSHOT.json `final` now). One eager
-    # materialization of the already-collapsed relation is O(distinct
-    # members) — the sketch's own input size. Likewise the merged
-    # sketch (≤ 2K = 512 rows) feeds FIVE consumers; checkpointing it
-    # costs one tiny job and stops each replaying the md5 + two-window
-    # chain (whose WindowGroupLimit shape stays pinned via the
-    # _theta_seg_sketch helper). Isolated warm median 3.31 → 1.84 s
-    # at sf0.1. Cluster note: set `spark.checkpoint.dir`
-    # (operators/graph.py note).
-    segs = _theta_segs(spark, sf_dir).transform(materialize)
+    segs = _theta_segs(spark, sf_dir)
     # Measured against the identity: sf0.1 1.68/2.29/1.56 vs
     # 1.91/2.93/2.34 s; sf1.0 not yet measured.
     seg_sk = _theta_seg_sketch(segs).transform(materialize)

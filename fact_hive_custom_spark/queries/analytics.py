@@ -1193,13 +1193,6 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
-        # r15: the deduplicated incidence feeds THREE consumers (the
-        # basket sets, the brand marginals, the order count), each of
-        # which replayed the part broadcast join + distinct exchange;
-        # one eager materialization of the already-collapsed relation
-        # (the theta-sketch rule: checkpoint pays when the duplicated
-        # subtree holds a join/aggregate). Paired sf0.1: 3.8 → 2.6 s.
-        .transform(materialize)
     )
     sets = ob.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("p_brand")).alias("brands")

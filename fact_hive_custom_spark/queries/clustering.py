@@ -135,14 +135,7 @@ def _kmeans_parts(spark: SparkSession, sf_dir: str, rounds: int = _KM_T):
     )
     for _ in range(rounds):
         assigned = _assign(q, _centroids(cent))
-        # Lineage cap (the q_graph_kcore discipline): materialize()
-        # the K×D-row centroid relation each round so
-        # a cold one-shot caller pays T small jobs (one materialized-corpus
-        # scan each) instead of one deeply nested DAG whose analysis
-        # and nested broadcasts produced a 41 s/18 s cold-run cliff
-        # over a ~5 s median (BENCH_r09 spread). Values are untouched
-        # — the trajectory stays bit-identical to the oracle.
-        cent = _update(assigned).transform(materialize)
+        cent = _update(assigned)
     return cent, _assign(q, _centroids(cent))
 
 

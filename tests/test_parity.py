@@ -37,6 +37,9 @@ _FAST = set(bench.HEADLINE) | {
     "q_stat_runs",  # nor the day series
     "q_llm_bm25_topk",  # nor the per-doc term counts
     "q_graph_pagerank",  # nor the out-weights and the node set
+    "q_llm_cosine_dedup",  # nor the 16 pivots
+    "q_llm_kmeans_purity",  # nor the per-round centroids
+    "q_basket_lift",  # nor the (order, brand) incidence
 }
 
 

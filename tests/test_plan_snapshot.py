@@ -102,6 +102,14 @@ WIDTH_RISK_ALLOWED: dict[str, list[str]] = {
     # 1.09/1.09/1.14 s with the per-doc frame materialized (median of 3
     # passes, paired fresh-JVM runs, 4 cores): no collapse.
     "q_llm_bm25_topk": ["Generate <- Exchange[ENSURE_REQUIREMENTS]"],
+    # Each Lloyd update posexplodes the assigned vectors (×D) straight
+    # off the vec_id assignment exchange. This lazy plan ran
+    # 5.11/4.28/4.27 s (kmeans) and 4.89/4.24/4.01 s (kmeans_purity) at
+    # sf1.0 against 3.87/4.66/4.99 and 3.65/4.47/5.01 s with each
+    # round's centroids materialized (median of 3 passes, paired
+    # fresh-JVM runs, 4 cores): no collapse.
+    "q_llm_kmeans": ["Generate <- Exchange[ENSURE_REQUIREMENTS]"],
+    "q_llm_kmeans_purity": ["Generate <- Exchange[ENSURE_REQUIREMENTS]"],
 }
 
 

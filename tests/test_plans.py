@@ -1125,30 +1125,33 @@ class TestKMeansPlan:
         """Lloyd k-means (clustering.py): the corpus reaches its
         cluster through functions/vectors.py nearest — a broadcast
         join of the K centroid rows and a min_by per vec_id combined
-        map-side, so the assignment's one hash exchange is on vec_id.
-        The only other exchanges pack the K centroid rows (cid) and
-        summarize the final clusters (cluster); the codes relation and
-        the Lloyd rounds are checkpointed (T+1 rounds share one
+        map-side, so each assignment's one hash exchange is on vec_id.
+        The T Lloyd rounds sit in the final plan: each adds one
+        assignment, one partially aggregated (cid, dim) update and one
+        pack of the K centroid rows (cid, except the seed's); the last
+        assignment and the cluster summary (cluster) close it. The
+        codes relation is checkpointed (T+1 assignments share one
         quantize pass); no nested HOF, no cartesian of data against
         data, no Python."""
+        from fact_hive_custom_spark.queries.clustering import _KM_T
+
         df = QUERIES["q_llm_kmeans"](spark, SF_DIR)
         plan = plans.executed_plan(df)
-        assert hash_keys(plan) == [("cid",), ("cluster",), ("vec_id",)], plan
+        want = [("cid",)] * _KM_T + [("cid", "_groupingexpression")] * _KM_T
+        want += [("cluster",)] + [("vec_id",)] * (_KM_T + 1)
+        assert hash_keys(plan) == sorted(want), plan
         assert "partial_min_by" in plan, plan
         assert plans.nested_hof_count(df) == 0, plan
-        # r15: the quantized corpus AND the per-round centroids are
-        # both eagerly checkpointed (localCheckpoint replaced the lazy
-        # persist after a paired A/B — clustering.py _quantized), so
-        # the final plan roots at checkpointed RDDs instead of
-        # replaying the contract+quantize subtree or the Lloyd rounds
-        # inside one nested DAG
+        # the quantized corpus is eagerly checkpointed (clustering.py
+        # _quantized), so every Lloyd round reads a checkpointed RDD
+        # instead of replaying the contract+quantize subtree
         assert "Scan ExistingRDD" in plan
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
     def test_kmeans_round_update_partially_aggregated(self, spark):
         """One Lloyd ROUND in isolation (the unit the final plan
-        checkpoints away): the assignment is one map-side-combined
+        repeats per round): the assignment is one map-side-combined
         min_by exchange on vec_id, and the K×D update shuffle is
         partially aggregated map-side."""
         import os

@@ -81,10 +81,10 @@ def test_no_cache_calls_in_engine():
 MATERIALIZE_SITES = {
     "fact_hive_custom_spark/operators/dedup.py": 2,
     "fact_hive_custom_spark/operators/graph.py": 2,
-    "fact_hive_custom_spark/operators/similarity.py": 2,
-    "fact_hive_custom_spark/queries/aggregates.py": 2,
-    "fact_hive_custom_spark/queries/analytics.py": 7,
-    "fact_hive_custom_spark/queries/clustering.py": 3,
+    "fact_hive_custom_spark/operators/similarity.py": 1,
+    "fact_hive_custom_spark/queries/aggregates.py": 1,
+    "fact_hive_custom_spark/queries/analytics.py": 6,
+    "fact_hive_custom_spark/queries/clustering.py": 2,
     "fact_hive_custom_spark/queries/corpus.py": 4,
     "fact_hive_custom_spark/queries/llm_ops.py": 1,
     "fact_hive_custom_spark/queries/media.py": 1,
@@ -98,16 +98,6 @@ MATERIALIZE_CALL = re.compile(r"\.transform\(materialize\)|(?<![\w.`])(?<!def )m
 # only referenced column is the corrupt-record column, so its comment
 # names that error class instead of a measurement.
 NOT_A_REUSE = {"fact_hive_custom_spark/queries/sources_sinks.py::q_source_csv_malformed"}
-# Calls whose A/B against the identity tied or lost at sf0.1 and has
-# not been run at sf1.0, so neither keeping nor deleting them is
-# measured yet; each leaves this set once its sf1.0 pairs decide it.
-AWAITING_SF1 = {
-    "fact_hive_custom_spark/operators/dedup.py::jaccard_pairs",
-    "fact_hive_custom_spark/operators/similarity.py::_pivot_blocks",
-    "fact_hive_custom_spark/queries/aggregates.py::q_agg_theta_sketch",
-    "fact_hive_custom_spark/queries/clustering.py::_kmeans_parts",
-    "fact_hive_custom_spark/queries/analytics.py::q_basket_lift",
-}
 
 
 def _comment_above(lines: list[str], lineno: int) -> str:
@@ -138,7 +128,7 @@ def test_materialize_site_inventory():
             # statement whose continuation line the call is on.
             reason = _comment_above(lines, ln) or _comment_above(lines, stmt)
             want = "QUERY_ONLY_CORRUPT_RECORD_COLUMN" if f"{rel}::{func}" in NOT_A_REUSE else "Measured against the identity"
-            if want not in " ".join(reason.replace("#", " ").split()) and f"{rel}::{func}" not in AWAITING_SF1:
+            if want not in " ".join(reason.replace("#", " ").split()):
                 unmeasured.append(f"{rel}:{ln} ({func})")
     assert found == MATERIALIZE_SITES, found
     assert not unmeasured, unmeasured

@@ -17,6 +17,9 @@ JSON line per query:
                      (metrics.jit_compile_ms): the JIT layer
     jobs             each pass's {"build": [jobs, stages],
                      "action": [jobs, stages]} (bench.phase_jobs)
+    load1            the host's 1-minute load average sampled before
+                     each pass (os.getloadavg, as bench.py does): the
+                     host-contention layer of an A/B
 
 median, cpu_median, build_median and action_median are each taken separately
 (statistics.median: the mean of the middle two for an even pass
@@ -72,8 +75,9 @@ def main() -> int:
     run_query(spark, "q_agg_flagship", sf_dir)  # warmup, untimed (bench.py parity)
 
     for name in args.queries:
-        splits, compiles, jit_ms, jobs = [], [], [], []
+        splits, compiles, jit_ms, jobs, load1 = [], [], [], [], []
         for _ in range(args.passes):
+            load1.append(round(os.getloadavg()[0], 2))
             c0, j0, tag = codegen_compiles(spark), jit_compile_ms(spark), new_tag()
             splits.append(run_query(spark, name, sf_dir, tag))
             compiles.append(codegen_compiles(spark) - c0)
@@ -93,6 +97,7 @@ def main() -> int:
                     "compiles": compiles,
                     "jit_ms": jit_ms,
                     "jobs": jobs,
+                    "load1": load1,
                 }
             ),
             flush=True,
